@@ -90,7 +90,7 @@ object Bench {
         catch { case _: Throwable => () }
       }
     // Quiesce between warmup and the timed pass (guide §1 "measure the
-    // computation"): the 369-query warmup leaves thousands of dead
+    // computation"): the full-registry warmup leaves thousands of dead
     // shuffle/broadcast/localCheckpoint references that the
     // ContextCleaner only discovers at the FIRST major GC — which,
     // un-quiesced, lands minutes into the timed pass and inflates

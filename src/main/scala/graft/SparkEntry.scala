@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Decode
-import graft.ops.{AsOfJoin, Dedup, EventAnalytics, Graph, Incremental, Multimodal, Pipeline, Predict, Relational, Resample, Scale, Similarity, TextOps, TradeOps}
+import graft.ops.{AsOfJoin, Dedup, EventAnalytics, Incremental, Predict, Relational, Resample, Scale, Similarity, TextOps, TradeOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -182,22 +182,6 @@ object SparkEntry {
     "d_segment_dedup" -> ((s, dir) => TextOps.segmentDedup(Tables.load(s, dir, "documents"))),
     "d_semantic_dup" -> ((s, dir) => Similarity.semanticDup(s, dir)),
     "d_dedup_resolve" -> ((s, dir) => Dedup.resolveDuplicates(Tables.load(s, dir, "documents"))),
-    "g_pagerank" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // dupEdges is session-checkpointed; skip pageRank's duplicate pin
-      Graph.pageRank(docs.select("doc_id"), Dedup.dupEdges(docs),
-        assumeMaterialized = true)
-    }),
-    "g_contamination_hops" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      Graph.hopDistance(
-        docs.select("doc_id"),
-        Dedup.dupEdges(docs),
-        TextOps.contamination(docs)
-          .filter(col("contaminated") === 1).select("doc_id"),
-        // dupEdges is session-checkpointed; skip the duplicate pin
-        assumeMaterialized = true)
-    }),
     "mv_incremental" -> ((s, dir) => Incremental.incrementalAgg(Tables.events(s, dir))),
     "e_funnel" -> ((s, dir) => EventAnalytics.funnel(Tables.events(s, dir))),
     "e_retention" -> ((s, dir) => EventAnalytics.retention(Tables.events(s, dir))),
@@ -215,25 +199,11 @@ object SparkEntry {
       TextOps.importanceWeights(Tables.load(s, dir, "documents"))),
     "t_ngram_novelty" -> ((s, dir) =>
       TextOps.ngramNovelty(Tables.load(s, dir, "documents"))),
-    "p_token_budget" -> ((s, dir) =>
-      Pipeline.tokenBudgetSelect(Tables.load(s, dir, "documents"))),
-    "p_mixture_epochs" -> ((s, dir) =>
-      Pipeline.mixtureEpochs(Tables.load(s, dir, "documents"))),
-    "p_dup_quality_profile" -> ((s, dir) =>
-      Pipeline.dupQualityProfile(Tables.load(s, dir, "documents"))),
-    "p_anneal_schedule" -> ((s, dir) =>
-      Pipeline.annealSchedule(Tables.load(s, dir, "documents"))),
-    "p_dedup_savings" -> ((s, dir) =>
-      Pipeline.dedupSavings(Tables.load(s, dir, "documents"))),
     "t_langid_confusion" -> ((s, dir) =>
       TextOps.langIdConfusion(Tables.load(s, dir, "documents"))),
     "t_bpe_fertility" -> ((s, dir) =>
       TextOps.bpeFertility(Tables.load(s, dir, "documents"))),
     "w7_gap_detect" -> ((s, dir) => TradeOps.gapDetect(trades(s, dir))),
-    "p_corpus_clean" -> ((s, dir) => Pipeline.corpusClean(Tables.load(s, dir, "documents"))),
-    "p_leakage_split" -> ((s, dir) => Pipeline.leakageSafeSplit(Tables.load(s, dir, "documents"))),
-    "p_pretrain_manifest" -> ((s, dir) => Pipeline.pretrainManifest(Tables.load(s, dir, "documents"))),
-    "p_curation_manifest" -> ((s, dir) => Pipeline.curationManifest(Tables.load(s, dir, "documents"))),
     "p2_dead_letter" -> ((s, dir) => graft.ingest.Decode.deadLetterDecode(trades(s, dir))),
     "a_hll_merge" -> ((s, dir) => Relational.hllMergeDistinct(s, dir)),
     "a28_hll_intersect" -> ((s, dir) => Relational.hllIntersect(s, dir)),
@@ -254,16 +224,10 @@ object SparkEntry {
     "v_dim_profile" -> ((s, dir) => Similarity.dimProfile(s, dir)),
     "v_knn_graph" -> ((s, dir) => Similarity.knnGraph(s, dir)),
     "v_diversity_sample" -> ((s, dir) => Similarity.diversitySample(s, dir)),
-    "p_dedup_cascade" -> ((s, dir) =>
-      Pipeline.dedupCascade(Tables.load(s, dir, "documents"))),
     "w_vwma" -> ((s, dir) => TradeOps.vwma(trades(s, dir))),
     "a_gini" -> ((s, dir) => TradeOps.giniActivity(trades(s, dir))),
     "v_pca_power" -> ((s, dir) => Similarity.pcaPower(s, dir)),
     "v_ood_topk" -> ((s, dir) => Similarity.oodTopK(s, dir)),
-    "m_payload_dedup" -> ((s, dir) =>
-      Multimodal.payloadDedup(Tables.load(s, dir, "documents"))),
-    "p_corpus_map" -> ((s, dir) =>
-      Pipeline.corpusMap(Tables.load(s, dir, "documents"))),
     "a_runs_test" -> ((s, dir) => TradeOps.runsTest(trades(s, dir))),
     "d_edit_distance" -> ((s, dir) =>
       Dedup.editDistance(Tables.load(s, dir, "documents"))),
@@ -273,12 +237,6 @@ object SparkEntry {
       Dedup.prefixDup(Tables.load(s, dir, "documents"))),
     "t_charclass_profile" -> ((s, dir) =>
       TextOps.charClassProfile(Tables.load(s, dir, "documents"))),
-    "g_assortativity" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // fifth consumer of the cached mutual-kNN similarity graph
-      Graph.assortativity(Dedup.mutualKnn(
-        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
-    }),
     "k16_partition_evolution" -> ((s, dir) =>
       TradeOps.partitionEvolution(s, trades(s, dir))),
     "t_length_outliers" -> ((s, dir) =>
@@ -287,28 +245,15 @@ object SparkEntry {
       Dedup.minhashEstError(Tables.load(s, dir, "documents"))),
     "v_knn_graph_recall" -> ((s, dir) => Similarity.knnGraphRecall(s, dir)),
     "w_ichimoku" -> ((s, dir) => TradeOps.ichimoku(trades(s, dir))),
-    "p_shard_plan" -> ((s, dir) =>
-      Pipeline.shardPlan(Tables.load(s, dir, "documents"))),
     "v_hamming_recall" -> ((s, dir) => Similarity.hammingRecall(s, dir)),
     "w_aroon" -> ((s, dir) => TradeOps.aroon(trades(s, dir))),
     "e_burst_detect" -> ((s, dir) =>
       EventAnalytics.burstDetect(Tables.events(s, dir))),
-    "g_clustering_coeff" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // fourth consumer of the cached mutual-kNN similarity graph
-      Graph.localClustering(Dedup.mutualKnn(
-        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
-    }),
     "v_recall_curve" -> ((s, dir) => Similarity.ivfRecallCurve(s, dir)),
     "v_pq_codes" -> ((s, dir) => Similarity.pqCodes(s, dir)),
     "v_pq_adc" -> ((s, dir) => Similarity.pqAdc(s, dir)),
     "v_ivfpq_adc" -> ((s, dir) => Similarity.ivfPqAdc(s, dir)),
     "v_kmeans" -> ((s, dir) => Similarity.kmeansCentroids(s, dir)),
-    "m_binary_meta" -> ((s, dir) => Multimodal.binaryMeta(Tables.load(s, dir, "documents"))),
-    "m_decode_stub" -> ((s, dir) => Multimodal.decodeMedia(s, Tables.load(s, dir, "documents")).toDF()),
-    "m_frame_sample" -> ((s, dir) => Multimodal.frameSample(Tables.load(s, dir, "documents"))),
-    "m_resize_stub" -> ((s, dir) => Multimodal.resizeStub(Tables.load(s, dir, "documents"))),
-    "m_batch_extract" -> ((s, dir) => Multimodal.extractBatched(s, Tables.load(s, dir, "documents")).toDF()),
     "a_pivot_dow" -> ((s, dir) => TradeOps.pivotDayOfWeek(trades(s, dir))),
     "a_unpivot_totals" -> ((s, dir) => TradeOps.unpivotTotals(trades(s, dir))),
     // -- technical-indicator tier (W8-W10, A12-A13) ----------------------
@@ -328,26 +273,6 @@ object SparkEntry {
     "w12_stochastic" -> ((s, dir) => TradeOps.stochasticK(trades(s, dir))),
     "a14_atr" -> ((s, dir) => TradeOps.atr(trades(s, dir))),
     "a15_anomaly" -> ((s, dir) => TradeOps.anomalyFlags(trades(s, dir))),
-    "g_triangles" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // session-cached weighted edge table: repeat invocations (and any
-      // other consumer at this threshold) skip the band join
-      Graph.triangles(Dedup.mutualKnn(
-        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
-    }),
-    "g_link_pred" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // same session-cached weighted edges + mutual-kNN graph as
-      // g_triangles — the band join runs once for both consumers
-      Graph.linkPrediction(Dedup.mutualKnn(
-        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
-    }),
-    "g_labelprop" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // third consumer of the cached mutual-kNN similarity graph
-      Graph.labelPropagation(Dedup.mutualKnn(
-        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
-    }),
     "skew_salted_join" -> ((s, dir) => Scale.saltedSkewJoin(trades(s, dir))),
     "d_fuzzy_pairs" -> ((s, dir) => Dedup.fuzzyPairs(Tables.load(s, dir, "documents"))),
     "w13_cusum" -> ((s, dir) => TradeOps.cusum(trades(s, dir))),
@@ -394,27 +319,15 @@ object SparkEntry {
     "d_containment" -> ((s, dir) => Dedup.containment(Tables.load(s, dir, "documents"))),
     "d_lsh_recall" -> ((s, dir) => Dedup.lshRecall(Tables.load(s, dir, "documents"))),
     "t_feature_hash" -> ((s, dir) => TextOps.featureHash(Tables.load(s, dir, "documents"))),
-    "g_degree_hist" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      Graph.degreeHistogram(docs.select("doc_id"), Dedup.dupEdges(docs))
-    }),
     "w16_pivot_points" -> ((s, dir) => TradeOps.pivotPoints(trades(s, dir))),
     "w17_twap" -> ((s, dir) => TradeOps.twap(trades(s, dir))),
     "o9_group_split" -> ((s, dir) => TradeOps.groupSplit(trades(s, dir))),
     "a22_benford" -> ((s, dir) => TradeOps.benfordProfile(trades(s, dir))),
-    "m_modality_shard" -> ((s, dir) =>
-      Multimodal.modalityShard(Tables.load(s, dir, "documents"))),
     "e_conversion_paths" -> ((s, dir) =>
       EventAnalytics.conversionPaths(Tables.events(s, dir))),
     "p3_props_shred" -> ((s, dir) =>
       EventAnalytics.propsShred(Tables.events(s, dir))),
     "w18_run_length" -> ((s, dir) => TradeOps.runLength(trades(s, dir))),
-    "g_kcore" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // dupEdges guarantees a canonical (doc_a < doc_b, distinct,
-      // checkpointed) list — skip kCore's normalize+distinct shuffle
-      Graph.kCore(Dedup.dupEdges(docs), assumeCanonical = true)
-    }),
     "k13_dynamic_overwrite" -> ((s, dir) =>
       TradeOps.dynamicPartitionOverwrite(s, trades(s, dir))),
     "a23_autocorr" -> ((s, dir) => TradeOps.autocorr(trades(s, dir))),
@@ -422,8 +335,6 @@ object SparkEntry {
     "e_stickiness" -> ((s, dir) =>
       EventAnalytics.stickiness(Tables.events(s, dir))),
     "k14_wap" -> ((s, dir) => graft.sinks.Wap.roundTrip(s, trades(s, dir))),
-    "p_filter_funnel" -> ((s, dir) =>
-      Pipeline.filterFunnel(Tables.load(s, dir, "documents"))),
     "a25_concentration" -> ((s, dir) => TradeOps.concentration(trades(s, dir))),
     "f16_target_encode" -> ((s, dir) => TradeOps.targetEncode(trades(s, dir))),
     "f17_quantile_rank" -> ((s, dir) => TradeOps.quantileRank(trades(s, dir))),
@@ -491,8 +402,6 @@ object SparkEntry {
       TradeOps.rollbackRoundTrip(s, trades(s, dir))),
     "v_ivf_occupancy" -> ((s, dir) => Similarity.ivfOccupancy(s, dir)),
     "w_vpin" -> ((s, dir) => TradeOps.vpin(trades(s, dir))),
-    "p_sqrt_temper" -> ((s, dir) =>
-      Pipeline.sqrtTemper(Tables.load(s, dir, "documents"))),
     "e_bot_score" -> ((s, dir) =>
       EventAnalytics.botScore(Tables.events(s, dir))),
     "v_centroid_auc" -> ((s, dir) => Similarity.centroidAuc(s, dir)),
@@ -536,12 +445,6 @@ object SparkEntry {
     "w_volume_profile" -> ((s, dir) =>
       TradeOps.volumeProfile(trades(s, dir))),
     "v_pca_deflate" -> ((s, dir) => Similarity.pcaDeflate(s, dir)),
-    "g_rich_club" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // fifth consumer of the cached mutual-kNN similarity graph
-      Graph.richClub(Dedup.mutualKnn(
-        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
-    }),
     "d_bucket_skew" -> ((s, dir) =>
       Dedup.bucketSkew(Tables.load(s, dir, "documents"))),
     "q26_revenue_deciles" -> ((s, dir) => Relational.revenueDeciles(s, dir)),
@@ -554,14 +457,6 @@ object SparkEntry {
     "w_obv_divergence" -> ((s, dir) => TradeOps.obvDivergence(trades(s, dir))),
     "e_active_streaks" -> ((s, dir) =>
       EventAnalytics.activeStreaks(Tables.events(s, dir))),
-    "g_two_hop_reach" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // rides the cached mutual-kNN graph (deg <= k): the raw dup
-      // graph's boilerplate near-cliques make the mid-vertex join
-      // cubic — measured live at sf0.1 (disk-filling shuffle spill)
-      Graph.twoHopReach(docs.select("doc_id"), Dedup.mutualKnn(
-        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
-    }),
     "v_int8_order_flips" -> ((s, dir) => Similarity.int8OrderFlips(s, dir)),
     "k18_snapshot_expire" -> ((s, dir) =>
       TradeOps.snapshotExpire(s, trades(s, dir))),
@@ -576,8 +471,6 @@ object SparkEntry {
     "k19_compact_generations" -> ((s, dir) =>
       TradeOps.compactGenerations(s, trades(s, dir))),
     "a_depth_ladder" -> ((s, dir) => TradeOps.depthLadder(trades(s, dir))),
-    "p_balanced_sample" -> ((s, dir) =>
-      Pipeline.balancedSample(Tables.load(s, dir, "documents"))),
     "d_source_similarity" -> ((s, dir) =>
       Dedup.sourceSimilarity(Tables.load(s, dir, "documents"))),
     "k20_prediction_accuracy" -> ((s, dir) =>
@@ -596,8 +489,6 @@ object SparkEntry {
       Relational.fanoutProfile(s, dir)),
     "e_cuped_ab" -> ((s, dir) =>
       EventAnalytics.cupedAb(Tables.events(s, dir))),
-    "p_k_anonymize" -> ((s, dir) =>
-      Pipeline.kAnonymize(Tables.events(s, dir))),
   )
 
   private val T = Tables.tradesCte
@@ -1451,8 +1342,6 @@ object SparkEntry {
     "t_domain_quota" -> TextOps.domainQuotaSql(),
     "d_cluster_best" -> Dedup.clusterBestSql,
     "t_tfidf_topk" -> TextOps.tfidfTopKSql(),
-    "g_pagerank" -> Dedup.similarityRankSql(),
-    "g_contamination_hops" -> Dedup.contaminationHopsSql(),
     "mv_incremental" -> Incremental.incrementalAggSql,
     "e_funnel" -> EventAnalytics.funnelSql(),
     "e_retention" -> EventAnalytics.retentionSql,
@@ -1464,11 +1353,6 @@ object SparkEntry {
     "mv_topk_retract" -> Incremental.retractableTopKSql,
     "t_importance_weights" -> TextOps.importanceWeightsSql(),
     "t_ngram_novelty" -> TextOps.ngramNoveltySql(),
-    "p_token_budget" -> Pipeline.tokenBudgetSelectSql(),
-    "p_mixture_epochs" -> Pipeline.mixtureEpochsSql(),
-    "p_dup_quality_profile" -> Pipeline.dupQualityProfileSql,
-    "p_anneal_schedule" -> Pipeline.annealScheduleSql(),
-    "p_dedup_savings" -> Pipeline.dedupSavingsSql,
     "t_langid_confusion" -> TextOps.langIdConfusionSql,
     "t_bpe_fertility" -> TextOps.bpeFertilitySql(),
     "w7_gap_detect" ->
@@ -1479,9 +1363,6 @@ object SparkEntry {
          |SELECT event_id, symbol, "timestamp", price, volume
          |FROM trades""".stripMargin,
     "d_dedup_resolve" -> Dedup.resolveSql,
-    "p_corpus_clean" -> Pipeline.corpusCleanSql,
-    "p_pretrain_manifest" -> Pipeline.pretrainManifestSql,
-    "p_curation_manifest" -> Pipeline.curationManifestSql(),
     "p2_dead_letter" ->
       s"""$T
          |SELECT event_id,
@@ -1515,7 +1396,6 @@ object SparkEntry {
     "v_ann_ivf" -> Similarity.annIvfSql(),
     "v_ivf_recall" -> Similarity.ivfRecallSql(),
     "a27_cms_topk" -> Relational.cmsTopKSql(),
-    "p_leakage_split" -> Pipeline.leakageSafeSplitSql(),
     "d_substring_dup" -> TextOps.substringDupSql(),
     "v_mrl_recall" -> Similarity.mrlRecallSql(),
     "v_int8_recall" -> Similarity.int8RecallSql(),
@@ -1523,7 +1403,6 @@ object SparkEntry {
     "v_dim_profile" -> Similarity.dimProfileSql(),
     "v_knn_graph" -> Similarity.knnGraphSql(),
     "v_diversity_sample" -> Similarity.diversitySampleSql(),
-    "p_dedup_cascade" -> Pipeline.dedupCascadeSql,
     "w_vwma" ->
       s"""$T
          |${TradeOps.vwmaSql()}""".stripMargin,
@@ -1533,8 +1412,6 @@ object SparkEntry {
     "d_minhash_est_error" -> Dedup.minhashEstErrorSql(),
     "v_pca_power" -> Similarity.pcaPowerSql(),
     "v_ood_topk" -> Similarity.oodTopKSql(),
-    "m_payload_dedup" -> Multimodal.payloadDedupSql,
-    "p_corpus_map" -> Pipeline.corpusMapSql,
     "a_runs_test" ->
       s"""$T
          |${TradeOps.runsTestSql}""".stripMargin,
@@ -1543,7 +1420,6 @@ object SparkEntry {
     "v_norm_hist" -> Similarity.normHistSql,
     "d_prefix_dup" -> Dedup.prefixDupSql(),
     "t_charclass_profile" -> TextOps.charClassProfileSql,
-    "g_assortativity" -> Dedup.similarityAssortativitySql(),
     "k16_partition_evolution" ->
       s"""$T
          |${TradeOps.partitionEvolutionSql}""".stripMargin,
@@ -1552,13 +1428,11 @@ object SparkEntry {
     "w_ichimoku" ->
       s"""$T
          |${TradeOps.ichimokuSql()}""".stripMargin,
-    "p_shard_plan" -> Pipeline.shardPlanSql(),
     "v_hamming_recall" -> Similarity.hammingRecallSql(),
     "w_aroon" ->
       s"""$T
          |${TradeOps.aroonSql()}""".stripMargin,
     "e_burst_detect" -> EventAnalytics.burstDetectSql,
-    "g_clustering_coeff" -> Dedup.similarityLocalClusteringSql(),
     "v_recall_curve" -> Similarity.ivfRecallCurveSql(),
     "v_pq_codes" -> Similarity.pqCodesSql(),
     "v_pq_adc" -> Similarity.pqAdcSql(),
@@ -1606,48 +1480,6 @@ object SparkEntry {
         |  FROM s
         |) WHERE rnk <= 5""".stripMargin,
 
-    "m_frame_sample" ->
-      """WITH m AS (
-        |  SELECT doc_id, sha256(text) AS sha,
-        |         CAST(octet_length(encode(text)) // 256 AS INTEGER) + 1 AS n_frames
-        |  FROM documents
-        |)
-        |SELECT doc_id, CAST(f AS INTEGER) AS frame_idx,
-        |       md5(sha || '-' || f::VARCHAR) AS frame_fp
-        |FROM m, unnest(generate_series(0, n_frames - 1, 4)) AS t(f)""".stripMargin,
-
-    "m_resize_stub" ->
-      """WITH r AS (
-        |  SELECT doc_id, length(text) AS orig_len,
-        |         array_to_string(list_transform(
-        |           generate_series(1, length(text), 4), i -> text[i]), '') AS resized
-        |  FROM documents
-        |)
-        |SELECT doc_id, CAST(orig_len AS INTEGER) AS orig_len,
-        |       CAST(length(resized) AS INTEGER) AS resized_len,
-        |       md5(resized) AS resized_md5
-        |FROM r""".stripMargin,
-
-    "m_binary_meta" ->
-      """SELECT doc_id,
-        |  CAST(octet_length(encode(text)) AS INTEGER) AS byte_len,
-        |  sha256(text) AS sha256,
-        |  CAST(64 + octet_length(encode(text)) % 64 AS INTEGER) AS width,
-        |  CAST(64 + (octet_length(encode(text)) * 7) % 64 AS INTEGER) AS height,
-        |  CAST(octet_length(encode(text)) // 256 AS INTEGER) + 1 AS n_frames
-        |FROM documents""".stripMargin,
-
-    "m_batch_extract" ->
-      """SELECT doc_id,
-        |  CAST(octet_length(encode(text)) AS INT) AS byte_len,
-        |  CASE WHEN length(text) = 0 THEN 0.0::DOUBLE
-        |       ELSE ((length(text) -
-        |              length(regexp_replace(lower(text), '[aeiou]', '', 'g')))::DOUBLE
-        |            / length(text)::DOUBLE)
-        |  END AS vowel_ratio,
-        |  md5(text) AS content_hash
-        |FROM documents""".stripMargin,
-
     "a_pivot_dow" -> {
       val cols = (1 to 7).map(d =>
         s"count(*) FILTER (WHERE dayofweek(\"timestamp\") + 1 = $d) AS d$d")
@@ -1669,14 +1501,6 @@ object SparkEntry {
          |UNION ALL
          |SELECT symbol, 'total_usd_volume' AS metric, total_usd_volume AS value FROM agg""".stripMargin,
 
-    "m_decode_stub" ->
-      """SELECT doc_id,
-        |  CAST(octet_length(encode(text)) AS INTEGER) AS byte_len,
-        |  md5(text) AS content_hash,
-        |  CAST(ord(substr(text, 1, 1)) AS INTEGER) AS first_byte,
-        |  CAST(ord(substr(text, -1, 1)) AS INTEGER) AS last_byte,
-        |  (ord(substr(text, 1, 1)) + ord(substr(text, -1, 1))) / 2.0::DOUBLE AS mean_edge
-        |FROM documents""".stripMargin,
 
     "w8_bollinger" ->
       s"""$T
@@ -1712,9 +1536,6 @@ object SparkEntry {
     "a15_anomaly" ->
       s"""$T
          |${TradeOps.anomalyFlagsSql()}""".stripMargin,
-    "g_triangles" -> Dedup.similarityTrianglesSql(),
-    "g_link_pred" -> Dedup.similarityLinkPredSql(),
-    "g_labelprop" -> Dedup.similarityLabelPropSql(),
     "skew_salted_join" -> s"$T,\n${Scale.saltedSkewJoinSql}",
     "d_fuzzy_pairs" -> Dedup.fuzzyPairsSql(),
     "w13_cusum" ->
@@ -1798,22 +1619,18 @@ object SparkEntry {
     "d_containment" -> Dedup.containmentSql(),
     "d_lsh_recall" -> Dedup.lshRecallSql(),
     "t_feature_hash" -> TextOps.featureHashSql(),
-    "g_degree_hist" -> Dedup.similarityDegreeSql(),
     "w16_pivot_points" -> s"$T\n${TradeOps.pivotPointsSql}",
     "w17_twap" -> s"$T,\n${TradeOps.twapSql.stripPrefix("WITH ")}",
     "o9_group_split" -> s"$T\n${TradeOps.groupSplitSql()}",
     "a22_benford" -> s"$T,\n${TradeOps.benfordProfileSql.stripPrefix("WITH ")}",
-    "m_modality_shard" -> Multimodal.modalityShardSql(),
     "e_conversion_paths" -> EventAnalytics.conversionPathsSql(),
     "p3_props_shred" -> EventAnalytics.propsShredSql,
     "w18_run_length" -> s"$T,\n${TradeOps.runLengthSql().stripPrefix("WITH ")}",
-    "g_kcore" -> Dedup.kCoreSql(),
     "k13_dynamic_overwrite" -> s"$T\n${TradeOps.dynamicPartitionOverwriteSql()}",
     "a23_autocorr" -> s"$T,\n${TradeOps.autocorrSql.stripPrefix("WITH ")}",
     "a24_ks_drift" -> s"$T,\n${TradeOps.ksDriftSql().stripPrefix("WITH ")}",
     "e_stickiness" -> EventAnalytics.stickinessSql,
     "k14_wap" -> s"$T\n${graft.sinks.Wap.roundTripSql}",
-    "p_filter_funnel" -> Pipeline.filterFunnelSql,
     "a25_concentration" -> s"$T,\n${TradeOps.concentrationSql.stripPrefix("WITH ")}",
     "f16_target_encode" -> s"$T,\n${TradeOps.targetEncodeSql.stripPrefix("WITH ")}",
     "f17_quantile_rank" -> s"$T,\n${TradeOps.quantileRankSql.stripPrefix("WITH ")}",
@@ -1860,7 +1677,6 @@ object SparkEntry {
     "k17_rollback" -> s"$T\n${TradeOps.rollbackRoundTripSql}",
     "v_ivf_occupancy" -> Similarity.ivfOccupancySql(),
     "w_vpin" -> s"$T\n${TradeOps.vpinSql()}",
-    "p_sqrt_temper" -> Pipeline.sqrtTemperSql,
     "e_bot_score" -> EventAnalytics.botScoreSql(),
     "v_centroid_auc" -> Similarity.centroidAucSql(),
     "w_amihud" -> s"$T\n${TradeOps.amihudSql}",
@@ -1897,7 +1713,6 @@ object SparkEntry {
     "e_rolling_wau" -> EventAnalytics.rollingWauSql,
     "w_volume_profile" -> s"$T\n${TradeOps.volumeProfileSql}",
     "v_pca_deflate" -> Similarity.pcaDeflateSql(),
-    "g_rich_club" -> Dedup.similarityRichClubSql(),
     "d_bucket_skew" -> Dedup.bucketSkewSql,
     "q26_revenue_deciles" -> Relational.revenueDecilesSql,
     "e_seasonal_profile" -> EventAnalytics.seasonalProfileSql,
@@ -1907,7 +1722,6 @@ object SparkEntry {
     "w_williams_r" -> s"$T\n${TradeOps.williamsRSql}",
     "w_obv_divergence" -> s"$T\n${TradeOps.obvDivergenceSql}",
     "e_active_streaks" -> EventAnalytics.activeStreaksSql,
-    "g_two_hop_reach" -> Dedup.similarityTwoHopSql(),
     "v_int8_order_flips" -> Similarity.int8OrderFlipsSql(),
     "k18_snapshot_expire" -> s"$T\n${TradeOps.snapshotExpireSql}",
     "e_churn_rate" -> EventAnalytics.churnRateSql,
@@ -1918,7 +1732,6 @@ object SparkEntry {
     "w_narrow_range" -> s"$T\n${TradeOps.narrowRangeSql}",
     "k19_compact_generations" -> s"$T\n${TradeOps.compactGenerationsSql}",
     "a_depth_ladder" -> s"$T\n${TradeOps.depthLadderSql()}",
-    "p_balanced_sample" -> Pipeline.balancedSampleSql,
     "d_source_similarity" -> Dedup.sourceSimilaritySql,
     "k20_prediction_accuracy" -> Predict.predictionAccuracySql(),
     "k21_audited_lifecycle" -> s"$T\n${graft.sinks.Wap.auditedLifecycleSql}",
@@ -1928,6 +1741,5 @@ object SparkEntry {
     "e_survival_curve" -> EventAnalytics.survivalCurveSql,
     "j_fanout_profile" -> Relational.fanoutProfileSql,
     "e_cuped_ab" -> EventAnalytics.cupedAbSql,
-    "p_k_anonymize" -> Pipeline.kAnonymizeSql,
   )
 }

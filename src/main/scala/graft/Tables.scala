@@ -40,27 +40,19 @@ object Tables {
       .foreach { f =>
         val df = spark.read.parquet(f.getPath)
         // split only the genuinely large tables — fanning small tables
-        // into 32 shards just adds task overhead (measured: v_ann_lsh
-        // 3x slower on a 32-sharded 2k-row embeddings table).
-        // SPARK_GRAFT_STAGE_SPLIT=0 is the diagnostic control: stage
-        // everything single-file to A/B a suspected staging effect
-        // (used to adjudicate the r8 k11/k10/w10 floor-shift question).
+        // into 32 shards just adds task overhead (r8 measured a 2k-row
+        // table 3x slower when 32-sharded: its consumers are many tiny
+        // latency-bound stages).
         //
         // r18 (guide §2.5 "input skew: one huge unsplittable file"): a
-        // MIDDLE tier for the row-heavy small tables. The 5k-row
-        // documents corpus staged single-file, so the first stage of
-        // every text pipeline (tokenize / shingle-hash / winnow — ~200
-        // expression evaluations per row) ran in ONE task until its
-        // first shuffle (profiled: two ~0.5-0.7 s single-task stages in
-        // d_substring_dup alone). A production text corpus is never one
-        // file — 8-way staging is the honest shape, while small enough
-        // to keep the r8 lesson (the 2k-row embeddings table stays
-        // single-file: its consumers are many tiny latency-bound
-        // stages, and 32-sharding measured 3x slower).
-        val doSplit = sys.env.get("SPARK_GRAFT_STAGE_SPLIT").forall(_ != "0")
+        // MIDDLE tier for the row-heavy small tables. Staged
+        // single-file, such a table runs the first stage of every
+        // consumer in ONE task until its first shuffle; 8-way staging
+        // spreads that stage while staying small enough to keep the r8
+        // lesson. `events` at sf0.01 (10,000 rows) is in this tier.
         val n = df.count()
         val parts =
-          if (!doSplit || n < 2500) 1
+          if (n < 2500) 1
           else if (n < 50000) 8.min(cores)
           else cores
         df.repartition(parts).write.mode("overwrite").parquet(s"$out/${f.getName}")

@@ -90,23 +90,6 @@ object Verify {
     if (failed.nonEmpty)
       System.err.println(
         s"[verify] ${failed.size} queries FAILED: ${failed.keys.mkString(", ")}")
-    // Measured per-partition cache footprint (r14 verdict directive #1:
-    // the 100-MB-per-executor cluster argument must be a MEASUREMENT,
-    // not an estimate). One JSON line per cached/checkpointed RDD.
-    if (sys.env.get("SPARK_GRAFT_STORAGE_TRACE").contains("1")) {
-      val infos = spark.sparkContext.getRDDStorageInfo
-      infos.foreach { i =>
-        val pp = if (i.numCachedPartitions > 0)
-          (i.memSize + i.diskSize) / i.numCachedPartitions else 0L
-        println(s"""{"storage_rdd":${i.id},"name":${q(i.name)},""" +
-          s""""level":${q(i.storageLevel.description)},""" +
-          s""""parts":${i.numCachedPartitions},"mem":${i.memSize},""" +
-          s""""disk":${i.diskSize},"bytes_per_part":$pp}""")
-      }
-      val (tm, td) = (infos.map(_.memSize).sum, infos.map(_.diskSize).sum)
-      println(s"""{"storage_total_mem":$tm,"storage_total_disk":$td,""" +
-        s""""storage_rdds":${infos.length}}""")
-    }
     spark.stop()
   }
 

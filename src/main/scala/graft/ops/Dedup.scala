@@ -66,28 +66,10 @@ object Dedup {
     * live sessions without a listener. A hard entry cap (64) guards the
     * pathological many-distinct-corpora session: at the cap the cache
     * clears rather than pinning unbounded checkpoint blocks (the next
-    * consumer of an evicted stage simply recomputes). */
+    * consumer of an evicted stage simply recomputes). Results are
+    * pinned with `localCheckpoint`: MEMORY_AND_DISK blocks, lineage
+    * truncated. */
   private val cacheCap = 64
-
-  /** Materialize-and-pin for the shared stage tables. Default:
-    * `localCheckpoint` — MEMORY_AND_DISK blocks, lineage truncated, the
-    * right shape at bench scale where everything fits in storage
-    * memory. `SPARK_GRAFT_CACHE_LEVEL=disk` (the 100×-rehearsal lever,
-    * r14 verdict directive #1) switches to `persist(DISK_ONLY)` + an
-    * eager count: the multi-GB shared pair/graph tables then (a) never
-    * compete with execution memory for the unified pool, and (b) keep
-    * their LINEAGE — a dropped block recomputes instead of cascading
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND through every downstream
-    * consumer, which is what took out the sf10 graph family in r14.
-    * On a real cluster this is exactly `persist(DISK_ONLY)` on the
-    * shared candidate-pair dataset — ~100 MB/executor at 1000
-    * executors. */
-  private def pin(df: DataFrame): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_CACHE_LEVEL").contains("disk")) {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      p.count() // eager, like localCheckpoint(eager = true)
-      p
-    } else df.localCheckpoint()
 
   private[ops] def cached(
       cache: java.util.concurrent.ConcurrentHashMap[CacheKey, Memo],
@@ -103,7 +85,7 @@ object Dedup {
     // recompute thrash (ADVICE r12).
     if (cache.size >= cacheCap && !cache.containsKey(key)) cache.clear()
     cache.computeIfAbsent(key,
-      _ => new Memo(df.sparkSession, () => pin(f(df)))).value
+      _ => new Memo(df.sparkSession, () => f(df).localCheckpoint())).value
   }
 
   private val sigCache =
@@ -181,16 +163,15 @@ object Dedup {
     new java.util.concurrent.ConcurrentHashMap[CacheKey, Memo]()
 
   /** Thresholded duplicate-graph edge list (doc_a < doc_b, no
-    * self-loops, one row per pair) — the shared input of the graph
-    * consumers (degree histogram, PageRank, hop distance, k-core).
+    * self-loops, one row per pair) — the shared input of the
+    * [[modularity]] measurement and its edge-count sample modulus.
     * Cached per (session, corpus, threshold) like the signature table:
     * unlike the raw candidate-pair table (whose non-caching rationale is
     * documented on [[minhashPairs]] — quadratic AND signature-laden
     * before the threshold) the surviving edge set is two longs per
     * edge, so pinning it is cheap and every consumer stops re-running
     * the band join. The weight column is dropped on purpose; consumers
-    * that rank by similarity ([[mutualKnn]]) keep using the pair
-    * table. */
+    * that need the similarity use [[weightedDupEdges]]. */
   def dupEdges(docs: DataFrame,
       threshold: Double = resolveThreshold): DataFrame =
     cached(edgeCache, docs,
@@ -242,7 +223,8 @@ object Dedup {
     new java.util.concurrent.ConcurrentHashMap[CacheKey, Memo]()
 
   /** [[dupEdges]] with the similarity weight kept — for consumers that
-    * rank by similarity ([[mutualKnn]] → triangles). Cached separately
+    * need the similarity or a stricter threshold (the strict-threshold
+    * components of [[modularity]]). Cached separately
     * per (session, corpus, threshold): at the high thresholds these
     * consumers use ([[triangleThreshold]] 0.9) the surviving pair set is
     * bounded by near-identical-clique size, so pinning three columns per
@@ -755,11 +737,9 @@ object Dedup {
     * production whenever signature groups are non-trivial. */
   private[ops] def resolveBySignature(sig: DataFrame,
       maxIter: Int = 20): DataFrame =
-    // r17: session-cached keyed on the SIGNATURE table's plan — six
+    // r17: session-cached keyed on the SIGNATURE table's plan — several
     // registry queries resolve the same corpus (d_dedup_resolve,
-    // leakage split, cluster quality, savings, cluster-best, …) and two
-    // more resolve the same quality-filtered signature set (corpus
-    // clean, filter funnel); each previously re-ran the rep-contraction
+    // cluster-best, …); each previously re-ran the rep-contraction
     // + CC loop (~4.5 s executor time + ~5 action barriers per query at
     // sf0.1). The pinned table is (doc_id, canonical, cluster_size) —
     // doc-count-sized, 24 bytes/row. No streaming caller routes here
@@ -1010,8 +990,7 @@ object Dedup {
     * cut short mid-page) and template headers (same boilerplate
     * opening, different tails) group together here while their full
     * digests differ. One window-min over the prefix key (an
-    * equivalence relation — the [[graft.ops.Pipeline.dedupCascade]]
-    * shingle-tier argument, no CC needed); output is the per-source
+    * equivalence relation, so no CC is needed); output is the per-source
     * rollup with exact ppm, the "which ingest is truncating" table. */
   def prefixDup(docs: DataFrame, prefixLen: Int = 64): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("pfx")
@@ -1200,8 +1179,8 @@ object Dedup {
     * over a DETERMINISTIC edge sample: `sampleMod = ceil(m₀ /
     * edgeBudget)` derived from the full loose edge count (a cheap
     * scan of the cached two-long-column edge list), keep an edge iff
-    * its engine-shared salted-md5 bucket ≡ 0 (the [[Pipeline
-    * .leakageSafeSplit]] hash discipline) — so the post-sample cost
+    * its engine-shared salted-md5 bucket ≡ 0 (a hash both engines
+    * compute identically) — so the post-sample cost
     * is bounded by the budget at ANY corpus size while small corpora
     * (m₀ ≤ budget → sampleMod = 1) keep the exact full-graph Q.
     * Uniform edge sampling preserves the m_c/m and d_c/2m fractions
@@ -1549,7 +1528,7 @@ object Dedup {
        |WHERE levenshtein(a.head, b.head) <= $maxDist""".stripMargin
 
   /** sig + threshold-filtered pair CTEs alone (ends in `pairs`) —
-    * shared by [[resolveCtesFrom]] and the triangle-count oracle. */
+    * shared by [[resolveCtesFrom]] and the [[dupBySource]] oracle. */
   private[ops] def pairsCtesFrom(src: String,
       threshold: Double = resolveThreshold): String =
     s"""${sigCteFrom(src).stripPrefix("WITH ")},
@@ -1560,112 +1539,12 @@ object Dedup {
        |    AND CAST($matchesSql AS DOUBLE) / CAST(16 AS DOUBLE) >= $threshold
        |)""".stripMargin
 
-  /** Edge threshold for triangle counting: the resolve-level 0.5 graph
-    * is HALF the complete graph on this heavily-duplicated corpus
-    * (Θ(n²) edges → Θ(n³) triangles — no algorithm survives that);
-    * 0.9 keeps the near-identical cliques, whose size is bounded by
-    * the dup-group size, not the corpus. */
+  /** Strict edge threshold (the [[modularity]] clustering's default):
+    * the resolve-level 0.5 graph is HALF the complete graph on this
+    * heavily-duplicated corpus, while 0.9 keeps only the near-identical
+    * cliques, whose size is bounded by the dup-group size, not the
+    * corpus. */
   val triangleThreshold: Double = 0.9
-
-  /** Mutual top-`k` neighbor sparsification of a similarity pair list:
-    * each vertex ranks its incident edges by (similarity DESC, neighbor id)
-    * and an edge survives only if BOTH endpoints rank it ≤ k — the
-    * mutual-kNN graph of clustering pipelines. Degree is then
-    * STRICTLY ≤ k, so any downstream quadratic-in-degree analysis
-    * (triangles: O(n·k²) wedges) is corpus-size-safe even over dense
-    * near-dup cliques — measured: raw 0.9-threshold triangles cost 44s
-    * at sf0.1; the mutual-10NN graph is milliseconds. One window over
-    * the directed edge list + one self-join. */
-  def mutualKnn(pairs: DataFrame, k: Int = 10): DataFrame =
-    // r17: session-cached like the pair/edge tables it derives from.
-    // Ten registry queries (the whole g_* family) consume
-    // mutualKnn(weightedDupEdges(docs)) and several reference it
-    // MULTIPLE times per plan (per-round joins, degree tables), so the
-    // rank-window + intersect (two shuffles + distinct) was re-running
-    // per REFERENCE while only its input sat pinned. The output is the
-    // deg≤k edge list — ≤ n·k/2 rows, 16 bytes each — the cheapest
-    // table in the whole chain to pin.
-    cached(knnCache, pairs, k.toLong)(p => mutualKnnOf(p, k))
-
-  private val knnCache =
-    new java.util.concurrent.ConcurrentHashMap[CacheKey, Memo]()
-
-  /** The mutual-kNN computation itself, UNCACHED (the [[signaturesOf]]
-    * discipline — per-micro-batch / ad-hoc callers). */
-  def mutualKnnOf(pairs: DataFrame, k: Int = 10): DataFrame = {
-    val dir = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"),
-      col("est_jaccard").as("j"))
-      .union(pairs.select(col("doc_b"), col("doc_a"), col("est_jaccard")))
-    val bySim = org.apache.spark.sql.expressions.Window
-      .partitionBy("src").orderBy(col("j").desc, col("dst").asc)
-    val kept = dir.withColumn("rk", row_number().over(bySim))
-      .filter(col("rk") <= k).select("src", "dst")
-    kept.intersect(kept.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") < col("dst"))
-      .select(col("src").as("doc_a"), col("dst").as("doc_b"))
-  }
-
-  /** The shared CTE chain — MinHash band-join pairs at
-    * [[triangleThreshold]], mutual-kNN sparsified, ending in
-    * `pairs(doc_a, doc_b)` with `doc_a < doc_b` — that both the
-    * triangle and link-prediction oracles append their body to. */
-  private def mutualKnnCtes(k: Int): String =
-    s"""${sigCteFrom("documents")}, pj AS (
-       |  SELECT s1.doc_id AS doc_a, s2.doc_id AS doc_b,
-       |         CAST($matchesSql AS DOUBLE) / CAST(16 AS DOUBLE) AS j
-       |  FROM sig s1 JOIN sig s2 ON s1.doc_id < s2.doc_id
-       |  WHERE ($bandEqSql)
-       |    AND CAST($matchesSql AS DOUBLE) / CAST(16 AS DOUBLE)
-       |        >= $triangleThreshold
-       |), dir AS (
-       |  SELECT doc_a AS src, doc_b AS dst, j FROM pj
-       |  UNION ALL SELECT doc_b, doc_a, j FROM pj
-       |), kept AS (
-       |  SELECT src, dst FROM (
-       |    SELECT src, dst,
-       |           row_number() OVER (PARTITION BY src
-       |             ORDER BY j DESC, dst ASC) AS rk
-       |    FROM dir) WHERE rk <= $k
-       |), pairs AS (
-       |  SELECT a.src AS doc_a, a.dst AS doc_b
-       |  FROM kept a JOIN kept b ON a.src = b.dst AND a.dst = b.src
-       |  WHERE a.src < a.dst
-       |)""".stripMargin
-
-  /** Oracle for [[Graph.triangles]] over the mutual-kNN sparsified
-    * MinHash similarity graph at [[triangleThreshold]]. The final CTE
-    * is named `pairs` so [[Graph.trianglesSql]] chains unchanged. */
-  def similarityTrianglesSql(k: Int = 10): String =
-    s"""${mutualKnnCtes(k)}
-       |${Graph.trianglesSql}""".stripMargin
-
-  /** Oracle for [[Graph.linkPrediction]] over the same mutual-kNN
-    * similarity graph as [[similarityTrianglesSql]]. */
-  def similarityLinkPredSql(k: Int = 10, topN: Int = 50): String =
-    s"""${mutualKnnCtes(k)}${Graph.linkPredictionSql(topN)}""".stripMargin
-
-  /** Oracle for [[Graph.labelPropagation]] over the same mutual-kNN
-    * similarity graph as [[similarityTrianglesSql]]. */
-  def similarityLabelPropSql(k: Int = 10, rounds: Int = 4): String =
-    s"""${mutualKnnCtes(k)}${Graph.labelPropagationSql(rounds)}""".stripMargin
-
-  /** Oracle for [[Graph.localClustering]] over the same mutual-kNN
-    * similarity graph as [[similarityTrianglesSql]]. */
-  def similarityLocalClusteringSql(k: Int = 10): String =
-    s"""${mutualKnnCtes(k)}
-       |${Graph.localClusteringSql}""".stripMargin
-
-  /** Oracle for [[Graph.richClub]] over the same mutual-kNN
-    * similarity graph as [[similarityTrianglesSql]]. */
-  def similarityRichClubSql(k: Int = 10): String =
-    s"""${mutualKnnCtes(k)}
-       |${Graph.richClubSql()}""".stripMargin
-
-  /** Oracle for [[Graph.assortativity]] over the same mutual-kNN
-    * similarity graph as [[similarityTrianglesSql]]. */
-  def similarityAssortativitySql(k: Int = 10): String =
-    s"""${mutualKnnCtes(k)}
-       |${Graph.assortativitySql}""".stripMargin
 
   /** CC labels by UNROLLED min-label propagation + pointer jumping —
     * NOT a recursive transitive closure. The closure (`reach` as
@@ -1758,108 +1637,6 @@ object Dedup {
        |       b.quality AS best_quality
        |FROM b JOIN sizes s USING (canonical_doc)
        |WHERE rn = 1""".stripMargin
-
-  /** Oracle for the transitive-taint query ([[Graph.hopDistance]]
-    * seeded from [[TextOps.contamination]] flags over the MinHash
-    * similarity graph): the [[similarityRankSql]] pair CTEs, the shared
-    * contamination hits CTEs, and the BFS rounds unrolled — each round
-    * discovers `DISTINCT` neighbors of the previous frontier and
-    * coalesces them in at distance k. */
-  /** The [[contaminationHopsSql]] CTE chain through `d<maxHops>(id, d)`
-    * — shared with the curation-manifest composite
-    * ([[Pipeline.curationManifestSql]]). Chain after `WITH …`. */
-  private[ops] def contaminationHopsCtes(maxHops: Int = 2, flagAt: Int = 3): String = {
-    val rounds = (1 to maxHops).map { k =>
-      val prev = s"d${k - 1}"
-      s"""d$k AS (
-         |  SELECT $prev.id, coalesce($prev.d, f.nd) AS d
-         |  FROM $prev LEFT JOIN (
-         |    SELECT DISTINCT e.dst AS id, $k AS nd
-         |    FROM edges e JOIN $prev p ON e.src = p.id
-         |    WHERE p.d = ${k - 1}) f USING (id)
-         |)""".stripMargin
-    }.mkString(",\n")
-    s"""${sigCteFrom("documents").stripPrefix("WITH ")},
-       |p AS (
-       |  SELECT s1.doc_id AS a, s2.doc_id AS b
-       |  FROM sig s1 JOIN sig s2 ON s1.doc_id < s2.doc_id
-       |  WHERE ($bandEqSql)
-       |    AND CAST($matchesSql AS DOUBLE) / CAST(16 AS DOUBLE) >= $resolveThreshold
-       |),
-       |edges AS (
-       |  SELECT a AS src, b AS dst FROM p
-       |  UNION ALL
-       |  SELECT b, a FROM p
-       |),
-       |${TextOps.contaminationCtes()},
-       |seeds AS (SELECT doc_id FROM hits WHERE n_shared >= $flagAt),
-       |v AS (SELECT doc_id AS id FROM documents),
-       |d0 AS (
-       |  SELECT v.id, CASE WHEN s.doc_id IS NOT NULL THEN 0 END AS d
-       |  FROM v LEFT JOIN seeds s ON s.doc_id = v.id
-       |),
-       |$rounds""".stripMargin
-  }
-
-  def contaminationHopsSql(maxHops: Int = 2, flagAt: Int = 3): String =
-    s"""WITH ${contaminationHopsCtes(maxHops, flagAt)}
-       |SELECT id AS doc_id, CAST(d AS INTEGER) AS hop_dist
-       |FROM d$maxHops""".stripMargin
-
-  /** Oracle for [[Graph.pageRank]] over the MinHash similarity graph:
-    * the same banded pair CTEs as [[resolveSql]], then the rank
-    * iterations unrolled — all BIGINT picounit arithmetic with floor
-    * division (`//` here, `div` in Spark; identical on non-negative
-    * operands), so a 32-thread shuffle and a single-threaded DuckDB
-    * scan produce byte-identical ranks. */
-  def similarityRankSql(iters: Int = 3): String = {
-    val iterCtes = (1 to iters).map { k =>
-      val prev = s"r${k - 1}"
-      s"""c$k AS (
-         |  SELECT e.dst AS id, sum(r.r // deg.d) AS c
-         |  FROM edges e JOIN $prev r ON e.src = r.id
-         |              JOIN deg ON deg.src = e.src
-         |  GROUP BY 1
-         |), g$k AS (
-         |  SELECT CAST(coalesce(sum(r.r), 0) // (SELECT n FROM nn)
-         |              AS BIGINT) AS dsh
-         |  FROM $prev r LEFT JOIN deg ON deg.src = r.id
-         |  WHERE deg.src IS NULL
-         |), r$k AS (
-         |  SELECT v.id,
-         |         CAST(150000000000 // nn.n
-         |              + (85 * (coalesce(c.c, 0) + g.dsh)) // 100
-         |              AS BIGINT) AS r
-         |  FROM v CROSS JOIN nn CROSS JOIN g$k g
-         |       LEFT JOIN c$k c ON c.id = v.id
-         |)""".stripMargin
-    }.mkString(",\n")
-    s"""${sigCteFrom("documents")},
-       |p AS (
-       |  SELECT s1.doc_id AS a, s2.doc_id AS b
-       |  FROM sig s1 JOIN sig s2 ON s1.doc_id < s2.doc_id
-       |  WHERE ($bandEqSql)
-       |    AND CAST($matchesSql AS DOUBLE) / CAST(16 AS DOUBLE) >= $resolveThreshold
-       |),
-       |edges AS (
-       |  SELECT a AS src, b AS dst FROM p
-       |  UNION ALL
-       |  SELECT b, a FROM p
-       |),
-       |deg AS (
-       |  SELECT src, count(*) AS d FROM edges GROUP BY 1
-       |),
-       |v AS (SELECT doc_id AS id FROM documents),
-       |nn AS (SELECT count(*) AS n FROM v),
-       |r0 AS (
-       |  SELECT id, CAST(1000000000000 // nn.n AS BIGINT) AS r
-       |  FROM v CROSS JOIN nn
-       |),
-       |$iterCtes
-       |SELECT id AS doc_id, r AS rank_pico,
-       |       (CAST(r AS DOUBLE) / 1e12) AS rank
-       |FROM r$iters""".stripMargin
-  }
 
   /** N-gram CONTAINMENT near-dup pairs (extension) — the asymmetric
     * companion to [[ngramJaccard]]: `C(A→B) = |A∩B| / |A|` catches a
@@ -1974,132 +1751,6 @@ object Dedup {
        |       (CAST(n_hits AS DOUBLE) / CAST(nullif(n_true, 0) AS DOUBLE)) AS recall,
        |       (CAST(n_hits AS DOUBLE) / CAST(nullif(n_candidates, 0) AS DOUBLE)) AS "precision"
        |FROM agg""".stripMargin
-
-  /** Oracle for [[Graph.kCore]] over the minhash similarity graph: the
-    * peel loop unrolled to exactly the Spark side's `maxIter` bound.
-    * Peeling is monotone and idempotent at the fixpoint, so iterations
-    * past convergence are no-ops — over-unrolling is safe, and the
-    * Spark side fails loud if it would ever need MORE than the unroll
-    * (the one case where the two sides could diverge).
-    *
-    * Memory-bounded form (r14 verdict directive #2): the first version
-    * materialized the induced EDGE set once per round, and since the
-    * dup graph's 2-core is essentially the whole graph, that held ~20
-    * near-full edge copies at once — >88 GB resident at sf1, OOM-killed
-    * under any workable DUCKDB_MEM. This form replays the Spark side's
-    * own frontier/delta peel ([[graft.ops.Graph.kCore]]) literally: e0
-    * is materialized ONCE and every round materializes only the
-    * vertex-sized maintained-degree table `d_i` plus the (usually
-    * tiny) frontier `f_i`. Equivalence is the same induction the Spark
-    * scaladoc states: degree loss is charged through the immutable
-    * edge list from both endpoints, rows charged to removed vertices
-    * fall out of the survivor left join, and fixpoint rounds are
-    * no-ops (empty frontier), so over-unrolling stays safe.
-    *
-    * Unroll depth is 8, NOT the Spark side's maxIter=20, and the
-    * mismatch is covered by a LOUD convergence guard, not hope:
-    * measured at sf1, DuckDB retains ~4 GB per unrolled round
-    * regardless of frontier emptiness (empty fixpoint rounds cost the
-    * same — depth 4/5/6/7 peaked at 17/22/24/28 GB; 20 rounds is the
-    * >88 GB OOM), so unroll IS the memory knob. Peel depth is a
-    * property of the dup graph's cluster structure, which ScaleGen
-    * replicates rather than deepens (measured convergence: 4 rounds at
-    * every sf) — 8 is 2× margin, and if a future corpus ever peels
-    * deeper the final SELECT raises `error(...)` instead of returning
-    * a not-yet-converged superset: a visible gate FAIL, never a silent
-    * wrong PASS. */
-  def kCoreSql(k: Int = 2, unroll: Int = 8,
-      threshold: Double = resolveThreshold): String = {
-    // MATERIALIZED on every per-round table: each is referenced 2-3
-    // times; DuckDB's default inlining would expand the chain
-    // exponentially (observed as fd exhaustion re-opening the parquet).
-    val iters = (1 to unroll).map { i =>
-      val prev = s"d${i - 1}"
-      s"""f$i AS MATERIALIZED (
-         |  SELECT id FROM $prev WHERE degree < $k
-         |), d$i AS MATERIALIZED (
-         |  SELECT d.id, d.degree - coalesce(l.loss, 0) AS degree
-         |  FROM $prev d
-         |  LEFT JOIN (
-         |    SELECT id, count(*) AS loss FROM (
-         |      SELECT e.b AS id FROM e0 e JOIN f$i f ON e.a = f.id
-         |      UNION ALL
-         |      SELECT e.a AS id FROM e0 e JOIN f$i f ON e.b = f.id
-         |    ) GROUP BY 1
-         |  ) l ON d.id = l.id
-         |  WHERE d.id NOT IN (SELECT id FROM f$i)
-         |)""".stripMargin
-    }.mkString(",\n")
-    s"""$sigCte,
-       |e0 AS MATERIALIZED (
-       |  SELECT s1.doc_id AS a, s2.doc_id AS b
-       |  FROM sig s1 JOIN sig s2 ON s1.doc_id < s2.doc_id
-       |  WHERE ($bandEqSql)
-       |    AND CAST($matchesSql AS DOUBLE) / CAST(16 AS DOUBLE) >= $threshold
-       |),
-       |d0 AS MATERIALIZED (
-       |  SELECT id, count(*) AS degree FROM (
-       |    SELECT a AS id FROM e0 UNION ALL SELECT b AS id FROM e0
-       |  ) GROUP BY 1
-       |),
-       |$iters
-       |SELECT id,
-       |       CASE WHEN (SELECT count(*) FROM d$unroll
-       |                  WHERE degree < $k) > 0
-       |            THEN CAST(error('kcore oracle: unroll $unroll ' ||
-       |                 'insufficient for this corpus - raise it')
-       |                 AS BIGINT)
-       |            ELSE degree END AS degree
-       |FROM d$unroll""".stripMargin
-  }
-
-  /** Oracle for the minhash-similarity-graph degree histogram
-    * ([[Graph.degreeHistogram]] over [[minhashPairs]] ≥
-    * [[resolveThreshold]] edges): per-doc degree from both edge
-    * endpoints, isolated docs counted at degree 0. */
-  def similarityDegreeSql(threshold: Double = resolveThreshold): String =
-    s"""$sigCte,
-       |p AS (
-       |  SELECT s1.doc_id AS a, s2.doc_id AS b
-       |  FROM sig s1 JOIN sig s2 ON s1.doc_id < s2.doc_id
-       |  WHERE ($bandEqSql)
-       |    AND CAST($matchesSql AS DOUBLE) / CAST(16 AS DOUBLE) >= $threshold
-       |), deg AS (
-       |  SELECT id, count(*) AS d FROM (
-       |    SELECT a AS id FROM p UNION ALL SELECT b AS id FROM p
-       |  ) GROUP BY 1
-       |)
-       |SELECT CAST(coalesce(deg.d, 0) AS BIGINT) AS degree,
-       |       count(*) AS n_docs
-       |FROM documents LEFT JOIN deg ON documents.doc_id = deg.id
-       |GROUP BY 1""".stripMargin
-
-  /** Oracle for the mutual-kNN two-hop reach histogram
-    * ([[Graph.twoHopReach]] over [[mutualKnn]] of
-    * [[weightedDupEdges]] at [[triangleThreshold]] — the triangles
-    * graph): the shared [[mutualKnnCtes]] chain (ends in
-    * `pairs(doc_a, doc_b)`, deg ≤ k so the mid-vertex join is
-    * ≤ n·k² rows) extended one hop — symmetric list, mid-vertex
-    * self-join, distinct reach set per src, isolated docs at 0. */
-  def similarityTwoHopSql(k: Int = 10): String =
-    s"""${mutualKnnCtes(k)}, sym AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT doc_b AS src, doc_a AS dst FROM pairs
-       |), r AS (
-       |  SELECT src, count(*) AS n_reach FROM (
-       |    SELECT DISTINCT src, dst FROM (
-       |      SELECT src, dst FROM sym
-       |      UNION ALL
-       |      SELECT x.src AS src, y.dst AS dst
-       |      FROM sym x JOIN sym y ON x.dst = y.src
-       |      WHERE x.src <> y.dst)
-       |  ) GROUP BY 1
-       |)
-       |SELECT CAST(coalesce(r.n_reach, 0) AS BIGINT) AS reach2,
-       |       count(*) AS n_docs
-       |FROM documents LEFT JOIN r ON documents.doc_id = r.src
-       |GROUP BY 1""".stripMargin
 
   /** D (extension) — LSH band-bucket occupancy skew profile: the
     * scale-risk QC for the banded pair join itself. The band join's

@@ -1215,8 +1215,8 @@ object EventAnalytics {
     * final share division of exact int64s. The global rank window runs
     * over the AGGREGATED user table — the [[graft.ops.TradeOps
     * .giniActivity]] posture: at 100 TB that table is ~millions of
-    * rows, and the [[graft.ops.Pipeline.shardPlan]] two-phase
-    * range-partition rank drops in unchanged if it ever isn't. 10 rows
+    * rows, and the bucketed prefix-sum rank of [[graft.ops.Relational]]
+    * (`distributedRank`) drops in unchanged if it ever isn't. 10 rows
     * out. */
   def paretoShare(events: DataFrame): DataFrame = {
     val byCnt = Window.orderBy(col("n_ev").desc, col("user_id"))

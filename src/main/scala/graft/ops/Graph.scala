@@ -42,14 +42,6 @@ object Graph {
   private[graft] val lastCallUsedDriverFinish: ThreadLocal[java.lang.Boolean] =
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 
-  /** Test-visible instrumentation: the physical plan of [[pageRank]]'s
-    * last rank-update iteration. Pins the broadcast discipline — without
-    * the explicit hints the stats-less checkpointed edge list gets
-    * sort-merge shuffled per iteration (measured 2× the whole query),
-    * and nothing else in the result would reveal the regression. */
-  private[graft] val lastRankUpdatePlan: ThreadLocal[String] =
-    ThreadLocal.withInitial(() => "")
-
   /** Collect the RDDs backing a (possibly projected) checkpointed DF. */
   private def backingRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collect {
@@ -200,891 +192,5 @@ object Graph {
       s"connectedComponents: $maxIter rounds exhausted with cross-tree " +
         "edges remaining — raise maxIter")
     lbl
-  }
-
-  /** PageRank-style quality propagation over an undirected edge list —
-    * the link-graph centrality signal web-scale pretraining pipelines
-    * attach to documents (a page referenced by many well-referenced
-    * pages is itself trustworthy). Fixed iteration count, damping 0.85.
-    *
-    * Every quantity is a BIGINT count of "picounits" (10⁻¹² of total
-    * rank mass) and every step is integer arithmetic with floor
-    * division — deliberately: a float PageRank sums per-neighbor
-    * contributions in shuffle arrival order, which is nondeterministic
-    * across runs AND engines, while BIGINT sums are exact in any order.
-    * The quantization error (≤1 picounit per term) is noise relative to
-    * rank differences but the determinism is what lets a DuckDB oracle
-    * hash-match a 32-thread shuffle.
-    *
-    * Per iteration: one shuffle to sum neighbor contributions
-    * (map-side combined), one label-space left join back to the vertex
-    * universe, and one scalar aggregate for the dangling-node mass
-    * (collected — 1 row, the [[Dedup]] argmax discipline). The edge
-    * list and degree table are computed once and checkpointed; rank
-    * lineage is truncated per iteration and intermediate RDDs released
-    * on exit, like [[connectedComponents]].
-    *
-    * @param vertices one column, the vertex id (name taken from the DF)
-    * @param edges0   two columns (src, dst by position); symmetrized
-    * @param iters    fixed Jacobi iteration count
-    * @return (id, rank_pico, rank) — rank_pico the exact BIGINT state,
-    *         rank its 8-dp readable form */
-  def pageRank(vertices: DataFrame, edges0: DataFrame,
-      iters: Int = 3, assumeMaterialized: Boolean = false): DataFrame = {
-    val allocated = scala.collection.mutable.ListBuffer
-      .empty[org.apache.spark.rdd.RDD[_]]
-    def ckpt(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint()
-      allocated ++= backingRdds(c)
-      c
-    }
-    val idCol = vertices.columns.head
-    val verts = ckpt(vertices.select(col(idCol).as("id")))
-    val n = verts.count() // scalar: the one driver number PageRank needs
-    require(n > 0, "pageRank: empty vertex set")
-    val Array(srcC, dstC) = edges0.columns.take(2)
-    val half = edges0.select(col(srcC).as("src"), col(dstC).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    // Checkpointed DFs carry no stats, so every vertex-sized side here
-    // and in the loop gets an explicit broadcast hint (the
-    // [[connectedComponents]] lesson) — without them Catalyst
-    // sort-merge shuffles the FULL edge list once per iteration, which
-    // at sf0.1 made the rank loop 5× more expensive than any other
-    // bench query. Where the vertex table outgrows broadcast, drop the
-    // hints; the plan degrades to shuffle joins gracefully.
-    //
-    // ONE static edge materialization — the HALF (undirected) pair
-    // list, not the symmetrized copy: each iteration scans it once and
-    // emits BOTH directed contributions per row in-stage (explode of a
-    // 2-struct array — GenerateExec is codegen'd), so the big scan and
-    // the pinned bytes are half of the symmetrized design's. The degree
-    // division happens on the VERTEX-sized rank table before the
-    // per-iteration join (5k divisions instead of one per edge-row), so
-    // no `d` column rides the big list.
-    //
-    // `assumeMaterialized`: when the caller's edge list is ALREADY
-    // pinned (the session-cached dup-edge table — every registry
-    // caller), re-checkpointing here duplicates the single biggest
-    // allocation in the engine. The 100x probe measured the cost: two
-    // 600M-row deserialized pins of the same list blew the 24g heap
-    // outright. With the flag the cheap projection re-reads the
-    // caller's blocks in place, the kCore `assumeCanonical`
-    // discipline.
-    val halfPairs = if (assumeMaterialized) half else ckpt(half)
-    val deg = ckpt(halfPairs
-      .select(explode(array(col("src"), col("dst"))).as("src"))
-      .groupBy("src").agg(count(lit(1)).as("d")))
-    val basePico = 150000000000L / n // (1-d) share, floor — oracle matches
-    var ranks = ckpt(verts.select(col("id"),
-      lit(1000000000000L / n).as("r")))
-    for (_ <- 1 to iters) {
-      // r18 (guide §2.4): ONE left-join pass over the rank table yields
-      // BOTH per-iteration vertex-sized intermediates — the pre-divided
-      // contributions (deg match) AND the dangling mass (no deg match:
-      // exactly the vertices the old standalone dangVerts anti-join
-      // enumerated, so `dang` is the same sum and the anti-join table,
-      // its upfront checkpoint, and the per-iteration semi-join scan of
-      // `ranks` are all gone). deg is unique per src (group-by output),
-      // so the left join cannot multiply rows.
-      val rdeg = ckpt(ranks.join(deg, ranks("id") === deg("src"), "left")
-        .select(col("id"), col("r"), col("d")))
-      // dangling mass: rank parked on vertices with no out-edges, spread
-      // uniformly. Folded INTO the update plan as a broadcast 1-row
-      // aggregate (crossJoin) instead of a per-iteration driver collect —
-      // one less job barrier per iteration, and the driver never blocks
-      // on a scalar mid-loop. Integer semantics identical: `dang div n`
-      // is the same floor division the driver did. (r9 profiling note:
-      // the standalone floor is NOT scheduling — it's the genuine
-      // per-iteration scan of the 12M-row directed edge list, ~400 ms
-      // per broadcast-agg stage; see BUILDLOG r9.)
-      val dangRow = rdeg.filter(col("d").isNull)
-        .agg(coalesce(sum(col("r")), lit(0L)).as("dang"))
-      // broadcast the PRE-DIVIDED per-vertex contribution (r div d,
-      // vertex-sized) into the half-edge scan: per iteration the big
-      // list is SCANNED once (both directed contributions emitted
-      // in-stage, map-side combined partial agg) but never shuffled —
-      // only vertex-sized partials move. The two directed projections
-      // below re-read the pinned rdeg blocks in place (filter+project
-      // over a checkpointed vertex-sized table — no join re-run).
-      val perSrc = rdeg.filter(col("d").isNotNull)
-        .select(col("id").as("src"), expr("r div d").as("rd"))
-      val contrib = halfPairs
-        .join(broadcast(perSrc.select(col("src"), col("rd").as("rd_s"))),
-          "src")
-        .join(broadcast(perSrc.select(col("src").as("dst"),
-          col("rd").as("rd_d"))), "dst")
-        .select(explode(array(
-          struct(col("dst").as("to"), col("rd_s").as("rd")),
-          struct(col("src").as("to"), col("rd_d").as("rd")))).as("x"))
-        .select(col("x.to").as("dst"), col("x.rd").as("rd"))
-        .groupBy("dst").agg(sum(col("rd")).as("c"))
-      val update = verts
-        .join(broadcast(contrib), verts("id") === contrib("dst"), "left")
-        .crossJoin(broadcast(dangRow))
-        .select(col("id"),
-          (lit(basePico) +
-            expr(s"85 * (coalesce(c, CAST(0 AS BIGINT)) + dang div ${n}L) div 100")
-          ).as("r"))
-      lastRankUpdatePlan.set(update.queryExecution.executedPlan.toString)
-      ranks = ckpt(update)
-    }
-    val out = ranks.select(col("id").as("doc_id"),
-      col("r").as("rank_pico"),
-      (col("r").cast("double") / lit(1e12)).as("rank"))
-    val keep = backingRdds(ranks).map(_.id).toSet
-    allocated.filterNot(r => keep.contains(r.id)).distinct
-      .foreach(_.unpersist(blocking = false))
-    out
-  }
-
-  /** Multi-source BFS hop distance, bounded at `maxHops` — the
-    * transitive-taint primitive: "everything within k similarity hops
-    * of a flagged document" (contamination spreading through near-dup
-    * chains, abuse-cluster expansion, GDPR blast radius). Vertices
-    * unreached within the bound come back with a null distance.
-    *
-    * Frontier discipline: at round k only vertices discovered at k−1
-    * can reveal new ones, so the edge list is joined against the
-    * FRONTIER (vertex-sized or smaller, broadcast), never against the
-    * full distance table — per round the big list is scanned once, and
-    * the per-round state delta is exactly the new frontier. Pure
-    * integer labels; nothing about the result depends on execution
-    * order, so a DuckDB oracle matches exactly.
-    *
-    * @param vertices one column, the vertex id
-    * @param edges0   two columns (src, dst by position); symmetrized
-    * @param seeds    one column, the distance-0 vertex ids (⊆ vertices)
-    * @return (id, hop_dist) — 0 for seeds, k for k-hop discovery, null
-    *         beyond `maxHops` */
-  def hopDistance(vertices: DataFrame, edges0: DataFrame, seeds: DataFrame,
-      maxHops: Int = 2, assumeMaterialized: Boolean = false): DataFrame = {
-    val allocated = scala.collection.mutable.ListBuffer
-      .empty[org.apache.spark.rdd.RDD[_]]
-    def ckpt(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint()
-      allocated ++= backingRdds(c)
-      c
-    }
-    val idCol = vertices.columns.head
-    val verts = vertices.select(col(idCol).as("id"))
-    val seedIds = seeds.select(col(seeds.columns.head).as("id"))
-      .withColumn("d0", lit(0))
-    val Array(srcC, dstC) = edges0.columns.take(2)
-    // r17: `assumeMaterialized` is the pageRank/kCore discipline — when
-    // the caller's edge list is ALREADY session-pinned (every registry
-    // caller passes the cached dupEdges table), re-checkpointing here
-    // duplicated the biggest allocation of the query; the cheap
-    // projection re-reads the pinned blocks in place.
-    val halfRaw = edges0.select(col(srcC).as("src"), col(dstC).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val half = if (assumeMaterialized) halfRaw else ckpt(halfRaw)
-    val edges = half.union(half.select(col("dst"), col("src")))
-    var dist = ckpt(verts.join(broadcast(seedIds), Seq("id"), "left")
-      .select(col("id"), col("d0").as("d")))
-    for (k <- 1 to maxHops) {
-      val frontier = dist.filter(col("d") === (k - 1))
-        .select(col("id").as("src"))
-      // r18 (guide §2.4): the old round shape was
-      //   discovered.distinct() → broadcast → dist LEFT JOIN discovered
-      // i.e. per hop one hash Exchange (the distinct), one broadcast
-      // build job, and one join pass. The distinct existed only so the
-      // left join could not multiply rows, and the join only computed
-      // coalesce(d, k). One union+min aggregate does both at once:
-      // old d (≤ k−1) always beats a fresh discovery at k, an
-      // undiscovered null stays null (min ignores nulls), and the
-      // map-side partial aggregation dedups discoveries before the
-      // exchange exactly like the distinct did — one vertex-sized
-      // Exchange per hop, no broadcast of the discovered set (the safer
-      // shape at scale too: the discovered set is vertex-sized in the
-      // worst case, the frontier usually far smaller). `inU` keeps the
-      // old left-join universe semantics bit-exact: an edge endpoint
-      // outside the vertex table was dropped by the join, so drop
-      // aggregate groups no dist row contributed to.
-      val discovered = edges.join(broadcast(frontier), "src")
-        .select(col("dst").as("id"), lit(k).as("d"), lit(0).as("inU"))
-      dist = ckpt(dist.withColumn("inU", lit(1)).union(discovered)
-        .groupBy("id").agg(min(col("d")).as("d"), max(col("inU")).as("inU"))
-        .filter(col("inU") === 1).select("id", "d"))
-    }
-    val out = dist.select(col("id").as("doc_id"), col("d").as("hop_dist"))
-    val keep = backingRdds(dist).map(_.id).toSet
-    allocated.filterNot(r => keep.contains(r.id)).distinct
-      .foreach(_.unpersist(blocking = false))
-    out
-  }
-
-  /** The transitivity ratio shared with the oracle, unrounded
-    * (TradeOps' no-round rule: `3·T/W` is a ratio of exact integers
-    * and can land on a decimal half). */
-  private val transitivityExpr =
-    "CASE WHEN n_wedges = 0 THEN NULL ELSE " +
-      "3.0 * CAST(n_triangles AS DOUBLE) / CAST(n_wedges AS DOUBLE) " +
-      "END AS transitivity"
-
-  /** Triangle count + global clustering coefficient (transitivity) of
-    * an undirected graph, via the degree-ordered edge-iterator
-    * algorithm: orient every edge from its lower-(degree, id) endpoint
-    * to the higher one, build wedges only from ORIENTED out-neighbor
-    * pairs, and close them against the oriented edge set. Orientation
-    * bounds every vertex's out-degree by O(√m), so the wedge join —
-    * the only super-linear stage — generates O(m^1.5) rows worst case
-    * instead of Σd² on the raw adjacency: the standard scalable
-    * triangle plan (each triangle counted exactly once, at its
-    * smallest-key vertex). Three shuffle joins keyed on vertex ids, a
-    * tiny final cross of single-row aggregates. */
-  def triangles(edges0: DataFrame): DataFrame = {
-    val Array(ac, bc) = edges0.columns.take(2)
-    // normalize to a < b BEFORE distinct so a reversed duplicate
-    // (x,y)+(y,x) collapses to one undirected edge
-    val e = edges0.select(
-      least(col(ac).cast("long"), col(bc).cast("long")).as("a"),
-      greatest(col(ac).cast("long"), col(bc).cast("long")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val deg = e.select(col("a").as("id"))
-      .union(e.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
-    val lower = col("da") < col("db") ||
-      (col("da") === col("db") && col("a") < col("b"))
-    val o = e
-      .join(deg.select(col("id").as("a"), col("d").as("da")), "a")
-      .join(deg.select(col("id").as("b"), col("d").as("db")), "b")
-      .select(
-        when(lower, col("a")).otherwise(col("b")).as("u"),
-        when(lower, col("b")).otherwise(col("a")).as("v"),
-        when(lower, col("db")).otherwise(col("da")).as("dv"))
-    val e1 = o.select(col("u"), col("v").as("v1"), col("dv").as("dv1"))
-    val e2 = o.select(col("u"), col("v").as("v2"), col("dv").as("dv2"))
-    val wedges = e1.join(e2, Seq("u"))
-      .filter(col("dv1") < col("dv2") ||
-        (col("dv1") === col("dv2") && col("v1") < col("v2")))
-    val tri = wedges.join(
-      o.select(col("u").as("v1"), col("v").as("v2")), Seq("v1", "v2"))
-      .agg(count(lit(1)).as("n_triangles"))
-    val nE = e.agg(count(lit(1)).as("n_edges"))
-    // coalesce: an empty graph must report 0 wedges (matching the
-    // oracle's coalesce), not a NULL sum
-    val nW = deg.agg(coalesce(sum(expr("d * (d - 1) div 2")), lit(0L))
-      .as("n_wedges"))
-    nE.crossJoin(nW).crossJoin(tri)
-      .select(col("n_edges"), col("n_wedges"), col("n_triangles"),
-        expr(transitivityExpr))
-  }
-
-  /** Synchronous label-propagation communities (Raghavan et al. 2007,
-    * made DETERMINISTIC): every vertex starts labeled with itself;
-    * each round it adopts the label with the most votes among its
-    * neighbors' current labels PLUS one self-vote, ties broken by the
-    * smallest label. A fixed `rounds` count (not convergence) keeps
-    * the computation a pure function of the input — sync LPA can
-    * oscillate, and a data-dependent stopping rule would make the
-    * result engine-fragile. Communities differ from connected
-    * components (which only see reachability): LPA splits a weakly
-    * bridged component into its dense cores — the sub-cluster
-    * structure dedup resolution flattens. Output is the
-    * community-SIZE histogram (size, n_communities): stable and tiny
-    * at any corpus scale.
-    *
-    * Scale shape: each round is one (edges ⋈ labels) shuffle keyed on
-    * vertex id plus two partial-aggregated groupBys — O(rounds · m)
-    * total, no quadratic stage; on a mutual-kNN input (deg ≤ k) each
-    * vote table is ≤ k·n rows. The per-round `max_by(lbl, (votes,
-    * −lbl))` argmax is a single map-side-combinable aggregate. */
-  def labelPropagation(edges0: DataFrame, rounds: Int = 4): DataFrame = {
-    val Array(ac, bc) = edges0.columns.take(2)
-    val e = edges0.select(col(ac).cast("long").as("doc_a"),
-      col(bc).cast("long").as("doc_b"))
-    val dir = e.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(e.select(col("doc_b"), col("doc_a")))
-    val verts = dir.select(col("src").as("v")).distinct()
-    // r17 (guide §1.2, the mmrSelect lesson): lbl is referenced TWICE
-    // per round (the neighbor join and the self-vote union), so the
-    // un-truncated chain re-executed round r−1's whole plan 2× per
-    // round — 2^rounds copies of the label derivation by round 4
-    // (17.3 s executor time at sf0.1). Checkpoint the vertex-sized
-    // label table per round; every round then pays exactly one edge
-    // join + two aggregates, the documented O(rounds·m) shape. The
-    // per-round checkpoints are released on exit; only the tiny
-    // histogram leaves, computed before the release (count actions on
-    // the returned frame re-read materialized blocks, not lineage).
-    val allocated = scala.collection.mutable.ListBuffer
-      .empty[org.apache.spark.rdd.RDD[_]]
-    var lbl = verts.select(col("v"), col("v").as("lbl"))
-    for (_ <- 1 to rounds) {
-      val nbr = dir
-        .join(lbl.select(col("v").as("dst"), col("lbl")), "dst")
-        .select(col("src").as("v"), col("lbl"))
-      // r18 adjudicated NON-change (guide §1 measure-first): fusing the
-      // count-then-argmax pair into one `mode(lbl, deterministic=true)`
-      // aggregate (identical semantics: most frequent label, frequency
-      // ties to the lowest) removes one Exchange per round but measured
-      // SLOWER solo A/B at matched canary (1.01 → 1.35 s): mode is a
-      // TypedImperativeAggregate — ObjectHashAggregate with a per-group
-      // map, no whole-stage codegen — and at vote-table size the lost
-      // codegen costs more than the saved vertex-sized shuffle. The
-      // two codegen'd hash aggregates stay.
-      val votes = nbr.unionByName(lbl)
-        .groupBy("v", "lbl").agg(count(lit(1)).as("c"))
-      lbl = votes.groupBy("v")
-        .agg(max_by(col("lbl"), struct(col("c"), (-col("lbl")).as("nl")))
-          .as("lbl"))
-        .localCheckpoint()
-      allocated ++= backingRdds(lbl)
-    }
-    val out = lbl.groupBy("lbl").agg(count(lit(1)).as("sz"))
-      .groupBy(col("sz").as("community_size"))
-      .agg(count(lit(1)).as("n_communities"))
-      .localCheckpoint()
-    val keep = backingRdds(out).map(_.id).toSet
-    allocated.filterNot(r => keep.contains(r.id)).distinct
-      .foreach(_.unpersist(blocking = false))
-    out
-  }
-
-  /** Oracle body for [[labelPropagation]] — continues a WITH chain
-    * whose last CTE is `pairs(doc_a, doc_b)` (note the leading
-    * comma). Rounds unrolled; every round CTE is MATERIALIZED (each is
-    * referenced twice — DuckDB would otherwise inline and re-run the
-    * whole prefix exponentially, the round-10 lesson). */
-  def labelPropagationSql(rounds: Int = 4): String = {
-    val sb = new StringBuilder(
-      """, dirp AS MATERIALIZED (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION ALL SELECT doc_b, doc_a FROM pairs
-        |), lp0 AS MATERIALIZED (
-        |  SELECT DISTINCT src AS v, src AS lbl FROM dirp
-        |)""".stripMargin)
-    for (r <- 1 to rounds) {
-      val prev = s"lp${r - 1}"
-      sb ++= s""",
-        | lp$r AS MATERIALIZED (
-        |  SELECT v, lbl FROM (
-        |    SELECT v, lbl,
-        |           row_number() OVER (PARTITION BY v
-        |             ORDER BY c DESC, lbl ASC) AS rn
-        |    FROM (
-        |      SELECT v, lbl, count(*) AS c FROM (
-        |        SELECT e.src AS v, l.lbl
-        |        FROM dirp e JOIN $prev l ON l.v = e.dst
-        |        UNION ALL SELECT v, lbl FROM $prev
-        |      ) GROUP BY 1, 2
-        |    )
-        |  ) WHERE rn = 1
-        |)""".stripMargin
-    }
-    sb ++= s"""
-      |SELECT sz AS community_size,
-      |       CAST(count(*) AS BIGINT) AS n_communities
-      |FROM (
-      |  SELECT lbl, CAST(count(*) AS BIGINT) AS sz
-      |  FROM lp$rounds GROUP BY 1
-      |) GROUP BY 1""".stripMargin
-    sb.toString
-  }
-
-  /** Common-neighbor link prediction over an undirected edge list —
-    * the "which near-duplicate pairs did the banding MISS" triage a
-    * dedup pipeline runs over its own similarity graph: two documents
-    * sharing many graph neighbors but no edge are the likeliest
-    * false negatives. Scores every non-adjacent two-hop pair by
-    * common-neighbor count and also EMITS a neighborhood-Jaccard score
-    * (exact integer micro-units — `(cn * 1e6) div (|N(a)|+|N(b)|-cn)`
-    * — so the hash can never straddle a double ulp); the returned rows
-    * are the global top `topN` by (count desc, doc_a, doc_b) — Jaccard
-    * is a reported score only, ties break on the id pair in both
-    * engines.
-    *
-    * Scale shape: the wedge self-join is keyed on the shared neighbor,
-    * so its output is Σ_v deg(v)² — bounded by k·m on a kNN-sparsified
-    * graph (deg ≤ k), never all-pairs; the anti-join and degree joins
-    * shuffle on vertex ids; and the global top-N compiles to
-    * TakeOrderedAndProject (per-partition heaps + a topN-row driver
-    * merge), not a full sort. */
-  def linkPrediction(edges0: DataFrame, topN: Int = 50): DataFrame = {
-    val Array(ac, bc) = edges0.columns.take(2)
-    val e = edges0.select(
-      least(col(ac).cast("long"), col(bc).cast("long")).as("doc_a"),
-      greatest(col(ac).cast("long"), col(bc).cast("long")).as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b")).distinct()
-    val dir = e.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(e.select(col("doc_b"), col("doc_a")))
-    val deg = dir.groupBy("src").agg(count(lit(1)).as("deg"))
-    val cand = dir.select(col("src"), col("dst").as("doc_a"))
-      .join(dir.select(col("src"), col("dst").as("doc_b")), Seq("src"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("common_neighbors"))
-      .join(e, Seq("doc_a", "doc_b"), "left_anti")
-    cand
-      .join(deg.select(col("src").as("doc_a"), col("deg").as("deg_a")), "doc_a")
-      .join(deg.select(col("src").as("doc_b"), col("deg").as("deg_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"), col("common_neighbors"),
-        expr("(common_neighbors * 1000000) div " +
-          "(deg_a + deg_b - common_neighbors)").as("jaccard_micro"))
-      .orderBy(col("common_neighbors").desc, col("doc_a"), col("doc_b"))
-      .limit(topN)
-  }
-
-  /** Oracle body for [[linkPrediction]] — continues a WITH chain whose
-    * last CTE is `pairs(doc_a, doc_b)`, `doc_a < doc_b` (note the
-    * leading comma). */
-  def linkPredictionSql(topN: Int = 50): String =
-    s""", dirlp AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION ALL SELECT doc_b, doc_a FROM pairs
-       |), deglp AS (
-       |  SELECT src, count(*) AS deg FROM dirlp GROUP BY 1
-       |), candlp AS (
-       |  SELECT x.dst AS doc_a, y.dst AS doc_b,
-       |         count(*) AS common_neighbors
-       |  FROM dirlp x JOIN dirlp y ON x.src = y.src AND x.dst < y.dst
-       |  GROUP BY 1, 2
-       |), nonedge AS (
-       |  SELECT c.doc_a, c.doc_b, c.common_neighbors
-       |  FROM candlp c LEFT JOIN pairs p
-       |    ON p.doc_a = c.doc_a AND p.doc_b = c.doc_b
-       |  WHERE p.doc_a IS NULL
-       |)
-       |SELECT n.doc_a, n.doc_b,
-       |       CAST(n.common_neighbors AS BIGINT) AS common_neighbors,
-       |       CAST((n.common_neighbors * 1000000) //
-       |            (da.deg + db.deg - n.common_neighbors) AS BIGINT)
-       |         AS jaccard_micro
-       |FROM nonedge n
-       |JOIN deglp da ON da.src = n.doc_a
-       |JOIN deglp db ON db.src = n.doc_b
-       |ORDER BY n.common_neighbors DESC, n.doc_a, n.doc_b
-       |LIMIT $topN""".stripMargin
-
-  /** Oracle body for [[triangles]] — caller prepends a CTE chain
-    * ending in `pairs(doc_a, doc_b)` with `doc_a < doc_b`. */
-  val trianglesSql: String =
-    s"""SELECT n_edges, n_wedges, n_triangles, $transitivityExpr
-       |FROM (SELECT count(*) AS n_edges FROM pairs),
-       |     (SELECT CAST(coalesce(sum(d * (d - 1) // 2), 0) AS BIGINT)
-       |        AS n_wedges
-       |      FROM (SELECT id, count(*) AS d FROM (
-       |              SELECT doc_a AS id FROM pairs
-       |              UNION ALL SELECT doc_b FROM pairs) GROUP BY 1)),
-       |     (SELECT count(*) AS n_triangles
-       |      FROM (WITH deg AS (
-       |              SELECT id, count(*) AS d FROM (
-       |                SELECT doc_a AS id FROM pairs
-       |                UNION ALL SELECT doc_b FROM pairs) GROUP BY 1
-       |            ), o AS (
-       |              SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND
-       |                       p.doc_a < p.doc_b) THEN p.doc_a
-       |                     ELSE p.doc_b END AS u,
-       |                     CASE WHEN da.d < db.d OR (da.d = db.d AND
-       |                       p.doc_a < p.doc_b) THEN p.doc_b
-       |                     ELSE p.doc_a END AS v,
-       |                     CASE WHEN da.d < db.d OR (da.d = db.d AND
-       |                       p.doc_a < p.doc_b) THEN db.d
-       |                     ELSE da.d END AS dv
-       |              FROM pairs p JOIN deg da ON da.id = p.doc_a
-       |                           JOIN deg db ON db.id = p.doc_b
-       |            )
-       |            SELECT 1 AS one
-       |            FROM o e1 JOIN o e2 ON e1.u = e2.u
-       |                 AND (e1.dv < e2.dv OR (e1.dv = e2.dv AND e1.v < e2.v))
-       |                 JOIN o e3 ON e3.u = e1.v AND e3.v = e2.v))""".stripMargin
-
-  /** Local clustering coefficient per vertex — the node-level twin of
-    * [[triangles]]' global transitivity: `lcc = 2·tri(v) / (deg(v)·
-    * (deg(v)−1))` for deg ≥ 2, emitted as an exact ppm integer
-    * (`2·tri·10⁶ div deg·(deg−1)` — all operands non-negative, so
-    * floor and truncate division agree across engines). On the dup
-    * similarity graph this separates tight template cliques (lcc → 1:
-    * collapse the whole cluster) from hub-and-spoke near-dup stars
-    * (lcc → 0: the hub matches many docs that don't match each other —
-    * the classic boilerplate-laden-prefix signature), which is the
-    * per-cluster triage [[triangles]]' single global number can't do.
-    *
-    * Scale shape: identical to [[triangles]] — degree-oriented wedge
-    * join, O(Σ d·d_max) with the orientation bounding each vertex's
-    * wedge fan-out by its LOWER-degree endpoints — plus one explode
-    * (3 rows per triangle) and a vertex-keyed count. On a mutual-kNN
-    * input (deg ≤ k) the whole thing is O(k·m). */
-  def localClustering(edges0: DataFrame): DataFrame = {
-    val Array(ac, bc) = edges0.columns.take(2)
-    val e = edges0.select(
-      least(col(ac).cast("long"), col(bc).cast("long")).as("a"),
-      greatest(col(ac).cast("long"), col(bc).cast("long")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val deg = e.select(col("a").as("id"))
-      .union(e.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-    val lower = col("da") < col("db") ||
-      (col("da") === col("db") && col("a") < col("b"))
-    val o = e
-      .join(deg.select(col("id").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("id").as("b"), col("deg").as("db")), "b")
-      .select(
-        when(lower, col("a")).otherwise(col("b")).as("u"),
-        when(lower, col("b")).otherwise(col("a")).as("v"),
-        when(lower, col("db")).otherwise(col("da")).as("dv"))
-    val e1 = o.select(col("u"), col("v").as("v1"), col("dv").as("dv1"))
-    val e2 = o.select(col("u"), col("v").as("v2"), col("dv").as("dv2"))
-    val triVerts = e1.join(e2, Seq("u"))
-      .filter(col("dv1") < col("dv2") ||
-        (col("dv1") === col("dv2") && col("v1") < col("v2")))
-      .join(o.select(col("u").as("v1"), col("v").as("v2")), Seq("v1", "v2"))
-      .select(explode(array(col("u"), col("v1"), col("v2"))).as("id"))
-    val triCnt = triVerts.groupBy("id").agg(count(lit(1)).as("tri"))
-    deg.filter(col("deg") >= 2)
-      .join(triCnt, Seq("id"), "left")
-      .select(col("id"), col("deg"),
-        coalesce(col("tri"), lit(0L)).as("tri"))
-      .withColumn("lcc_ppm",
-        expr("(2 * tri * 1000000) div (deg * (deg - 1))"))
-  }
-
-  /** Oracle for [[localClustering]]; chains on a CTE named `pairs`
-    * (the [[trianglesSql]] convention). Same degree orientation, the
-    * triangle's three vertices unnested, per-vertex counts
-    * left-joined onto deg ≥ 2 vertices. */
-  val localClusteringSql: String =
-    """SELECT d.id, d.deg,
-      |       CAST(coalesce(t.tri, 0) AS BIGINT) AS tri,
-      |       (2 * CAST(coalesce(t.tri, 0) AS BIGINT) * 1000000)
-      |         // (d.deg * (d.deg - 1)) AS lcc_ppm
-      |FROM (SELECT id, count(*) AS deg FROM (
-      |        SELECT doc_a AS id FROM pairs
-      |        UNION ALL SELECT doc_b FROM pairs) GROUP BY 1) d
-      |LEFT JOIN (
-      |  WITH cdeg AS (
-      |    SELECT id, count(*) AS d FROM (
-      |      SELECT doc_a AS id FROM pairs
-      |      UNION ALL SELECT doc_b FROM pairs) GROUP BY 1
-      |  ), o AS (
-      |    SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND
-      |             p.doc_a < p.doc_b) THEN p.doc_a
-      |           ELSE p.doc_b END AS u,
-      |           CASE WHEN da.d < db.d OR (da.d = db.d AND
-      |             p.doc_a < p.doc_b) THEN p.doc_b
-      |           ELSE p.doc_a END AS v,
-      |           CASE WHEN da.d < db.d OR (da.d = db.d AND
-      |             p.doc_a < p.doc_b) THEN db.d
-      |           ELSE da.d END AS dv
-      |    FROM pairs p JOIN cdeg da ON da.id = p.doc_a
-      |                 JOIN cdeg db ON db.id = p.doc_b
-      |  )
-      |  SELECT id, count(*) AS tri FROM (
-      |    SELECT unnest([e1.u, e1.v, e2.v]) AS id
-      |    FROM o e1 JOIN o e2 ON e1.u = e2.u
-      |         AND (e1.dv < e2.dv OR (e1.dv = e2.dv AND e1.v < e2.v))
-      |         JOIN o e3 ON e3.u = e1.v AND e3.v = e2.v
-      |  ) GROUP BY 1
-      |) t ON t.id = d.id
-      |WHERE d.deg >= 2""".stripMargin
-
-  /** Degree assortativity — Pearson correlation of endpoint degrees
-    * over the directed edge list (each undirected edge counted both
-    * ways, the standard Newman form): positive = hubs prefer hubs
-    * (core-periphery dup structure), negative = hubs link leaves
-    * (star-shaped boilerplate spray). By symmetry Σx = Σy and
-    * Σx² = Σy², so `r = (M·Σxy − (Σx)²) / (M·Σx² − (Σx)²)` — every
-    * sum an exact BIGINT (degrees are k-bounded on the mutual-kNN
-    * input; range-checked to sf100), ONE float division at the end,
-    * NULL on a degree-regular graph (denominator 0 — r is undefined
-    * there, not 0). Two broadcast-joined degree lookups and a single
-    * aggregate; nothing quadratic. */
-  def assortativity(edges0: DataFrame): DataFrame = {
-    val Array(ac, bc) = edges0.columns.take(2)
-    val e = edges0.select(
-      least(col(ac).cast("long"), col(bc).cast("long")).as("a"),
-      greatest(col(ac).cast("long"), col(bc).cast("long")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val deg = e.select(col("a").as("id"))
-      .union(e.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
-    val directed = e.select(col("a").as("src"), col("b").as("dst"))
-      .union(e.select(col("b").as("src"), col("a").as("dst")))
-    directed
-      .join(deg.select(col("id").as("src"), col("d").as("dx")), "src")
-      .join(deg.select(col("id").as("dst"), col("d").as("dy")), "dst")
-      .agg(count(lit(1)).as("m2"), sum(col("dx") * col("dy")).as("sxy"),
-        sum(col("dx")).as("sx"), sum(col("dx") * col("dx")).as("sxx"))
-      .select((col("m2") / 2).cast("long").as("n_edges"),
-        expr("""CASE WHEN m2 * sxx - sx * sx = 0 THEN NULL
-               |ELSE CAST(m2 * sxy - sx * sx AS DOUBLE)
-               |     / CAST(m2 * sxx - sx * sx AS DOUBLE) END""".stripMargin)
-          .as("assortativity"))
-  }
-
-  /** Oracle for [[assortativity]]; chains on a CTE named `pairs`
-    * ([[trianglesSql]] convention). */
-  val assortativitySql: String =
-    """SELECT CAST(m2 / 2 AS BIGINT) AS n_edges,
-      |       CASE WHEN m2 * sxx - sx * sx = 0 THEN NULL
-      |       ELSE CAST(m2 * sxy - sx * sx AS DOUBLE)
-      |            / CAST(m2 * sxx - sx * sx AS DOUBLE) END AS assortativity
-      |FROM (
-      |  SELECT count(*) AS m2,
-      |         CAST(sum(dg1.d * dg2.d) AS BIGINT) AS sxy,
-      |         CAST(sum(dg1.d) AS BIGINT) AS sx,
-      |         CAST(sum(dg1.d * dg1.d) AS BIGINT) AS sxx
-      |  FROM (SELECT doc_a AS src, doc_b AS dst FROM pairs
-      |        UNION ALL SELECT doc_b, doc_a FROM pairs) dir
-      |  JOIN (SELECT id, count(*) AS d FROM (
-      |          SELECT doc_a AS id FROM pairs
-      |          UNION ALL SELECT doc_b FROM pairs) GROUP BY 1) dg1
-      |    ON dg1.id = dir.src
-      |  JOIN (SELECT id, count(*) AS d FROM (
-      |          SELECT doc_a AS id FROM pairs
-      |          UNION ALL SELECT doc_b FROM pairs) GROUP BY 1) dg2
-      |    ON dg2.id = dir.dst)""".stripMargin
-
-  /** K-core decomposition (extension) — iterative peeling to the
-    * maximal subgraph where every vertex keeps degree ≥ k: the standard
-    * "dense cluster vs stragglers" cut before expensive per-cluster
-    * work (here: which near-dup clusters are tight enough to collapse
-    * aggressively).
-    *
-    * Frontier/delta peel: the edge list is deduped, checkpointed ONCE
-    * and never rewritten — measurement showed the naive
-    * rewrite-the-edges round spending seconds re-materializing a 6M-edge
-    * set to remove 22 edges (the dup graph's 2-core IS essentially the
-    * graph; peel rounds touch a vanishing frontier). Instead each round
-    * (a) finds the edges incident to the vertices removed last round,
-    * (b) decrements the surviving endpoints' maintained degrees, and
-    * (c) emits the next frontier (survivors that dropped below k). The
-    * frontier is usually tiny, so the incident-edge probe is a broadcast
-    * semi-join — a map-only scan of the immutable edge checkpoint; past
-    * `broadcastFrontier` rows (a huge first wave at 100 TB) it falls
-    * back to a shuffle semi-join on the same plan, and
-    * `broadcastFrontier = 0` forces that path so the spec can prove the
-    * two agree. Per-round shuffles are vertex-sized (the degree-loss
-    * aggregate + the degree update), never edge-sized. Peeling is
-    * monotone (vertices only leave), so a converged state is a FIXPOINT:
-    * extra rounds are no-ops — which is exactly what lets the SQL oracle
-    * over-unroll a fixed iteration count. `localCheckpoint` per round
-    * cuts lineage (released on exit, the [[connectedComponents]] leak
-    * lesson); fails loud on non-convergence like
-    * [[connectedComponents]]. */
-  /** @param assumeCanonical the input is ALREADY a deduplicated
-    *   canonical edge list (`a < b`, distinct, materialized — what
-    *   [[graft.ops.Dedup.dupEdges]] checkpoints): skip the
-    *   normalize+distinct pass, which is otherwise a full shuffle of
-    *   the edge list (measured 1.9 s of the g_kcore floor at sf0.1 —
-    *   the single most expensive stage — re-deduplicating 6M
-    *   already-distinct rows) and skip re-pinning a second copy. */
-  def kCore(edges0: DataFrame, k: Int = 2, maxIter: Int = 20,
-      broadcastFrontier: Long = 5000000L,
-      assumeCanonical: Boolean = false): DataFrame = {
-    val allocated = scala.collection.mutable.ListBuffer
-      .empty[org.apache.spark.rdd.RDD[_]]
-    def ckpt(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint()
-      allocated ++= backingRdds(c)
-      c
-    }
-    val Array(ac, bc) = edges0.columns.take(2)
-    val edges =
-      if (assumeCanonical)
-        // cheap cast projection over the caller's (materialized) list —
-        // the per-round semi-join probes re-read it in place
-        edges0.select(col(ac).cast("long").as("a"),
-          col(bc).cast("long").as("b"))
-      else ckpt(edges0.select(
-        least(col(ac).cast("long"), col(bc).cast("long")).as("a"),
-        greatest(col(ac).cast("long"), col(bc).cast("long")).as("b"))
-        .filter(col("a") =!= col("b")).distinct())
-    var deg = ckpt(edges.select(col("a").as("id"))
-      .union(edges.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("degree")))
-    // the frontier is never checkpointed: it is a cheap filter over the
-    // ALREADY-checkpointed degree table (one fewer eager job per round;
-    // both of its uses — the count and the next round's probes — rescan
-    // the materialized parent in place)
-    var frontier = deg.filter(col("degree") < k).select("id")
-    var nFrontier = frontier.count()
-    var iter = 0
-    while (nFrontier > 0) {
-      if (iter >= maxIter)
-        throw new IllegalStateException(
-          s"kCore(k=$k) did not converge in $maxIter rounds")
-      val f =
-        if (broadcastFrontier > 0 && nFrontier <= broadcastFrontier)
-          broadcast(frontier)
-        else frontier
-      // Each edge with exactly one endpoint leaving charges one degree
-      // loss to the endpoint that stays; edges losing both endpoints
-      // charge rows only to removed vertices, which the anti-join below
-      // discards — so the maintained degree is always the degree within
-      // the current surviving subgraph.
-      // r18 (guide §2.4, the pageRank half-list discipline): ONE scan of
-      // the pinned edge list per round — both directed contributions
-      // are emitted in-stage (explode of a 2-struct array, codegen'd
-      // GenerateExec) and semi-filtered on the leaving endpoint —
-      // instead of two full scans (one semi-join per endpoint side).
-      // Row-identical: (a,b) contributes id=b iff a is leaving and
-      // id=a iff b is leaving, exactly the old union's two branches.
-      val loss = edges
-        .select(explode(array(
-          struct(col("a").as("src"), col("b").as("to")),
-          struct(col("b").as("src"), col("a").as("to")))).as("e"))
-        .select(col("e.src").as("src"), col("e.to").as("id"))
-        .join(f.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-        .groupBy("id").agg(count(lit(1)).as("loss"))
-      val nextDeg = ckpt(deg.join(f, Seq("id"), "left_anti")
-        .join(loss, Seq("id"), "left")
-        .select(col("id"),
-          (col("degree") - coalesce(col("loss"), lit(0L))).as("degree")))
-      frontier = nextDeg.filter(col("degree") < k).select("id")
-      deg = nextDeg
-      nFrontier = frontier.count()
-      iter += 1
-    }
-    val keepRdds = backingRdds(deg).toSet
-    allocated.filterNot(keepRdds).distinct
-      .foreach(_.unpersist(blocking = false))
-    deg
-  }
-
-  /** Degree histogram (extension) — the first thing to look at before
-    * any iterative graph algorithm: (degree → vertex count), isolated
-    * vertices included at degree 0. Two aggregate-sized shuffles
-    * (endpoint counts, then the histogram over ≤ max-degree groups) and
-    * one key-colocated left join — no iteration, holds at any edge
-    * count. Reversed duplicate edges collapse like [[triangles]]. */
-  def degreeHistogram(vertices: DataFrame, edges0: DataFrame): DataFrame = {
-    val Array(vc) = vertices.columns.take(1)
-    val Array(ac, bc) = edges0.columns.take(2)
-    val e = edges0.select(
-      least(col(ac).cast("long"), col(bc).cast("long")).as("a"),
-      greatest(col(ac).cast("long"), col(bc).cast("long")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val deg = e.select(col("a").as("id"))
-      .union(e.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
-    vertices.select(col(vc).cast("long").as("id"))
-      .join(deg, Seq("id"), "left")
-      .groupBy(coalesce(col("d"), lit(0L)).as("degree"))
-      .agg(count(lit(1)).as("n_docs"))
-  }
-
-  /** G (extension, r15) — TWO-HOP REACH histogram: for every vertex,
-    * the number of distinct vertices within ≤2 hops (excluding
-    * itself), rolled up to a (reach, n_docs) histogram — the
-    * neighborhood-growth meter between [[degreeHistogram]] (1 hop) and
-    * the global [[connectedComponents]] (∞ hops): how fast the
-    * similarity manifold expands around each doc. Exact counting
-    * throughout. Plan: canonical edges → symmetric directed list (2E
-    * rows) → one self-join on the mid vertex (Σdeg² pairs) → distinct
-    * + per-src count → left join back to the vertex set so isolated
-    * docs land in the 0 bucket. ⚠️ DEGREE-BOUNDED INPUT REQUIRED: the
-    * mid-vertex enumeration is Σdeg², and on a RAW dup-edge graph a
-    * boilerplate near-clique of size c contributes c³ pre-distinct
-    * rows — measured live at sf0.1, where the loose dup graph filled
-    * the host's disk with shuffle spill before distinct could collapse
-    * it. The registered form therefore consumes the mutual-kNN
-    * sparsified graph (deg ≤ k ⇒ ≤ n·k² rows, linear in the corpus),
-    * exactly like [[triangles]]/[[richClub]]; feed raw dup edges only
-    * through a sparsifier. Two data-sized shuffles; output is
-    * histogram-sized at any scale. */
-  def twoHopReach(vertices: DataFrame, edges0: DataFrame): DataFrame = {
-    val Array(vc) = vertices.columns.take(1)
-    val Array(ac, bc) = edges0.columns.take(2)
-    val e = edges0.select(
-      least(col(ac).cast("long"), col(bc).cast("long")).as("a"),
-      greatest(col(ac).cast("long"), col(bc).cast("long")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val sym = e.select(col("a").as("src"), col("b").as("dst"))
-      .union(e.select(col("b").as("src"), col("a").as("dst")))
-    val two = sym.as("x").join(sym.as("y"),
-        col("x.dst") === col("y.src"))
-      .select(col("x.src").as("src"), col("y.dst").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val reach = sym.union(two).distinct()
-      .groupBy("src").agg(count(lit(1)).as("n_reach"))
-    vertices.select(col(vc).cast("long").as("src"))
-      .join(reach, Seq("src"), "left")
-      .groupBy(coalesce(col("n_reach"), lit(0L)).as("reach2"))
-      .agg(count(lit(1)).as("n_docs"))
-  }
-
-  /** Rich-club coefficient sweep — do the high-degree nodes wire to
-    * EACH OTHER more densely than chance (the hub-oligarchy question;
-    * in a dedup graph a rich club is a boilerplate nucleus, in a kNN
-    * graph a hubness pathology)? For each degree threshold `k`:
-    * `φ(k) = 2·E_k / (N_k·(N_k−1))` over the subgraph of nodes with
-    * degree > k, emitted in exact ppm by floor division. One degree
-    * aggregate + two broadcast joins back to the edge list; the
-    * threshold sweep rides a 3-row broadcast cross join, so the edge
-    * list is scanned ONCE for all thresholds. Overflow-guarded in div
-    * form (N_k·(N_k−1) and 2·E_k·10⁶ must stay in BIGINT — fails
-    * loudly past ~3·10⁹ club nodes). */
-  def richClub(edges0: DataFrame, ks: Seq[Long] = Seq(2L, 3L, 4L))
-      : DataFrame = {
-    val Array(ac, bc) = edges0.columns.take(2)
-    val e = edges0.select(
-      least(col(ac).cast("long"), col(bc).cast("long")).as("doc_a"),
-      greatest(col(ac).cast("long"), col(bc).cast("long")).as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b")).distinct()
-    val deg = e.select(col("doc_a").as("id"))
-      .union(e.select(col("doc_b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
-    val thr = e.sparkSession.createDataFrame(
-      ks.map(Tuple1(_))).toDF("k")
-    val nodesK = deg.crossJoin(broadcast(thr))
-      .filter(col("d") > col("k"))
-      .groupBy("k").agg(count(lit(1)).as("n_club_nodes"))
-    val edgesK = e
-      .join(deg.select(col("id").as("doc_a"), col("d").as("da")), "doc_a")
-      .join(deg.select(col("id").as("doc_b"), col("d").as("db")), "doc_b")
-      .crossJoin(broadcast(thr))
-      .filter(col("da") > col("k") && col("db") > col("k"))
-      .groupBy("k").agg(count(lit(1)).as("n_club_edges"))
-    thr.join(nodesK, Seq("k"), "left")
-      .join(edgesK, Seq("k"), "left")
-      .select(col("k"),
-        coalesce(col("n_club_nodes"), lit(0L)).as("n_club_nodes"),
-        coalesce(col("n_club_edges"), lit(0L)).as("n_club_edges"))
-      .filter(expr(
-        "assert_true(n_club_nodes <= 3037000499 AND " +
-          "n_club_edges <= (9223372036854775807 div 2) div 1000000, " +
-          "'rich_club: club too large for exact BIGINT phi — widen to " +
-          "DECIMAL(38,0)') IS NULL"))
-      .withColumn("phi_ppm", expr(
-        "CASE WHEN n_club_nodes >= 2 THEN (2 * n_club_edges * 1000000) " +
-          "div (n_club_nodes * (n_club_nodes - 1)) ELSE NULL END"))
-  }
-
-  /** Oracle body for [[richClub]] — continues a WITH chain whose last
-    * CTE is `pairs(doc_a, doc_b)`. */
-  def richClubSql(ks: Seq[Long] = Seq(2L, 3L, 4L)): String = {
-    val thrList = ks.mkString(", ")
-    s"""SELECT t.k,
-       |       CAST(coalesce(n.n_club_nodes, 0) AS BIGINT) AS n_club_nodes,
-       |       CAST(coalesce(g.n_club_edges, 0) AS BIGINT) AS n_club_edges,
-       |       CASE WHEN coalesce(n.n_club_nodes, 0) >= 2
-       |            THEN (2 * CAST(coalesce(g.n_club_edges, 0) AS BIGINT)
-       |                    * 1000000)
-       |              // (CAST(coalesce(n.n_club_nodes, 0) AS BIGINT)
-       |                  * (CAST(coalesce(n.n_club_nodes, 0) AS BIGINT) - 1))
-       |            ELSE NULL END AS phi_ppm
-       |FROM (SELECT unnest([${thrList}]) AS k) t
-       |LEFT JOIN (
-       |  SELECT t2.k, count(*) AS n_club_nodes
-       |  FROM (SELECT id, count(*) AS d FROM (
-       |          SELECT doc_a AS id FROM pairs
-       |          UNION ALL SELECT doc_b FROM pairs) GROUP BY 1) deg,
-       |       (SELECT unnest([${thrList}]) AS k) t2
-       |  WHERE deg.d > t2.k GROUP BY 1
-       |) n ON n.k = t.k
-       |LEFT JOIN (
-       |  SELECT t3.k, count(*) AS n_club_edges
-       |  FROM pairs p
-       |  JOIN (SELECT id, count(*) AS d FROM (
-       |          SELECT doc_a AS id FROM pairs
-       |          UNION ALL SELECT doc_b FROM pairs) GROUP BY 1) da
-       |    ON da.id = p.doc_a
-       |  JOIN (SELECT id, count(*) AS d FROM (
-       |          SELECT doc_a AS id FROM pairs
-       |          UNION ALL SELECT doc_b FROM pairs) GROUP BY 1) db
-       |    ON db.id = p.doc_b,
-       |       (SELECT unnest([${thrList}]) AS k) t3
-       |  WHERE da.d > t3.k AND db.d > t3.k GROUP BY 1
-       |) g ON g.k = t.k""".stripMargin
   }
 }

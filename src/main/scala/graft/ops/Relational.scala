@@ -686,8 +686,7 @@ object Relational {
     // two lineitem scans (one through a 3-way countDistinct Expand, one
     // through a pair distinct) become one scan + one map-side-combined
     // aggregate. The pair-grain table is materialized because both
-    // consumers read it (the release-exemption shape tokenBudget
-    // documents: a 3-column reduction any reuse would pay to
+    // consumers read it (a 3-column reduction any reuse would pay to
     // materialize) — via the session cache so repeated invocations
     // share ONE pin instead of leaking one per rep (ADVICE r18).
     val os = Dedup.cached(pairGrainCache, li, extra = 21L)(
@@ -1317,9 +1316,9 @@ object Relational {
       minSupport: Long = 3L): DataFrame = {
     // r17: op feeds four consumers (the self-join's two sides, the part
     // counts, the order count) — materialize the 2-column distinct once
-    // (guide §2.4; the tokenBudget release-exemption shape) instead of
-    // re-running the scan+distinct per reference. r18: via the session
-    // cache so repeated invocations share one pin (ADVICE r18).
+    // (guide §2.4) instead of re-running the scan+distinct per
+    // reference. r18: via the session cache so repeated invocations
+    // share one pin (ADVICE r18).
     val op = Dedup.cached(pairGrainCache,
       Tables.load(spark, dir, "lineitem"), extra = 25L)(
       _.select(col("l_orderkey"), col("l_partkey")).distinct())
@@ -1373,8 +1372,8 @@ object Relational {
     * (total, custkey) — deterministic tie-break — then per-decile
     * count/sum/min/max and the revenue share in exact ppm. The global
     * ntile window runs over the AGGREGATED customer table (1000×
-    * smaller than orders; at 100 TB swap in the two-phase
-    * range-partition rank — [[graft.ops.Pipeline.shardPlan]]). */
+    * smaller than orders; at 100 TB swap in the bucketed prefix-sum
+    * rank, `distributedRank`). */
   def revenueDeciles(spark: SparkSession, dir: String): DataFrame = {
     val per = Tables.load(spark, dir, "orders")
       .groupBy("o_custkey")

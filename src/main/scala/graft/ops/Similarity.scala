@@ -2141,8 +2141,8 @@ object Similarity {
        |  ON bf.q_id = h.q_id AND bf.vec_id = h.vec_id""".stripMargin
 
   /** All-vectors kNN graph via hyperplane-LSH buckets — the
-    * embedding-side analogue of the MinHash mutual-kNN document graph
-    * ([[graft.ops.Dedup.mutualKnn]]), and the substrate for
+    * embedding-side analogue of the MinHash near-dup document graph
+    * ([[graft.ops.Dedup.dupEdges]]), and the substrate for
     * embedding-space clustering, diversity sampling, and
     * graph-propagated labels. Unlike [[annLsh]] (10 broadcast query
     * vectors), EVERY vector is a query here, so the bucket join is a

@@ -376,8 +376,7 @@ object TextOps {
   def contamination(docs: DataFrame, benchDocs: Long = 20, n: Int = 5,
       flagAt: Int = 3): DataFrame =
     // r17: session-cached (see [[qualityScore]]) — the n-gram inverted
-    // probe feeds both t_contamination-style direct reads and the
-    // hopDistance seed set of g_contamination_hops / p_curation_manifest.
+    // probe is pinned once per session, so repeated runs reuse it.
     // Params ride the two extra key slots (benchDocs, n·2^32 + flagAt).
     Dedup.cached(contamCache, docs, benchDocs,
       n.toLong * 4294967296L + flagAt)(d =>
@@ -418,9 +417,7 @@ object TextOps {
   }
 
   /** The [[contamination]] oracle's CTE chain through `hits(doc_id,
-    * n_shared, n_bench_docs)` — shared with the transitive-taint oracle
-    * ([[Dedup.contaminationHopsSql]]), which seeds its BFS from the
-    * same flags. */
+    * n_shared, n_bench_docs)`. */
   private[ops] def contaminationCtes(benchDocs: Long = 20, n: Int = 5): String = {
     val gramExpr = (0 until n).map(k => s"words[i+$k]").mkString(", ")
     s"""w AS (
@@ -723,8 +720,8 @@ object TextOps {
 
   /** Quality computation as composable CTEs ending in
     * `q(doc_id, n_chars, n_tokens, uniq_ratio, stop_ratio, quality)` —
-    * shared by [[qualitySql]] and the corpus-clean pipeline oracle
-    * ([[Pipeline.corpusCleanSql]]). */
+    * shared by [[qualitySql]] and the cluster-best oracle
+    * ([[Dedup.clusterBestSql]]). */
   private[ops] val qualityCte: String = {
     val all = inList(langWords.flatMap(_._2))
     s"""qw AS (
@@ -964,9 +961,8 @@ object TextOps {
   }
 
   /** Recursive CTE chain of the [[packSequences]] oracle (the greedy
-    * fold stepping rn → rn+1 per shard), parameterized by source so
-    * [[Pipeline.pretrainManifestSql]] can pack the deduped corpus. Must
-    * sit under a `WITH RECURSIVE`. Ends in `r`. */
+    * fold stepping rn → rn+1 per shard), parameterized by source
+    * relation. Must sit under a `WITH RECURSIVE`. Ends in `r`. */
   private[ops] def packCtesFrom(src: String,
       capacity: Int = packCapacity, nShards: Int = packShards): String =
     s"""d AS (
@@ -1352,8 +1348,7 @@ object TextOps {
   }
 
   /** CTE chain of the [[segmentDedup]] oracle, parameterized by source
-    * relation so [[Pipeline.pretrainManifestSql]] can run it over the
-    * quality-filtered corpus. Ends in `f` (one row per segment
+    * relation. Ends in `f` (one row per segment
     * occurrence with its first-occurrence rank). */
   private[ops] def segmentCtesFrom(src: String, segWords: Int = 8): String =
     s"""${segsCtesFrom(src, segWords)}, f AS (

@@ -1999,8 +1999,8 @@ object TradeOps {
     * micro-total 10¹⁴), and the one float step is the final division.
     * The global rank window runs over the AGGREGATED user table — at
     * 100 TB that table is still ~millions of rows; if it ever isn't,
-    * the [[graft.ops.Pipeline.shardPlan]] two-phase range-partition
-    * rank drops in unchanged. */
+    * the bucketed prefix-sum rank of [[graft.ops.Relational]]
+    * (`distributedRank`) drops in unchanged. */
   def giniActivity(trades: DataFrame): DataFrame = {
     val per = trades
       .withColumn("um", expr("CAST(round(usd_volume * 1000000) AS BIGINT)"))

@@ -59,13 +59,16 @@ object Upsert {
     // manifest version present.
     fromPointer.orElse {
       if (!Files.isDirectory(Paths.get(root))) None
-      else listDir(Paths.get(root))
-        .map(_.getFileName.toString)
-        .collect { case s if s.startsWith("manifest_v") =>
-          s.stripPrefix("manifest_v").stripSuffix(".json").toLongOption }
-        .flatten.maxOption
+      else manifestVersions(root).maxOption
     }
   }
+
+  private def manifestVersions(root: String): Seq[Long] =
+    listDir(Paths.get(root))
+      .map(_.getFileName.toString)
+      .collect { case s if s.startsWith("manifest_v") =>
+        s.stripPrefix("manifest_v").stripSuffix(".json").toLongOption }
+      .flatten
 
   /** Manifest: bucket count + bucketing columns (both fixed at table
     * creation) + bucket→gen map + the optional LAST APPLIED BATCH id
@@ -105,6 +108,50 @@ object Upsert {
   private def writeManifest(root: String, v: Long, m: Manifest): Unit =
     Files.write(manifestPath(root, v), manifestJson(m).getBytes,
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+
+  /** Write-to-temp + ATOMIC_MOVE: a crash mid-write can never leave a
+    * truncated/empty `target` (readers see either the old content or
+    * the new one, never garbage). */
+  private def atomicWrite(tmp: java.nio.file.Path, target: java.nio.file.Path,
+      bytes: Array[Byte]): Unit = {
+    Files.write(tmp, bytes,
+      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    Files.move(tmp, target,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Commits version `v`: the atomic `_CURRENT` pointer flip. */
+  private def flipPointer(root: String, v: Long): Unit =
+    atomicWrite(Paths.get(root, s"_CURRENT.tmp.$v"), pointerPath(root),
+      v.toString.getBytes)
+
+  /** Storage GC: deletes the manifests older than version `oldest`,
+    * then every generation dir that no `live` (generation, bucket) pair
+    * references. Inside surviving generations, bucket dirs that no live
+    * pair points at are stale copies (the bucket was since rewritten
+    * elsewhere) and go too, or disk grows by one stale copy per rewrite
+    * for as long as ANY bucket keeps the generation alive. Manifests go
+    * first, so no surviving manifest points at deleted data. Returns
+    * the number of manifests deleted. */
+  private def gc(root: String, live: Set[(String, Int)], oldest: Long): Int = {
+    val dead = manifestVersions(root).filter(_ < oldest)
+    dead.foreach(v => Files.deleteIfExists(manifestPath(root, v)))
+    val keep = live.map(_._1)
+    listDir(Paths.get(root)).foreach { p =>
+      val name = p.getFileName.toString
+      if (name.startsWith("gen") && Files.isDirectory(p)) {
+        if (!keep.contains(name)) rmTree(p)
+        else listDir(p)
+          .filter(_.getFileName.toString.startsWith("_bucket="))
+          .foreach { bp =>
+            bp.getFileName.toString.stripPrefix("_bucket=").toIntOption
+              .foreach { b => if (!live.contains((name, b))) rmTree(bp) }
+          }
+      }
+    }
+    dead.size
+  }
 
   private val entryRe = """"(\d+)"\s*:\s*"([^"]+)"""".r
   private val nbRe = """"nb"\s*:\s*(\d+)""".r
@@ -172,14 +219,7 @@ object Upsert {
       s"version $version is beyond retention (manifest GC'd)")
     val next = cur + 1
     writeManifest(root, next, readManifest(root, version))
-    // same atomic temp+move flip as merge: readers see old or new,
-    // never a torn pointer
-    val tmp = Paths.get(root, s"_CURRENT.tmp.$next")
-    Files.write(tmp, next.toString.getBytes,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, pointerPath(root),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    flipPointer(root, next)
     next
   }
 
@@ -201,29 +241,10 @@ object Upsert {
     require(keepLast >= 1, "must keep at least the current version")
     val cur = currentVersion(root).getOrElse(return 0)
     val cutoff = cur - keepLast + 1
-    val versions = listDir(Paths.get(root))
-      .map(_.getFileName.toString)
-      .filter(_.startsWith("manifest_v"))
-      .flatMap(_.stripPrefix("manifest_v").stripSuffix(".json").toLongOption)
-    val (dead, kept) = versions.partition(_ < cutoff)
-    val live: Set[(String, Int)] = kept
+    val live: Set[(String, Int)] = manifestVersions(root).filter(_ >= cutoff)
       .flatMap(v => readManifest(root, v).buckets.toSeq
         .map { case (b, g) => (g, b) }).toSet
-    val keepGens = live.map(_._1)
-    dead.foreach(v => Files.deleteIfExists(manifestPath(root, v)))
-    listDir(Paths.get(root)).foreach { p =>
-      val name = p.getFileName.toString
-      if (name.startsWith("gen") && Files.isDirectory(p)) {
-        if (!keepGens.contains(name)) rmTree(p)
-        else listDir(p)
-          .filter(_.getFileName.toString.startsWith("_bucket="))
-          .foreach { bp =>
-            bp.getFileName.toString.stripPrefix("_bucket=").toIntOption
-              .foreach { b => if (!live.contains((name, b))) rmTree(bp) }
-          }
-      }
-    }
-    dead.size
+    gc(root, live, cutoff)
   }
 
   /** K19 (extension; the Delta OPTIMIZE / Iceberg rewriteDataFiles
@@ -270,35 +291,13 @@ object Upsert {
     writeManifest(root, next, Manifest(manifest.nBuckets, manifest.bucketBy,
       manifest.buckets.keys.map(b => b -> s"gen$next").toMap,
       manifest.appliedBatch, manifest.schema))
-    val tmp = Paths.get(root, s"_CURRENT.tmp.$next")
-    Files.write(tmp, next.toString.getBytes,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, pointerPath(root),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // GC: same keep-previous rule as merge — generations referenced by
-    // the new or previous manifest survive; inside survivors, bucket
-    // dirs neither points at are stale copies.
-    val live: Set[(String, Int)] =
+    flipPointer(root, next)
+    // same keep-previous rule as merge: the new and the previous
+    // manifest's generations survive
+    gc(root,
       (Seq.tabulate(manifest.nBuckets)(b => (s"gen$next", b)) ++
-        manifest.buckets.toSeq.map { case (b, g) => (g, b) }).toSet
-    val keep = live.map(_._1)
-    listDir(Paths.get(root)).foreach { p =>
-      val name = p.getFileName.toString
-      val isGen = name.startsWith("gen") && Files.isDirectory(p)
-      val deadManifest = name.startsWith("manifest_v") &&
-        name.stripPrefix("manifest_v").stripSuffix(".json").toLongOption
-          .exists(_ < next - 1)
-      if (isGen && !keep.contains(name)) rmTree(p)
-      else if (isGen)
-        listDir(p)
-          .filter(_.getFileName.toString.startsWith("_bucket="))
-          .foreach { bp =>
-            bp.getFileName.toString.stripPrefix("_bucket=").toIntOption
-              .foreach { b => if (!live.contains((name, b))) rmTree(bp) }
-          }
-      else if (deadManifest) Files.deleteIfExists(p)
-    }
+        manifest.buckets.toSeq.map { case (b, g) => (g, b) }).toSet,
+      next - 1)
     gensBefore
   }
 
@@ -398,14 +397,9 @@ object Upsert {
     manifests.foreach { case (v, m) =>
       val nb = m.buckets.map { case (b, g) =>
         b -> remap.getOrElse((g, b), g) }
-      if (nb != m.buckets) {
-        val tmpV = Paths.get(root, s"manifest_v$v.json.tmp")
-        Files.write(tmpV, manifestJson(m.copy(buckets = nb)).getBytes,
-          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-        Files.move(tmpV, manifestPath(root, v),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
+      if (nb != m.buckets)
+        atomicWrite(Paths.get(root, s"manifest_v$v.json.tmp"),
+          manifestPath(root, v), manifestJson(m.copy(buckets = nb)).getBytes)
     }
     // old dirs now referenced by no manifest — reclaim
     remap.keys.foreach { case (g, b) =>
@@ -663,43 +657,14 @@ object Upsert {
       appliedBatchId.orElse(manifest.appliedBatch),
       schema = ledger.map(_.toDDL))
     writeManifest(root, next, nextManifest)
-    // Atomic pointer flip: write-to-temp + ATOMIC_MOVE, so a crash
-    // mid-write can never leave a truncated/empty pointer (readers see
-    // either the old version or the new one, never garbage).
-    val tmp = Paths.get(root, s"_CURRENT.tmp.$next")
-    Files.write(tmp, next.toString.getBytes,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, pointerPath(root),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-
-    // GC: drop generations referenced by neither the new manifest nor
-    // the previous one (kept for readers that resolved the pointer just
-    // before the flip), then manifests older than next-1. A replayed
-    // batch only ever rewrites gen{next}, never a GC'd dir. Inside
-    // surviving generations, bucket dirs that neither manifest points
-    // at are stale copies (the bucket was since rewritten elsewhere) —
-    // remove them too, or disk grows by one stale copy per rewrite for
-    // as long as ANY bucket keeps the generation alive.
-    val live: Set[(String, Int)] =
+    flipPointer(root, next)
+    // GC: keep the generations of the new manifest and of the previous
+    // one (for readers that resolved the pointer just before the flip)
+    // and manifests from next-1 on. A replayed batch only ever rewrites
+    // gen{next}, never a GC'd dir.
+    gc(root,
       (nextManifest.buckets.toSeq ++ manifest.buckets.toSeq)
-        .map { case (b, g) => (g, b) }.toSet
-    val keep = live.map(_._1)
-    listDir(Paths.get(root)).foreach { p =>
-      val name = p.getFileName.toString
-      val isGen = name.startsWith("gen") && Files.isDirectory(p)
-      val deadManifest = name.startsWith("manifest_v") &&
-        name.stripPrefix("manifest_v").stripSuffix(".json").toLongOption
-          .exists(_ < next - 1)
-      if (isGen && !keep.contains(name)) rmTree(p)
-      else if (isGen)
-        listDir(p)
-          .filter(_.getFileName.toString.startsWith("_bucket="))
-          .foreach { bp =>
-            bp.getFileName.toString.stripPrefix("_bucket=").toIntOption
-              .foreach { b => if (!live.contains((name, b))) rmTree(bp) }
-          }
-      else if (deadManifest) Files.deleteIfExists(p)
-    }
+        .map { case (b, g) => (g, b) }.toSet,
+      next - 1)
   }
 }

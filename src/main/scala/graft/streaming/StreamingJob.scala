@@ -30,11 +30,6 @@ object StreamingJob {
       checkpointRoot: String,
       fileTrigger: Trigger = Trigger.ProcessingTime("0 seconds"))
 
-  /** Decode + derive — the shared upstream plan (`ProcessStockStream
-    * .py:100-109`). `envelopes` is a streaming DataFrame with a JSON
-    * `value` column (Kafka-shaped). */
-  def decode(envelopes: DataFrame): DataFrame = Decode.decodeFlatten(envelopes)
-
   /** Pipeline observability via `Dataset.observe`: per-micro-batch
     * ingest metrics (row count, exact cent volume, max event time)
     * computed INSIDE the running plan — accumulator-backed, so they
@@ -55,7 +50,8 @@ object StreamingJob {
 
   /** Start all four queries; caller awaits/stops them. */
   def run(spark: SparkSession, envelopes: DataFrame, cfg: Config): Seq[StreamingQuery] = {
-    val flat = decode(envelopes)
+    // decode + derive, the shared upstream plan (`ProcessStockStream.py:100-109`)
+    val flat = Decode.decodeFlatten(envelopes)
 
     // query_01 (`ProcessStockStream.py:112-129`): tumbling volume, update
     // mode re-emits revised windows; upsert keyed on (symbol, timestamp)

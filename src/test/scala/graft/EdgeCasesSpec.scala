@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.ops.{Dedup, Graph, Multimodal, Pipeline, Similarity, TextOps, TradeOps}
+import graft.ops.{Dedup, Graph, Similarity, TextOps, TradeOps}
 
 /** Empty-input and degenerate-shape behavior: every operator must
   * return an empty (or well-defined) result on an empty table, never
@@ -79,9 +79,6 @@ class EdgeCasesSpec extends SparkSuite {
     assert(Dedup.exactDedup(emptyDocs).count() === 0)
     assert(Dedup.minhashPairs(emptyDocs).count() === 0)
     assert(Dedup.resolveDuplicates(emptyDocs).count() === 0)
-    assert(Pipeline.corpusClean(emptyDocs).count() === 0)
-    assert(Multimodal.binaryMeta(emptyDocs).count() === 0)
-    assert(Multimodal.extractBatched(spark, emptyDocs).count() === 0)
     assert(TextOps.repetitionStats(emptyDocs).count() === 0)
     assert(TextOps.chunkDocs(emptyDocs).count() === 0)
     assert(TextOps.contamination(emptyDocs).count() === 0)
@@ -90,10 +87,8 @@ class EdgeCasesSpec extends SparkSuite {
     assert(TextOps.tfidfTopK(emptyDocs).count() === 0)
     // exhausted corpus: BPE stops learning rules, never throws
     assert(TextOps.bpeTrain(emptyDocs).count() === 0)
-    assert(Pipeline.pretrainManifest(emptyDocs).count() === 0)
     assert(TextOps.domainQuota(emptyDocs).count() === 0)
     assert(Dedup.clusterBest(emptyDocs).count() === 0)
-    assert(Pipeline.curationManifest(emptyDocs).count() === 0)
     assert(TextOps.importanceWeights(emptyDocs).count() === 0)
   }
 
@@ -117,14 +112,7 @@ class EdgeCasesSpec extends SparkSuite {
       .incrementalJoinAgg(emptyOrders, emptyCustomer).count() === 0)
   }
 
-  test("pageRank no-edge graph stays uniform; encode/view ops empty-safe") {
-    import spark.implicits._
-    // every vertex dangling: redistributed mass exactly restores the
-    // uniform rank each iteration
-    val pr = Graph.pageRank(Seq(1L, 2L).toDF("id"),
-      Seq.empty[(Long, Long)].toDF("a", "b"))
-      .collect().map(_.getLong(1))
-    assert(pr.toSeq === Seq(500000000000L, 500000000000L))
+  test("encode/view ops empty-safe") {
     assert(TextOps.bpeEncode(emptyDocs).count() === 0)
     val emptyEvents = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -268,19 +256,12 @@ class EdgeCasesSpec extends SparkSuite {
       emptyRight, "user_id", "timestamp", "p", "nxt").count() === 0)
   }
 
-  test("new corpus/graph/event operators survive empty inputs") {
-    import graft.ops.{Dedup, EventAnalytics, Graph, TextOps}
+  test("new corpus/event operators survive empty inputs") {
+    import graft.ops.{Dedup, EventAnalytics, TextOps}
     assert(TextOps.winnow(emptyDocs).count() === 0)
     assert(TextOps.lmCoverage(emptyDocs).count() === 0)
     assert(TextOps.boilerplateStrip(emptyDocs).count() === 0)
     assert(Dedup.fuzzyPairs(emptyDocs).count() === 0)
-    val emptyEdges = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("doc_a", LongType),
-        StructField("doc_b", LongType))))
-    // an empty graph still yields the one summary row: 0/0/0 + NULL
-    val t = Graph.triangles(emptyEdges).head
-    assert(t.getLong(0) === 0 && t.getLong(2) === 0 && t.isNullAt(3))
     val emptyEvents = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("event_id", LongType),
@@ -359,7 +340,7 @@ class EdgeCasesSpec extends SparkSuite {
     assert(topk.join(range, Seq("q_id", "vec_id"), "left_anti").count() === 0)
   }
 
-  test("batch-9: containment, lsh recall, feature hash, degree histogram") {
+  test("batch-9: containment, lsh recall, feature hash") {
     val docs = graft.Tables.load(spark, sf, "documents")
     // max-containment dominates jaccard, so every strong jaccard pair
     // must reappear in the containment report at the same threshold
@@ -387,29 +368,13 @@ class EdgeCasesSpec extends SparkSuite {
     assert(mass.join(toks, "doc_id")
       .filter(col("mass") =!= col("n_tok")).count() === 0)
     fh.unpersist()
-    // degree histogram: vertex mass conserved; edge mass = 2|E|
-    val edges = Dedup.minhashPairs(docs)
-      .filter(col("est_jaccard") >= Dedup.resolveThreshold)
-      .select("doc_a", "doc_b")
-    val hist = Graph.degreeHistogram(docs.select("doc_id"), edges).cache()
-    assert(hist.agg(sum("n_docs")).head().getLong(0) === docs.count())
-    val edgeMass = hist.agg(sum(col("degree") * col("n_docs"))).head().getLong(0)
-    val nEdges = edges.select(least(col("doc_a"), col("doc_b")),
-      greatest(col("doc_a"), col("doc_b"))).distinct().count()
-    assert(edgeMass === 2 * nEdges)
-    hist.unpersist()
     // empty-input coverage
     assert(Dedup.containment(emptyDocs).count() === 0)
     assert(TextOps.featureHash(emptyDocs).count() === 0)
-    assert(Graph.degreeHistogram(
-      emptyDocs.select("doc_id"),
-      emptyDocs.select(col("doc_id").as("doc_a"), col("doc_id").as("doc_b")))
-      .count() === 0)
   }
 
-  test("batch-10: pivots, twap, group split, benford, modality shard") {
+  test("batch-10: pivots, twap, group split, benford") {
     val trades = graft.Tables.trades(spark, sf)
-    val docs = graft.Tables.load(spark, sf, "documents")
     // pivot identities: R1 = 2P−L ≥ P ≥ 2P−H = S1, and P ∈ [L, H]
     val pp = TradeOps.pivotPoints(trades).cache()
     assert(pp.filter(col("s1") > col("r1") + 1e-9).count() === 0)
@@ -441,50 +406,14 @@ class EdgeCasesSpec extends SparkSuite {
     val shareSum = bf.agg(sum("share")).head().getDouble(0)
     assert(math.abs(shareSum - 1.0) < 1e-4, s"shares sum to $shareSum")
     bf.unpersist()
-    // modality shard: byte mass conserved per modality; every shard
-    // except a modality's last STARTS under budget (start-offset rule)
-    val ms = Multimodal.modalityShard(docs).cache()
-    val byteMass = ms.agg(sum("shard_bytes")).head().getLong(0)
-    val rawMass = docs.select(
-      sum(length(encode(col("text"), "UTF-8")).cast("long")))
-      .head().getLong(0)
-    assert(byteMass === rawMass)
-    assert(ms.filter(col("n_docs") <= 0).count() === 0)
-    ms.unpersist()
     // empty-input coverage
     assert(TradeOps.pivotPoints(emptyTrades).count() === 0)
     assert(TradeOps.twap(emptyTrades).count() === 0)
     assert(TradeOps.groupSplit(emptyTrades).count() === 0)
     assert(TradeOps.benfordProfile(emptyTrades).count() === 0)
-    assert(Multimodal.modalityShard(emptyDocs).count() === 0)
   }
 
-  test("batch-12: k-core, dynamic overwrite, autocorr invariants") {
-    val docs = graft.Tables.load(spark, sf, "documents")
-    val edges = Dedup.minhashPairs(docs)
-      .filter(col("est_jaccard") >= Dedup.resolveThreshold)
-      .select("doc_a", "doc_b")
-    // every survivor keeps degree >= k INSIDE the core, and the 1-core
-    // is exactly the non-isolated vertex set
-    val core2 = Graph.kCore(edges, k = 2).cache()
-    assert(core2.filter(col("degree") < 2).count() === 0)
-    val nonIso = edges.select(col("doc_a").as("id"))
-      .union(edges.select(col("doc_b").as("id"))).distinct()
-    assert(Graph.kCore(edges, k = 1).count() === nonIso.count())
-    // 2-core ⊆ non-isolated
-    assert(core2.join(nonIso, Seq("id"), "left_anti").count() === 0)
-    // the shuffle-join fallback (broadcastFrontier = 0) is the SAME
-    // peel — the broadcast fast path can never become the only tested
-    // path (the connectedComponents localFinishEdges discipline)
-    val coreShuffle = Graph.kCore(edges, k = 2, broadcastFrontier = 0L)
-    assert(core2.select("id", "degree")
-      .exceptAll(coreShuffle.select("id", "degree")).count() === 0)
-    assert(coreShuffle.count() === core2.count())
-    core2.unpersist()
-    // empty graph converges to an empty core
-    assert(Graph.kCore(
-      emptyDocs.select(col("doc_id").as("doc_a"), col("doc_id").as("doc_b")))
-      .count() === 0)
+  test("batch-12: dynamic overwrite, autocorr invariants") {
     // dynamic overwrite: untouched days byte-identical to the source,
     // revised day shifted by exactly +1.00
     val trades = graft.Tables.trades(spark, sf)
@@ -506,7 +435,7 @@ class EdgeCasesSpec extends SparkSuite {
     assert(TradeOps.autocorr(emptyTrades).count() === 0)
   }
 
-  test("batch-13: WAP transaction, KS drift, stickiness, filter funnel") {
+  test("batch-13: WAP transaction, KS drift, stickiness") {
     import graft.sinks.Wap
     val trades = graft.Tables.trades(spark, sf)
     val root = tmpDir("wap_spec")
@@ -534,13 +463,6 @@ class EdgeCasesSpec extends SparkSuite {
     assert(st.filter(col("stickiness") > 1.0 + 1e-9).count() === 0)
     assert(st.filter(col("avg_dau") > col("mau").cast("double") + 1e-9)
       .count() === 0)
-    // funnel counts are monotone non-increasing after raw
-    val docs = graft.Tables.load(spark, sf, "documents")
-    val fn = Pipeline.filterFunnel(docs).orderBy("stage_idx")
-      .select("n_docs").collect().map(_.getLong(0))
-    assert(fn.length === 4)
-    assert(fn(0) >= fn(1) && fn(1) >= fn(2) && fn(2) >= fn(3),
-      s"funnel not monotone: ${fn.toSeq}")
   }
 
   test("batch-20: co-purchase lift, k-means purity bounds") {

@@ -319,95 +319,6 @@ class OpsInvariantsSpec extends SparkSuite {
     }
   }
 
-  test("pageRank matches an integer-arithmetic driver reference on seeded graphs") {
-    import spark.implicits._
-    // same picounit integer arithmetic as Graph.pageRank, driver-side
-    def ref(n: Int, es: Seq[(Int, Int)], iters: Int): Map[Int, Long] = {
-      val half = es.filter { case (a, b) => a != b }
-      val edges = half ++ half.map(_.swap)
-      val deg = edges.groupBy(_._1).map { case (k, v) => k -> v.size.toLong }
-      val base = 150000000000L / n
-      var r = (0 until n).map(v => v -> (1000000000000L / n)).toMap
-      for (_ <- 1 to iters) {
-        val dsh = (0 until n).filterNot(deg.contains).map(r).sum / n
-        val contrib = edges.groupBy(_._2).map { case (dst, in) =>
-          dst -> in.map { case (s, _) => r(s) / deg(s) }.sum
-        }
-        r = (0 until n).map { v =>
-          v -> (base + 85L * (contrib.getOrElse(v, 0L) + dsh) / 100L)
-        }.toMap
-      }
-      r
-    }
-    val rnd = new scala.util.Random(11)
-    val cases: Seq[(Int, Seq[(Int, Int)])] =
-      Seq((1, Nil), (4, Nil), (5, Seq((0, 1), (1, 2))), // path + dangling
-        (6, Seq((0, 1), (1, 0), (2, 2), (3, 4)))) ++    // dupes + self-loop
-      (1 to 8).map { _ =>
-        val n = 2 + rnd.nextInt(40)
-        (n, Seq.fill(rnd.nextInt(2 * n))((rnd.nextInt(n), rnd.nextInt(n))))
-      }
-    cases.foreach { case (n, es) =>
-      val got = graft.ops.Graph.pageRank((0 until n).toDF("v"), es.toDF("a", "b"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      assert(got === ref(n, es, 3), s"n=$n edges=$es")
-      // floor quantization only ever LOSES mass: total stays <= 1 unit
-      assert(got.values.sum <= 1000000000000L)
-    }
-  }
-
-  test("pageRank iteration plan: rank table broadcast, no edge-list shuffle") {
-    import spark.implicits._
-    val es = (0 until 200).map(i => (i.toLong, ((i * 7) % 200).toLong))
-    graft.ops.Graph.pageRank((0 until 200).map(_.toLong).toDF("v"),
-      es.toDF("a", "b")).collect()
-    val plan = graft.ops.Graph.lastRankUpdatePlan.get()
-      .split("== Initial Plan ==")(0)
-    assert(plan.contains("BroadcastHashJoin"),
-      s"rank update must broadcast the vertex-sized sides:\n$plan")
-    // the only hash exchange allowed is the contrib partial->final agg
-    // (vertex-sized); the edge list itself must never shuffle
-    assert(plan.sliding("Exchange hashpartitioning".length)
-      .count(_ == "Exchange hashpartitioning") <= 1,
-      s"edge list shuffled in the rank update:\n$plan")
-  }
-
-  test("hopDistance matches a driver BFS on seeded graphs") {
-    import spark.implicits._
-    def ref(n: Int, es: Seq[(Int, Int)], seeds: Seq[Int],
-        maxHops: Int): Map[Int, Option[Int]] = {
-      val sym = es.filter { case (a, b) => a != b }
-      val adj = (sym ++ sym.map(_.swap)).groupBy(_._1)
-        .map { case (k, v) => k -> v.map(_._2).toSet }
-      var dist = seeds.map(_ -> 0).toMap
-      for (k <- 1 to maxHops) {
-        val frontier = dist.collect { case (v, d) if d == k - 1 => v }
-        val next = frontier.flatMap(adj.getOrElse(_, Set.empty[Int]))
-          .filterNot(dist.contains)
-        dist = dist ++ next.map(_ -> k)
-      }
-      (0 until n).map(v => v -> dist.get(v)).toMap
-    }
-    val rnd = new scala.util.Random(13)
-    val cases = Seq(
-      (5, Seq((0, 1), (1, 2), (2, 3)), Seq(0)),  // chain: 0,1,2,null,null
-      (4, Nil, Seq(1)),                          // no edges
-      (4, Seq((0, 1)), Seq.empty[Int])) ++       // no seeds: all null
-      (1 to 8).map { _ =>
-        val n = 2 + rnd.nextInt(40)
-        (n, Seq.fill(rnd.nextInt(2 * n))((rnd.nextInt(n), rnd.nextInt(n))),
-          (0 until n).filter(_ => rnd.nextBoolean() && rnd.nextBoolean()))
-      }
-    cases.foreach { case (n, es, seeds) =>
-      val got = graft.ops.Graph.hopDistance(
-        (0 until n).toDF("v"), es.toDF("a", "b"), seeds.toDF("s"), maxHops = 2)
-        .collect()
-        .map(r => r.getInt(0) ->
-          (if (r.isNullAt(1)) None else Some(r.getInt(1)))).toMap
-      assert(got === ref(n, es, seeds, 2), s"n=$n edges=$es seeds=$seeds")
-    }
-  }
-
   test("bpeEncode: exact counts on a hand corpus; bounded on the real one") {
     import spark.implicits._
     val tiny = Seq((0L, "ab ab", "en", "web", 5L), (1L, "ab", "en", "web", 2L))
@@ -478,22 +389,6 @@ class OpsInvariantsSpec extends SparkSuite {
     val bestFull = full.groupBy("q_id").agg(min(col("adc_full")).as("bf"))
     assert(pruned.filter(col("rnk") === 1).join(bestFull, "q_id")
       .filter(col("adc") < col("bf") - lit(1e-12)).count() === 0)
-  }
-
-  test("curation manifest: quality-floored, taint-free, quota-capped") {
-    val docs = Tables.load(spark, sf, "documents")
-    val m = graft.ops.Pipeline.curationManifest(docs, quota = 5)
-    assert(m.filter(col("quality") < graft.ops.Pipeline.minQuality).count() === 0)
-    assert(m.groupBy("source").count().filter(col("count") > 5).count() === 0)
-    val tainted = graft.ops.Graph.hopDistance(
-      docs.select("doc_id"),
-      graft.ops.Dedup.minhashPairs(docs)
-        .filter(col("est_jaccard") >= graft.ops.Dedup.resolveThreshold)
-        .select("doc_a", "doc_b"),
-      graft.ops.TextOps.contamination(docs)
-        .filter(col("contaminated") === 1).select("doc_id"))
-      .filter(col("hop_dist").isNotNull).select("doc_id")
-    assert(m.join(tainted, Seq("doc_id"), "left_semi").count() === 0)
   }
 
   test("ewma: constant series is identity; value bounded by window extremes") {
@@ -925,42 +820,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(flagged.select("event_id").except(floatFlags).count() === 0)
     assert(floatFlags.except(flagged.select("event_id")).count() === 0)
     flagged.unpersist()
-  }
-
-  test("triangles: exact on crafted graphs, orientation counts each once") {
-    import spark.implicits._
-    // K4 minus an edge: 2 triangles, 8 wedges, transitivity 0.75
-    val g1 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L))
-      .toDF("doc_a", "doc_b")
-    val r1 = graft.ops.Graph.triangles(g1).head
-    assert(r1.getLong(0) === 5 && r1.getLong(1) === 8 &&
-      r1.getLong(2) === 2 && math.abs(r1.getDouble(3) - 0.75) < 1e-12)
-    // star: no triangles, defined transitivity 0
-    val g2 = Seq((1L, 2L), (1L, 3L), (1L, 4L)).toDF("doc_a", "doc_b")
-    val r2 = graft.ops.Graph.triangles(g2).head
-    assert(r2.getLong(2) === 0 && r2.getDouble(3) === 0.0)
-    // duplicate + reversed + self-loop edges are cleaned first
-    val g3 = Seq((1L, 2L), (2L, 1L), (1L, 1L), (2L, 3L), (1L, 3L))
-      .toDF("doc_a", "doc_b")
-    val r3 = graft.ops.Graph.triangles(g3).head
-    assert(r3.getLong(0) === 3 && r3.getLong(2) === 1)
-  }
-
-  test("mutual kNN sparsifier: degree strictly bounded, edges are mutual") {
-    val docs = Tables.load(spark, sf, "documents")
-    val k = 10
-    val knn = graft.ops.Dedup.mutualKnn(
-      graft.ops.Dedup.minhashPairs(docs)
-        .filter(col("est_jaccard") >= graft.ops.Dedup.triangleThreshold),
-      k).cache()
-    assert(knn.count() > 0)
-    val maxDeg = knn.select(col("doc_a").as("id"))
-      .union(knn.select(col("doc_b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
-      .agg(max("d")).head.getLong(0)
-    assert(maxDeg <= k, s"degree $maxDeg exceeds k=$k")
-    assert(knn.filter(col("doc_a") >= col("doc_b")).count() === 0)
-    knn.unpersist()
   }
 
   test("fuzzy pairs: ordered, within threshold, identical prefixes at 0") {
@@ -1426,23 +1285,6 @@ class OpsInvariantsSpec extends SparkSuite {
     tk.unpersist()
   }
 
-  test("link prediction: path, triangle, and cycle graphs score exactly") {
-    import spark.implicits._
-    // path 1-2-3: only candidate (1,3) via 2; Jaccard 1/(1+1-1) = 1
-    val path = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
-    val p = graft.ops.Graph.linkPrediction(path).collect()
-    assert(p.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSeq === Seq((1L, 3L, 1L, 1000000L)))
-    // triangle: every pair adjacent → no predictions
-    val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("doc_a", "doc_b")
-    assert(graft.ops.Graph.linkPrediction(tri).count() === 0)
-    // 4-cycle 1-2-3-4-1: diagonals (1,3) and (2,4), cn=2, J = 2/(2+2-2) = 1
-    val cyc = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L)).toDF("doc_a", "doc_b")
-    val c = graft.ops.Graph.linkPrediction(cyc).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(c === Set((1L, 3L, 2L, 1000000L), (2L, 4L, 2L, 1000000L)))
-  }
-
   test("salted skew join: row mass conserved, equal to the unsalted join") {
     val skew = graft.ops.Scale.saltedSkewJoin(trades).cache()
     assert(skew.agg(sum(col("n_trades"))).head.getLong(0) === trades.count())
@@ -1455,22 +1297,6 @@ class OpsInvariantsSpec extends SparkSuite {
           .cast("double").as("sum_over_floor"))
     assert(skew.exceptAll(plain).isEmpty && plain.exceptAll(skew).isEmpty)
     skew.unpersist()
-  }
-
-  test("token budget: within budget, prefix-closed in quality order") {
-    val docs = Tables.load(spark, sf, "documents")
-    val kept = graft.ops.Pipeline.tokenBudgetSelect(docs).cache()
-    assert(kept.filter(col("cum_tokens") > 20000L).count() === 0)
-    assert(kept.count() > 0)
-    // prefix property: any doc STRICTLY better than the worst kept row
-    // (quality desc, doc_id asc order) must itself be kept
-    val worst = kept.orderBy(col("quality").asc, col("doc_id").desc).head
-    val (wq, wid) = (worst.getAs[Double]("quality"), worst.getAs[Long]("doc_id"))
-    val better = graft.ops.TextOps.qualityScore(docs)
-      .filter(col("quality") > wq ||
-        (col("quality") === wq && col("doc_id") < wid))
-    assert(better.join(kept, Seq("doc_id"), "left_anti").count() === 0)
-    kept.unpersist()
   }
 
   test("ngram novelty: earliest doc fully novel, totals count distinct grams") {
@@ -1706,24 +1532,6 @@ class OpsInvariantsSpec extends SparkSuite {
       "curve k=5 must equal the single-point ivf recall")
   }
 
-  test("dedup savings: kept <= total, ppm exact, canonical mass conserved") {
-    val docs = Tables.load(spark, sf, "documents")
-    val rows = graft.ops.Pipeline.dedupSavings(docs).collect()
-    rows.foreach { r =>
-      assert(r.getLong(3) <= r.getLong(2)) // kept <= total
-      assert(r.getLong(4) ===
-        (r.getLong(2) - r.getLong(3)) * 1000000L / r.getLong(2))
-    }
-    // total kept tokens across sources = token mass of canonical docs
-    val kept = rows.map(_.getLong(3)).sum
-    val expected = graft.ops.TextOps.qualityScore(docs)
-      .select(col("doc_id"), col("n_tokens").cast("long").as("nt"))
-      .join(graft.ops.Dedup.resolveDuplicates(docs)
-        .filter(col("doc_id") === col("canonical_doc")), "doc_id")
-      .agg(sum(col("nt"))).head.getLong(0)
-    assert(kept === expected)
-  }
-
   test("langid confusion conserves docs and matches langId accuracy") {
     val docs = Tables.load(spark, sf, "documents")
     val m = graft.ops.TextOps.langIdConfusion(docs).collect()
@@ -1746,21 +1554,6 @@ class OpsInvariantsSpec extends SparkSuite {
       .agg(sum(col("n_words")), sum(col("n_bpe_tokens"))).head
     assert(fert.map(_.getLong(1)).sum === enc.getLong(0))
     assert(fert.map(_.getLong(2)).sum === enc.getLong(1))
-  }
-
-  test("label propagation: histogram conserves vertices, sizes positive") {
-    val docs = Tables.load(spark, sf, "documents")
-    val knn = graft.ops.Dedup.mutualKnn(
-      graft.ops.Dedup.weightedDupEdges(docs, graft.ops.Dedup.triangleThreshold))
-    val hist = graft.ops.Graph.labelPropagation(knn).collect()
-    assert(hist.forall(r => r.getLong(0) >= 1 && r.getLong(1) >= 1))
-    // every edge-touched vertex lands in exactly one community
-    val nVerts = knn.select(explode(array(col("doc_a"), col("doc_b"))))
-      .distinct().count()
-    assert(hist.map(r => r.getLong(0) * r.getLong(1)).sum === nVerts)
-    // communities refine no coarser than one-per-vertex, no finer than one
-    val nComms = hist.map(_.getLong(1)).sum
-    assert(nComms >= 1 && nComms <= nVerts)
   }
 
   test("cos threshold curve: monotone non-increasing, consistent with embeddingDup") {
@@ -1790,41 +1583,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(frac >= 0.5, s"int8 recall collapsed: $frac")
   }
 
-  test("dup quality profile partitions the corpus; ppm consistent") {
-    val docs = Tables.load(spark, sf, "documents")
-    val rows = graft.ops.Pipeline.dupQualityProfile(docs).collect()
-    assert(rows.map(_.getLong(0)).forall(b => b >= 0 && b <= 9))
-    assert(rows.map(_.getLong(1)).sum === docs.count(),
-      "every document lands in exactly one quality band")
-    rows.foreach { r =>
-      assert(r.getLong(2) <= r.getLong(1)) // dup docs <= docs
-      assert(r.getLong(3) <= r.getLong(2)) // dropped <= dup members
-      assert(r.getLong(4) === r.getLong(2) * 1000000L / r.getLong(1))
-    }
-  }
-
-  test("anneal schedule: phase budgets disjoint, anneal is the top half") {
-    val docs = Tables.load(spark, sf, "documents")
-    val rows = graft.ops.Pipeline.annealSchedule(docs, budget = 1000000L)
-      .collect()
-    val (p1, p2) = rows.partition(_.getLong(0) == 1L)
-    assert(p2.nonEmpty && p1.length >= p2.length,
-      "anneal phase draws from at most half the sources")
-    // anneal sources are a subset of the mixture sources
-    val s1 = p1.map(_.getString(1)).toSet
-    assert(p2.map(_.getString(1)).toSet.subsetOf(s1))
-    // floor-division allocation never exceeds the phase budget
-    assert(p1.map(_.getLong(4)).sum <= 800000L)
-    assert(p2.map(_.getLong(4)).sum <= 200000L)
-    // anneal sources have mean quality >= every excluded source
-    val annealMin = p2.map(_.getLong(3)).min
-    val excluded = s1 -- p2.map(_.getString(1)).toSet
-    val excludedMax = p1.filter(r => excluded.contains(r.getString(1)))
-      .map(_.getLong(3))
-    assert(excludedMax.forall(_ <= annealMin),
-      "a higher-quality source was left out of the anneal set")
-  }
-
   test("ichimoku: emits exactly count-103 rows/symbol, lines inside price range") {
     val rows = TradeOps.ichimoku(trades)
     val perSym = trades.groupBy("symbol").count().collect()
@@ -1846,23 +1604,6 @@ class OpsInvariantsSpec extends SparkSuite {
           s"ichimoku line $i=$v outside [$lo,$hi]")
       }
     }
-  }
-
-  test("shard plan: partitions the corpus, doc counts within 1, " +
-    "token spread bounded by one max doc") {
-    val docs = Tables.load(spark, sf, "documents")
-    val rows = graft.ops.Pipeline.shardPlan(docs).collect()
-    assert(rows.length === 8)
-    assert(rows.map(_.getLong(1)).sum === docs.count())
-    val counts = rows.map(_.getLong(1))
-    assert(counts.max - counts.min <= 1L)
-    val toks = rows.map(_.getLong(2))
-    val maxDoc = docs
-      .agg(max(size(split(col("text"), " ")).cast("long"))).head.getLong(0)
-    assert(toks.max - toks.min <= maxDoc,
-      "round-robin-by-rank spread must be bounded by one document")
-    val total = toks.sum
-    rows.foreach(r => assert(r.getLong(3) === r.getLong(2) * 1000000L / total))
   }
 
   test("dim profile: 64 rows, full counts, moments consistent with range") {
@@ -1906,28 +1647,6 @@ class OpsInvariantsSpec extends SparkSuite {
       assert(mean * 1e6 <= r.getLong(3) + 1, "mean cannot exceed max")
       assert(math.abs(mean - r.getLong(2).toDouble / r.getLong(1) / 1e6)
         < 1e-9)
-    }
-  }
-
-  test("payload dedup: counts consistent, redundancy bounded") {
-    val docs = Tables.load(spark, sf, "documents")
-    val rows = graft.ops.Multimodal.payloadDedup(docs).collect()
-    assert(rows.map(_.getLong(1)).sum === docs.count())
-    rows.foreach { r =>
-      assert(r.getLong(2) <= r.getLong(1), "distinct <= payloads")
-      assert(r.getLong(3) === r.getLong(1) - r.getLong(2))
-      assert(r.getLong(5) === r.getLong(3) * 1000000L / r.getLong(1))
-    }
-  }
-
-  test("corpus map: cells partition the corpus, bands in range") {
-    val docs = Tables.load(spark, sf, "documents")
-    val rows = graft.ops.Pipeline.corpusMap(docs).collect()
-    assert(rows.map(_.getLong(2)).sum === docs.count())
-    rows.foreach { r =>
-      assert(r.getLong(0) >= 0L && r.getLong(0) <= 9L)
-      assert(r.getInt(1) >= 0 && r.getInt(1) <= 7)
-      assert(r.getLong(3) >= r.getLong(2), "every doc has >= 1 token")
     }
   }
 
@@ -2016,24 +1735,6 @@ class OpsInvariantsSpec extends SparkSuite {
     // within 200k ppm of truth; a broken estimator flattens this
     val low = rows.filter(_.getLong(0) <= 2L).map(_.getLong(1)).sum
     assert(low * 2 >= total, s"error mass not concentrated: $low/$total")
-  }
-
-  test("dedup cascade: tiers partition the corpus, nested removals, " +
-    "survivors match the resolver's canonicals") {
-    val docs = Tables.load(spark, sf, "documents")
-    val rows = graft.ops.Pipeline.dedupCascade(docs).collect()
-    assert(rows.map(_.getLong(2)).sum === docs.count())
-    val total = rows.map(_.getLong(3)).sum
-    rows.foreach { r =>
-      assert(r.getInt(0) >= 0 && r.getInt(0) <= 3)
-      assert(r.getLong(4) === r.getLong(3) * 1000000L / total)
-    }
-    // survivor count equals the 0.5-resolution's canonical count: the
-    // nested-tier classification must not invent or lose keepers
-    val survivors = rows.find(_.getInt(0) == 3).map(_.getLong(2)).getOrElse(0L)
-    val canon = graft.ops.Dedup.resolveDuplicates(docs)
-      .filter(col("doc_id") === col("canonical_doc")).count()
-    assert(survivors === canon)
   }
 
   test("diversity sample: quotas proportional, within budget, ranks valid") {
@@ -2141,27 +1842,6 @@ class OpsInvariantsSpec extends SparkSuite {
     }
   }
 
-  test("local clustering: lcc in [0,1e6] ppm, tri bounded by wedges, " +
-    "and triangle mass matches the global count x3") {
-    val docs = Tables.load(spark, sf, "documents")
-    val knn = graft.ops.Dedup.mutualKnn(
-      graft.ops.Dedup.weightedDupEdges(docs, graft.ops.Dedup.triangleThreshold))
-    val rows = graft.ops.Graph.localClustering(knn).collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val (deg, tri, ppm) = (r.getLong(1), r.getLong(2), r.getLong(3))
-      assert(deg >= 2L)
-      assert(tri <= deg * (deg - 1) / 2, "tri exceeds wedge capacity")
-      assert(ppm === 2L * tri * 1000000L / (deg * (deg - 1)))
-      assert(ppm >= 0L && ppm <= 1000000L)
-    }
-    // per-vertex triangle incidences sum to 3x the global triangle count
-    // (deg-1 vertices cannot close a triangle, so the per-node table
-    // restricted to deg>=2 still carries every incidence)
-    val global = graft.ops.Graph.triangles(knn).head.getLong(2)
-    assert(rows.map(_.getLong(2)).sum === 3L * global)
-  }
-
   test("prefix dup: covers corpus, global dups = docs - distinct prefixes, " +
     "ppm consistent") {
     val docs = Tables.load(spark, sf, "documents")
@@ -2204,26 +1884,6 @@ class OpsInvariantsSpec extends SparkSuite {
     // bucket ids must be unique (it's a histogram, not a multiset)
     val ids = rows.map(_.getLong(0))
     assert(ids.distinct.length === ids.length)
-  }
-
-  test("assortativity: r in [-1,1] when defined, edge count matches input") {
-    val docs = Tables.load(spark, sf, "documents")
-    val knn = graft.ops.Dedup.mutualKnn(
-      graft.ops.Dedup.weightedDupEdges(docs, graft.ops.Dedup.triangleThreshold))
-    val r = graft.ops.Graph.assortativity(knn).head
-    assert(r.getLong(0) === knn.count())
-    if (!r.isNullAt(1)) {
-      val a = r.getDouble(1)
-      assert(a >= -1.0 - 1e-9 && a <= 1.0 + 1e-9, s"assortativity $a")
-    }
-    // a pure star is maximally disassortative: r = -1
-    import spark.implicits._
-    val star = Seq((0L, 1L), (0L, 2L), (0L, 3L)).toDF("a", "b")
-    val sr = graft.ops.Graph.assortativity(star).head
-    assert(math.abs(sr.getDouble(1) + 1.0) < 1e-9, "star graph must score -1")
-    // a degree-regular graph (triangle) has undefined r -> NULL
-    val tri = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("a", "b")
-    assert(graft.ops.Graph.assortativity(tri).head.isNullAt(1))
   }
 
   test("var/es: ES <= VaR (tail mean below its boundary), k = ceil(5% n)") {
@@ -2407,32 +2067,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(rows.map(_.getLong(0)).distinct.sorted.toSeq === Seq(0L, 1L, 2L, 3L))
   }
 
-  test("rich club: phi in [0,1e6], monotone club shrinkage with k") {
-    val docs = Tables.load(spark, sf, "documents")
-    val knn = graft.ops.Dedup.mutualKnn(
-      graft.ops.Dedup.weightedDupEdges(docs, graft.ops.Dedup.triangleThreshold))
-    val rows = graft.ops.Graph.richClub(knn).collect().sortBy(_.getLong(0))
-    assert(rows.length === 3)
-    rows.foreach { r =>
-      if (!r.isNullAt(3))
-        assert(r.getLong(3) >= 0L && r.getLong(3) <= 1000000L)
-      // edges need both endpoints in the club
-      assert(r.getLong(2) <= r.getLong(1) * (r.getLong(1) - 1) / 2
-        || r.getLong(1) < 2)
-    }
-    // raising the threshold can only shrink the club
-    assert(rows.map(_.getLong(1)).sliding(2).forall {
-      case Array(a, b) => b <= a
-    })
-    // a clique of 4 nodes deg 3 each: club at k=2 is everything, phi=1e6
-    import spark.implicits._
-    val clique = (for (a <- 0L to 3L; b <- 0L to 3L if a < b) yield (a, b))
-      .toDF("a", "b")
-    val cr = graft.ops.Graph.richClub(clique).collect()
-      .sortBy(_.getLong(0))
-    assert(cr.head.getLong(1) === 4L && cr.head.getLong(3) === 1000000L)
-  }
-
   test("revenue deciles: partition customers evenly, shares sum to ~1e6, " +
     "deciles ordered by revenue") {
     val rows = graft.ops.Relational.revenueDeciles(spark, sf)
@@ -2515,18 +2149,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(rows.map(_.getLong(2)).sum === expected)
     rows.foreach { r =>
       assert(r.getLong(3) >= 0L && r.getLong(5) >= 0L)
-    }
-  }
-
-  test("sqrt temper: weights sum to exactly 1e6, near-monotone in size") {
-    val docs = Tables.load(spark, sf, "documents")
-    val rows = graft.ops.Pipeline.sqrtTemper(docs).collect()
-    assert(rows.map(_.getLong(2)).sum === 1000000L,
-      "largest-remainder seats must repay the flooring deficit exactly")
-    val bySize = rows.sortBy(_.getLong(1))
-    bySize.sliding(2).foreach { case Array(a, b) =>
-      assert(b.getLong(2) >= a.getLong(2) - 1,
-        "weights track sqrt(size) up to one remainder seat")
     }
   }
 
@@ -3798,31 +3420,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(got === Map(3L -> 1L, 1L -> 1L, 5L -> 1L))
   }
 
-  test("two-hop reach: histogram partitions the corpus; reach >= " +
-      "degree pointwise; triangle corpus closes to full reach") {
-    import spark.implicits._
-    val docs = Tables.load(spark, sf, "documents")
-    val edges = graft.ops.Dedup.mutualKnn(
-      graft.ops.Dedup.weightedDupEdges(docs, graft.ops.Dedup.triangleThreshold))
-    val hist = graft.ops.Graph.twoHopReach(docs.select("doc_id"), edges)
-      .cache()
-    assert(hist.agg(sum(col("n_docs"))).head.getLong(0) === docs.count())
-    assert(hist.filter(col("reach2") < 0L).count() === 0)
-    hist.unpersist()
-    // crafted: path a-b-c (reach: a->2, b->2, c->2) + isolate d;
-    // triangle e-f-g stays reach 2 each; star h-(i,j,k): h->3, i/j/k->3
-    val vs = (1L to 11L).toDF("doc_id")
-    val es = Seq((1L, 2L), (2L, 3L), // path
-      (5L, 6L), (6L, 7L), (5L, 7L), // triangle
-      (8L, 9L), (8L, 10L), (8L, 11L)) // star
-      .toDF("doc_a", "doc_b")
-    val got = graft.ops.Graph.twoHopReach(vs, es).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // isolates: 4 -> reach 0 (vertex 4 only; 1..11 minus path/tri/star
-    // members leaves exactly {4})
-    assert(got === Map(0L -> 1L, 2L -> 6L, 3L -> 4L))
-  }
-
   test("int8 order flips: query counts match the nn-margin histogram " +
       "decade for decade; flips nest in counts") {
     val flips = Similarity.int8OrderFlips(spark, sf).cache()
@@ -4128,34 +3725,6 @@ class OpsInvariantsSpec extends SparkSuite {
       "ladder totals must reconcile with the tape: no tick dropped, " +
         "no volume double-counted")
     ladder.unpersist()
-  }
-
-  test("balanced sample: smallest source fully kept; rates and counts " +
-      "bounded; membership digest matches an independent recompute") {
-    val docs = Tables.load(spark, sf, "documents")
-    val got = graft.ops.Pipeline.balancedSample(docs).cache()
-    assert(got.count() === docs.select("source").distinct().count(),
-      "one QC row per source, zero-sample sources included")
-    assert(got.filter(col("rate_ppm") > 1000000L ||
-      col("n_sampled") > col("n_docs")).count() === 0)
-    // the smallest source defines the target: rate 1e6 ⇒ every doc kept
-    val minN = got.agg(min(col("n_docs"))).head.getLong(0)
-    assert(got.filter(col("n_docs") === minN)
-      .filter(col("rate_ppm") =!= 1000000L || col("n_sampled") =!= minN)
-      .count() === 0, "target source must be fully sampled")
-    // digest recompute: same Lehmer rule evaluated independently
-    val expected = docs
-      .withColumn("h", expr("((doc_id * 48271) % 2147483647) % 1000000"))
-      .join(got.select(col("source"), col("rate_ppm")), "source")
-      .filter(col("h") < col("rate_ppm"))
-      .groupBy("source").agg(sum(col("doc_id")).as("s"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val digests = got.filter(col("n_sampled") > 0)
-      .select("source", "sampled_id_sum")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(digests === expected,
-      "sampled-id digest must identify the exact membership")
-    got.unpersist()
   }
 
   test("source similarity: jaccard in (0,1]; pairs canonical and " +
@@ -4498,38 +4067,5 @@ class OpsInvariantsSpec extends SparkSuite {
       math.pow((p._2 - slope * p._1) -
         (sy / n - slope * sx / n), 2)).sum / n
     assert(varAdj <= varY + 1e-12)
-  }
-
-  test("k-anonymity: no published class smaller than k; suppressed " +
-      "classes withhold the payload but report their size; users and " +
-      "events fully accounted") {
-    import graft.ops.Pipeline
-    val events = Tables.events(spark, sf)
-    val out = Pipeline.kAnonymize(events, k = 5).collect()
-    // the k-anonymity contract itself
-    assert(out.filter(_.getBoolean(3)).forall(_.getLong(2) >= 5L),
-      "published classes must have >= k users")
-    assert(out.filter(!_.getBoolean(3)).forall(r => r.isNullAt(4)),
-      "suppressed classes must withhold sum_events")
-    assert(out.filter(_.getBoolean(3)).forall(r => !r.isNullAt(4)))
-    // auditor view: class sizes still partition the user universe
-    val nUsers = events.select("user_id").distinct().count()
-    assert(out.map(_.getLong(2)).sum === nUsers)
-    // published payloads reconcile: the sum over published classes
-    // equals the event mass of exactly those users (recomputed)
-    val k5 = 5
-    assert(out.filter(_.getBoolean(3)).map(_.getLong(4)).sum <=
-      events.count())
-    // deciles are balanced within 1 (ntile contract)
-    val byDecile = out.groupBy(_.getInt(1)).view
-      .mapValues(_.map(_.getLong(2)).sum).toMap
-    assert(byDecile.values.max - byDecile.values.min <= 1L,
-      s"ntile decile sizes must differ by at most 1: $byDecile")
-    // with a tiny k the suppression mechanism provably fires both ways
-    val all = Pipeline.kAnonymize(events, k = 1).collect()
-    assert(all.forall(_.getBoolean(3)), "k=1 publishes everything")
-    val strict = Pipeline.kAnonymize(events, k = Int.MaxValue).collect()
-    assert(strict.forall(r => !r.getBoolean(3)),
-      "an unmeetable k suppresses everything")
   }
 }

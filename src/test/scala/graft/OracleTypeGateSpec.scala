@@ -22,6 +22,12 @@ class OracleTypeGateSpec extends SparkSuite {
     try Process(Seq("python3", "-c", "import duckdb")).! == 0
     catch { case _: Throwable => false }
 
+  test("every registry query has an oracle and every oracle a query") {
+    val (q, o) = (SparkEntry.queries.keySet, SparkEntry.oracleSql.keySet)
+    assert((q -- o).isEmpty, s"queries without an oracle: ${(q -- o).toSeq.sorted}")
+    assert((o -- q).isEmpty, s"oracles without a query: ${(o -- q).toSeq.sorted}")
+  }
+
   test("oracle type gate: all registered oracles type as driver-safe") {
     assume(haveDuckdb, "python3+duckdb not available; driver gate covers this")
     val dir = Files.createTempDirectory("oracle_gate")

@@ -240,33 +240,4 @@ object PropertiesSpec extends Properties("graft") {
             .orderBy("rank")).cast("long"))
       tiles.filter(col("tile") =!= col("win_tile")).count() == 0L
     }
-
-  // k-core peel: equals the brute-force fixpoint on small random graphs
-  property("kCore matches the brute-force peel") =
-    Prop.forAll(for {
-      n <- Gen.chooseNum(0, 25)
-      edges <- Gen.listOfN(n, for {
-        a <- Gen.chooseNum(0L, 9L); b <- Gen.chooseNum(0L, 9L)
-      } yield (a, b))
-    } yield edges) { edges =>
-      val s = spark
-      import s.implicits._
-      val df = edges.toDF("doc_a", "doc_b")
-      val got = graft.ops.Graph.kCore(df, k = 2)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // brute force: repeatedly drop vertices with degree < 2
-      var es = edges.map { case (a, b) => (a min b, a max b) }
-        .filter { case (a, b) => a != b }.distinct
-      var stable = false
-      while (!stable) {
-        val deg = es.flatMap { case (a, b) => Seq(a, b) }
-          .groupBy(identity).map { case (k2, v) => k2 -> v.size }
-        val keep = deg.filter(_._2 >= 2).keySet
-        val next = es.filter { case (a, b) => keep(a) && keep(b) }
-        if (next == es) stable = true else es = next
-      }
-      val ref = es.flatMap { case (a, b) => Seq(a, b) }
-        .groupBy(identity).map { case (k2, v) => k2 -> v.size.toLong }
-      got == ref
-    }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.ingest.Decode
 import graft.sinks.Upsert
 import graft.streaming.{Stateful, StreamingJob}
 
@@ -431,7 +432,7 @@ class StreamingSpec extends SparkSuite {
     Files.write(Paths.get(in, "b1.json"),
       (1 to 5).map(i => envelope(1700000000000L + i * 1000, i.toDouble))
         .mkString("", "\n", "\n").getBytes("UTF-8"))
-    val q = StreamingJob.decode(spark.readStream.text(in).select(col("value")))
+    val q = Decode.decodeFlatten(spark.readStream.text(in).select(col("value")))
       .select("symbol", "timestamp", "price")
       .writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -446,7 +447,7 @@ class StreamingSpec extends SparkSuite {
     // a second run with new backlog resumes from the checkpoint
     Files.write(Paths.get(in, "b2.json"),
       Seq(envelope(1700000010000L, 9.0)).mkString("", "\n", "\n").getBytes("UTF-8"))
-    val q2 = StreamingJob.decode(spark.readStream.text(in).select(col("value")))
+    val q2 = Decode.decodeFlatten(spark.readStream.text(in).select(col("value")))
       .select("symbol", "timestamp", "price")
       .writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
