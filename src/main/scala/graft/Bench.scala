@@ -68,9 +68,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Stage the single-row-group testdata as splittable multi-file
-    // parquet once (production input shape — see Tables.stage).
-    val benchDir = Tables.stage(spark, sfDir)
     // JIT/codegen warmup: run every query once at the smallest sf so the
     // timed pass measures the steady-state plan, not first-run JVM/codegen
     // compilation of each query's generated classes.
@@ -83,49 +80,54 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (_, fn) =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
-    // Quiesce between warmup and the timed pass (guide §1 "measure the
-    // computation"): the full-registry warmup leaves thousands of dead
-    // shuffle/broadcast/localCheckpoint references that the
-    // ContextCleaner only discovers at the FIRST major GC — which,
-    // un-quiesced, lands minutes into the timed pass and inflates
-    // whichever (alphabetically adjacent) queries it lands on by
-    // 5-30 s (three baseline runs each showed 2-3 such spikes on
-    // queries whose solo min-of-3 is 0.3-0.7 s). Force the collection
-    // NOW and give the cleaner thread a bounded drain window so the
-    // storm is spent before the first timed query. Same queries, same
-    // noop sink, same min-of-N — this only moves unrelated JVM
-    // housekeeping out of the measured region.
-    (1 to 3).foreach { _ => System.gc(); Thread.sleep(1500) }
-    // A query whose rep throws must record "err", NEVER a number: r7's
-    // loader break made 102 queries fail-fast in ~50 ms each, and the old
-    // code posted those as min-of-3 "times" — a bench that improves
-    // because the code stopped running is a benchmark-integrity bug.
+    // Stage the single-row-group testdata as splittable multi-file
+    // parquet (production input shape — see Tables.withStaged); the
+    // staged copy is deleted after the timed pass, outside its timings.
     val results: Seq[(String, Either[String, Double])] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .map { case (name, fn) =>
-          val times = (1 to reps).map { _ =>
-            val t0 = System.nanoTime()
-            try {
-              fn(spark, benchDir).write.format("noop").mode("overwrite").save()
-              Right((System.nanoTime() - t0) / 1e9)
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              Left(Option(e.getMessage).getOrElse(e.getClass.getName))
-            }
+      Tables.withStaged(spark, sfDir) { benchDir =>
+        SparkEntry.queries
+          .filter { case (name, _) => only.forall(_.contains(name)) }
+          .foreach { case (_, fn) =>
+            try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+            catch { case _: Throwable => () }
           }
-          val ok = times.collect { case Right(t) => t }
-          // any failed rep poisons the query: partial timings are not
-          // comparable to full min-of-N
-          name -> (if (ok.size == reps) Right(ok.min)
-                   else Left(times.collectFirst { case Left(m) => m }.get))
-        }
+        // Quiesce between warmup and the timed pass, so the timings measure
+        // the computation: the full-registry warmup leaves thousands of dead
+        // shuffle/broadcast/localCheckpoint references that the
+        // ContextCleaner only discovers at the FIRST major GC — which,
+        // un-quiesced, lands minutes into the timed pass and inflates
+        // whichever (alphabetically adjacent) queries it lands on by
+        // 5-30 s (three baseline runs each showed 2-3 such spikes on
+        // queries whose solo min-of-3 is 0.3-0.7 s). Force the collection
+        // NOW and give the cleaner thread a bounded drain window so the
+        // storm is spent before the first timed query. Same queries, same
+        // noop sink, same min-of-N — this only moves unrelated JVM
+        // housekeeping out of the measured region.
+        (1 to 3).foreach { _ => System.gc(); Thread.sleep(1500) }
+        // A query whose rep throws must record "err", NEVER a number: a past
+        // loader break made 102 queries fail-fast in ~50 ms each, and the old
+        // code posted those as min-of-3 "times" — a bench that improves
+        // because the code stopped running is a benchmark-integrity bug.
+        SparkEntry.queries.toSeq.sortBy(_._1)
+          .filter { case (name, _) => only.forall(_.contains(name)) }
+          .map { case (name, fn) =>
+            val times = (1 to reps).map { _ =>
+              val t0 = System.nanoTime()
+              try {
+                fn(spark, benchDir).write.format("noop").mode("overwrite").save()
+                Right((System.nanoTime() - t0) / 1e9)
+              } catch { case e: Throwable =>
+                System.err.println(s"[bench] $name failed: ${e.getMessage}")
+                Left(Option(e.getMessage).getOrElse(e.getClass.getName))
+              }
+            }
+            val ok = times.collect { case Right(t) => t }
+            // any failed rep poisons the query: partial timings are not
+            // comparable to full min-of-N
+            name -> (if (ok.size == reps) Right(ok.min)
+                     else Left(times.collectFirst { case Left(m) => m }.get))
+          }
+      }
     // Per-query values printed at ms precision (3 decimals): the full
     // 9-decimal line (~12 KB at 369 queries) overflowed the driver's
     // stdout-tail capture two rounds running (BENCH_r16 parsed:null →

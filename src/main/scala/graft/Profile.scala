@@ -75,7 +75,6 @@ object Profile {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val benchDir = Tables.stage(spark, sfDir)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
@@ -86,29 +85,31 @@ object Profile {
         .write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
-    (1 to 3).foreach { _ => System.gc(); Thread.sleep(1500) }
-    val c = new Counters
-    spark.sparkContext.addSparkListener(c)
-    val rows = names.map { n =>
-      c.quiesce()
-      val before = c.snapshot()
-      val t0 = System.nanoTime()
-      val ok =
-        try {
-          SparkEntry.queries(n)(spark, benchDir)
-            .write.format("noop").mode("overwrite").save()
-          true
-        } catch { case e: Throwable =>
-          System.err.println(s"[profile] $n failed: ${e.getMessage}"); false
-        }
-      val wall = (System.nanoTime() - t0) / 1e9
-      c.quiesce()
-      val d = c.snapshot().zip(before).map { case (a, b) => a - b }
-      val fields = Seq("jobs", "stages", "tasks", "exec_run_ms",
-        "exec_cpu_ms", "shuffle_read_b", "shuffle_write_b")
-      s""""$n":{"wall":${"%.3f".formatLocal(java.util.Locale.ROOT, wall)},""" +
-        s""""ok":$ok,""" +
-        fields.zip(d).map { case (f, v) => s""""$f":$v""" }.mkString(",") + "}"
+    val rows = Tables.withStaged(spark, sfDir) { benchDir =>
+      (1 to 3).foreach { _ => System.gc(); Thread.sleep(1500) }
+      val c = new Counters
+      spark.sparkContext.addSparkListener(c)
+      names.map { n =>
+        c.quiesce()
+        val before = c.snapshot()
+        val t0 = System.nanoTime()
+        val ok =
+          try {
+            SparkEntry.queries(n)(spark, benchDir)
+              .write.format("noop").mode("overwrite").save()
+            true
+          } catch { case e: Throwable =>
+            System.err.println(s"[profile] $n failed: ${e.getMessage}"); false
+          }
+        val wall = (System.nanoTime() - t0) / 1e9
+        c.quiesce()
+        val d = c.snapshot().zip(before).map { case (a, b) => a - b }
+        val fields = Seq("jobs", "stages", "tasks", "exec_run_ms",
+          "exec_cpu_ms", "shuffle_read_b", "shuffle_write_b")
+        s""""$n":{"wall":${"%.3f".formatLocal(java.util.Locale.ROOT, wall)},""" +
+          s""""ok":$ok,""" +
+          fields.zip(d).map { case (f, v) => s""""$f":$v""" }.mkString(",") + "}"
+      }
     }
     val out = "{" + rows.mkString(",") + "}"
     val path = java.nio.file.Paths.get(

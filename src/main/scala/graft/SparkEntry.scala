@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Decode
-import graft.ops.{AsOfJoin, Dedup, EventAnalytics, Incremental, Predict, Relational, Resample, Scale, Similarity, TextOps, TradeOps}
+import graft.ops.{AsOfJoin, Dedup, EventAnalytics, Incremental, Predict, Relational, Resample, Scale, TextOps, TradeOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -53,7 +53,6 @@ object SparkEntry {
     "t_stratified_sample" -> ((s, dir) => TextOps.stratifiedSample(Tables.load(s, dir, "documents"))),
     "t_pack_sequences" -> ((s, dir) => TextOps.packSequences(Tables.load(s, dir, "documents"))),
     "t_source_mix" -> ((s, dir) => TextOps.sourceMixSample(Tables.load(s, dir, "documents"))),
-    "v_quantize_int8" -> ((s, dir) => Similarity.quantizeInt8(s, dir)),
     "f5_time_convert" -> ((s, dir) => TradeOps.timeConvert(trades(s, dir))),
     "s5_csv_roundtrip" -> ((s, dir) => TradeOps.csvRoundTrip(s, trades(s, dir))),
     "s11_orc_roundtrip" -> ((s, dir) => TradeOps.orcRoundTrip(s, trades(s, dir))),
@@ -180,7 +179,6 @@ object SparkEntry {
     "d_embedding_dup" -> ((s, dir) => Dedup.embeddingDup(s, dir)),
     "d_cos_threshold_curve" -> ((s, dir) => Dedup.cosThresholdCurve(s, dir)),
     "d_segment_dedup" -> ((s, dir) => TextOps.segmentDedup(Tables.load(s, dir, "documents"))),
-    "d_semantic_dup" -> ((s, dir) => Similarity.semanticDup(s, dir)),
     "d_dedup_resolve" -> ((s, dir) => Dedup.resolveDuplicates(Tables.load(s, dir, "documents"))),
     "mv_incremental" -> ((s, dir) => Incremental.incrementalAgg(Tables.events(s, dir))),
     "e_funnel" -> ((s, dir) => EventAnalytics.funnel(Tables.events(s, dir))),
@@ -208,31 +206,11 @@ object SparkEntry {
     "a_hll_merge" -> ((s, dir) => Relational.hllMergeDistinct(s, dir)),
     "a28_hll_intersect" -> ((s, dir) => Relational.hllIntersect(s, dir)),
     "a27_cms_topk" -> ((s, dir) => Relational.cmsTopK(s, dir)),
-    "v_cosine_topk" -> ((s, dir) => Similarity.cosineTopK(s, dir)),
-    "v_hard_negatives" -> ((s, dir) => Similarity.hardNegatives(s, dir)),
-    "v_ann_lsh" -> ((s, dir) => Similarity.annLsh(s, dir)),
-    "v_lsh_ann_recall" -> ((s, dir) => Similarity.lshAnnRecall(s, dir)),
-    "v_ann_multiprobe" -> ((s, dir) => Similarity.annLshMultiprobe(s, dir)),
-    "v_multiprobe_recall" -> ((s, dir) => Similarity.multiprobeRecall(s, dir)),
-    "v_label_outliers" -> ((s, dir) => Similarity.labelOutliers(s, dir)),
-    "v_centroid_shift" -> ((s, dir) => Similarity.centroidShift(s, dir)),
-    "v_ann_ivf" -> ((s, dir) => Similarity.annIvf(s, dir)),
-    "v_ivf_recall" -> ((s, dir) => Similarity.ivfRecall(s, dir)),
-    "v_mrl_recall" -> ((s, dir) => Similarity.mrlRecall(s, dir)),
-    "v_int8_recall" -> ((s, dir) => Similarity.int8Recall(s, dir)),
-    "v_hamming_topk" -> ((s, dir) => Similarity.hammingTopK(s, dir)),
-    "v_dim_profile" -> ((s, dir) => Similarity.dimProfile(s, dir)),
-    "v_knn_graph" -> ((s, dir) => Similarity.knnGraph(s, dir)),
-    "v_diversity_sample" -> ((s, dir) => Similarity.diversitySample(s, dir)),
     "w_vwma" -> ((s, dir) => TradeOps.vwma(trades(s, dir))),
     "a_gini" -> ((s, dir) => TradeOps.giniActivity(trades(s, dir))),
-    "v_pca_power" -> ((s, dir) => Similarity.pcaPower(s, dir)),
-    "v_ood_topk" -> ((s, dir) => Similarity.oodTopK(s, dir)),
     "a_runs_test" -> ((s, dir) => TradeOps.runsTest(trades(s, dir))),
     "d_edit_distance" -> ((s, dir) =>
       Dedup.editDistance(Tables.load(s, dir, "documents"))),
-    "v_cluster_radius" -> ((s, dir) => Similarity.clusterRadius(s, dir)),
-    "v_norm_hist" -> ((s, dir) => Similarity.normHist(s, dir)),
     "d_prefix_dup" -> ((s, dir) =>
       Dedup.prefixDup(Tables.load(s, dir, "documents"))),
     "t_charclass_profile" -> ((s, dir) =>
@@ -243,17 +221,10 @@ object SparkEntry {
       TextOps.lengthOutliers(Tables.load(s, dir, "documents"))),
     "d_minhash_est_error" -> ((s, dir) =>
       Dedup.minhashEstError(Tables.load(s, dir, "documents"))),
-    "v_knn_graph_recall" -> ((s, dir) => Similarity.knnGraphRecall(s, dir)),
     "w_ichimoku" -> ((s, dir) => TradeOps.ichimoku(trades(s, dir))),
-    "v_hamming_recall" -> ((s, dir) => Similarity.hammingRecall(s, dir)),
     "w_aroon" -> ((s, dir) => TradeOps.aroon(trades(s, dir))),
     "e_burst_detect" -> ((s, dir) =>
       EventAnalytics.burstDetect(Tables.events(s, dir))),
-    "v_recall_curve" -> ((s, dir) => Similarity.ivfRecallCurve(s, dir)),
-    "v_pq_codes" -> ((s, dir) => Similarity.pqCodes(s, dir)),
-    "v_pq_adc" -> ((s, dir) => Similarity.pqAdc(s, dir)),
-    "v_ivfpq_adc" -> ((s, dir) => Similarity.ivfPqAdc(s, dir)),
-    "v_kmeans" -> ((s, dir) => Similarity.kmeansCentroids(s, dir)),
     "a_pivot_dow" -> ((s, dir) => TradeOps.pivotDayOfWeek(trades(s, dir))),
     "a_unpivot_totals" -> ((s, dir) => TradeOps.unpivotTotals(trades(s, dir))),
     // -- technical-indicator tier (W8-W10, A12-A13) ----------------------
@@ -314,8 +285,6 @@ object SparkEntry {
     "e_rfm" -> ((s, dir) => Relational.rfmSegments(s, dir)),
     "a21_yoy_revenue" -> ((s, dir) => Relational.yoyRevenue(s, dir)),
     "k12_cdc_apply" -> ((s, dir) => Incremental.cdcApply(trades(s, dir))),
-    "v_range_search" -> ((s, dir) => Similarity.rangeSearch(s, dir)),
-    "v_kcenter_seeds" -> ((s, dir) => Similarity.kcenterSeeds(s, dir)),
     "d_containment" -> ((s, dir) => Dedup.containment(Tables.load(s, dir, "documents"))),
     "d_lsh_recall" -> ((s, dir) => Dedup.lshRecall(Tables.load(s, dir, "documents"))),
     "t_feature_hash" -> ((s, dir) => TextOps.featureHash(Tables.load(s, dir, "documents"))),
@@ -341,10 +310,8 @@ object SparkEntry {
     "a26_chisq" -> ((s, dir) => TradeOps.chisqHourly(trades(s, dir))),
     "s16_table_fingerprint" -> ((s, dir) =>
       TradeOps.tableFingerprint(trades(s, dir))),
-    "v_mips_topk" -> ((s, dir) => Similarity.mipsTopK(s, dir)),
     "d_cross_dedup" -> ((s, dir) =>
       Dedup.crossDedup(Tables.load(s, dir, "documents"))),
-    "v_hybrid_rrf" -> ((s, dir) => Similarity.hybridRrf(s, dir)),
     "o10_purged_embargo" -> ((s, dir) =>
       TradeOps.purgedEmbargoSplits(trades(s, dir))),
     "t_tv_drift" -> ((s, dir) =>
@@ -362,7 +329,6 @@ object SparkEntry {
       EventAnalytics.ltvCurve(Tables.events(s, dir))),
     "w19_realized_vol" -> ((s, dir) => TradeOps.realizedVol(trades(s, dir))),
     "q25_copurchase" -> ((s, dir) => Relational.copurchase(s, dir)),
-    "v_kmeans_purity" -> ((s, dir) => Similarity.kmeansPurity(s, dir)),
     "a_var_es" -> ((s, dir) => TradeOps.varEs(trades(s, dir))),
     "a_moment_profile" -> ((s, dir) =>
       TradeOps.momentProfile(trades(s, dir))),
@@ -371,14 +337,12 @@ object SparkEntry {
       EventAnalytics.interarrival(Tables.events(s, dir))),
     "t_readability" -> ((s, dir) =>
       TextOps.readability(Tables.load(s, dir, "documents"))),
-    "v_mmr_select" -> ((s, dir) => Similarity.mmrSelect(s, dir)),
     "e_markov_stationary" -> ((s, dir) =>
       EventAnalytics.markovStationary(Tables.events(s, dir))),
     "e_simpson_diversity" -> ((s, dir) =>
       EventAnalytics.simpsonDiversity(Tables.events(s, dir))),
     "s20_partition_diff" -> ((s, dir) =>
       TradeOps.partitionDiff(trades(s, dir))),
-    "v_prf_expand" -> ((s, dir) => Similarity.prfExpand(s, dir)),
     "w_vol_regime" -> ((s, dir) => TradeOps.volRegime(trades(s, dir))),
     "w_vol_regime_banded" -> ((s, dir) =>
       TradeOps.volRegimeBanded(trades(s, dir))),
@@ -395,16 +359,13 @@ object SparkEntry {
       TradeOps.subsampleStability(trades(s, dir))),
     "q28_ship_latency" -> ((s, dir) => Relational.shipLatency(s, dir)),
     "q29_order_gap_hist" -> ((s, dir) => Relational.orderGapHist(s, dir)),
-    "v_pq_occupancy" -> ((s, dir) => Similarity.pqOccupancy(s, dir)),
     "d_cluster_size_hist" -> ((s, dir) =>
       Dedup.clusterSizeHist(Tables.load(s, dir, "documents"))),
     "k17_rollback" -> ((s, dir) =>
       TradeOps.rollbackRoundTrip(s, trades(s, dir))),
-    "v_ivf_occupancy" -> ((s, dir) => Similarity.ivfOccupancy(s, dir)),
     "w_vpin" -> ((s, dir) => TradeOps.vpin(trades(s, dir))),
     "e_bot_score" -> ((s, dir) =>
       EventAnalytics.botScore(Tables.events(s, dir))),
-    "v_centroid_auc" -> ((s, dir) => Similarity.centroidAuc(s, dir)),
     "w_amihud" -> ((s, dir) => TradeOps.amihud(trades(s, dir))),
     "w_roll_spread" -> ((s, dir) => TradeOps.rollSpread(trades(s, dir))),
     "a_bootstrap_ci" -> ((s, dir) => TradeOps.bootstrapCi(trades(s, dir))),
@@ -423,17 +384,12 @@ object SparkEntry {
     "w_cci" -> ((s, dir) => TradeOps.cci(trades(s, dir))),
     "w_hurst_rs" -> ((s, dir) => TradeOps.hurstRs(trades(s, dir))),
     "w_max_drawdown" -> ((s, dir) => TradeOps.maxDrawdown(trades(s, dir))),
-    "v_hubness" -> ((s, dir) => Similarity.hubness(s, dir)),
-    "v_nn_margin" -> ((s, dir) => Similarity.nnMargin(s, dir)),
     "e_pareto_share" -> ((s, dir) =>
       EventAnalytics.paretoShare(Tables.events(s, dir))),
     "t_hapax_profile" -> ((s, dir) =>
       TextOps.hapaxProfile(Tables.load(s, dir, "documents"))),
     "e_new_returning" -> ((s, dir) =>
       EventAnalytics.newReturning(Tables.events(s, dir))),
-    "v_silhouette" -> ((s, dir) => Similarity.silhouette(s, dir)),
-    "v_davies_bouldin" -> ((s, dir) => Similarity.daviesBouldin(s, dir)),
-    "v_pq_distortion" -> ((s, dir) => Similarity.pqDistortion(s, dir)),
     "e_lifespan_hist" -> ((s, dir) =>
       EventAnalytics.lifespanHist(Tables.events(s, dir))),
     "q30_supplier_hhi" -> ((s, dir) => Relational.supplierHhi(s, dir)),
@@ -444,7 +400,6 @@ object SparkEntry {
       EventAnalytics.rollingWau(Tables.events(s, dir))),
     "w_volume_profile" -> ((s, dir) =>
       TradeOps.volumeProfile(trades(s, dir))),
-    "v_pca_deflate" -> ((s, dir) => Similarity.pcaDeflate(s, dir)),
     "d_bucket_skew" -> ((s, dir) =>
       Dedup.bucketSkew(Tables.load(s, dir, "documents"))),
     "q26_revenue_deciles" -> ((s, dir) => Relational.revenueDeciles(s, dir)),
@@ -457,7 +412,6 @@ object SparkEntry {
     "w_obv_divergence" -> ((s, dir) => TradeOps.obvDivergence(trades(s, dir))),
     "e_active_streaks" -> ((s, dir) =>
       EventAnalytics.activeStreaks(Tables.events(s, dir))),
-    "v_int8_order_flips" -> ((s, dir) => Similarity.int8OrderFlips(s, dir)),
     "k18_snapshot_expire" -> ((s, dir) =>
       TradeOps.snapshotExpire(s, trades(s, dir))),
     "e_churn_rate" -> ((s, dir) =>
@@ -557,7 +511,6 @@ object SparkEntry {
     "t_stratified_sample" -> TextOps.stratifiedSampleSql(),
     "t_pack_sequences" -> TextOps.packSequencesSql(),
     "t_source_mix" -> TextOps.sourceMixSampleSql(),
-    "v_quantize_int8" -> Similarity.quantizeInt8Sql,
 
     "a10_quantiles" ->
       s"""$T,
@@ -1335,7 +1288,6 @@ object SparkEntry {
     "d_embedding_dup" -> Dedup.embeddingDupSql,
     "d_cos_threshold_curve" -> Dedup.cosThresholdCurveSql(),
     "d_segment_dedup" -> TextOps.segmentDedupSql(),
-    "d_semantic_dup" -> Similarity.semanticDupSql(),
     "t_df_rarity" -> TextOps.dfRaritySql(),
     "t_bpe_train" -> TextOps.bpeTrainSql(),
     "t_bpe_encode" -> TextOps.bpeEncodeSql(),
@@ -1393,16 +1345,8 @@ object SparkEntry {
         |          SELECT l_suppkey FROM lineitem WHERE l_returnflag = 'A'))
         |        AS BIGINT) AS exact_both,
         |  1 AS within_env""".stripMargin,
-    "v_ann_ivf" -> Similarity.annIvfSql(),
-    "v_ivf_recall" -> Similarity.ivfRecallSql(),
     "a27_cms_topk" -> Relational.cmsTopKSql(),
     "d_substring_dup" -> TextOps.substringDupSql(),
-    "v_mrl_recall" -> Similarity.mrlRecallSql(),
-    "v_int8_recall" -> Similarity.int8RecallSql(),
-    "v_hamming_topk" -> Similarity.hammingTopKSql(),
-    "v_dim_profile" -> Similarity.dimProfileSql(),
-    "v_knn_graph" -> Similarity.knnGraphSql(),
-    "v_diversity_sample" -> Similarity.diversitySampleSql(),
     "w_vwma" ->
       s"""$T
          |${TradeOps.vwmaSql()}""".stripMargin,
@@ -1410,40 +1354,23 @@ object SparkEntry {
       s"""$T
          |${TradeOps.giniActivitySql}""".stripMargin,
     "d_minhash_est_error" -> Dedup.minhashEstErrorSql(),
-    "v_pca_power" -> Similarity.pcaPowerSql(),
-    "v_ood_topk" -> Similarity.oodTopKSql(),
     "a_runs_test" ->
       s"""$T
          |${TradeOps.runsTestSql}""".stripMargin,
     "d_edit_distance" -> Dedup.editDistanceSql(),
-    "v_cluster_radius" -> Similarity.clusterRadiusSql(),
-    "v_norm_hist" -> Similarity.normHistSql,
     "d_prefix_dup" -> Dedup.prefixDupSql(),
     "t_charclass_profile" -> TextOps.charClassProfileSql,
     "k16_partition_evolution" ->
       s"""$T
          |${TradeOps.partitionEvolutionSql}""".stripMargin,
     "t_length_outliers" -> TextOps.lengthOutliersSql,
-    "v_knn_graph_recall" -> Similarity.knnGraphRecallSql(),
     "w_ichimoku" ->
       s"""$T
          |${TradeOps.ichimokuSql()}""".stripMargin,
-    "v_hamming_recall" -> Similarity.hammingRecallSql(),
     "w_aroon" ->
       s"""$T
          |${TradeOps.aroonSql()}""".stripMargin,
     "e_burst_detect" -> EventAnalytics.burstDetectSql,
-    "v_recall_curve" -> Similarity.ivfRecallCurveSql(),
-    "v_pq_codes" -> Similarity.pqCodesSql(),
-    "v_pq_adc" -> Similarity.pqAdcSql(),
-    "v_ivfpq_adc" -> Similarity.ivfPqAdcSql(),
-    "v_kmeans" -> Similarity.kmeansSql(),
-    "v_ann_lsh" -> Similarity.annLshSql(),
-    "v_lsh_ann_recall" -> Similarity.lshAnnRecallSql(),
-    "v_ann_multiprobe" -> Similarity.annLshMultiprobeSql(),
-    "v_multiprobe_recall" -> Similarity.multiprobeRecallSql(),
-    "v_label_outliers" -> Similarity.labelOutliersSql(),
-    "v_centroid_shift" -> Similarity.centroidShiftSql(),
 
     "d_ngram_jaccard" ->
       """WITH sh AS (
@@ -1462,23 +1389,6 @@ object SparkEntry {
         |       (CAST(n_inter AS DOUBLE) / CAST(na + nb - n_inter AS DOUBLE)) AS jaccard
         |FROM p
         |WHERE CAST(n_inter AS DOUBLE) / CAST(na + nb - n_inter AS DOUBLE) >= 0.1::DOUBLE""".stripMargin,
-
-    "v_hard_negatives" -> Similarity.hardNegativesSql(),
-    "v_cosine_topk" ->
-      """WITH n AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        |  FROM embeddings
-        |), q AS (
-        |  SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM n WHERE vec_id < 10
-        |), s AS (
-        |  SELECT q_id, vec_id, list_dot_product(qv, v) / (qn * nrm) AS cos
-        |  FROM n, q WHERE vec_id != q_id
-        |)
-        |SELECT q_id, vec_id, (cos) AS cos_sim, rnk FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk
-        |  FROM s
-        |) WHERE rnk <= 5""".stripMargin,
 
     "a_pivot_dow" -> {
       val cols = (1 to 7).map(d =>
@@ -1500,7 +1410,6 @@ object SparkEntry {
          |SELECT symbol, 'total_volume' AS metric, total_volume AS value FROM agg
          |UNION ALL
          |SELECT symbol, 'total_usd_volume' AS metric, total_usd_volume AS value FROM agg""".stripMargin,
-
 
     "w8_bollinger" ->
       s"""$T
@@ -1614,8 +1523,6 @@ object SparkEntry {
     "e_rfm" -> Relational.rfmSegmentsSql,
     "a21_yoy_revenue" -> Relational.yoyRevenueSql,
     "k12_cdc_apply" -> s"$T,\n${Incremental.cdcApplySql}",
-    "v_range_search" -> Similarity.rangeSearchSql(),
-    "v_kcenter_seeds" -> Similarity.kcenterSeedsSql(),
     "d_containment" -> Dedup.containmentSql(),
     "d_lsh_recall" -> Dedup.lshRecallSql(),
     "t_feature_hash" -> TextOps.featureHashSql(),
@@ -1636,9 +1543,7 @@ object SparkEntry {
     "f17_quantile_rank" -> s"$T,\n${TradeOps.quantileRankSql.stripPrefix("WITH ")}",
     "a26_chisq" -> s"$T,\n${TradeOps.chisqHourlySql.stripPrefix("WITH ")}",
     "s16_table_fingerprint" -> s"$T,\n${TradeOps.tableFingerprintSql.stripPrefix("WITH ")}",
-    "v_mips_topk" -> Similarity.mipsTopKSql(),
     "d_cross_dedup" -> Dedup.crossDedupSql(),
-    "v_hybrid_rrf" -> Similarity.hybridRrfSql(),
     "o10_purged_embargo" -> s"$T\n${TradeOps.purgedEmbargoSplitsSql()}",
     "t_tv_drift" -> TextOps.tvDriftSql,
     "k15_merge_on_read" -> s"$T\n${TradeOps.mergeOnReadSql()}",
@@ -1649,17 +1554,14 @@ object SparkEntry {
     "e_ltv_curve" -> EventAnalytics.ltvCurveSql,
     "w19_realized_vol" -> s"$T,\n${TradeOps.realizedVolSql.stripPrefix("WITH ")}",
     "q25_copurchase" -> Relational.copurchaseSql(),
-    "v_kmeans_purity" -> Similarity.kmeansPuritySql(),
     "a_var_es" -> s"$T\n${TradeOps.varEsSql()}",
     "a_moment_profile" -> s"$T\n${TradeOps.momentProfileSql}",
     "w_mfi" -> s"$T\n${TradeOps.mfiSql()}",
     "e_interarrival" -> EventAnalytics.interarrivalSql,
     "t_readability" -> TextOps.readabilitySql,
-    "v_mmr_select" -> Similarity.mmrSelectSql(),
     "e_markov_stationary" -> EventAnalytics.markovStationarySql(),
     "e_simpson_diversity" -> EventAnalytics.simpsonDiversitySql,
     "s20_partition_diff" -> s"$T\n${TradeOps.partitionDiffSql()}",
-    "v_prf_expand" -> Similarity.prfExpandSql(),
     "w_vol_regime" -> s"$T\n${TradeOps.volRegimeSql()}",
     // banded two-pass rank is a physical rewrite: the exact-ntile SQL
     // doubles as its equivalence proof
@@ -1672,13 +1574,10 @@ object SparkEntry {
     "a_subsample_stability" -> s"$T\n${TradeOps.subsampleStabilitySql()}",
     "q28_ship_latency" -> Relational.shipLatencySql,
     "q29_order_gap_hist" -> Relational.orderGapHistSql,
-    "v_pq_occupancy" -> Similarity.pqOccupancySql(),
     "d_cluster_size_hist" -> Dedup.clusterSizeHistSql,
     "k17_rollback" -> s"$T\n${TradeOps.rollbackRoundTripSql}",
-    "v_ivf_occupancy" -> Similarity.ivfOccupancySql(),
     "w_vpin" -> s"$T\n${TradeOps.vpinSql()}",
     "e_bot_score" -> EventAnalytics.botScoreSql(),
-    "v_centroid_auc" -> Similarity.centroidAucSql(),
     "w_amihud" -> s"$T\n${TradeOps.amihudSql}",
     "w_roll_spread" -> s"$T\n${TradeOps.rollSpreadSql}",
     "a_bootstrap_ci" -> s"$T\n${TradeOps.bootstrapCiSql()}",
@@ -1698,21 +1597,15 @@ object SparkEntry {
     "w_cci" -> s"$T\n${TradeOps.cciSql()}",
     "w_hurst_rs" -> s"$T\n${TradeOps.hurstRsSql()}",
     "w_max_drawdown" -> s"$T\n${TradeOps.maxDrawdownSql}",
-    "v_hubness" -> Similarity.hubnessSql(),
-    "v_nn_margin" -> Similarity.nnMarginSql(),
     "e_pareto_share" -> EventAnalytics.paretoShareSql,
     "t_hapax_profile" -> TextOps.hapaxProfileSql,
     "e_new_returning" -> EventAnalytics.newReturningSql,
-    "v_silhouette" -> Similarity.silhouetteSql(),
-    "v_davies_bouldin" -> Similarity.daviesBouldinSql(),
-    "v_pq_distortion" -> Similarity.pqDistortionSql(),
     "e_lifespan_hist" -> EventAnalytics.lifespanHistSql,
     "q30_supplier_hhi" -> Relational.supplierHhiSql,
     "q31_decile_migration" -> Relational.decileMigrationSql,
     "e_rate_anomaly" -> EventAnalytics.rateAnomalySql,
     "e_rolling_wau" -> EventAnalytics.rollingWauSql,
     "w_volume_profile" -> s"$T\n${TradeOps.volumeProfileSql}",
-    "v_pca_deflate" -> Similarity.pcaDeflateSql(),
     "d_bucket_skew" -> Dedup.bucketSkewSql,
     "q26_revenue_deciles" -> Relational.revenueDecilesSql,
     "e_seasonal_profile" -> EventAnalytics.seasonalProfileSql,
@@ -1722,7 +1615,6 @@ object SparkEntry {
     "w_williams_r" -> s"$T\n${TradeOps.williamsRSql}",
     "w_obv_divergence" -> s"$T\n${TradeOps.obvDivergenceSql}",
     "e_active_streaks" -> EventAnalytics.activeStreaksSql,
-    "v_int8_order_flips" -> Similarity.int8OrderFlipsSql(),
     "k18_snapshot_expire" -> s"$T\n${TradeOps.snapshotExpireSql}",
     "e_churn_rate" -> EventAnalytics.churnRateSql,
     "w_squeeze" -> s"$T\n${TradeOps.squeezeSql()}",

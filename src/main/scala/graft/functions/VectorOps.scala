@@ -178,10 +178,10 @@ object VectorOps {
 
   /** DuckDB expression for `plane(i, j)` — the EXACT mirror of
     * [[HyperplaneLshBits]]'s sign mix, the single source of truth the
-    * LSH oracle SQL builders ([[graft.ops.Dedup.embeddingDupSql]],
-    * [[graft.ops.Similarity.annLshSql]]) splice into their per-bit
-    * lambdas. `iExpr` is the 0-BASED dimension index expression (DuckDB
-    * list lambdas see 1-based `i`, so callers pass `"(i - 1)"`); `j` is
+    * LSH oracle SQL ([[graft.ops.Dedup.embeddingDupSql]]) splices into
+    * its per-bit lambdas. `iExpr` is the 0-BASED dimension index
+    * expression (DuckDB list lambdas see 1-based `i`, so callers pass
+    * `"(i - 1)"`); `j` is
     * the bit index, baked as a literal. All intermediates are positive
     * and < 2^52 — exact BIGINT in both engines. */
   def hyperplaneSignSql(iExpr: String, j: Int): String = {

@@ -790,8 +790,9 @@ object Dedup {
   }
 
   /** Oracle for [[embeddingDup]]: the identical 16 hyperplane sign bits
-    * (the [[graft.functions.HyperplaneLshBits]] formula, same as
-    * [[Similarity.annLshSql]] — proven bit-compatible), the same banded
+    * (the [[graft.functions.HyperplaneLshBits]] formula, spliced in
+    * through [[graft.functions.VectorOps.hyperplaneSignSql]] —
+    * bit-compatible by construction), the same banded
     * keys, the same first-matching-band emission, the same exact-double
     * cosine. */
   /** The [[embeddingPairs]] chain in SQL, ending in

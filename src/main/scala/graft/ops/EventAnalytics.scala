@@ -617,8 +617,8 @@ object EventAnalytics {
     * abuse dashboard reads as "is this event type organic or one bot"
     * (the entropy-free diversity index — Shannon needs `ln`, which is
     * not correctly rounded cross-engine; Simpson is pure rational
-    * algebra). Exact BIGINT `Σn_u²` with the [[graft.ops.Similarity
-    * .dimProfile]] overflow-guard discipline (n_users·max(n_u)² ≤
+    * algebra). Exact BIGINT `Σn_u²` with the same overflow guard as
+    * [[graft.ops.TradeOps.momentProfile]] (n_users·max(n_u)² ≤
     * 2⁶³−1, checked on wrap-proof counts — past ~3·10⁹ events per
     * user the op fails loudly instead of diverging); the index itself
     * derives through identical IEEE double expressions. Two map-side

@@ -1005,8 +1005,8 @@ object TextOps {
     * The working set is the VOCABULARY (distinct words with counts),
     * not the corpus: one corpus-sized aggregate builds it, then every
     * round is a vocab-sized pair-count aggregate, a 1-row argmax
-    * collect (the justified tiny collect of an iterative trainer, like
-    * [[Similarity.trainKmeans]]'s k rows), and a codegen'd `replace`
+    * collect (the justified tiny collect of an iterative trainer: one
+    * row a round), and a codegen'd `replace`
     * projection applying the merge. That is exactly how production BPE
     * trainers scale: corpus → word counts once, then iterate on the
     * vocab.
@@ -1080,9 +1080,9 @@ object TextOps {
     (learned.toSeq, seqs)
   }
 
-  /** Per-(session, corpus-plan, rounds) trained-tokenizer cache — the
-    * [[graft.ops.Similarity]] kmCache discipline verbatim: a tokenizer
-    * is trained once and SHIPPED to its consumers (encode/fertility),
+  /** Per-(session, corpus-plan, rounds) trained-tokenizer cache — a
+    * tokenizer, like any fitted codebook, is trained once and SHIPPED
+    * to its consumers (encode/fertility),
     * so re-running the merge loop per consuming query measured only
     * scheduler barriers (3 argmax collects + 3 checkpoints per call).
     * The training digest [[bpeTrain]] deliberately BYPASSES this so its

@@ -537,12 +537,7 @@ object TradeOps {
     * ttStore) keep the plain scratchDir + manifest guard. */
   private[graft] def freshScratchDir(spark: SparkSession, name: String): String = {
     val d = scratchDir(spark, name)
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(d))
+    graft.Tables.deleteTree(d)
     d
   }
 
@@ -3930,10 +3925,10 @@ object TradeOps {
     * distribution-shape QC, not a pricing op) plus derived skewness
     * and excess kurtosis. The sums are the oracle-exact columns; the
     * derived moments go through correctly-rounded IEEE double
-    * ops only (casts, +,−,×,÷, sqrt — the [[graft.ops.Similarity
-    * .dimProfile]] discipline), with the IDENTICAL expression tree on
-    * both engines. Overflow guard ([[graft.ops.Similarity.dimProfile]]
-    * class): n·mx⁴ ≤ 2⁶³−1 checked from the wrap-proof n/max in pure
+    * ops only (casts, +,−,×,÷, sqrt — CAST is itself correctly
+    * rounded, so both engines start from the identical double), with
+    * the IDENTICAL expression tree on both engines. Overflow guard:
+    * n·mx⁴ ≤ 2⁶³−1 checked from the wrap-proof n/max in pure
     * DIV form (nested floor divisions — the guard itself cannot
     * overflow for any input) — past the bound the op fails loudly
     * instead of silently diverging from DuckDB's HUGEINT widening
@@ -5329,8 +5324,8 @@ object TradeOps {
     * random earlier one (the AUC reading), emitted in exact ppm.
     * ENTIRELY integer: ranks are `row_number` over the deterministic
     * (cent, event_id) order (ties broken by id — documented, exact,
-    * engine-identical; the [[graft.ops.Similarity.centroidAuc]]
-    * convention), halves split on the time order, and the rank-sum
+    * engine-identical; no fractional average-ranks), halves split on
+    * the time order, and the rank-sum
     * algebra is BIGINT with the loud ppm-ceiling assert mirrored by
     * DuckDB's native BIGINT-overflow raise on the same product. Two
     * symbol-keyed windows + one aggregate — one exchange. */

@@ -94,4 +94,22 @@ class DataContractSpec extends SparkSuite {
     assert(t.schema("price").dataType === DoubleType)
     assert(t.schema("volume").dataType === DoubleType)
   }
+
+  test("Tables.withStaged leaves no staged copy after its body returns or throws") {
+    val staged = Tables.withStaged(spark, sf) { dir =>
+      assert(new java.io.File(dir, "events.parquet").isDirectory)
+      assert(Tables.events(spark, dir).count() === Tables.events(spark, sf).count())
+      dir
+    }
+    assert(!new java.io.File(staged).exists(), s"$staged left behind")
+    var seen = ""
+    intercept[IllegalStateException] {
+      Tables.withStaged(spark, sf) { dir =>
+        seen = dir
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(seen.nonEmpty && !new java.io.File(seen).exists(),
+      s"$seen left behind after the body threw")
+  }
 }

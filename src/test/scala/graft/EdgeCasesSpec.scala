@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.ops.{Dedup, Graph, Similarity, TextOps, TradeOps}
+import graft.ops.{Dedup, Graph, TextOps, TradeOps}
 
 /** Empty-input and degenerate-shape behavior: every operator must
   * return an empty (or well-defined) result on an empty table, never
@@ -26,29 +26,6 @@ class EdgeCasesSpec extends SparkSuite {
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
       StructField("n_chars", LongType))))
-
-  test("pcaPower/pcaDeflate return empty loadings on an empty corpus") {
-    // r18: the per-dim transpose sums moved from a posexplode fanout
-    // (whose empty input yielded zero groups) to one wide aggregate
-    // (whose empty input yields one all-NULL row) with driver-held
-    // round state — the explicit n==0 branch must keep the EMPTY-OK
-    // contract: zero output rows, never a throw or a 64-NULL-row table.
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty_emb")
-      .toString
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)),
-        StructField("label", IntegerType))))
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val p = Similarity.pcaPower(spark, dir)
-    assert(p.columns.toSeq === Seq("dim", "loading", "lambda"))
-    assert(p.count() === 0)
-    val d = Similarity.pcaDeflate(spark, dir)
-    assert(d.columns.toSeq === Seq("dim", "loading2", "lambda2", "ortho"))
-    assert(d.count() === 0)
-  }
 
   test("format round-trips survive an empty table") {
     assert(TradeOps.orcRoundTrip(spark, emptyTrades).count() === 0)
@@ -296,8 +273,8 @@ class EdgeCasesSpec extends SparkSuite {
     assert(TradeOps.schemaEvolutionRead(spark, emptyTrades).count() === 0)
   }
 
-  test("batch-8: cdc apply, rfm quartiles, yoy, range search invariants") {
-    import graft.ops.{Incremental, Relational, Similarity}
+  test("batch-8: cdc apply, rfm quartiles, yoy") {
+    import graft.ops.{Incremental, Relational}
     // CDC apply: empty feed → empty snapshot
     assert(Incremental.cdcApply(emptyTrades).count() === 0)
     // every surviving key's LAST change must be an upsert, and every
@@ -333,11 +310,6 @@ class EdgeCasesSpec extends SparkSuite {
     assert(yoy.filter(col("y") === firstYear && col("yoy_pct").isNotNull)
       .count() === 0)
     yoy.unpersist()
-    // range search ⊇ the top-k hits that clear the same threshold
-    val topk = Similarity.cosineTopK(spark, sf, nQueries = 5, k = 5)
-      .filter(col("cos_sim") >= 0.2).select("q_id", "vec_id")
-    val range = Similarity.rangeSearch(spark, sf).select("q_id", "vec_id")
-    assert(topk.join(range, Seq("q_id", "vec_id"), "left_anti").count() === 0)
   }
 
   test("batch-9: containment, lsh recall, feature hash") {
@@ -465,7 +437,7 @@ class EdgeCasesSpec extends SparkSuite {
       .count() === 0)
   }
 
-  test("batch-20: co-purchase lift, k-means purity bounds") {
+  test("batch-20: co-purchase lift") {
     import graft.ops.Relational
     val cp = Relational.copurchase(spark, sf, minSupport = 3L).cache()
     assert(cp.filter(col("part_a") >= col("part_b")).count() === 0)
@@ -485,13 +457,6 @@ class EdgeCasesSpec extends SparkSuite {
     assert(crafted.length === 1)
     assert(crafted.head.getAs[Long]("n_both") === 5L &&
       crafted.head.getAs[Double]("lift") === 2.0)
-    // purity: bounded, majority never exceeds the cell, masses conserve
-    val pu = Similarity.kmeansPurity(spark, sf).cache()
-    assert(pu.filter(col("purity") <= 0 || col("purity") > 1).count() === 0)
-    assert(pu.filter(col("n_majority") > col("n_points")).count() === 0)
-    assert(pu.agg(sum(col("n_points"))).head.getLong(0) ===
-      graft.Tables.load(spark, sf, "embeddings").count())
-    pu.unpersist()
   }
 
   test("batch-19: convert latency order, LTV monotone, realized vol") {
@@ -563,16 +528,8 @@ class EdgeCasesSpec extends SparkSuite {
     assert(TradeOps.robustScale(emptyTrades).count() === 0)
   }
 
-  test("batch-17: RRF bounds, embargo partition, TV drift range") {
+  test("batch-17: embargo partition, TV drift range") {
     val docs = graft.Tables.load(spark, sf, "documents")
-    // RRF: scores bounded by the two-list maximum, ranks dense per query
-    val h = Similarity.hybridRrf(spark, sf).cache()
-    assert(h.filter(col("rrf") > 2.0d / 61.0d + 1e-9).count() === 0)
-    assert(h.filter(col("rrf") <= 0).count() === 0)
-    assert(h.groupBy("q_id").agg(max(col("rnk")).as("mx"),
-        count(lit(1)).as("n"))
-      .filter(col("mx") =!= col("n")).count() === 0)
-    h.unpersist()
     // purged embargo: roles partition each fold's span; the embargo band
     // really holds rows at this sf (the leak zone is non-empty), and
     // train/test never touch it
@@ -592,7 +549,7 @@ class EdgeCasesSpec extends SparkSuite {
       one.head.getAs[Double]("tv_drift") === 0.0)
   }
 
-  test("batch-16: cross-dedup vs full pair list, MIPS ranking") {
+  test("batch-16: cross-dedup vs full pair list") {
     val docs = graft.Tables.load(spark, sf, "documents")
     val cd = Dedup.crossDedup(docs).cache()
     // output covers exactly the new-batch slice, one row each
@@ -614,17 +571,6 @@ class EdgeCasesSpec extends SparkSuite {
     assert(flagged.exceptAll(witnesses).count() === 0)
     assert(witnesses.exceptAll(flagged).count() === 0)
     cd.unpersist()
-    // MIPS: ranks are dense 1..k per query and scores non-increasing
-    val m = Similarity.mipsTopK(spark, sf).cache()
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("q_id")
-      .orderBy(col("rnk"))
-    assert(m.withColumn("prev", lag(col("inner_product"), 1).over(w))
-      .filter(col("prev").isNotNull && col("prev") < col("inner_product"))
-      .count() === 0)
-    assert(m.groupBy("q_id").agg(max(col("rnk")).as("mx"),
-        count(lit(1)).as("n"))
-      .filter(col("mx") =!= col("n")).count() === 0)
-    m.unpersist()
   }
 
   test("batch-15: quantile rank ≡ percent_rank, chi2 zero-drift, fingerprint") {

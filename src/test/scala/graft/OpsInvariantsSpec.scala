@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{AsOfJoin, Relational, Resample, Similarity, TradeOps}
+import graft.ops.{AsOfJoin, Relational, Resample, TradeOps}
 
 /** Property-style invariants from SURVEY.md §5.4 over the sf0.001 data. */
 class OpsInvariantsSpec extends SparkSuite {
@@ -46,24 +46,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(broken === 0)
     // grid is dense per symbol and has no nulls (first bucket is observed)
     assert(filled.filter(col("price_filled").isNull).count() === 0)
-  }
-
-  test("LSH ANN results are a subset of candidates with sane cosine values") {
-    val ann = Similarity.annLsh(spark, sf)
-    assert(ann.filter(col("cos_sim") > 1.000001 || col("cos_sim") < -1.000001).count() === 0)
-    // each query returns at most k=3 rows
-    val counts = ann.groupBy("q_id").count()
-    assert(counts.filter(col("count") > 3).count() === 0)
-  }
-
-  test("exact top-1 neighbor cosine >= LSH top-1 cosine per query") {
-    val exact = Similarity.cosineTopK(spark, sf).filter(col("rnk") === 1)
-      .select(col("q_id"), col("cos_sim").as("exact_cos"))
-    val ann = Similarity.annLsh(spark, sf).filter(col("rnk") === 1)
-      .select(col("q_id"), col("cos_sim").as("ann_cos"))
-    val bad = exact.join(ann, "q_id")
-      .filter(col("ann_cos") > col("exact_cos") + lit(1e-9)).count()
-    assert(bad === 0)
   }
 
   test("partitioned round-trip prunes to the selected partition dirs") {
@@ -260,29 +242,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(!p11.contains("CartesianProduct"), p11.take(2000))
   }
 
-  test("trained IVF keeps recall@5 >= 0.6 vs exact cosine top-k") {
-    val exact = Similarity.cosineTopK(spark, sf)
-      .select("q_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Similarity.annIvf(spark, sf)
-      .select("q_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(exact.nonEmpty)
-    val recall = (exact & ivf).size.toDouble / exact.size
-    assert(recall >= 0.6, s"IVF recall@5 degraded to $recall")
-  }
-
-  test("IVF ANN: <= k rows per query, top-1 never beats exact top-1") {
-    val ivf = Similarity.annIvf(spark, sf).cache()
-    assert(ivf.filter(col("cos_sim") > 1.000001 || col("cos_sim") < -1.000001).count() === 0)
-    assert(ivf.groupBy("q_id").count().filter(col("count") > 5).count() === 0)
-    val exact = Similarity.cosineTopK(spark, sf).filter(col("rnk") === 1)
-      .select(col("q_id"), col("cos_sim").as("exact_cos"))
-    val top1 = ivf.filter(col("rnk") === 1)
-      .select(col("q_id"), col("cos_sim").as("ivf_cos"))
-    val bad = exact.join(top1, "q_id")
-      .filter(col("ivf_cos") > col("exact_cos") + lit(1e-9)).count()
-    assert(bad === 0)
-  }
-
   test("connectedComponents matches union-find on seeded random graphs") {
     import spark.implicits._
     // reference union-find; root kept as the min id at every union, so
@@ -375,20 +334,6 @@ class OpsInvariantsSpec extends SparkSuite {
       Seq("canonical_doc", "best_doc"))
     assert(matched.count() === best.count())
     assert(matched.filter(col("quality") =!= col("best_quality")).count() === 0)
-  }
-
-  test("ivf-pq: agrees with full PQ scan on shared pairs; pruning only loses") {
-    val full = Similarity.pqAdc(spark, sf)
-      .select(col("q_id"), col("vec_id"), col("adc").as("adc_full"))
-    val pruned = Similarity.ivfPqAdc(spark, sf)
-    // identical codes + LUT ⇒ identical ADC wherever both scans meet
-    assert(pruned.join(full, Seq("q_id", "vec_id"))
-      .filter(col("adc") =!= col("adc_full")).count() === 0)
-    // cell pruning can only DROP candidates, so its best distance per
-    // query is never better than the full scan's
-    val bestFull = full.groupBy("q_id").agg(min(col("adc_full")).as("bf"))
-    assert(pruned.filter(col("rnk") === 1).join(bestFull, "q_id")
-      .filter(col("adc") < col("bf") - lit(1e-12)).count() === 0)
   }
 
   test("ewma: constant series is identity; value bounded by window extremes") {
@@ -1371,41 +1316,6 @@ class OpsInvariantsSpec extends SparkSuite {
     }
   }
 
-  test("label outliers: k rows per label, each vector's own label, valid cosine") {
-    val out = Similarity.labelOutliers(spark, sf).cache()
-    val perLabel = out.groupBy("label").count()
-    assert(perLabel.filter(col("count") =!= 3).count() === 0)
-    assert(out.filter(col("cos_centroid") > 1.000001 ||
-      col("cos_centroid") < -1.000001).count() === 0)
-    // every surfaced vec really carries the label it is scored against
-    val emb = Tables.load(spark, sf, "embeddings")
-      .select(col("vec_id"), col("label").as("true_label"))
-    assert(out.join(emb, "vec_id")
-      .filter(col("label") =!= col("true_label")).count() === 0)
-    out.unpersist()
-  }
-
-  test("multiprobe LSH recall dominates single-probe on the same index") {
-    val single = Similarity.lshAnnRecall(spark, sf).head
-    val multi = Similarity.multiprobeRecall(spark, sf).head
-    assert(multi.getLong(0) === single.getLong(0)) // same exact baseline
-    // probing the Hamming-1 ring can only ADD candidates
-    assert(multi.getLong(1) >= single.getLong(1))
-  }
-
-  test("centroid shift: halves partition each label, cosine valid") {
-    val out = Similarity.centroidShift(spark, sf).cache()
-    assert(out.filter(col("centroid_cos") > 1.000001 ||
-      col("centroid_cos") < -1.000001).count() === 0)
-    val emb = Tables.load(spark, sf, "embeddings")
-    val perLabel = emb.groupBy("label").count()
-    // for labels with both halves, the half sizes must sum to the label total
-    val broken = out.join(perLabel, "label")
-      .filter(col("n_even") + col("n_odd") =!= col("count")).count()
-    assert(broken === 0)
-    out.unpersist()
-  }
-
   test("modularity is in the Newman bound and dup-by-source conserves edges") {
     val docs = Tables.load(spark, sf, "documents")
     val q = graft.ops.Dedup.modularity(docs).head
@@ -1472,22 +1382,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(pruned.toSeq === full.toSeq)
   }
 
-  test("k-center seeds: distinct, seeded at min vec_id, non-increasing radius") {
-    val seeds = Similarity.kcenterSeeds(spark, sf).collect().sortBy(_.getInt(0))
-    assert(seeds.length === 8)
-    assert(seeds.map(_.getLong(1)).distinct.length === seeds.length)
-    val minId = Tables.load(spark, sf, "embeddings")
-      .agg(min(col("vec_id"))).head.getLong(0)
-    assert(seeds.head.getLong(1) === minId)
-    assert(seeds.head.isNullAt(2))
-    // greedy farthest-point: each new seed's distance to the selected
-    // set can only shrink as the set grows (the covering-radius chain)
-    val dists = seeds.tail.map(_.getDouble(2))
-    assert(dists.zip(dists.tail).forall { case (a, b) => b <= a + 1e-9 })
-    // every distance is a valid cosine distance
-    assert(dists.forall(d => d >= -1e-9 && d <= 2.0 + 1e-9))
-  }
-
   test("asof tolerance: subset of plain asof, staleness bounded, null iff rejected") {
     import spark.implicits._
     val t = Tables.trades(spark, sf)
@@ -1514,22 +1408,6 @@ class OpsInvariantsSpec extends SparkSuite {
       "tolerance accepts only what plain asof matched")
     assert(tol.filter(col("tol_price").isNotNull).count() <=
       plain.filter(col("click_price").isNotNull).count())
-  }
-
-  test("ivf recall curve: 4 cutoffs, n_exact = q*k, recall valid") {
-    val rows = graft.ops.Similarity.ivfRecallCurve(spark, sf)
-      .collect().sortBy(_.getInt(0))
-    assert(rows.map(_.getInt(0)).toSeq === Seq(1, 5, 10, 20))
-    rows.foreach { r =>
-      assert(r.getLong(1) === 10L * r.getInt(0)) // nQueries * k exact rows
-      assert(r.getLong(2) >= 0L && r.getLong(2) <= r.getLong(1))
-      assert(r.getDouble(3) >= 0.0 && r.getDouble(3) <= 1.0)
-    }
-    // the k=5 point of the curve equals the standalone ivf recall row
-    val single = graft.ops.Similarity.ivfRecall(spark, sf).head
-    val at5 = rows.find(_.getInt(0) == 5).get
-    assert(at5.getLong(2) === single.getLong(1),
-      "curve k=5 must equal the single-point ivf recall")
   }
 
   test("langid confusion conserves docs and matches langId accuracy") {
@@ -1572,17 +1450,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(atDefault === graft.ops.Dedup.embeddingDup(spark, sf).count())
   }
 
-  test("int8 recall: valid fraction, and exact search recalls itself") {
-    val r = graft.ops.Similarity.int8Recall(spark, sf).head
-    assert(r.getLong(0) === 50L) // 10 queries x k=5 exact rows
-    assert(r.getLong(1) >= 0L && r.getLong(1) <= r.getLong(0))
-    val frac = r.getDouble(2)
-    assert(frac >= 0.0 && frac <= 1.0)
-    // int8 over 64 dims rarely destroys ranking wholesale: demand a
-    // non-degenerate index (recall above a loose floor)
-    assert(frac >= 0.5, s"int8 recall collapsed: $frac")
-  }
-
   test("ichimoku: emits exactly count-103 rows/symbol, lines inside price range") {
     val rows = TradeOps.ichimoku(trades)
     val perSym = trades.groupBy("symbol").count().collect()
@@ -1606,22 +1473,6 @@ class OpsInvariantsSpec extends SparkSuite {
     }
   }
 
-  test("dim profile: 64 rows, full counts, moments consistent with range") {
-    val emb = Tables.load(spark, sf, "embeddings")
-    val rows = graft.ops.Similarity.dimProfile(spark, sf).collect()
-    assert(rows.length === 64)
-    val n = emb.count()
-    rows.foreach { r =>
-      assert(r.getLong(1) === n)
-      val (mn, mx) = (r.getLong(4), r.getLong(5))
-      assert(mn <= mx)
-      val mean = r.getDouble(6)
-      assert(mean * 1e6 >= mn - 1 && mean * 1e6 <= mx + 1)
-      assert(r.getDouble(7) >= -1e-9, "variance must be non-negative")
-      assert(r.getBoolean(8) === (mn == mx))
-    }
-  }
-
   test("edit distance: bounded by prefix, identical pair scores zero, " +
     "ppm consistent") {
     val docs = Tables.load(spark, sf, "documents")
@@ -1634,20 +1485,6 @@ class OpsInvariantsSpec extends SparkSuite {
     // est 1.0 pairs share the full signature; their prefixes are NOT
     // guaranteed identical, but a zero distance must imply ppm zero
     rows.filter(_.getLong(3) == 0L).foreach(r => assert(r.getLong(4) === 0L))
-  }
-
-  test("cluster radius: mean <= max, consistent with sums, all cells") {
-    val rows = Similarity.clusterRadius(spark, sf).collect()
-    assert(rows.nonEmpty)
-    val n = Tables.load(spark, sf, "embeddings").count()
-    assert(rows.map(_.getLong(1)).sum === n)
-    rows.foreach { r =>
-      val mean = r.getDouble(4)
-      assert(mean >= 0.0)
-      assert(mean * 1e6 <= r.getLong(3) + 1, "mean cannot exceed max")
-      assert(math.abs(mean - r.getLong(2).toDouble / r.getLong(1) / 1e6)
-        < 1e-9)
-    }
   }
 
   test("runs test: runs bounded by ticks, expectation formula exact") {
@@ -1663,16 +1500,6 @@ class OpsInvariantsSpec extends SparkSuite {
     }
   }
 
-  test("ood topk: k ranked rows, distances non-negative non-increasing, " +
-    "and every flagged vector is farther than an unflagged probe") {
-    val rows = Similarity.oodTopK(spark, sf).collect()
-    assert(rows.length === 16)
-    val byRank = rows.sortBy(_.getInt(2)).map(_.getDouble(1))
-    assert(byRank.forall(_ >= 0.0))
-    assert(byRank.zip(byRank.tail).forall { case (a, b) => a >= b },
-      "ood distance must be non-increasing in rank")
-  }
-
   test("partition evolution: unified read equals the straight filter") {
     val got = TradeOps.partitionEvolution(spark, trades)
       .agg(count(lit(1)), sum(col("event_id"))).head
@@ -1683,22 +1510,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(got.getLong(0) === want.getLong(0))
     assert(got.getLong(1) === want.getLong(1))
     assert(got.getLong(0) > 0L)
-  }
-
-  test("pca power: unit-norm loadings, positive eigenvalue, " +
-    "dominant over per-dim variance") {
-    val rows = Similarity.pcaPower(spark, sf).collect()
-    assert(rows.length === 64)
-    val norm2 = rows.map(r => r.getDouble(1) * r.getDouble(1)).sum
-    assert(math.abs(norm2 - 1.0) < 1e-3, s"loadings not unit norm: $norm2")
-    val lambda = rows.head.getDouble(2)
-    assert(lambda > 0.0)
-    // Rayleigh quotient of the dominant direction must be at least the
-    // largest single-dim second moment (PC1 beats any axis)
-    val maxDimVar = Similarity.dimProfile(spark, sf).collect()
-      .map(r => r.getLong(3).toDouble / r.getLong(1) / 1e12).max
-    assert(lambda >= maxDimVar * 0.9,
-      s"PC1 eigenvalue $lambda below axis moment $maxDimVar")
   }
 
   test("length outliers: counts bounded by Chebyshev, ppm consistent") {
@@ -1737,22 +1548,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(low * 2 >= total, s"error mass not concentrated: $low/$total")
   }
 
-  test("diversity sample: quotas proportional, within budget, ranks valid") {
-    val rows = graft.ops.Similarity.diversitySample(spark, sf).collect()
-    assert(rows.nonEmpty && rows.length <= 64)
-    val n = Tables.load(spark, sf, "embeddings").count()
-    rows.groupBy(_.getInt(0)).foreach { case (_, g) =>
-      val nc = g.head.getLong(3)
-      val quota = 64L * nc / n
-      assert(g.length.toLong === quota,
-        s"cell emits exactly its floor quota ($quota)")
-      assert(g.map(_.getInt(2)).max <= quota)
-    }
-    // selection is a set: no duplicate vec_ids across cells
-    val ids = rows.map(_.getLong(1))
-    assert(ids.distinct.length === ids.length)
-  }
-
   test("vwma: bounded by window price extremes, full-window emission") {
     val a = TradeOps.vwma(trades)
     assert(a.count() > 0)
@@ -1763,62 +1558,6 @@ class OpsInvariantsSpec extends SparkSuite {
       val (lo, hi) = bounds(r.getString(1))
       assert(r.getDouble(3) >= lo - 0.01 && r.getDouble(3) <= hi + 0.01)
     }
-  }
-
-  test("knn graph: <=k ranked edges per node, cos in [-1,1], wide coverage") {
-    val rows = Similarity.knnGraph(spark, sf).collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      assert(r.getDouble(2) >= -1.000001 && r.getDouble(2) <= 1.000001)
-    }
-    val n = Tables.load(spark, sf, "embeddings").count()
-    rows.groupBy(_.getLong(0)).values.foreach { g =>
-      val rks = g.map(_.getInt(3)).sorted
-      assert(rks.length <= 3)
-      assert(rks === (1 to rks.length).toArray, "ranks must be 1..m")
-    }
-    // 8-bit buckets over this corpus leave few singleton buckets:
-    // the graph must cover most nodes
-    val covered = rows.map(_.getLong(0)).distinct.length
-    assert(covered >= (n * 8) / 10, s"only $covered/$n nodes have edges")
-  }
-
-  test("knn graph recall: valid fraction, budget-derived modulus") {
-    val r = Similarity.knnGraphRecall(spark, sf).head
-    val n = Tables.load(spark, sf, "embeddings").count()
-    assert(r.getLong(3) === math.max((n + 49) / 50, 1L))
-    assert(r.getLong(1) >= 0L && r.getLong(1) <= r.getLong(0))
-    val frac = r.getDouble(2)
-    assert(frac >= 0.0 && frac <= 1.0)
-    assert(frac >= 0.2, s"knn graph recall degenerate: $frac")
-  }
-
-  test("hamming topk: distances in [0,64], k rows per query, sorted ties by id") {
-    val rows = Similarity.hammingTopK(spark, sf).collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      assert(r.getLong(2) >= 0L && r.getLong(2) <= 64L,
-        s"hamming out of range: ${r.getLong(2)}")
-    }
-    val perQ = rows.groupBy(_.getLong(0))
-    perQ.values.foreach { g =>
-      assert(g.length === 5)
-      // rank order must be non-decreasing in distance
-      val byRank = g.sortBy(_.getInt(3)).map(_.getLong(2))
-      assert(byRank.zip(byRank.tail).forall { case (a, b) => a <= b })
-    }
-  }
-
-  test("hamming recall: valid fraction over the exact top-k") {
-    val r = Similarity.hammingRecall(spark, sf).head
-    assert(r.getLong(0) === 50L)
-    assert(r.getLong(1) >= 0L && r.getLong(1) <= r.getLong(0))
-    val frac = r.getDouble(2)
-    assert(frac >= 0.0 && frac <= 1.0)
-    // 1 bit/dim is deliberately the weakest tier (measured 0.16 at
-    // sf0.001 — the reason the twin exists); guard only against
-    // degeneracy: random 5-of-n recall at n~200 is ~0.026, demand 3x
-    assert(frac >= 0.08, s"sign-sketch recall degenerate: $frac")
   }
 
   test("aroon: both channels in [0,100]; window high this bar => up=100") {
@@ -1873,17 +1612,6 @@ class OpsInvariantsSpec extends SparkSuite {
       assert(s <= 1000000L && s > 1000000L - 4L,
         s"class shares must partition the text: $s")
     }
-  }
-
-  test("norm hist: buckets clamped to [0,30], counts cover all vectors") {
-    val rows = Similarity.normHist(spark, sf).collect()
-    assert(rows.nonEmpty)
-    val n = Tables.load(spark, sf, "embeddings").count()
-    assert(rows.map(_.getLong(1)).sum === n)
-    rows.foreach(r => assert(r.getLong(0) >= 0L && r.getLong(0) <= 30L))
-    // bucket ids must be unique (it's a histogram, not a multiset)
-    val ids = rows.map(_.getLong(0))
-    assert(ids.distinct.length === ids.length)
   }
 
   test("var/es: ES <= VaR (tail mean below its boundary), k = ceil(5% n)") {
@@ -2040,16 +1768,6 @@ class OpsInvariantsSpec extends SparkSuite {
     }
   }
 
-  test("prf expand: k rows, seeds flagged, expanded scores ordered") {
-    val rows = Similarity.prfExpand(spark, sf)
-      .orderBy(col("cos_expanded").desc, col("vec_id")).collect()
-    assert(rows.length === 10)
-    assert(rows.count(_.getBoolean(2)) >= 1,
-      "the centroid search should re-find at least one seed")
-    val scores = rows.map(_.getDouble(1))
-    scores.sliding(2).foreach { case Array(a, b) => assert(b <= a) }
-  }
-
   test("bucket skew: per-band doc totals cover the corpus x1 each band") {
     val docs = Tables.load(spark, sf, "documents")
     val rows = graft.ops.Dedup.bucketSkew(docs).collect()
@@ -2127,19 +1845,6 @@ class OpsInvariantsSpec extends SparkSuite {
     }
   }
 
-  test("centroid auc: counts partition the corpus, exact rank-sum algebra, " +
-    "auc in [0, 1e6]") {
-    val r = Similarity.centroidAuc(spark, sf).head
-    val n = Tables.load(spark, sf, "embeddings").count()
-    val (np, nn, rs, auc) = (r.getLong(0), r.getLong(1), r.getLong(2),
-      r.getLong(3))
-    assert(np + nn === n)
-    assert(auc === ((rs - np * (np + 1) / 2) * 1000000L) / (np * nn))
-    assert(auc >= 0L && auc <= 1000000L)
-    // rank-sum bounds: positives at the bottom / top of the order
-    assert(rs >= np * (np + 1) / 2 && rs <= np * (2 * n - np + 1) / 2)
-  }
-
   test("amihud: tick conservation (one gap per tick after the first), " +
     "ppb non-negative") {
     val trades = Tables.trades(spark, sf)
@@ -2205,7 +1910,7 @@ class OpsInvariantsSpec extends SparkSuite {
     "retention enforced after the next merge's GC") {
     import spark.implicits._
     import graft.sinks.Upsert
-    val root = java.nio.file.Files.createTempDirectory("graft-rb").toString
+    val root = tmpDir("graft-rb")
     def df(v: Long) = Seq(("A", v)).toDF("k", "v")
     Upsert.merge(df(1L), 0L, root, Seq("k")) // v0: A->1
     Upsert.merge(df(2L), 1L, root, Seq("k")) // v1: A->2
@@ -2251,30 +1956,6 @@ class OpsInvariantsSpec extends SparkSuite {
         s"per-symbol shares must telescope to ~1e6: $ppm")
     }
     rows.foreach(r => assert(r.getDouble(3) > 0.0))
-  }
-
-  test("ivf occupancy: decades partition the corpus, max_occ in decade") {
-    val rows = Similarity.ivfOccupancy(spark, sf).collect()
-    assert(rows.nonEmpty)
-    val n = Tables.load(spark, sf, "embeddings").count()
-    assert(rows.map(_.getLong(2)).sum === n)
-    rows.foreach { r =>
-      assert(r.getLong(1) <= r.getLong(2))
-      assert(r.getLong(3).toString.length - 1L === r.getLong(0))
-    }
-  }
-
-  test("pq occupancy: decades partition the corpus, max_occ in decade") {
-    val rows = Similarity.pqOccupancy(spark, sf).collect()
-    assert(rows.nonEmpty)
-    val n = Tables.load(spark, sf, "embeddings").count()
-    assert(rows.map(_.getLong(2)).sum === n,
-      "every vector's code lands in exactly one occupancy decade")
-    rows.foreach { r =>
-      assert(r.getLong(1) <= r.getLong(2), "codes <= vectors per decade")
-      assert(r.getLong(3).toString.length - 1L === r.getLong(0),
-        "max occupancy must sit inside its decade")
-    }
   }
 
   test("ship latency: lines conserved, week buckets consistent") {
@@ -2418,45 +2099,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(banded === exact,
       s"banded two-pass rank diverged: only-exact=${exact -- banded} " +
         s"only-banded=${banded -- exact}")
-  }
-
-  // Integer-exactness argument (r12 red-row fix): every distributed
-  // quantity in pcaDeflate is a BIGINT product/sum/`div` on the
-  // once-quantized ppm vectors — order-free, and bit-equal across
-  // engines because Spark `div` and DuckDB `//` both truncate toward
-  // zero. The only float ops are one cast/sqrt/divide/floor per
-  // normalization, each a single correctly-rounded IEEE op on
-  // bit-equal integer inputs — no chained float products remain, so
-  // the r12 floor-boundary flake class is structurally gone.
-  test("pca deflate: PC2 unit-norm, orthogonal to PC1, lambda2 <= lambda1") {
-    val r2 = Similarity.pcaDeflate(spark, sf).collect()
-    assert(r2.length === 64)
-    val load2 = r2.sortBy(_.getInt(0)).map(_.getDouble(1))
-    val norm2 = math.sqrt(load2.map(x => x * x).sum)
-    assert(math.abs(norm2 - 1.0) < 1e-3, s"PC2 norm $norm2")
-    val ortho = r2.head.getDouble(3)
-    assert(math.abs(ortho) < 1e-3, s"PC1·PC2 = $ortho must vanish")
-    val l2 = r2.head.getDouble(2)
-    val l1 = Similarity.pcaPower(spark, sf).head.getDouble(2)
-    assert(l2 <= l1 + 1e-9, s"deflated eigenvalue $l2 must not exceed $l1")
-    assert(l2 > 0.0)
-  }
-
-  test("mmr: ranks 1..k distinct picks from the pool, scores non-increasing " +
-    "after round 1, rank-1 is the top candidate") {
-    val rows = Similarity.mmrSelect(spark, sf).orderBy("rank").collect()
-    assert(rows.map(_.getLong(0)).toSeq === (1L to 5L))
-    val ids = rows.map(_.getLong(1))
-    assert(ids.distinct.length === ids.length, "picks must be distinct")
-    // rank 1 is the plain nearest neighbor to the query (scaled by λ)
-    val top = Similarity.cosineTopK(spark, sf, nQueries = 1, k = 1)
-      .head.getLong(1)
-    assert(ids.head === top)
-    // marginal scores cannot increase as the selected set grows
-    val scores = rows.map(_.getDouble(2))
-    scores.sliding(2).foreach { case Array(a, b) =>
-      assert(b <= a + 1e-9, s"MMR marginal score rose: $a -> $b")
-    }
   }
 
   test("Num.decD: value-parity below 2^53 micro, null-safe, loud past " +
@@ -2807,23 +2449,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(f.length === 1 && f(0).isNullAt(2))
   }
 
-  test("silhouette: scores in [0,1], partition covers the corpus, " +
-      "davies-bouldin positive on the same cells") {
-    val sil = Similarity.silhouette(spark, sf).cache()
-    val emb = Tables.load(spark, sf, "embeddings")
-    assert(sil.agg(sum(col("n_points"))).head.getLong(0) === emb.count())
-    assert(sil.filter(col("mean_silhouette") < 0.0 ||
-      col("mean_silhouette") > 1.0).count() === 0)
-    assert(sil.filter(col("sil_sum_ppm") > col("n_points") * 1000000L)
-      .count() === 0)
-    val db = Similarity.daviesBouldin(spark, sf).cache()
-    // same live cells as the silhouette partition, every ratio positive
-    assert(db.select("cell").collect().map(_.getInt(0)).sorted
-      === sil.select("cell").collect().map(_.getInt(0)).sorted)
-    assert(db.filter(col("db_ratio") <= 0.0).count() === 0)
-    sil.unpersist(); db.unpersist()
-  }
-
   test("keltner: bands bracket the mid symmetrically; rank drift is " +
       "exact ppm with monotone tapes at the extremes") {
     import spark.implicits._
@@ -2941,16 +2566,7 @@ class OpsInvariantsSpec extends SparkSuite {
     nr.unpersist()
   }
 
-  test("pq distortion: one row per subspace covering the corpus, " +
-      "lifespan histogram partitions the user base") {
-    val pq = Similarity.pqDistortion(spark, sf).cache()
-    val nEmb = Tables.load(spark, sf, "embeddings").count()
-    assert(pq.count() === 8) // m subspaces
-    assert(pq.filter(col("n_vecs") =!= nEmb).count() === 0,
-      "every subspace scores every vector")
-    assert(pq.filter(col("mean_sq_err") < 0.0).count() === 0)
-    assert(pq.filter(col("max_err_nano") < 0L).count() === 0)
-    pq.unpersist()
+  test("lifespan histogram partitions the user base") {
     val events = Tables.events(spark, sf)
     val ls = graft.ops.EventAnalytics.lifespanHist(events).cache()
     assert(ls.agg(sum(col("n_users"))).head.getLong(0)
@@ -3122,16 +2738,7 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(r.getLong(2) === 0L && r.getDouble(3) === 0.0d)
   }
 
-  test("hubness histogram partitions the corpus and weights to the " +
-      "edge count; pareto curve is exact, contiguous, and monotone") {
-    val hub = Similarity.hubness(spark, sf).cache()
-    val nEmb = Tables.load(spark, sf, "embeddings").count()
-    val edges = Similarity.knnGraph(spark, sf).count()
-    assert(hub.agg(sum(col("n_vectors"))).head.getLong(0) === nEmb)
-    assert(hub.agg(sum(col("in_deg") * col("n_vectors"))).head.getLong(0)
-      === edges)
-    assert(hub.filter(col("in_deg") < 0L).count() === 0)
-    hub.unpersist()
+  test("pareto curve is exact, contiguous, and monotone") {
     val events = Tables.events(spark, sf)
     val ps = graft.ops.EventAnalytics.paretoShare(events).cache()
     val rows = ps.orderBy("decile").collect()
@@ -3146,66 +2753,6 @@ class OpsInvariantsSpec extends SparkSuite {
     val means = rows.map(r => r.getLong(2).toDouble / r.getLong(1).toDouble)
     assert(means.sliding(2).forall(p => p.length < 2 || p(0) >= p(1)))
     ps.unpersist()
-  }
-
-  test("kmeans cell labels are the seeds' RAW vec_ids on an id-sparse " +
-      "corpus (the r15 sf10-subset regression), not their positions") {
-    import spark.implicits._
-    // embeddings with vec_id = 10*i — the shape that split the engines:
-    // seeds (vec_id < k) exist only at multiples of 10, so raw-id and
-    // positional labels diverge
-    val dir = java.nio.file.Files.createTempDirectory("sparse_emb").toString
-    val rnd = new scala.util.Random(7)
-    (0 until 200).map { i =>
-      (i.toLong * 10,
-        Array.fill(64)((rnd.nextInt(2001) - 1000) / 1000.0f), i % 3)
-    }.toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val km = Similarity.kmeansCentroids(spark, dir, k = 30, iters = 2)
-      .collect()
-    val cells = km.map(_.getInt(0)).toSet
-    assert(cells.nonEmpty &&
-      cells.subsetOf((0 until 30 by 10).map(identity).toSet),
-      s"cells must be the raw seed vec_ids {0,10,20}, got $cells")
-    // the digest must also be internally consistent: every corpus
-    // vector lands in a surviving cell
-    assert(km.map(_.getLong(1)).sum === 200L)
-  }
-
-  test("nn margin: recompute from the k=2 graph matches exactly; " +
-      "margins are non-negative and bracketed by their decade") {
-    val m = Similarity.nnMargin(spark, sf).cache()
-    assert(m.filter(col("min_ppm") < 0L).count() === 0,
-      "rank-1 cosine is never below rank-2")
-    // every bucket's min/max ppm sit inside the decade they key
-    assert(m.filter(col("min_ppm") < col("margin_decade") * 100000L ||
-      col("max_ppm") >= (col("margin_decade") + 1L) * 100000L
-    ).count() === 0)
-    // total queries = full 2-NN coverage count from the graph itself
-    val g = Similarity.knnGraph(spark, sf, k = 2).cache()
-    val full = g.groupBy("q_id").count().filter(col("count") === 2L).count()
-    assert(m.agg(sum(col("n_queries"))).head.getLong(0) === full)
-    // driver recompute of the whole histogram from the raw edges
-    val margins = g.collect()
-      .map(r => (r.getLong(0), r.getInt(3), r.getDouble(2)))
-      .groupBy(_._1).values
-      .filter(_.length == 2)
-      .map { es =>
-        val c1 = es.find(_._2 == 1).get._3
-        val c2 = es.find(_._2 == 2).get._3
-        // Spark's round() is HALF_UP on the exact decimal value of the
-        // double product — mirror it exactly, not via floor(x+0.5)
-        BigDecimal((c1 - c2) * 1000000.0)
-          .setScale(0, scala.math.BigDecimal.RoundingMode.HALF_UP).toLong
-      }.toSeq
-    val expect = margins.groupBy(_ / 100000L)
-      .map { case (d, v) => (d, v.length.toLong, v.min, v.max) }
-      .toSet
-    val got = m.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    assert(got === expect)
-    g.unpersist(); m.unpersist()
   }
 
   test("sortino: exact recompute from daily closes; no-down-day tape " +
@@ -3420,29 +2967,10 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(got === Map(3L -> 1L, 1L -> 1L, 5L -> 1L))
   }
 
-  test("int8 order flips: query counts match the nn-margin histogram " +
-      "decade for decade; flips nest in counts") {
-    val flips = Similarity.int8OrderFlips(spark, sf).cache()
-    assert(flips.filter(col("n_flips") > col("n_queries") ||
-      col("n_flips") < 0L).count() === 0)
-    assert(flips.filter(col("flip_rate") < 0.0d ||
-      col("flip_rate") > 1.0d).count() === 0)
-    // same k=2 full-coverage query population as nnMargin, same
-    // decade quantization -> per-decade query counts must agree
-    val margins = Similarity.nnMargin(spark, sf)
-      .select(col("margin_decade"), col("n_queries"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val got = flips.select(col("margin_decade"), col("n_queries"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === margins)
-    flips.unpersist()
-  }
-
   test("snapshot expire: expired version unreadable, current read " +
       "identical to pre-expire, generation data physically reclaimed") {
     import graft.sinks.Upsert
-    val root = java.nio.file.Files
-      .createTempDirectory("expire-spec").toString
+    val root = tmpDir("expire-spec")
     def state(parity: Int) = trades
       .filter(pmod(col("event_id"), lit(2)) === parity)
       .groupBy("symbol")
@@ -3472,8 +3000,7 @@ class OpsInvariantsSpec extends SparkSuite {
   test("compact: fragmented store collapses to one generation and one " +
       "file per bucket; rows identical; previous version still readable") {
     import graft.sinks.Upsert
-    val root = java.nio.file.Files
-      .createTempDirectory("compact-spec").toString
+    val root = tmpDir("compact-spec")
     val keyed = trades
       .withColumn("hr", date_trunc("hour", col("timestamp")))
       .groupBy("symbol", "hr")
@@ -3516,8 +3043,7 @@ class OpsInvariantsSpec extends SparkSuite {
       "(maxFilesPerBucket == 1 after every compact; rows exact at " +
       "every step)") {
     import graft.sinks.Upsert
-    val root = java.nio.file.Files
-      .createTempDirectory("lifecycle-chain-spec").toString
+    val root = tmpDir("lifecycle-chain-spec")
     val keyed = trades
       .withColumn("hr", date_trunc("hour", col("timestamp")))
       .groupBy("symbol", "hr")
@@ -3570,8 +3096,7 @@ class OpsInvariantsSpec extends SparkSuite {
       "version; other entities' history byte-identical; re-run is a " +
       "no-op; serving point read returns empty") {
     import graft.sinks.Upsert
-    val root = java.nio.file.Files
-      .createTempDirectory("purge-spec").toString
+    val root = tmpDir("purge-spec")
     val keyed = trades
       .withColumn("hr", date_trunc("hour", col("timestamp")))
       .groupBy("symbol", "hr")

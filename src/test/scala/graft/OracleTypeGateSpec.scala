@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import scala.sys.process._
 
 /** Runs `tools/check_oracle_types.py` — the gate that kills the DuckDB
@@ -26,32 +27,36 @@ class OracleTypeGateSpec extends SparkSuite {
     val (q, o) = (SparkEntry.queries.keySet, SparkEntry.oracleSql.keySet)
     assert((q -- o).isEmpty, s"queries without an oracle: ${(q -- o).toSeq.sorted}")
     assert((o -- q).isEmpty, s"oracles without a query: ${(o -- q).toSeq.sorted}")
+    // PLAN_SHAPE.json (PlanAudit's dump) keeps one row per registry query
+    val p = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File("PLAN_SHAPE.json")).fieldNames().asScala.toSet
+    assert((q -- p).isEmpty, s"queries without a PLAN_SHAPE row: ${(q -- p).toSeq.sorted}")
+    assert((p -- q).isEmpty, s"PLAN_SHAPE rows without a query: ${(p -- q).toSeq.sorted}")
   }
 
   test("oracle type gate: all registered oracles type as driver-safe") {
     assume(haveDuckdb, "python3+duckdb not available; driver gate covers this")
-    val dir = Files.createTempDirectory("oracle_gate")
+    val dir = Paths.get(tmpDir("oracle_gate"))
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }.mkString("{", ",", "}")
     Files.writeString(dir.resolve("oracle_sql.json"), json)
     val out = new StringBuilder
     val code = Process(Seq("python3", "tools/check_oracle_types.py",
-      sf, dir.resolve("oracle_sql.json").toString),
-      new java.io.File("/root/repo"))
+      sf, dir.resolve("oracle_sql.json").toString))
       .!(ProcessLogger(l => out.append(l).append('\n')))
     assert(code === 0, s"oracle type gate failed:\n$out")
   }
 
   test("oracle type gate: fails red on a deliberately-uncast probe") {
     assume(haveDuckdb, "python3+duckdb not available; driver gate covers this")
-    val dir = Files.createTempDirectory("oracle_gate_probe")
+    val dir = Paths.get(tmpDir("oracle_gate_probe"))
     // count(*) types as HUGEINT-free BIGINT in DuckDB, but sum() of a
     // BIGINT promotes to HUGEINT — the exact class the gate exists for
     Files.writeString(dir.resolve("oracle_sql.json"),
       """{"probe_uncast": "SELECT sum(l_orderkey) AS s FROM lineitem"}""")
     val code = Process(Seq("python3", "tools/check_oracle_types.py",
-      sf, dir.resolve("oracle_sql.json").toString),
-      new java.io.File("/root/repo")).!(ProcessLogger(_ => ()))
+      sf, dir.resolve("oracle_sql.json").toString))
+      .!(ProcessLogger(_ => ()))
     assert(code !== 0,
       "the gate passed an uncast sum(BIGINT) — it should flag HUGEINT")
   }

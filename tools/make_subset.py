@@ -2,7 +2,7 @@
 """Deterministic reduced-oracle corpus for the banded dedup tier
 (r14 verdict directive #5).
 
-The banded d_* / g_modularity / d_semantic_dup
+The banded d_* / g_modularity
 DuckDB oracles are >hours at the sf10 corpus (500k docs / 200k
 embeddings): oracle cost is pair-volume-linear and ScaleGen grows pairs
 linearly with the factor, so a 100x corpus is a 100x oracle. This tool
