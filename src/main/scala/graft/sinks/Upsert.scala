@@ -2,9 +2,10 @@ package graft.sinks
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Idempotent merge-by-key sink (reference K1/K2/K7: Cassandra `append`
   * into a `(symbol, timestamp)` primary key ⇒ last-writer-wins upsert —
@@ -20,19 +21,27 @@ import org.apache.spark.sql.functions._
   *    current data; untouched buckets keep pointing at old generations;
   *  - `_CURRENT` is flipped atomically to the new manifest version.
   *
-  * A merge therefore rewrites ONLY the buckets the batch touches —
-  * cost ∝ touched data, not table size, which is what keeps a
-  * continuously-upserted 100 TB table writable (the previous design
-  * rewrote the full table every micro-batch). The merge itself is fully
-  * distributed (union of touched buckets + window dedup, shuffle on the
-  * key); replaying a failed batch recomputes the same target version
-  * and overwrites the same generation dir — idempotent, matching the
+  * A merge rewrites only the buckets the batch touches, in one Spark
+  * job with one exchange: the touched buckets' stored rows and the
+  * batch are hash-partitioned once on `_bucket`, a last-writer-wins
+  * window partitioned by `(_bucket, keys…)` runs on that partitioning,
+  * and each task writes one file per bucket it holds. At streaming
+  * batch sizes (thousands of rows) a merge costs per FILE, not per
+  * byte: each bucket file is one write task plus a handful of Hadoop
+  * file operations, so the bucket count is sized to the session's
+  * shuffle width (the streaming DAG passes
+  * `spark.sql.shuffle.partitions`) rather than to table size.
+  * Replaying a failed batch recomputes the same target version and
+  * overwrites the same generation dir — idempotent, matching the
   * reference's effectively-exactly-once contract (SURVEY.md §2.8 T12).
   * A real cluster sink (Cassandra / Delta MERGE / Iceberg upsert) drops
   * into the same `foreachBatch` seam.
   */
 object Upsert {
 
+  /** Bucket count of a store whose creating merge names none (the
+    * registry's batch stores); the streaming DAG passes its shuffle
+    * width instead. */
   val defaultBuckets = 16
 
   private def pointerPath(root: String) = Paths.get(root, "_CURRENT")
@@ -84,13 +93,12 @@ object Upsert {
     * recorded schema and hands it to the parquet reader EXPLICITLY:
     * generations written before a column existed simply serve NULL for
     * it, with zero footer sniffing (`mergeSchema` reads every file
-    * footer — metadata cost ∝ files, the thing a 100 TB table cannot
-    * pay per query) and zero history rewrite (the thing evolution
-    * exists to avoid). Because the schema rides the versioned manifest,
-    * it time-travels with the data: [[readVersion]] of a pre-evolution
-    * version serves the ORIGINAL columns. Absent on manifests written
-    * before round 17 → reads fall back to footer-resolved schemas
-    * unchanged. */
+    * footer — metadata cost ∝ files, paid again on every query) and
+    * zero history rewrite (the thing evolution exists to avoid).
+    * Because the schema rides the versioned manifest, it time-travels
+    * with the data: [[readVersion]] of a pre-evolution version serves
+    * the ORIGINAL columns. Absent on manifests written before round 17
+    * → reads fall back to footer-resolved schemas unchanged. */
   private case class Manifest(nBuckets: Int, bucketBy: Seq[String],
       buckets: Map[Int, String], appliedBatch: Option[Long] = None,
       schema: Option[String] = None)
@@ -177,11 +185,9 @@ object Upsert {
     * recorded DDL (all fields forced nullable — a column added later is
     * physically absent from older files and must read as NULL), or None
     * for pre-evolution manifests (footer-resolved, the legacy path). */
-  private def manifestReadSchema(m: Manifest): Option[org.apache.spark.sql.types.StructType] =
+  private def manifestReadSchema(m: Manifest): Option[StructType] =
     m.schema.map { ddl =>
-      org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructType.fromDDL(ddl)
-          .fields.map(_.copy(nullable = true)))
+      StructType(StructType.fromDDL(ddl).fields.map(_.copy(nullable = true)))
     }
 
   private def readWithSchema(spark: SparkSession, m: Manifest,
@@ -327,7 +333,7 @@ object Upsert {
     * collected to the driver, bounded by the request size, never by
     * the table).
     *
-    * 100-TB posture: each requested key hashes to ONE bucket (the same
+    * Cost: each requested key hashes to ONE bucket (the same
     * `pmod(xxhash64(bucketBy), nBuckets)` the write path computes), so
     * the physical work is a filtered rewrite of only the affected
     * (generation, bucket) dirs across retained history — cost ∝
@@ -472,38 +478,47 @@ object Upsert {
     * large the table. */
   def readKey(spark: SparkSession, root: String,
       values: Seq[Any]): Option[DataFrame] =
-    read(spark, root).map { full =>
-      val v = currentVersion(root).get
-      val m = readManifest(root, v)
+    currentVersion(root).map(v => readManifest(root, v))
+      .filter(_.buckets.nonEmpty).map { m =>
       require(values.length == m.bucketBy.length,
         s"readKey needs one value per bucketBy column ${m.bucketBy}")
+      // column types from the manifest's recorded schema; legacy
+      // manifests without one fall back to the footer-resolved read
+      val schema = manifestReadSchema(m).getOrElse(readWithSchema(spark, m,
+        m.buckets.toSeq.map { case (b, g) => s"$root/$g/_bucket=$b" }).schema)
       // xxhash64 is type-sensitive (an Int literal for a key stored as
       // LongType hashes to a different bucket than merge computed, and
       // the lookup would silently return zero rows) — cast each literal
       // to the STORED column's type before hashing, exactly what the
       // write side hashed.
       val typed = m.bucketBy.zip(values)
-        .map { case (k, value) => lit(value).cast(full.schema(k).dataType) }
-      // same hash, same engine: evaluate xxhash64 over the literals with
-      // a one-row plan so the bucket matches what merge computed
-      val b = spark.range(1)
-        .select(pmod(xxhash64(typed: _*), lit(m.nBuckets))
-          .cast("int")).head().getInt(0)
+        .map { case (k, value) => lit(value).cast(schema(k).dataType) }
+      // same hash, same engine: the write side's expression over the
+      // literals, projected from a one-row local relation — the
+      // optimizer folds it to a constant, and collect reads it back
+      // without launching a Spark job
+      val b = spark.createDataFrame(java.util.List.of(Row.empty), StructType(Nil))
+        .select(pmod(xxhash64(typed: _*), lit(m.nBuckets)).cast("int"))
+        .collect().head.getInt(0)
       val pred = m.bucketBy.zip(typed)
         .map { case (k, l) => col(k) === l }
         .reduce(_ && _)
       m.buckets.get(b) match {
         case Some(g) =>
           readWithSchema(spark, m, Seq(s"$root/$g/_bucket=$b")).filter(pred)
-        case None => full.filter(pred).limit(0)
+        case None => spark.createDataFrame(java.util.List.of[Row](), schema)
       }
     }
 
   /** Merge `batch` into the keyed table at `root`: rows with a key
-    * already present overwrite it (new batch wins); others append.
+    * already present overwrite it (new batch wins); others append. A
+    * batch that repeats a key keeps one row for it, whether or not the
+    * key's bucket exists yet.
     * `nBuckets` and `bucketBy` apply on table creation only — later
     * merges reuse the table's recorded values, so the key→bucket
-    * mapping can never drift.
+    * mapping can never drift. A merge writes one file per touched
+    * bucket, so `nBuckets` sets a merge's file count: the streaming
+    * DAG sizes it to the session's shuffle width.
     *
     * `bucketBy` is the Cassandra partition-key analog: bucketing on a
     * key PREFIX (e.g. just `symbol` for a `(symbol, timestamp)` key)
@@ -551,7 +566,6 @@ object Upsert {
     // recorded schema — new columns append, shared names must keep
     // their type (loud), and everything is nullable because older
     // generations won't physically contain the new columns.
-    import org.apache.spark.sql.types.StructType
     val incFile = StructType(inc.schema.fields
       .filterNot(f => f.name == "_bucket" || tombstoneCol.contains(f.name))
       .map(_.copy(nullable = true)))
@@ -591,7 +605,7 @@ object Upsert {
     // is recomputed from the bucketing columns, which the rows carry.
     val existingPaths = touched.toSeq
       .flatMap(b => manifest.buckets.get(b).map(g => s"$root/$g/_bucket=$b"))
-    val winners =
+    val candidates =
       if (existingPaths.isEmpty) inc
       else {
         // stored rows read with the UNIFIED schema when the table has a
@@ -611,7 +625,6 @@ object Upsert {
         // by definition; only the incoming batch can delete
         val existing2 = tombstoneCol.fold(existing)(tc =>
           existing.withColumn(tc, lit(false)))
-        val w = Window.partitionBy(keys.map(col): _*).orderBy(col("_gen").desc)
         // allowMissingColumns (ledgered tables only): the evolution
         // contract in-plan — a batch may add columns (existing rows
         // fill NULL) or omit columns the table already has (its rows
@@ -620,18 +633,24 @@ object Upsert {
         // Cassandra unset-column analog). Legacy tables keep the
         // strict union: schema drift stays a loud error there.
         existing2.unionByName(inc, allowMissingColumns = ledger.isDefined)
-          .withColumn("_rank", row_number().over(w))
-          .filter(col("_rank") === 1)
-          .drop("_rank")
       }
+    // The merge's only exchange: hash-partition on the bucket, so each
+    // task holds whole buckets and writes one file per bucket dir. The
+    // last-writer-wins window is partitioned by (_bucket, keys…), which
+    // that partitioning already satisfies (the bucket is a function of
+    // bucketBy ⊆ keys), so it runs in the same tasks with no second
+    // shuffle. It runs on every path, table creation included.
+    val w = Window.partitionBy((col("_bucket") +: keys.map(col)): _*)
+      .orderBy(col("_gen").desc)
+    val winners = candidates
+      .repartition(touched.length, col("_bucket"))
+      .withColumn("_rank", row_number().over(w))
+      .filter(col("_rank") === 1)
+      .drop("_rank")
     // a key whose winning row is a tombstone leaves the table
     val merged = tombstoneCol.fold(winners)(tc =>
       winners.filter(!coalesce(col(tc), lit(false))).drop(tc))
-    // one shuffle on the bucket key: each write task holds exactly one
-    // bucket, so each bucket dir gets one file
-    merged
-      .repartition(math.max(touched.length, 1), col("_bucket"))
-      .write.mode("overwrite").partitionBy("_bucket")
+    merged.write.mode("overwrite").partitionBy("_bucket")
       .parquet(s"$root/gen$next")
     // With deletes, a touched bucket can come out EMPTY (its last rows
     // tombstoned): partitionBy emits no dir for it, so pointing the

@@ -52,6 +52,13 @@ object StreamingJob {
   def run(spark: SparkSession, envelopes: DataFrame, cfg: Config): Seq[StreamingQuery] = {
     // decode + derive, the shared upstream plan (`ProcessStockStream.py:100-109`)
     val flat = Decode.decodeFlatten(envelopes)
+    // Both keyed stores get one bucket per shuffle partition: a merge
+    // writes one file per touched bucket, and at these batch sizes its
+    // cost is per file, so the stores match the width the stateful
+    // operators and the merge shuffle already use. The count is pinned
+    // in each store's manifest at creation; restarts under another
+    // width keep the stored key→bucket mapping.
+    val buckets = spark.conf.get("spark.sql.shuffle.partitions").toInt
 
     // query_01 (`ProcessStockStream.py:112-129`): tumbling volume, update
     // mode re-emits revised windows; upsert keyed on (symbol, timestamp)
@@ -69,7 +76,7 @@ object StreamingJob {
       .trigger(Trigger.ProcessingTime("0 seconds"))
       .foreachBatch { (df: DataFrame, id: Long) =>
         Upsert.merge(df, id, s"${cfg.outRoot}/volume_tracking",
-          Seq("symbol", "timestamp"), bucketBy = Seq("symbol"))
+          Seq("symbol", "timestamp"), nBuckets = buckets, bucketBy = Seq("symbol"))
       }
       .queryName("volume_tracking").start()
 
@@ -81,7 +88,7 @@ object StreamingJob {
       .option("checkpointLocation", s"${cfg.checkpointRoot}/query_02")
       .foreachBatch { (df: DataFrame, id: Long) =>
         Upsert.merge(df, id, s"${cfg.outRoot}/price_tracking",
-          Seq("symbol", "timestamp"), bucketBy = Seq("symbol"))
+          Seq("symbol", "timestamp"), nBuckets = buckets, bucketBy = Seq("symbol"))
       }
       .queryName("price_tracking").start()
 

@@ -68,6 +68,40 @@ class RecoverySpec extends SparkSuite {
     assert(btcM0 === 1, "pre-restart window intact after recovery")
   }
 
+  test("DAG stores keep their bucket count across a restart at another " +
+      "shuffle width; every key stays readable through readKey") {
+    val in = tmpDir("graft-width-in")
+    val out = tmpDir("graft-width-out")
+    val ckpt = tmpDir("graft-width-ckpt")
+    val syms = (0 until 20).map(i => s"S$i")
+    def startAll() = StreamingJob.run(spark,
+      spark.readStream.text(in).select(col("value")),
+      StreamingJob.Config(out, ckpt))
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+
+    writeBatch(in, "b1.json", syms.map(s => envelope(s, t0, 10.0, 1.0, 1.0)))
+    val q1 = startAll()
+    try q1.foreach(_.processAllAvailable()) finally q1.foreach(_.stop())
+    // the second minute arrives while the job is down; the restart runs
+    // at twice the width, and its merges must keep the stored mapping
+    writeBatch(in, "b2.json", syms.map(s => envelope(s, t0 + 60000, 11.0, 2.0, 3.0)))
+    spark.conf.set("spark.sql.shuffle.partitions", (2 * width).toString)
+    try {
+      val q2 = startAll()
+      try q2.foreach(_.processAllAvailable()) finally q2.foreach(_.stop())
+    } finally spark.conf.set("spark.sql.shuffle.partitions", width.toString)
+
+    Seq("price_tracking", "volume_tracking").foreach { t =>
+      val root = s"$out/$t"
+      assert(storeBuckets(root) === width, s"$t: bucket count pinned at creation")
+      assert(Upsert.read(spark, root).get.count() === 2 * syms.size)
+      syms.foreach { s =>
+        assert(Upsert.readKey(spark, root, Seq(s)).get.count() === 2,
+          s"$t: both minutes of $s through readKey")
+      }
+    }
+  }
+
   test("predict query resumes from checkpoint and converges to the batch result") {
     import spark.implicits._
     val n = 10

@@ -25,6 +25,14 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     d
   }
 
+  /** The bucket count recorded in a keyed store's current manifest. */
+  def storeBuckets(root: String): Int = {
+    val v = graft.sinks.Upsert.currentVersion(root).get
+    val m = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, s"manifest_v$v.json")))
+    """"nb":(\d+)""".r.findFirstMatchIn(m).get.group(1).toInt
+  }
+
   override protected def afterAll(): Unit =
     try tmpDirs.foreach(Tables.deleteTree)
     finally super.afterAll()

@@ -508,6 +508,92 @@ class StreamingSpec extends SparkSuite {
     assert(viaKey === full)
   }
 
+  test("upsert merge keeps one row per repeated key, on table creation too") {
+    import spark.implicits._
+    // a redelivered row inside one batch: (S01, 1) twice
+    val batch = Seq(("S01", 1L, 10.0), ("S01", 1L, 10.0), ("S02", 1L, 20.0))
+      .toDF("symbol", "t", "v")
+    def keysOf(root: String): (Long, Long) = {
+      val df = Upsert.read(spark, root).get
+      (df.count(), df.select("symbol", "t").distinct().count())
+    }
+    // create path: none of the batch's buckets exists yet
+    val fresh = tmpDir("graft-upsert-dup-create")
+    Upsert.merge(batch, 0, fresh, Seq("symbol", "t"), bucketBy = Seq("symbol"))
+    assert(keysOf(fresh) === ((2L, 2L)), "create path must dedup the batch")
+    // existing-bucket path: the same batch over a store that holds the keys
+    val existing = tmpDir("graft-upsert-dup-existing")
+    Upsert.merge(Seq(("S01", 1L, 1.0), ("S02", 1L, 2.0)).toDF("symbol", "t", "v"),
+      0, existing, Seq("symbol", "t"), bucketBy = Seq("symbol"))
+    Upsert.merge(batch, 1, existing, Seq("symbol", "t"), bucketBy = Seq("symbol"))
+    assert(keysOf(existing) === ((2L, 2L)))
+    val rows = Upsert.read(spark, existing).get.select("symbol", "v")
+      .as[(String, Double)].collect().toMap
+    assert(rows === Map("S01" -> 10.0, "S02" -> 20.0))
+  }
+
+  test("upsert merge plans one exchange: the dedup window runs on the " +
+      "bucket partitioning") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = tmpDir("graft-upsert-plan")
+    val b = (0 until 200).map(i => (s"S${i % 20}", i.toLong, i.toDouble))
+      .toDF("symbol", "t", "v")
+    Upsert.merge(b, 0, root, Seq("symbol", "t"), nBuckets = 4, bucketBy = Seq("symbol"))
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (f == "command") writes.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // every bucket exists, so this merge reads stored rows and dedups
+      Upsert.merge(b, 1, root, Seq("symbol", "t"), bucketBy = Seq("symbol"))
+      val deadline = System.currentTimeMillis() + 10000
+      while (writes.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size === 1, "one write per merge")
+    val exchanges = new AdaptiveSparkPlanHelper {}
+      .collect(writes.peek().executedPlan) { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size === 1, writes.peek().executedPlan.toString)
+    assert(Upsert.read(spark, root).get.count() === 200)
+  }
+
+  test("DAG stores: one bucket per shuffle partition, one file per bucket " +
+      "after every merge") {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val input = MemoryStream[String](spark)
+    val out = tmpDir("graft-dag-width-out")
+    val ckpt = tmpDir("graft-dag-width-ckpt")
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val queries = StreamingJob.run(spark, input.toDF().select(col("value")),
+      StreamingJob.Config(out, ckpt))
+    try {
+      (0 until 3).foreach { b =>
+        input.addData((0 until 40).map(i =>
+          envelope(s"S$i", t0 + b * 60000 + i * 100, 10.0 + i, 1.0, 1.0 + b)): _*)
+        queries.foreach(_.processAllAvailable())
+        Seq("volume_tracking", "price_tracking").foreach { t =>
+          val root = s"$out/$t"
+          assert(storeBuckets(root) === width, s"$t: buckets")
+          assert(Upsert.maxFilesPerBucket(root) === 1, s"$t: files per bucket")
+        }
+      }
+      // 40 symbols fill every bucket, and no bucket id reaches the width
+      val walk = Files.walk(Paths.get(out, "price_tracking"))
+      val bucketDirs = try walk.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("_bucket=")).toSet finally walk.close()
+      assert(bucketDirs === (0 until width).map(b => s"_bucket=$b").toSet)
+      assert(Upsert.read(spark, s"$out/price_tracking").get.count() === 120)
+    } finally queries.foreach(_.stop())
+  }
+
   test("upsert merge is idempotent under batch replay") {
     import spark.implicits._
     val root = tmpDir("graft-upsert")
