@@ -26,27 +26,6 @@ object Scale {
         col("session_window.end").as("session_end"),
         col("n_events"), col("session_usd"))
 
-  /** T15 streaming twin of [[sessionize]]: the SAME session_window
-    * aggregation applied to an unbounded feed — Spark's one windowing
-    * mode where the window itself is data-dependent, so only the
-    * state store can decide when a session closes. The watermark is
-    * what bounds state at 100 TB/day: a session's state is evictable
-    * (and, in append mode, its row emittable) once the watermark
-    * passes `last event + gap`; without the watermark every open
-    * session lives forever. Sessions split across micro-batches merge
-    * in state — the property the spec exercises — and the finalized
-    * rows are identical to the batch operator over the same events. */
-  def sessionizeStream(trades: DataFrame, gap: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    trades.withWatermark("timestamp", watermark)
-      .groupBy(session_window(col("timestamp"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        TradeOps.exactSum(col("usd_volume")).as("session_usd"))
-      .select(col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"), col("session_usd"))
-
   /** Skew-safe aggregation: the `symbol` key space is tiny (5 values
     * over the whole table — the worst case for a hash agg at scale,
     * every row funnels to ≤5 reducers). Salting splits each hot key

@@ -433,10 +433,11 @@ object Upsert {
   }
 
   /** Read the current state of the keyed table (None if nothing has
-    * been written yet — or if the current manifest lists zero buckets,
-    * which a tombstone-only [[merge]] legitimately writes when deletes
-    * empty the last live bucket: None is the intended
-    * empty-table result either way; reading an empty path list throws). */
+    * been written yet). A manifest that lists zero buckets also reads
+    * as None, the empty-table result: a scan of an empty path list
+    * throws instead of returning no rows. [[merge]] never writes such
+    * a manifest (an empty batch is a no-op), but a store written while
+    * merges could still delete keys may hold one. */
   def read(spark: SparkSession, root: String): Option[DataFrame] =
     currentVersion(root).flatMap(v => readManifestVersion(spark, root, v))
 
@@ -525,19 +526,12 @@ object Upsert {
     * keeps each entity's rows in one bucket, so [[readKey]] serves
     * point/range lookups from a single bucket dir. Defaults to the full
     * key (uniform spread, no serving-path pruning). */
-  /** @param tombstoneCol optional BOOLEAN column marking delete rows:
-    *   a tombstone competes in last-writer-wins like any other change
-    *   (it can supersede an older live row), and a key whose WINNING row
-    *   is a tombstone is dropped from the rewritten bucket — the
-    *   Cassandra/Delta DELETE semantics. The column itself is not
-    *   persisted. Omitted (None) = pure upsert, the original contract. */
   /** @param appliedBatchId when set, recorded in the new manifest (see
     *   [[lastAppliedBatch]]) so the replay marker commits atomically
     *   with the data. Carried forward unchanged by merges that omit
     *   it. */
   def merge(batch: DataFrame, batchId: Long, root: String, keys: Seq[String],
       nBuckets: Int = defaultBuckets, bucketBy: Seq[String] = Seq.empty,
-      tombstoneCol: Option[String] = None,
       appliedBatchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
     Files.createDirectories(Paths.get(root))
@@ -561,13 +555,13 @@ object Upsert {
           lit(manifest.nBuckets)).cast("int"))
       .persist()
     // Schema EVOLUTION ledger: the physical-file schema this batch
-    // implies (its columns + _gen; _bucket is a directory key and the
-    // tombstone marker is never persisted), unioned into the table's
-    // recorded schema — new columns append, shared names must keep
-    // their type (loud), and everything is nullable because older
-    // generations won't physically contain the new columns.
+    // implies (its columns + _gen; _bucket is a directory key), unioned
+    // into the table's recorded schema — new columns append, shared
+    // names must keep their type (loud), and everything is nullable
+    // because older generations won't physically contain the new
+    // columns.
     val incFile = StructType(inc.schema.fields
-      .filterNot(f => f.name == "_bucket" || tombstoneCol.contains(f.name))
+      .filterNot(_.name == "_bucket")
       .map(_.copy(nullable = true)))
     // The ledger starts at table CREATION; tables born before it (no
     // recorded schema on an existing manifest) keep the legacy
@@ -621,10 +615,6 @@ object Upsert {
           .withColumn("_bucket",
             pmod(xxhash64(manifest.bucketBy.map(col): _*),
               lit(manifest.nBuckets)).cast("int"))
-        // stored rows never carry the tombstone marker — they are live
-        // by definition; only the incoming batch can delete
-        val existing2 = tombstoneCol.fold(existing)(tc =>
-          existing.withColumn(tc, lit(false)))
         // allowMissingColumns (ledgered tables only): the evolution
         // contract in-plan — a batch may add columns (existing rows
         // fill NULL) or omit columns the table already has (its rows
@@ -632,7 +622,7 @@ object Upsert {
         // omitted column reads NULL on rows the new batch won — the
         // Cassandra unset-column analog). Legacy tables keep the
         // strict union: schema drift stays a loud error there.
-        existing2.unionByName(inc, allowMissingColumns = ledger.isDefined)
+        existing.unionByName(inc, allowMissingColumns = ledger.isDefined)
       }
     // The merge's only exchange: hash-partition on the bucket, so each
     // task holds whole buckets and writes one file per bucket dir. The
@@ -642,37 +632,17 @@ object Upsert {
     // shuffle. It runs on every path, table creation included.
     val w = Window.partitionBy((col("_bucket") +: keys.map(col)): _*)
       .orderBy(col("_gen").desc)
-    val winners = candidates
+    val merged = candidates
       .repartition(touched.length, col("_bucket"))
       .withColumn("_rank", row_number().over(w))
       .filter(col("_rank") === 1)
       .drop("_rank")
-    // a key whose winning row is a tombstone leaves the table
-    val merged = tombstoneCol.fold(winners)(tc =>
-      winners.filter(!coalesce(col(tc), lit(false))).drop(tc))
     merged.write.mode("overwrite").partitionBy("_bucket")
       .parquet(s"$root/gen$next")
-    // With deletes, a touched bucket can come out EMPTY (its last rows
-    // tombstoned): partitionBy emits no dir for it, so pointing the
-    // manifest there would break reads — such buckets leave the
-    // manifest instead. Pure upserts always leave every touched bucket
-    // non-empty; skip the extra scan on that path.
-    val writtenBuckets: Set[Int] =
-      if (tombstoneCol.isEmpty) touched.toSet
-      else {
-        val gd = Paths.get(s"$root/gen$next")
-        if (!Files.isDirectory(gd)) Set.empty
-        else listDir(gd)
-          .map(_.getFileName.toString)
-          .collect { case s if s.startsWith("_bucket=") =>
-            s.stripPrefix("_bucket=").toIntOption }
-          .flatten.toSet
-      }
     inc.unpersist()
 
     val nextManifest = Manifest(manifest.nBuckets, manifest.bucketBy,
-      (manifest.buckets -- touched.filterNot(writtenBuckets)) ++
-        touched.filter(writtenBuckets).map(b => b -> s"gen$next"),
+      manifest.buckets ++ touched.map(_ -> s"gen$next"),
       appliedBatchId.orElse(manifest.appliedBatch),
       schema = ledger.map(_.toDDL))
     writeManifest(root, next, nextManifest)

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Custom streaming state (SURVEY.md §2.8 T13/T14) via
   * `flatMapGroupsWithState` — the stable stateful API (preferred over
@@ -36,133 +36,6 @@ object Stateful {
           state.update(total)
           out.iterator
       }
-  }
-
-  /** T13 again on Spark 4's `transformWithState` (the arbitrary-state
-    * API that supersedes `flatMapGroupsWithState`): same per-symbol
-    * running total, held in a named `ValueState[Double]`. Requires the
-    * RocksDB state-store provider
-    * (`spark.sql.streaming.stateStore.providerClass`), which ships with
-    * the distribution. Kept alongside the fMGWS form — one op, both
-    * stateful APIs, so either generation of runtime is covered. */
-  class CumulativeVolumeProcessor
-      extends StatefulProcessor[String, TradeEvent, CumRow] {
-    @transient private var total: org.apache.spark.sql.streaming.ValueState[Double] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      total = getHandle.getValueState[Double](
-        "total", Encoders.scalaDouble, TTLConfig.NONE)
-
-    override def handleInputRows(symbol: String, rows: Iterator[TradeEvent],
-        timerValues: TimerValues): Iterator[CumRow] = {
-      var t = if (total.exists()) total.get() else 0.0
-      val out = rows.toSeq.sortBy(_.ts.getTime).map { e =>
-        t += e.volume
-        CumRow(symbol, e.ts, e.volume, t)
-      }
-      total.update(t)
-      out.iterator
-    }
-  }
-
-  def cumulativeVolumeTws(spark: SparkSession,
-      ds: Dataset[TradeEvent]): Dataset[CumRow] = {
-    import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .transformWithState(new CumulativeVolumeProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  /** Streaming exact dedup with bounded state: duplicates arriving
-    * within the watermark horizon are dropped, and the dedup state is
-    * evicted once the watermark passes — the streaming form of the
-    * batch `exactDedup`, sized for unbounded streams (plain
-    * `dropDuplicates` would grow state forever). */
-  def dedupWithinWatermark(ds: Dataset[TradeEvent],
-      horizon: String = "30 seconds"): Dataset[TradeEvent] =
-    ds.withWatermark("ts", horizon)
-      .dropDuplicatesWithinWatermark("symbol", "ts")
-
-  case class SessState(startMs: Long, lastMs: Long, n: Long, usd: Double)
-
-  case class SessionRow(symbol: String, session_start: java.sql.Timestamp,
-      session_end: java.sql.Timestamp, n_events: Long, total_usd: Double)
-
-  /** T15 on `transformWithState` with EVENT-TIME TIMERS: per-key session
-    * windows (gap-merged), emitted when the watermark passes
-    * `last_event + gap` — the arbitrary-state formulation of
-    * `session_window()`, for when a session must carry custom state or
-    * emit mid-session effects the built-in cannot express. A session
-    * closed *within* a batch (a later event proves the gap) emits
-    * immediately; open sessions park an event-time timer and emit from
-    * [[SessionWindowProcessor.handleExpiredTimer]] when the watermark
-    * crosses it. One timer per key at a time (re-registered as the
-    * session extends), state cleared on emit — bounded by live keys. */
-  class SessionWindowProcessor(gapMs: Long)
-      extends StatefulProcessor[String, TradeEvent, SessionRow] {
-    @transient private var sess: org.apache.spark.sql.streaming.ValueState[SessState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      sess = getHandle.getValueState[SessState](
-        "sess", Encoders.product[SessState], TTLConfig.NONE)
-
-    private def row(symbol: String, s: SessState): SessionRow =
-      SessionRow(symbol, new java.sql.Timestamp(s.startMs),
-        new java.sql.Timestamp(s.lastMs + gapMs), s.n, s.usd)
-
-    override def handleInputRows(symbol: String, rows: Iterator[TradeEvent],
-        timerValues: TimerValues): Iterator[SessionRow] = {
-      var cur = if (sess.exists()) sess.get() else null
-      val out = scala.collection.mutable.ListBuffer.empty[SessionRow]
-      rows.toSeq.sortBy(_.ts.getTime).foreach { e =>
-        val t = e.ts.getTime
-        val usd = e.price * e.volume
-        if (cur == null)
-          cur = SessState(t, t, 1, usd)
-        else if (t < cur.startMs - gapMs)
-          // Above-watermark late event more than a gap BEFORE the current
-          // session's start: built-in session_window treats it as its own
-          // earlier session, and its gap to `cur` is already proven — emit
-          // it closed immediately rather than folding it into `cur` (which
-          // made results depend on batch arrival order). Known divergence:
-          // several such stragglers within a gap of EACH OTHER emit as
-          // separate one-event sessions where the built-in would merge
-          // them; holding a second open session would need watermark-aware
-          // state the single-ValueState formulation deliberately avoids.
-          out += row(symbol, SessState(t, t, 1, usd))
-        else if (t <= cur.lastMs + gapMs)
-          cur = SessState(math.min(cur.startMs, t), math.max(cur.lastMs, t),
-            cur.n + 1, cur.usd + usd)
-        else {
-          out += row(symbol, cur) // gap proven inside the batch
-          cur = SessState(t, t, 1, usd)
-        }
-      }
-      sess.update(cur)
-      // single live timer per key: replace whatever was parked before
-      getHandle.listTimers().foreach(ts => getHandle.deleteTimer(ts.asInstanceOf[Long]))
-      getHandle.registerTimer(cur.lastMs + gapMs)
-      out.iterator
-    }
-
-    override def handleExpiredTimer(symbol: String, timerValues: TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[SessionRow] =
-      if (sess.exists()) {
-        val s = sess.get()
-        sess.clear()
-        Iterator.single(row(symbol, s))
-      } else Iterator.empty
-  }
-
-  /** T15 via [[SessionWindowProcessor]]; input needs the watermark for
-    * event-time timers to fire. */
-  def sessionWindowsTws(spark: SparkSession, ds: Dataset[TradeEvent],
-      gapMs: Long = 300000L, watermark: String = "10 seconds"): Dataset[SessionRow] = {
-    import spark.implicits._
-    ds.withWatermark("ts", watermark)
-      .groupByKey(_.symbol)
-      .transformWithState(new SessionWindowProcessor(gapMs),
-        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** One buffered feature row of the streaming lookback — the payload
@@ -241,136 +114,6 @@ object Stateful {
             else None
           }
           state.update(buf)
-          out.iterator
-      }
-  }
-
-  case class FunnelEvent(user_id: Long, ts: java.sql.Timestamp,
-      event_type: String)
-
-  case class FunnelState(t1: Option[java.sql.Timestamp],
-      t2: Option[java.sql.Timestamp], t3: Option[java.sql.Timestamp])
-
-  case class FunnelRow(user_id: Long, t_view: Option[java.sql.Timestamp],
-      t_click: Option[java.sql.Timestamp],
-      t_purchase: Option[java.sql.Timestamp], stages_reached: Int)
-
-  /** The streaming form of [[graft.ops.EventAnalytics.funnel]]: per-user
-    * stage progress held as three write-once timestamps, advanced
-    * greedily as events arrive. For an event-time-ordered feed the
-    * greedy evaluation IS the batch fixpoint (first s1 = min s1; the
-    * first s2 seen after t1 = min s2 beyond t1; likewise t3) —
-    * StreamingSpec asserts exact agreement on the same events. The
-    * honest contract difference: a LATE event that would retroactively
-    * lower t1 does not reopen downstream stages — streaming funnels
-    * trade that reprocessing for bounded per-user state (three
-    * timestamps, regardless of history length).
-    *
-    * Update-mode emission: one row per touched user per batch. State
-    * refinement is monotone (each field set at most once), so the row
-    * with the highest `stages_reached` per user is the current truth —
-    * and an upsert sink keyed on user_id absorbs the re-emission, the
-    * [[StreamingJob]] q1 discipline. */
-  def funnelProgress(spark: SparkSession, ds: Dataset[FunnelEvent],
-      stages: Seq[String] = Seq("view", "click", "purchase")): Dataset[FunnelRow] = {
-    import spark.implicits._
-    val Seq(s1, s2, s3) = stages
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, events: Iterator[FunnelEvent],
-            state: GroupState[FunnelState]) =>
-          var st = state.getOption.getOrElse(FunnelState(None, None, None))
-          events.toSeq
-            .sortBy(e => (e.ts.getTime, e.ts.getNanos))
-            .foreach { e =>
-              if (st.t1.isEmpty) {
-                if (e.event_type == s1) st = st.copy(t1 = Some(e.ts))
-              } else if (st.t2.isEmpty) {
-                if (e.event_type == s2 && e.ts.after(st.t1.get))
-                  st = st.copy(t2 = Some(e.ts))
-              } else if (st.t3.isEmpty) {
-                if (e.event_type == s3 && e.ts.after(st.t2.get))
-                  st = st.copy(t3 = Some(e.ts))
-              }
-            }
-          state.update(st)
-          Iterator(FunnelRow(uid, st.t1, st.t2, st.t3,
-            Seq(st.t1, st.t2, st.t3).count(_.isDefined)))
-      }
-  }
-
-  case class CusumState(first: Long, c: Long, runMin: Long, runMax: Long)
-
-  case class CusumRow(symbol: String, ts: java.sql.Timestamp,
-      cusum_pos: Double, cusum_neg: Double, drifted: Boolean)
-
-  /** Streaming form of [[graft.ops.TradeOps.cusum]]: the per-symbol
-    * CUSUM state is FOUR Longs (first price, running sum of deviations,
-    * its running min and max — all exact micro-unit integers), so the
-    * stream carries the same exact arithmetic the batch windows
-    * compute and the two forms agree to the BIT on ordered input
-    * (spec'd in StreamingSpec). Bounded state per key, no buffer —
-    * the monitoring shape that runs forever. */
-  def cusumStream(spark: SparkSession, ds: Dataset[TradeEvent],
-      h: Double = 500.0): Dataset[CusumRow] = {
-    import spark.implicits._
-    val hMicros = math.round(h * 1e6)
-    ds.groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (symbol: String, events: Iterator[TradeEvent],
-            state: GroupState[CusumState]) =>
-          var st = state.getOption.orNull
-          val out = events.toSeq.sortBy(_.ts.getTime).map { e =>
-            val pm = math.round(e.price * 1e6)
-            st =
-              if (st == null) CusumState(pm, 0L, 0L, 0L)
-              else {
-                val c = st.c + (pm - st.first)
-                CusumState(st.first, c,
-                  math.min(st.runMin, c), math.max(st.runMax, c))
-              }
-            CusumRow(symbol, e.ts,
-              (st.c - st.runMin).toDouble / 1000000.0,
-              (st.runMax - st.c).toDouble / 1000000.0,
-              st.c - st.runMin > hMicros || st.runMax - st.c > hMicros)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  case class AnomState(buf: Seq[Long])
-
-  case class AnomRow(symbol: String, ts: java.sql.Timestamp, price: Double)
-
-  /** Streaming twin of [[graft.ops.TradeOps.anomalyFlags]]: the last
-    * `n` cent prices ride in per-key state and the SAME all-integer
-    * predicate `(n·x − Σx)² > k²·(n·Σx² − (Σx)²)` fires on each full
-    * buffer — zero floats, so stream and batch flag the identical row
-    * set by construction (spec'd). Emits only anomalous rows, the
-    * alerting shape: output ∝ anomalies, state = n longs per key. */
-  def anomalyStream(spark: SparkSession, ds: Dataset[TradeEvent],
-      n: Int = 20, k: Int = 3): Dataset[AnomRow] = {
-    import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (symbol: String, events: Iterator[TradeEvent],
-            state: GroupState[AnomState]) =>
-          var buf = state.getOption.map(_.buf.toVector)
-            .getOrElse(Vector.empty[Long])
-          val out = events.toSeq.sortBy(_.ts.getTime).flatMap { e =>
-            val pc = math.round(e.price * 100)
-            buf = (buf :+ pc).takeRight(n)
-            if (buf.size == n) {
-              val s1 = buf.sum
-              val s2 = buf.map(x => x * x).sum
-              val lhs = n * pc - s1
-              if (lhs * lhs > k.toLong * k * (n * s2 - s1 * s1))
-                Some(AnomRow(symbol, e.ts, e.price))
-              else None
-            } else None
-          }
-          state.update(AnomState(buf))
           out.iterator
       }
   }

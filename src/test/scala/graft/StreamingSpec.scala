@@ -2,14 +2,10 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 import graft.ingest.Decode
 import graft.sinks.Upsert
 import graft.streaming.{Stateful, StreamingJob}
-
-/** Keyed user event for the stream-stream join spec. */
-case class UserEvent(user_id: Long, ts: java.sql.Timestamp, price: Double)
 
 /** Streaming semantics (SURVEY.md §2.8 T1-T14) driven by MemoryStream. */
 class StreamingSpec extends SparkSuite {
@@ -98,36 +94,6 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("streaming funnel matches the batch fixpoint on ordered events") {
-    import spark.implicits._
-    val events = Tables.events(spark, sf)
-      .select(col("user_id"), col("ts"), col("event_type"))
-    val batch = graft.ops.EventAnalytics.funnel(events)
-    val sorted = events.as[FunnelEvent].collect()
-      .sortBy(e => (e.ts.getTime, e.ts.getNanos))
-    val input = MemoryStream[FunnelEvent](spark)
-    val q = Stateful.funnelProgress(spark, input.toDS()).toDF()
-      .writeStream.outputMode("update")
-      .format("memory").queryName("funnel_stream").start()
-    try {
-      sorted.grouped(400).foreach { chunk =>
-        input.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-      // monotone refinement: the max-stages row per user is the final state
-      val streamed = spark.table("funnel_stream")
-        .groupBy("user_id")
-        .agg(max(struct(col("stages_reached"), col("t_view"),
-          col("t_click"), col("t_purchase"))).as("s"))
-        .select(col("user_id"), col("s.t_view").as("t_view"),
-          col("s.t_click").as("t_click"),
-          col("s.t_purchase").as("t_purchase"),
-          col("s.stages_reached").as("stages_reached"))
-      assert(streamed.count() === batch.count())
-      assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
-    } finally q.stop()
-  }
-
   test("streaming dedup: in-horizon re-deliveries dropped, state evicted after") {
     import spark.implicits._
     val input = MemoryStream[TradeEvent](spark)
@@ -181,32 +147,6 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("transformWithState cumulative volume matches fMGWS semantics") {
-    import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[TradeEvent](spark)
-      val q = Stateful.cumulativeVolumeTws(spark, input.toDS())
-        .writeStream.outputMode("append")
-        .format("memory").queryName("cum_tws").start()
-      try {
-        def ev(sym: String, offsetMs: Long, v: Double) =
-          TradeEvent(sym, new java.sql.Timestamp(t0 + offsetMs), 1.0, v)
-        input.addData(ev("A", 0, 1.0), ev("A", 1000, 2.0), ev("B", 0, 5.0))
-        q.processAllAvailable()
-        input.addData(ev("A", 2000, 3.0))
-        q.processAllAvailable()
-        val rows = spark.table("cum_tws").as[CumRow].collect()
-          .groupBy(_.symbol).view
-          .mapValues(_.sortBy(_.ts.getTime).map(_.cumulative_volume))
-        assert(rows("A").toSeq === Seq(1.0, 3.0, 6.0))
-        assert(rows("B").toSeq === Seq(5.0))
-      } finally q.stop()
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
   test("lookback buffer emits only once full, FIXTURES.md §6 cases") {
     import spark.implicits._
     for ((count, expected) <- Seq(99 -> 0, 100 -> 1, 101 -> 2, 150 -> 51)) {
@@ -234,36 +174,11 @@ class StreamingSpec extends SparkSuite {
     }
   }
 
-  test("stream-stream interval join: only in-window click/purchase pairs emit") {
-    import spark.implicits._
-    val clicks = MemoryStream[UserEvent](spark)
-    val purchases = MemoryStream[UserEvent](spark)
-    val q = graft.streaming.StreamJoins
-      .purchasesWithRecentClicks(purchases.toDF(), clicks.toDF(), windowSec = 60)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ssj").start()
-    try {
-      // user 1: click 30s before purchase (in window), click 90s before
-      // (out of window); user 2: click AFTER the purchase (excluded)
-      clicks.addData(
-        UserEvent(1L, new java.sql.Timestamp(t0 + 30000), 1.0),
-        UserEvent(1L, new java.sql.Timestamp(t0 - 40000), 1.0),
-        UserEvent(2L, new java.sql.Timestamp(t0 + 70000), 1.0))
-      purchases.addData(
-        UserEvent(1L, new java.sql.Timestamp(t0 + 60000), 99.0),
-        UserEvent(2L, new java.sql.Timestamp(t0 + 60000), 50.0))
-      q.processAllAvailable()
-      val rows = spark.table("ssj")
-        .select("user_id", "click_ts").as[(Long, java.sql.Timestamp)]
-        .collect().toSet
-      assert(rows === Set((1L, new java.sql.Timestamp(t0 + 30000))))
-    } finally q.stop()
-  }
-
   test("streaming dedup within watermark drops repeats, state stays bounded") {
     import spark.implicits._
     val input = MemoryStream[TradeEvent](spark)
-    val q = Stateful.dedupWithinWatermark(input.toDS())
+    val q = StreamingJob.dedupWithinWatermark(input.toDF(),
+        keyCols = Seq("symbol", "ts"), tsCol = "ts")
       .writeStream.outputMode("append")
       .format("memory").queryName("dedup_wm").start()
     try {
@@ -302,48 +217,6 @@ class StreamingSpec extends SparkSuite {
         .select("symbol", "n_events").as[(String, Long)].collect().toSet
       assert(rows.contains(("A", 3L)), s"merged session of 3, got $rows")
     } finally q.stop()
-  }
-
-  test("transformWithState session windows: in-batch close + timer-driven finalize") {
-    import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[TradeEvent](spark)
-      val q = Stateful.sessionWindowsTws(spark, input.toDS(), gapMs = 30000L)
-        .writeStream.outputMode("append")
-        .format("memory").queryName("sess_tws").start()
-      try {
-        def ev(sym: String, offsetMs: Long, price: Double) =
-          TradeEvent(sym, new java.sql.Timestamp(t0 + offsetMs), price, 2.0)
-        // A: burst of 3 (10s apart), then a gap-exceeding event in the
-        // SAME batch -> first session emits immediately, second stays open
-        input.addData(ev("A", 0, 1.0), ev("A", 10000, 2.0),
-          ev("A", 20000, 3.0), ev("A", 100000, 4.0), ev("B", 0, 5.0))
-        q.processAllAvailable()
-        // A's burst closes in-batch (gap proven by the 100s event); B's
-        // lone session finalizes by timer because that same far event
-        // advanced the watermark past B's gap. A's second session
-        // (100s) is still open.
-        val afterBatch = spark.table("sess_tws").as[Stateful.SessionRow]
-          .collect()
-        assert(afterBatch.map(_.symbol).sorted.toSeq === Seq("A", "B"),
-          s"got ${afterBatch.toSeq}")
-        val aFirst = afterBatch.find(_.symbol == "A").get
-        assert(aFirst.n_events === 3)
-        assert(aFirst.total_usd === (1.0 + 2.0 + 3.0) * 2.0)
-        assert(aFirst.session_end.getTime === t0 + 20000 + 30000)
-        // advance the watermark far past both open sessions -> timers fire
-        input.addData(ev("C", 1000000, 1.0))
-        q.processAllAvailable()
-        val all = spark.table("sess_tws").as[Stateful.SessionRow].collect()
-        val bySym = all.groupBy(_.symbol)
-        assert(bySym("A").map(_.n_events).sorted.toSeq === Seq(1L, 3L))
-        assert(bySym("B").head.n_events === 1)
-        assert(bySym("B").head.total_usd === 10.0)
-      } finally q.stop()
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
   test("streamed volume agg equals batch recompute over on-time events") {
@@ -693,76 +566,6 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("streaming cusum: bit-equal to the batch windows across micro-batches") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val input = MemoryStream[TradeEvent](spark)
-    val q = Stateful.cusumStream(spark, input.toDS(), h = 15.0).toDF()
-      .writeStream.outputMode("append")
-      .format("memory").queryName("cusum_test").start()
-    try {
-      def ev(i: Int, sym: String, p: Double) =
-        TradeEvent(sym, new java.sql.Timestamp(t0 + i * 1000L), p, 1.0)
-      // drift up on BTC, drift down on ETH; split MID-DRIFT across
-      // batches so the state carryover is what's being tested
-      val all = (1 to 5).map(ev(_, "BTC", 100.0)) ++
-        (6 to 9).map(ev(_, "BTC", 110.0)) ++
-        (1 to 4).map(ev(_, "ETH", 50.0)) ++
-        (5 to 8).map(ev(_, "ETH", 43.5))
-      val (b1, b2) = all.splitAt(7)
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-      val streamed = spark.table("cusum_test")
-        .select("symbol", "ts", "cusum_pos", "cusum_neg", "drifted")
-      // the batch form needs (timestamp, event_id) — ts is unique per
-      // symbol here, so any constant event_id gives the same order
-      val batchIn = all.toDF()
-        .select(lit(0L).as("event_id"), col("symbol"),
-          col("ts").as("timestamp"), col("price"), col("volume"),
-          (col("price") * col("volume")).as("usd_volume"))
-      val batch = graft.ops.TradeOps.cusum(batchIn, h = 15.0)
-        .select(col("symbol"), col("timestamp").as("ts"),
-          col("cusum_pos"), col("cusum_neg"), col("drifted"))
-      assert(streamed.count() === all.size)
-      assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
-      // the down-drift fires the negative side only
-      assert(spark.table("cusum_test")
-        .filter(col("symbol") === "ETH" && col("drifted"))
-        .agg(min("cusum_neg")).head.getDouble(0) > 15.0)
-    } finally q.stop()
-  }
-
-  test("streaming anomaly: flags the identical rows as the batch windows") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val input = MemoryStream[TradeEvent](spark)
-    val q = Stateful.anomalyStream(spark, input.toDS()).toDF()
-      .writeStream.outputMode("append")
-      .format("memory").queryName("anomaly_test").start()
-    try {
-      def ev(i: Int, p: Double) =
-        TradeEvent("BTC", new java.sql.Timestamp(t0 + i * 1000L), p, 1.0)
-      // flat feed with two spikes, the second in a later micro-batch so
-      // the ring buffer must carry across batches
-      val all = (1 to 60).map { i =>
-        ev(i, if (i == 30 || i == 52) 200.0 else 100.0)
-      }
-      val (b1, b2) = all.splitAt(40)
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-      val streamed = spark.table("anomaly_test")
-        .select("symbol", "ts", "price")
-      val batchIn = all.toDF()
-        .select(lit(0L).as("event_id"), col("symbol"),
-          col("ts").as("timestamp"), col("price"), col("volume"),
-          (col("price") * col("volume")).as("usd_volume"))
-      val batch = graft.ops.TradeOps.anomalyFlags(batchIn)
-        .select(col("symbol"), col("timestamp").as("ts"), col("price"))
-      assert(streamed.count() === 2) // exactly the two spike rows
-      assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
-    } finally q.stop()
-  }
-
   test("observe API: per-batch ingest metrics arrive on query progress") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -807,88 +610,6 @@ class StreamingSpec extends SparkSuite {
     }
   }
 
-  test("t15 streaming sessions: cross-batch merge, append equals batch sessionize") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val input = MemoryStream[(Long, java.sql.Timestamp, Double)](spark)
-    val feed = input.toDF().toDF("user_id", "timestamp", "usd_volume")
-    val q = graft.ops.Scale.sessionizeStream(feed)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("sessions_test").start()
-    try {
-      def ev(u: Long, offSec: Long, v: Double) =
-        (u, new java.sql.Timestamp(t0 + offSec * 1000L), v)
-      // user 1: one session spanning BOTH micro-batches (events 0-240 s,
-      // gaps < 5 min), then a separate session at +30 min; user 2: a
-      // single-event session — state merge across batches is the test
-      val b1 = Seq(ev(1L, 0, 10.0), ev(1L, 60, 5.0), ev(2L, 10, 7.0))
-      val b2 = Seq(ev(1L, 240, 2.5), ev(1L, 1800, 1.0))
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-      // two advancer batches push the watermark past every real session
-      // (watermark for batch N comes from batch N-1's max event time)
-      input.addData(ev(99L, 7200, 0.0)); q.processAllAvailable()
-      input.addData(ev(99L, 7300, 0.0)); q.processAllAvailable()
-      val streamed = spark.table("sessions_test")
-        .filter(col("user_id") =!= 99L)
-      val batch = graft.ops.Scale.sessionize(
-        (b1 ++ b2).toDF("user_id", "timestamp", "usd_volume"))
-        .filter(col("user_id") =!= 99L)
-      // user 1's first session merged across batches: 3 events, one row
-      assert(streamed.filter(col("user_id") === 1L &&
-        col("n_events") === 3).count() === 1)
-      assert(streamed.count() === 3) // u1 x2 sessions + u2 x1
-      assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
-    } finally q.stop()
-  }
-
-  test("query_06 incremental MV: streamed merge equals batch incrementalAgg, replay-safe") {
-    import spark.implicits._
-    // deterministic events over 5 days / 3 event types, fed in 3
-    // micro-batches — the streamed view must equal the batch-tier
-    // full-history incrementalAgg over the same rows
-    val rnd = new scala.util.Random(7)
-    val events = (0 until 90).map { i =>
-      (i.toLong,
-        new java.sql.Timestamp(t0 + (i % 5) * 86400000L + rnd.nextInt(900000)),
-        1000L + i % 11,
-        Seq("view", "click", "buy")(rnd.nextInt(3)),
-        rnd.nextInt(10000) / 100.0,
-        "{}")
-    }
-    val colNames = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
-    val input = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double, String)](spark)
-    val out = tmpDir("graft-mv-out")
-    val ckpt = tmpDir("graft-mv-ckpt")
-    val q = StreamingJob.runIncrementalAgg(spark,
-      input.toDF().toDF(colNames: _*), StreamingJob.Config(out, ckpt))
-    val mvRoot = s"$out/mv_event_daily"
-    val outCols = Seq("event_type", "day", "n_events", "sum_value_micro",
-      "min_value", "max_value")
-    try {
-      events.grouped(30).foreach { chunk =>
-        input.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-      def streamedView() = Upsert.read(spark, mvRoot).get
-        .select(outCols.map(col): _*)
-      val batch = graft.ops.Incremental
-        .incrementalAgg(events.toDF(colNames: _*))
-        .select(outCols.map(col): _*)
-      val streamed = streamedView()
-      assert(streamed.count() === batch.count())
-      assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
-        "streamed MV state differs from batch full recompute")
-      // replay safety: re-applying the LAST batch id must be a no-op —
-      // an additive merge would otherwise double-count on crash replay
-      val before = streamed.collect().map(_.toString).sorted.toSeq
-      StreamingJob.mergeIncrementalAgg(
-        events.drop(60).toDF(colNames: _*), batchId = 2L, mvRoot)
-      val after = streamedView().collect().map(_.toString).sorted.toSeq
-      assert(after === before, "batch replay mutated the view (double count)")
-    } finally q.stop()
-  }
-
   test("query_08 incremental dedup: streamed screening equals batch crossDedup, replay-idempotent") {
     import spark.implicits._
     // the corpus arrives as a stream: the already-ingested docs
@@ -927,510 +648,6 @@ class StreamingSpec extends SparkSuite {
         batchId = (chunks.length - 1).toLong, s"$out/dedup")
       val after = streamedFlags().collect().map(_.toString).sorted.toSeq
       assert(after === before, "batch replay mutated the dedup flags")
-    } finally q.stop()
-  }
-
-  test("query_09 retractable minmax: streamed Z-set merge equals batch retractableMinMax, replay-safe") {
-    import spark.implicits._
-    // the SAME deterministic events as query_06, but as a SIGNED change
-    // feed: every row arrives as an insert (+1) and the batch
-    // operator's retraction slice (event_id % RetractMod == 0) arrives
-    // as deletes (−1) spread over later micro-batches — including ONE
-    // delete racing AHEAD of its insert, the negative-multiplicity path
-    val rnd = new scala.util.Random(7)
-    val events = (0 until 90).map { i =>
-      (i.toLong,
-        new java.sql.Timestamp(t0 + (i % 5) * 86400000L + rnd.nextInt(900000)),
-        1000L + i % 11,
-        Seq("view", "click", "buy")(rnd.nextInt(3)),
-        rnd.nextInt(10000) / 100.0,
-        "{}")
-    }
-    val colNames = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
-    def signed(e: (Long, java.sql.Timestamp, Long, String, Double, String),
-        sign: Long) = (e._4, e._2, e._5, sign)
-    val mod = graft.ops.Incremental.RetractMod
-    val del = events.filter(_._1 % mod == 0)
-    val aheadDel = del.filter(_._1 >= 60).head   // insert arrives in batch 3
-    val batches = Seq(
-      events.slice(0, 30).map(signed(_, 1L)),
-      events.slice(30, 60).map(signed(_, 1L)) ++
-        del.filter(_._1 < 30).map(signed(_, -1L)) :+ signed(aheadDel, -1L),
-      events.slice(60, 90).map(signed(_, 1L)) ++
-        del.filter(e => e._1 >= 30 && e != aheadDel).map(signed(_, -1L)))
-    val input = MemoryStream[(String, java.sql.Timestamp, Double, Long)](spark)
-    val out = tmpDir("graft-zset-out")
-    val ckpt = tmpDir("graft-zset-ckpt")
-    val q = StreamingJob.runRetractableMinMax(spark,
-      input.toDF().toDF("event_type", "ts", "value", "sign"),
-      StreamingJob.Config(out, ckpt))
-    val root = s"$out/minmax_state"
-    try {
-      batches.foreach { b => input.addData(b); q.processAllAvailable() }
-      def view() = StreamingJob.retractMinMaxView(spark, root)
-      val batch = graft.ops.Incremental
-        .retractableMinMax(events.toDF(colNames: _*))
-      assert(view().count() === batch.count())
-      assert(view().exceptAll(batch).isEmpty && batch.exceptAll(view()).isEmpty,
-        "streamed Z-set view differs from batch retractableMinMax")
-      // the SAME multiset store serves the holistic median view — no
-      // extra state, and it must agree with the batch selection
-      val medView = StreamingJob.retractMedianView(spark, root)
-      val medBatch = graft.ops.Incremental
-        .retractableMedian(events.toDF(colNames: _*))
-      assert(medView.exceptAll(medBatch).isEmpty &&
-        medBatch.exceptAll(medView).isEmpty,
-        "streamed median view differs from batch retractableMedian")
-      // replay safety: the additive multiset merge is guarded by the
-      // applied-batch marker riding the store's atomic pointer flip
-      val before = view().collect().map(_.toString).sorted.toSeq
-      StreamingJob.applyRetractBatch(
-        batches.last.toDF("event_type", "ts", "value", "sign"),
-        batchId = 2L, root)
-      val after = view().collect().map(_.toString).sorted.toSeq
-      assert(after === before, "batch replay mutated the multiset (double count)")
-    } finally q.stop()
-  }
-
-  test("query_10 retractable topk: streamed Z-set merge equals batch retractableTopK, eviction promotes") {
-    import spark.implicits._
-    // values are crafted so every retraction slice row (event_id %
-    // RetractMod == 0) holds a TOP value for its type: the deletes
-    // evict the reigning top-k members, forcing the promotion path —
-    // exactly what a bounded-candidate top-k state cannot survive
-    val mod = graft.ops.Incremental.RetractMod
-    val events = (0 until 90).map { i =>
-      val topValue = i % mod == 0
-      (i.toLong,
-        new java.sql.Timestamp(t0 + (i % 5) * 86400000L + i * 1000L),
-        1000L + i % 11,
-        Seq("view", "click", "buy")(i % 3),
-        if (topValue) 500.0 + i else 10.0 + (i % 37),
-        "{}")
-    }
-    val colNames = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
-    def signed(e: (Long, java.sql.Timestamp, Long, String, Double, String),
-        sign: Long) = (e._4, e._2, e._5, sign)
-    val del = events.filter(_._1 % mod == 0)
-    val batches = Seq(
-      events.slice(0, 45).map(signed(_, 1L)),
-      events.slice(45, 90).map(signed(_, 1L)) ++
-        del.filter(_._1 < 45).map(signed(_, -1L)),
-      del.filter(_._1 >= 45).map(signed(_, -1L)))
-    val input = MemoryStream[(String, java.sql.Timestamp, Double, Long)](spark)
-    val out = tmpDir("graft-topk-out")
-    val ckpt = tmpDir("graft-topk-ckpt")
-    val q = StreamingJob.runRetractableTopK(spark,
-      input.toDF().toDF("event_type", "ts", "value", "sign"),
-      StreamingJob.Config(out, ckpt))
-    val root = s"$out/topk_state"
-    try {
-      batches.foreach { b => input.addData(b); q.processAllAvailable() }
-      def view() = StreamingJob.retractTopKView(spark, root)
-      val batch = graft.ops.Incremental
-        .retractableTopK(events.toDF(colNames: _*))
-      // the crafted top values really were deleted: no surviving value
-      // reaches the 500-band, so the batch top-k is all promoted rows
-      assert(batch.filter(col("value_micro") >= 500000000L).count() === 0)
-      assert(view().count() === batch.count())
-      assert(view().exceptAll(batch).isEmpty && batch.exceptAll(view()).isEmpty,
-        "streamed Z-set top-k view differs from batch retractableTopK")
-      // replay safety: additive merge behind the applied-batch marker
-      val before = view().collect().map(_.toString).sorted.toSeq
-      StreamingJob.applyRetractTopKBatch(
-        batches.last.toDF("event_type", "ts", "value", "sign"),
-        batchId = 2L, root)
-      val after = view().collect().map(_.toString).sorted.toSeq
-      assert(after === before, "batch replay mutated the multiset (double count)")
-    } finally q.stop()
-  }
-
-  test("query_07 cdc apply: streamed tombstone merge equals batch cdcApply") {
-    import spark.implicits._
-    val trades = Tables.trades(spark, sf)
-    val expected = graft.ops.Incremental.cdcApply(trades)
-      .select("user_id", "last_ts", "last_price")
-      .as[(Long, java.sql.Timestamp, Double)].collect().toSet
-    assert(expected.nonEmpty)
-    // the identical change feed, in (timestamp, event_id) order, three
-    // micro-batches — deletes interleaved exactly as the batch derives them
-    val feed = trades
-      .withColumn("op",
-        when(col("event_id") % 10 === 0, lit("D")).otherwise(lit("U")))
-      .select(col("user_id"), col("timestamp"), col("event_id"), col("price"),
-        col("op"))
-      .as[(Long, java.sql.Timestamp, Long, Double, String)]
-      .collect().sortBy(r => (r._2.getTime, r._3))
-    val input = MemoryStream[(Long, java.sql.Timestamp, Long, Double, String)](spark)
-    val out = tmpDir("graft-cdc-out")
-    val ckpt = tmpDir("graft-cdc-ckpt")
-    val q = StreamingJob.runCdcApply(spark,
-      input.toDF().toDF("user_id", "timestamp", "event_id", "price", "op"),
-      StreamingJob.Config(out, ckpt))
-    try {
-      feed.grouped((feed.length / 3).max(1)).foreach { chunk =>
-        input.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-      val got = Upsert.read(spark, s"$out/cdc_state").get
-        .select("user_id", "last_ts", "last_price")
-        .as[(Long, java.sql.Timestamp, Double)].collect().toSet
-      assert(got === expected,
-        "streamed CDC snapshot differs from batch cdcApply fixpoint")
-    } finally q.stop()
-  }
-
-  test("cdc tombstones: delete removes the key, a later change re-adds it") {
-    import spark.implicits._
-    val root = tmpDir("graft-cdc-tomb") + "/state"
-    def row(uid: Long, t: Long, eid: Long, p: Double, op: String) =
-      (uid, new java.sql.Timestamp(t0 + t), eid, p, op)
-    def batch(id: Long, rows: Seq[(Long, java.sql.Timestamp, Long, Double, String)]): Unit =
-      StreamingJob.applyCdcBatch(
-        rows.toDF("user_id", "timestamp", "event_id", "price", "op"), id, root)
-    batch(0, Seq(row(1, 1000, 1, 10.0, "U"), row(2, 1000, 2, 20.0, "U")))
-    batch(1, Seq(row(1, 2000, 3, 0.0, "D"))) // delete user 1
-    val afterDelete = Upsert.read(spark, root).get
-      .select("user_id").as[Long].collect().toSet
-    assert(afterDelete === Set(2L), "tombstone failed to remove the key")
-    batch(2, Seq(row(1, 3000, 4, 30.0, "U"))) // re-insert user 1
-    val afterReinsert = Upsert.read(spark, root).get
-      .select("user_id", "last_price").as[(Long, Double)].collect().toMap
-    assert(afterReinsert === Map(1L -> 30.0, 2L -> 20.0),
-      "re-insert after delete must restore the key with the new value")
-  }
-
-  test("stream-static enrichment: broadcast dim join, left keeps unmatched") {
-    import spark.implicits._
-    val input = MemoryStream[TradeEvent](spark)
-    val dim = Seq(("BTC", "crypto"), ("ETH", "crypto"))
-      .toDF("symbol", "sector")
-    val q = graft.streaming.StreamJoins
-      .enrichWithDimension(input.toDF(), dim)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("enrich").start()
-    try {
-      input.addData(
-        TradeEvent("BTC", new java.sql.Timestamp(t0), 1.0, 100.0),
-        TradeEvent("XAU", new java.sql.Timestamp(t0), 1.0, 200.0))
-      q.processAllAvailable()
-      val out = spark.table("enrich")
-        .select("symbol", "sector").as[(String, Option[String])]
-        .collect().toMap
-      // enriched where the dim knows the symbol, NULL (not dropped) where not
-      assert(out === Map("BTC" -> Some("crypto"), "XAU" -> None))
-    } finally q.stop()
-  }
-
-  test("streaming gaps: aggregated stream equals batch interarrival " +
-    "histogram, state carries across batches, burst flags online") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    import graft.streaming.EventStream
-    val input = MemoryStream[EventStream.UserEvent](spark)
-    val q = EventStream.gapStream(spark, input.toDS()).toDF()
-      .writeStream.outputMode("append")
-      .format("memory").queryName("gaps_test").start()
-    try {
-      def ev(id: Long, et: String, offMs: Long) =
-        EventStream.UserEvent(id, 1L, et, new java.sql.Timestamp(t0 + offMs))
-      // clicks: sub-second burst (decade-5 gaps) then a 2-minute lull
-      // (decade 8); views steady at 10 s (decade 7); the lull SPLITS
-      // across micro-batches so the cross-batch state pairing is
-      // what's tested
-      val all = Seq(
-        ev(1, "click", 0), ev(2, "click", 100), ev(3, "click", 450),
-        ev(4, "view", 0), ev(5, "view", 10000),
-        ev(6, "click", 120450), ev(7, "view", 20000), ev(8, "view", 30000))
-      val (b1, b2) = all.splitAt(5)
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-      val streamed = spark.table("gaps_test")
-      assert(streamed.count() === all.size - 2) // one headless row per type
-      // sub-second gaps flag burst online; the lull and the 10 s cadence
-      // do not
-      val bursts = streamed.filter(col("burst"))
-        .select("event_id").as[Long].collect().toSet
-      assert(bursts === Set(2L, 3L))
-      // aggregating the stream reproduces the batch histogram bit-for-bit
-      val agg = streamed.groupBy("event_type", "decade")
-        .agg(count(lit(1)).as("n_gaps"), min("gap_us").as("min_gap_us"),
-          max("gap_us").as("max_gap_us"), sum("gap_us").as("sum_gap_us"))
-      val batchIn = all.toDF()
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("ts"), lit(0.0).as("value"), lit("").as("props"))
-      val batch = graft.ops.EventAnalytics.interarrival(batchIn)
-      assert(agg.except(batch).isEmpty && batch.except(agg).isEmpty,
-        "stream aggregation must equal the batch interarrival histogram")
-    } finally q.stop()
-  }
-
-  test("vpin stream: volume-clock bars equal the batch op bit-exactly " +
-    "on the ppm outputs, cumulative emissions converge last-writer") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    import graft.streaming.VpinStream
-    def tr(id: Long, sym: String, offMs: Long, p: Double, v: Double) =
-      VpinStream.Trade(id, sym, new java.sql.Timestamp(t0 + offMs), p, v)
-    // up/down/flat moves (tick rule exercises +1/-1/carry) and uneven
-    // volumes so bars cut mid-tape, differently per symbol
-    val tape = Seq(
-      tr(1, "BTC", 0, 10.00, 1.5), tr(2, "BTC", 1000, 10.05, 2.0),
-      tr(3, "BTC", 2000, 10.05, 0.7), tr(4, "BTC", 3000, 9.95, 3.1),
-      tr(5, "BTC", 4000, 10.10, 1.1), tr(6, "BTC", 5000, 10.10, 2.2),
-      tr(7, "BTC", 6000, 10.20, 0.4), tr(8, "BTC", 7000, 10.15, 1.9),
-      tr(9, "ETH", 500, 5.00, 4.0), tr(10, "ETH", 1500, 5.10, 0.6),
-      tr(11, "ETH", 2500, 5.05, 2.5), tr(12, "ETH", 3500, 5.05, 1.0),
-      tr(13, "ETH", 4500, 5.20, 3.3), tr(14, "ETH", 5500, 5.15, 0.9))
-    val bars = 3
-    val batchIn = tape.toDF().withColumnRenamed("ts", "timestamp")
-    val batch = graft.ops.TradeOps.vpin(batchIn, bars)
-      .select("symbol", "bar", "n_ticks", "vol_micro", "imb_ppm")
-    // the batch-derived per-symbol volume clocks, fed to the twin the
-    // way production feeds yesterday's tape sizing
-    val sizes = batchIn
-      .withColumn("vm", expr("CAST(round(volume * 1000000) AS BIGINT)"))
-      .groupBy("symbol").agg(expr(s"sum(vm) div $bars + 1").as("bs"))
-      .as[(String, Long)].collect().toMap
-    val input = MemoryStream[VpinStream.Trade](spark)
-    val q = VpinStream.barStream(spark, input.toDS(), sizes,
-      default = sizes.values.max).toDF()
-      .writeStream.outputMode("update").format("memory")
-      .queryName("vpin_test").start()
-    try {
-      // three micro-batches so bars straddle batch boundaries and the
-      // in-progress snapshots get overwritten by later fills
-      val (b1, rest) = tape.splitAt(5)
-      val (b2, b3) = rest.splitAt(5)
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-      input.addData(b3: _*); q.processAllAvailable()
-      // last-writer per (symbol, bar): n_ticks only grows for a key,
-      // so max-n_ticks IS the latest snapshot
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("symbol", "bar").orderBy(col("n_ticks").desc)
-      val streamed = spark.table("vpin_test")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn")
-      assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty,
-        "converged volume bars must equal the batch vpin table")
-      // every ppm is bit-exact against the batch integer algebra
-      assert(streamed.join(batch, Seq("symbol", "bar"))
-        .count() === batch.count())
-    } finally q.stop()
-  }
-
-  test("depth stream: converged level ladder equals the batch " +
-    "depthLadder bit-exactly once the batch anchor is applied") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    import graft.streaming.DepthStream
-    def tr(id: Long, sym: String, offMs: Long, p: Double, v: Double) =
-      DepthStream.Trade(id, sym, new java.sql.Timestamp(t0 + offMs), p, v)
-    // revisited levels (10.05 twice on different signs, 5.05 twice),
-    // a first-tick neutral per symbol, and a level far outside the
-    // serving window (99.99) that the anchor must exclude
-    val tape = Seq(
-      tr(1, "BTC", 0, 10.00, 1.5), tr(2, "BTC", 1000, 10.05, 2.0),
-      tr(3, "BTC", 2000, 10.05, 0.7), tr(4, "BTC", 3000, 9.95, 3.1),
-      tr(5, "BTC", 4000, 99.99, 0.2), tr(6, "BTC", 5000, 10.10, 1.1),
-      tr(7, "BTC", 6000, 10.05, 0.4), tr(8, "BTC", 7000, 10.15, 1.9),
-      tr(9, "ETH", 500, 5.00, 4.0), tr(10, "ETH", 1500, 5.10, 0.6),
-      tr(11, "ETH", 2500, 5.05, 2.5), tr(12, "ETH", 3500, 5.05, 1.0),
-      tr(13, "ETH", 4500, 5.20, 3.3), tr(14, "ETH", 5500, 5.15, 0.9))
-    val batchIn = tape.toDF().withColumnRenamed("ts", "timestamp")
-    val batch = graft.ops.TradeOps.depthLadder(batchIn, windowCents = 500)
-    val input = MemoryStream[DepthStream.Trade](spark)
-    val q = DepthStream.depthStream(spark, input.toDS()).toDF()
-      .writeStream.outputMode("update").format("memory")
-      .queryName("depth_test").start()
-    try {
-      // three micro-batches so levels are revisited ACROSS batches and
-      // earlier cumulative snapshots get overwritten by later ones
-      val (b1, rest) = tape.splitAt(5)
-      val (b2, b3) = rest.splitAt(5)
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-      input.addData(b3: _*); q.processAllAvailable()
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("symbol", "pc").orderBy(col("n_trades").desc)
-      val converged = spark.table("depth_test")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn")
-      // serving-time anchor: the batch op's final last price ±500
-      val lastPx = batchIn
-        .withColumn("pcl", expr("CAST(round(price * 100) AS BIGINT)"))
-        .groupBy(col("symbol").as("sym2"))
-        .agg(max_by(col("pcl"), col("event_id")).as("last_pc"))
-      val anchored = converged
-        .join(lastPx, col("symbol") === col("sym2"))
-        .filter(abs(col("pc") - col("last_pc")) <= 500)
-        .select(col("symbol"), col("pc"),
-          (col("pc") - col("last_pc")).as("rel_cents"), col("n_trades"),
-          col("buy_vol_micro"), col("sell_vol_micro"),
-          col("neutral_vol_micro"))
-      assert(anchored.except(batch).isEmpty && batch.except(anchored).isEmpty,
-        "anchored converged ladder must equal the batch depthLadder table")
-      // the excluded far level must be in the store but not the view
-      assert(converged.filter(col("pc") === 9999L).count() === 1)
-      assert(batch.filter(col("pc") === 9999L).count() === 0)
-    } finally q.stop()
-  }
-
-  test("kyle stream: running impact slope equals the batch op " +
-    "bit-exactly, cumulative emissions replay as no-ops") {
-    import spark.implicits._
-    import graft.streaming.KyleStream
-    def tr(id: Long, sym: String, offMs: Long, p: Double, v: Double) =
-      KyleStream.Trade(id, sym, new java.sql.Timestamp(t0 + offMs), p, v)
-    // up/down/flat moves (tick rule: +1/-1/carry; leading flat pair
-    // exercises the sgn=0 cold carry) and uneven volumes
-    val tape = Seq(
-      tr(1, "BTC", 0, 10.00, 1.5), tr(2, "BTC", 1000, 10.00, 2.0),
-      tr(3, "BTC", 2000, 10.05, 0.7), tr(4, "BTC", 3000, 9.95, 3.1),
-      tr(5, "BTC", 4000, 10.10, 1.1), tr(6, "BTC", 5000, 10.10, 2.2),
-      tr(7, "BTC", 6000, 10.20, 0.4), tr(8, "BTC", 7000, 10.15, 1.9),
-      tr(9, "ETH", 500, 5.00, 4.0), tr(10, "ETH", 1500, 5.10, 0.6),
-      tr(11, "ETH", 2500, 5.05, 2.5), tr(12, "ETH", 3500, 5.05, 1.0),
-      tr(13, "ETH", 4500, 5.20, 3.3), tr(14, "ETH", 5500, 5.15, 0.9),
-      // single-trade symbol: batch emits no regression row, nor must we
-      tr(15, "DOGE", 100, 0.10, 50.0))
-    val batchIn = tape.toDF().withColumnRenamed("ts", "timestamp")
-    val batch = graft.ops.TradeOps.kyleLambda(batchIn)
-      .select("symbol", "n_ticks", "lambda_cents_per_unit")
-    val input = MemoryStream[KyleStream.Trade](spark)
-    val q = KyleStream.lambdaStream(spark, input.toDS()).toDF()
-      .writeStream.outputMode("update").format("memory")
-      .queryName("kyle_test").start()
-    try {
-      // three micro-batches so the regression accumulates across
-      // batch boundaries and earlier snapshots get superseded
-      val (b1, rest) = tape.splitAt(5)
-      val (b2, b3) = rest.splitAt(5)
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-      input.addData(b3: _*); q.processAllAvailable()
-      // n_ticks only grows per symbol, so max-n_ticks IS the latest
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("symbol").orderBy(col("n_ticks").desc)
-      val streamed = spark.table("kyle_test")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn")
-      assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty,
-        "converged slope snapshots must equal the batch kyleLambda table")
-      // replay no-op: merging the same cumulative snapshot twice through
-      // the idempotent upsert store leaves the table unchanged
-      val store = tmpDir("kyle-upsert")
-      val dataCols = streamed.columns.map(col).toSeq
-      Upsert.merge(streamed, 0L, store, Seq("symbol"))
-      val once = Upsert.read(spark, store).get
-        .select(dataCols: _*).collect().toSet
-      Upsert.merge(streamed, 1L, store, Seq("symbol"))
-      val twice = Upsert.read(spark, store).get
-        .select(dataCols: _*).collect().toSet
-      assert(once === twice, "replaying a cumulative snapshot must be a no-op")
-    } finally q.stop()
-  }
-
-  test("drawdown stream: running peak-to-trough equals the batch op " +
-    "bit-exactly, cumulative emissions replay as no-ops") {
-    import spark.implicits._
-    import graft.streaming.DrawdownStream
-    def tr(id: Long, sym: String, offMs: Long, p: Double, v: Double) =
-      DrawdownStream.Trade(id, sym, new java.sql.Timestamp(t0 + offMs), p, v)
-    // BTC: new high then deep trough then partial recovery (the dd
-    // max lands mid-tape); ETH: monotone rise (zero drawdown, frac 0);
-    // DOGE: single trade (n=1, dd=0)
-    val tape = Seq(
-      tr(1, "BTC", 0, 10.00, 1.0), tr(2, "BTC", 1000, 10.50, 1.0),
-      tr(3, "BTC", 2000, 9.40, 1.0), tr(4, "BTC", 3000, 9.90, 1.0),
-      tr(5, "BTC", 4000, 10.40, 1.0), tr(6, "BTC", 5000, 10.10, 1.0),
-      tr(7, "ETH", 500, 5.00, 1.0), tr(8, "ETH", 1500, 5.10, 1.0),
-      tr(9, "ETH", 2500, 5.20, 1.0),
-      tr(10, "DOGE", 100, 0.10, 1.0))
-    val batchIn = tape.toDF().withColumnRenamed("ts", "timestamp")
-    val batch = graft.ops.TradeOps.maxDrawdown(batchIn)
-      .select("symbol", "n_ticks", "max_dd_cents", "max_dd_frac")
-    val input = MemoryStream[DrawdownStream.Trade](spark)
-    val q = DrawdownStream.drawdownStream(spark, input.toDS()).toDF()
-      .writeStream.outputMode("update").format("memory")
-      .queryName("dd_test").start()
-    try {
-      // three micro-batches so the peak carries across batch
-      // boundaries and earlier snapshots get superseded
-      val (b1, rest) = tape.splitAt(3)
-      val (b2, b3) = rest.splitAt(4)
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-      input.addData(b3: _*); q.processAllAvailable()
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("symbol").orderBy(col("n_ticks").desc)
-      val streamed = spark.table("dd_test")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn")
-      assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty,
-        "converged drawdown snapshots must equal the batch maxDrawdown table")
-      // replay no-op through the idempotent upsert store
-      val store = tmpDir("dd-upsert")
-      val dataCols = streamed.columns.map(col).toSeq
-      Upsert.merge(streamed, 0L, store, Seq("symbol"))
-      val once = Upsert.read(spark, store).get
-        .select(dataCols: _*).collect().toSet
-      Upsert.merge(streamed, 1L, store, Seq("symbol"))
-      val twice = Upsert.read(spark, store).get
-        .select(dataCols: _*).collect().toSet
-      assert(once === twice, "replaying a cumulative snapshot must be a no-op")
-    } finally q.stop()
-  }
-
-  test("resample stream: converged dense grid equals the batch " +
-    "interpolateHourly bit-exactly, including cross-batch revisions of " +
-    "an open bucket's provisional gap values") {
-    import spark.implicits._
-    import graft.streaming.ResampleStream
-    val H = 3600000L
-    def tr(id: Long, sym: String, offMs: Long, p: Double) =
-      ResampleStream.Trade(id, sym, new java.sql.Timestamp(t0 + offMs), p, 1.0)
-    // BTC: h0 (two trades — last-by-event_id is the representative),
-    // then a 2-hour gap to h3 whose value CHANGES across micro-batches
-    // (13 → 16), then h5. ETH: adjacent h0/h1 (no gap) plus h3.
-    val tape = Seq(
-      tr(1, "BTC", 0, 10.0), tr(2, "BTC", 60000, 11.0),
-      tr(3, "ETH", 1000, 5.0), tr(4, "ETH", H + 1000, 6.0),
-      tr(5, "BTC", 3 * H, 13.0), tr(6, "BTC", 3 * H + 120000, 16.0),
-      tr(7, "ETH", 3 * H + 500, 9.0), tr(8, "BTC", 5 * H + 1000, 20.0))
-    val batchIn = tape.toDF().withColumnRenamed("ts", "timestamp")
-    val batch = graft.ops.Resample.interpolateHourly(batchIn)
-    val input = MemoryStream[ResampleStream.Trade](spark)
-    val q = ResampleStream.resampleStream(spark, input.toDS()).toDF()
-      .writeStream.outputMode("update").format("memory")
-      .queryName("resample_test").start()
-    try {
-      // batch split puts trades 5 and 6 (same open bucket, different
-      // price) in DIFFERENT micro-batches: the h1/h2 gap rows are first
-      // emitted provisionally interpolated toward 13, then re-emitted
-      // toward 16 — the converged view must keep only the revision
-      val (b1, rest) = tape.splitAt(5)
-      val (b2, b3) = rest.splitAt(2)
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-      input.addData(b3: _*); q.processAllAvailable()
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("symbol", "bucket").orderBy(col("ver").desc)
-      val converged = spark.table("resample_test")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select("symbol", "bucket", "price_filled", "n_trades_ff")
-      assert(converged.except(batch).isEmpty && batch.except(converged).isEmpty,
-        "converged streamed grid must equal the batch interpolateHourly " +
-          "table bit-exactly")
-      // the provisional h1 gap row (toward 13) must have been emitted
-      // before the revision (toward 16) — both generations in the store
-      val h1 = spark.table("resample_test")
-        .filter(col("symbol") === "BTC" &&
-          col("bucket") === new java.sql.Timestamp(Math.floorDiv(t0, H) * H + H))
-        .select("price_filled").as[Double].collect().toSet
-      assert(h1.size === 2, s"expected provisional + revised h1 values: $h1")
     } finally q.stop()
   }
 }
