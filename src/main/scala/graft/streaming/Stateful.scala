@@ -117,4 +117,80 @@ object Stateful {
           out.iterator
       }
   }
+
+  case class CusumState(first: Long, c: Long, runMin: Long, runMax: Long)
+
+  case class CusumRow(symbol: String, ts: java.sql.Timestamp,
+      cusum_pos: Double, cusum_neg: Double, drifted: Boolean)
+
+  /** Streaming form of [[graft.ops.TradeOps.cusum]]: the per-symbol
+    * CUSUM state is FOUR Longs (first price, running sum of deviations,
+    * its running min and max — all exact micro-unit integers), so the
+    * stream carries the same exact arithmetic the batch windows
+    * compute and the two forms agree to the BIT on ordered input
+    * (spec'd in StreamingSpec). Bounded state per key, no buffer —
+    * the monitoring shape that runs forever. */
+  def cusumStream(spark: SparkSession, ds: Dataset[TradeEvent],
+      h: Double = 500.0): Dataset[CusumRow] = {
+    import spark.implicits._
+    val hMicros = math.round(h * 1e6)
+    ds.groupByKey(_.symbol)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (symbol: String, events: Iterator[TradeEvent],
+            state: GroupState[CusumState]) =>
+          var st = state.getOption.orNull
+          val out = events.toSeq.sortBy(_.ts.getTime).map { e =>
+            val pm = math.round(e.price * 1e6)
+            st =
+              if (st == null) CusumState(pm, 0L, 0L, 0L)
+              else {
+                val c = st.c + (pm - st.first)
+                CusumState(st.first, c,
+                  math.min(st.runMin, c), math.max(st.runMax, c))
+              }
+            CusumRow(symbol, e.ts,
+              (st.c - st.runMin).toDouble / 1000000.0,
+              (st.runMax - st.c).toDouble / 1000000.0,
+              st.c - st.runMin > hMicros || st.runMax - st.c > hMicros)
+          }
+          state.update(st)
+          out.iterator
+      }
+  }
+
+  case class AnomState(buf: Seq[Long])
+
+  case class AnomRow(symbol: String, ts: java.sql.Timestamp, price: Double)
+
+  /** Streaming twin of [[graft.ops.TradeOps.anomalyFlags]]: the last
+    * `n` cent prices ride in per-key state and the SAME all-integer
+    * predicate `(n·x − Σx)² > k²·(n·Σx² − (Σx)²)` fires on each full
+    * buffer — zero floats, so stream and batch flag the identical row
+    * set by construction (spec'd). Emits only anomalous rows, the
+    * alerting shape: output ∝ anomalies, state = n longs per key. */
+  def anomalyStream(spark: SparkSession, ds: Dataset[TradeEvent],
+      n: Int = 20, k: Int = 3): Dataset[AnomRow] = {
+    import spark.implicits._
+    ds.groupByKey(_.symbol)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (symbol: String, events: Iterator[TradeEvent],
+            state: GroupState[AnomState]) =>
+          var buf = state.getOption.map(_.buf.toVector)
+            .getOrElse(Vector.empty[Long])
+          val out = events.toSeq.sortBy(_.ts.getTime).flatMap { e =>
+            val pc = math.round(e.price * 100)
+            buf = (buf :+ pc).takeRight(n)
+            if (buf.size == n) {
+              val s1 = buf.sum
+              val s2 = buf.map(x => x * x).sum
+              val lhs = n * pc - s1
+              if (lhs * lhs > k.toLong * k * (n * s2 - s1 * s1))
+                Some(AnomRow(symbol, e.ts, e.price))
+              else None
+            } else None
+          }
+          state.update(AnomState(buf))
+          out.iterator
+      }
+  }
 }

@@ -566,6 +566,76 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("streaming cusum: bit-equal to the batch windows across micro-batches") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val input = MemoryStream[TradeEvent](spark)
+    val q = Stateful.cusumStream(spark, input.toDS(), h = 15.0).toDF()
+      .writeStream.outputMode("append")
+      .format("memory").queryName("cusum_test").start()
+    try {
+      def ev(i: Int, sym: String, p: Double) =
+        TradeEvent(sym, new java.sql.Timestamp(t0 + i * 1000L), p, 1.0)
+      // drift up on BTC, drift down on ETH; split MID-DRIFT across
+      // batches so the state carryover is what's being tested
+      val all = (1 to 5).map(ev(_, "BTC", 100.0)) ++
+        (6 to 9).map(ev(_, "BTC", 110.0)) ++
+        (1 to 4).map(ev(_, "ETH", 50.0)) ++
+        (5 to 8).map(ev(_, "ETH", 43.5))
+      val (b1, b2) = all.splitAt(7)
+      input.addData(b1: _*); q.processAllAvailable()
+      input.addData(b2: _*); q.processAllAvailable()
+      val streamed = spark.table("cusum_test")
+        .select("symbol", "ts", "cusum_pos", "cusum_neg", "drifted")
+      // the batch form needs (timestamp, event_id) — ts is unique per
+      // symbol here, so any constant event_id gives the same order
+      val batchIn = all.toDF()
+        .select(lit(0L).as("event_id"), col("symbol"),
+          col("ts").as("timestamp"), col("price"), col("volume"),
+          (col("price") * col("volume")).as("usd_volume"))
+      val batch = graft.ops.TradeOps.cusum(batchIn, h = 15.0)
+        .select(col("symbol"), col("timestamp").as("ts"),
+          col("cusum_pos"), col("cusum_neg"), col("drifted"))
+      assert(streamed.count() === all.size)
+      assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
+      // the down-drift fires the negative side only
+      assert(spark.table("cusum_test")
+        .filter(col("symbol") === "ETH" && col("drifted"))
+        .agg(min("cusum_neg")).head.getDouble(0) > 15.0)
+    } finally q.stop()
+  }
+
+  test("streaming anomaly: flags the identical rows as the batch windows") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val input = MemoryStream[TradeEvent](spark)
+    val q = Stateful.anomalyStream(spark, input.toDS()).toDF()
+      .writeStream.outputMode("append")
+      .format("memory").queryName("anomaly_test").start()
+    try {
+      def ev(i: Int, p: Double) =
+        TradeEvent("BTC", new java.sql.Timestamp(t0 + i * 1000L), p, 1.0)
+      // flat feed with two spikes, the second in a later micro-batch so
+      // the ring buffer must carry across batches
+      val all = (1 to 60).map { i =>
+        ev(i, if (i == 30 || i == 52) 200.0 else 100.0)
+      }
+      val (b1, b2) = all.splitAt(40)
+      input.addData(b1: _*); q.processAllAvailable()
+      input.addData(b2: _*); q.processAllAvailable()
+      val streamed = spark.table("anomaly_test")
+        .select("symbol", "ts", "price")
+      val batchIn = all.toDF()
+        .select(lit(0L).as("event_id"), col("symbol"),
+          col("ts").as("timestamp"), col("price"), col("volume"),
+          (col("price") * col("volume")).as("usd_volume"))
+      val batch = graft.ops.TradeOps.anomalyFlags(batchIn)
+        .select(col("symbol"), col("timestamp").as("ts"), col("price"))
+      assert(streamed.count() === 2) // exactly the two spike rows
+      assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
+    } finally q.stop()
+  }
+
   test("observe API: per-batch ingest metrics arrive on query progress") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
