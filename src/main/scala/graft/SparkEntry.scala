@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Decode
-import graft.ops.{AsOfJoin, Dedup, EventAnalytics, Incremental, Predict, Relational, Resample, Scale, TextOps, TradeOps}
+import graft.ops.{AsOfJoin, Dedup, EventAnalytics, Incremental, Predict, Relational, Resample, Scale, TradeOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -49,10 +49,6 @@ object SparkEntry {
     "o6_set_ops" -> ((s, dir) => TradeOps.setOps(trades(s, dir))),
     "j_full_outer_daily" -> ((s, dir) => TradeOps.fullOuterDaily(trades(s, dir))),
     "a_grouping_sets" -> ((s, dir) => Relational.groupingSetsSummary(s, dir)),
-    "t_normalize" -> ((s, dir) => TextOps.normalize(Tables.load(s, dir, "documents"))),
-    "t_stratified_sample" -> ((s, dir) => TextOps.stratifiedSample(Tables.load(s, dir, "documents"))),
-    "t_pack_sequences" -> ((s, dir) => TextOps.packSequences(Tables.load(s, dir, "documents"))),
-    "t_source_mix" -> ((s, dir) => TextOps.sourceMixSample(Tables.load(s, dir, "documents"))),
     "f5_time_convert" -> ((s, dir) => TradeOps.timeConvert(trades(s, dir))),
     "s5_csv_roundtrip" -> ((s, dir) => TradeOps.csvRoundTrip(s, trades(s, dir))),
     "s11_orc_roundtrip" -> ((s, dir) => TradeOps.orcRoundTrip(s, trades(s, dir))),
@@ -69,7 +65,6 @@ object SparkEntry {
     "w5_ewma" -> ((s, dir) => TradeOps.ewma(trades(s, dir))),
     "w6_rolling_median" -> ((s, dir) => TradeOps.rollingMedian(trades(s, dir))),
     "a11_price_histogram" -> ((s, dir) => TradeOps.priceHistogram(trades(s, dir))),
-    "t_bigram_topk" -> ((s, dir) => TextOps.bigramTopK(Tables.load(s, dir, "documents"))),
     "o2_last_row" -> ((s, dir) => TradeOps.lastRow(trades(s, dir))),
     "o4_ordered_split" -> ((s, dir) => TradeOps.orderedSplit(trades(s, dir))),
     // -- joins (§2.6; as-of per predict_btc.py:88-91) --------------------
@@ -146,25 +141,9 @@ object SparkEntry {
     "b_bucketed_join" -> ((s, dir) => Scale.bucketedOrderRevenue(s, dir)),
     "k9_zorder_roundtrip" -> ((s, dir) => Scale.zorderRoundTrip(s, trades(s, dir))),
     // -- training-data pipeline tier (SURVEY.md §7.5) --------------------
-    "t_token_stats" -> ((s, dir) => TextOps.tokenStats(Tables.load(s, dir, "documents"))),
-    "t_lang_id" -> ((s, dir) => TextOps.langId(Tables.load(s, dir, "documents"))),
-    "t_quality_score" -> ((s, dir) => TextOps.qualityScore(Tables.load(s, dir, "documents"))),
-    "t_fingerprint" -> ((s, dir) => TextOps.fingerprint(Tables.load(s, dir, "documents"))),
-    "t_repetition" -> ((s, dir) => TextOps.repetitionStats(Tables.load(s, dir, "documents"))),
-    "t_chunking" -> ((s, dir) => TextOps.chunkDocs(Tables.load(s, dir, "documents"))),
-    "t_pii_redact" -> ((s, dir) => TextOps.piiRedact(Tables.load(s, dir, "documents"))),
-    "t_vocab_topk" -> ((s, dir) => TextOps.vocabTopK(Tables.load(s, dir, "documents"))),
-    "t_freq_spectrum" -> ((s, dir) => TextOps.freqSpectrum(Tables.load(s, dir, "documents"))),
-    "t_df_rarity" -> ((s, dir) => TextOps.dfRarity(Tables.load(s, dir, "documents"))),
-    "t_bpe_train" -> ((s, dir) => TextOps.bpeTrain(Tables.load(s, dir, "documents"))),
-    "t_bpe_encode" -> ((s, dir) => TextOps.bpeEncode(Tables.load(s, dir, "documents"))),
-    "t_domain_quota" -> ((s, dir) => TextOps.domainQuota(Tables.load(s, dir, "documents"))),
-    "d_cluster_best" -> ((s, dir) => Dedup.clusterBest(Tables.load(s, dir, "documents"))),
-    "t_tfidf_topk" -> ((s, dir) => TextOps.tfidfTopK(Tables.load(s, dir, "documents"))),
     "k10_compaction" -> ((s, dir) => TradeOps.compactRoundTrip(s, trades(s, dir))),
     "q4_returned_priority" -> ((s, dir) => Relational.returnedPriorityOrders(s, dir)),
     "q6_forecast_revenue" -> ((s, dir) => Relational.forecastRevenue(s, dir)),
-    "d_contamination" -> ((s, dir) => TextOps.contamination(Tables.load(s, dir, "documents"))),
     "d_exact_dedup" -> ((s, dir) => Dedup.exactDedup(Tables.load(s, dir, "documents"))),
     "d_minhash_sig" -> ((s, dir) => Dedup.minhashSignatures(Tables.load(s, dir, "documents"))),
     "d_minhash_pairs" -> ((s, dir) => Dedup.minhashPairs(Tables.load(s, dir, "documents"))),
@@ -178,7 +157,6 @@ object SparkEntry {
     "d_ngram_jaccard" -> ((s, dir) => Dedup.ngramJaccard(Tables.load(s, dir, "documents"))),
     "d_embedding_dup" -> ((s, dir) => Dedup.embeddingDup(s, dir)),
     "d_cos_threshold_curve" -> ((s, dir) => Dedup.cosThresholdCurve(s, dir)),
-    "d_segment_dedup" -> ((s, dir) => TextOps.segmentDedup(Tables.load(s, dir, "documents"))),
     "d_dedup_resolve" -> ((s, dir) => Dedup.resolveDuplicates(Tables.load(s, dir, "documents"))),
     "mv_incremental" -> ((s, dir) => Incremental.incrementalAgg(Tables.events(s, dir))),
     "e_funnel" -> ((s, dir) => EventAnalytics.funnel(Tables.events(s, dir))),
@@ -193,14 +171,6 @@ object SparkEntry {
       Incremental.retractableMedian(Tables.events(s, dir))),
     "mv_topk_retract" -> ((s, dir) =>
       Incremental.retractableTopK(Tables.events(s, dir))),
-    "t_importance_weights" -> ((s, dir) =>
-      TextOps.importanceWeights(Tables.load(s, dir, "documents"))),
-    "t_ngram_novelty" -> ((s, dir) =>
-      TextOps.ngramNovelty(Tables.load(s, dir, "documents"))),
-    "t_langid_confusion" -> ((s, dir) =>
-      TextOps.langIdConfusion(Tables.load(s, dir, "documents"))),
-    "t_bpe_fertility" -> ((s, dir) =>
-      TextOps.bpeFertility(Tables.load(s, dir, "documents"))),
     "w7_gap_detect" -> ((s, dir) => TradeOps.gapDetect(trades(s, dir))),
     "p2_dead_letter" -> ((s, dir) => graft.ingest.Decode.deadLetterDecode(trades(s, dir))),
     "a_hll_merge" -> ((s, dir) => Relational.hllMergeDistinct(s, dir)),
@@ -213,12 +183,8 @@ object SparkEntry {
       Dedup.editDistance(Tables.load(s, dir, "documents"))),
     "d_prefix_dup" -> ((s, dir) =>
       Dedup.prefixDup(Tables.load(s, dir, "documents"))),
-    "t_charclass_profile" -> ((s, dir) =>
-      TextOps.charClassProfile(Tables.load(s, dir, "documents"))),
     "k16_partition_evolution" -> ((s, dir) =>
       TradeOps.partitionEvolution(s, trades(s, dir))),
-    "t_length_outliers" -> ((s, dir) =>
-      TextOps.lengthOutliers(Tables.load(s, dir, "documents"))),
     "d_minhash_est_error" -> ((s, dir) =>
       Dedup.minhashEstError(Tables.load(s, dir, "documents"))),
     "w_ichimoku" -> ((s, dir) => TradeOps.ichimoku(trades(s, dir))),
@@ -233,14 +199,9 @@ object SparkEntry {
     "w10_drawdown" -> ((s, dir) => TradeOps.drawdown(trades(s, dir))),
     "a12_pairwise_corr" -> ((s, dir) => TradeOps.pairwiseCorr(trades(s, dir))),
     "a13_vwap" -> ((s, dir) => TradeOps.vwap(trades(s, dir))),
-    // -- fingerprint/coverage additions ----------------------------------
-    "t_winnow" -> ((s, dir) => TextOps.winnow(Tables.load(s, dir, "documents"))),
-    "d_substring_dup" -> ((s, dir) => TextOps.substringDup(Tables.load(s, dir, "documents"))),
-    "t_lm_coverage" -> ((s, dir) => TextOps.lmCoverage(Tables.load(s, dir, "documents"))),
     "e_cooccurrence" -> ((s, dir) => EventAnalytics.cooccurrence(Tables.events(s, dir))),
     "w11_obv" -> ((s, dir) => TradeOps.obv(trades(s, dir))),
     "f12_winsorize" -> ((s, dir) => TradeOps.winsorize(trades(s, dir))),
-    "t_boilerplate" -> ((s, dir) => TextOps.boilerplateStrip(Tables.load(s, dir, "documents"))),
     "w12_stochastic" -> ((s, dir) => TradeOps.stochasticK(trades(s, dir))),
     "a14_atr" -> ((s, dir) => TradeOps.atr(trades(s, dir))),
     "a15_anomaly" -> ((s, dir) => TradeOps.anomalyFlags(trades(s, dir))),
@@ -251,7 +212,6 @@ object SparkEntry {
     "a17_beta" -> ((s, dir) => TradeOps.marketBeta(trades(s, dir))),
     "w14_macd" -> ((s, dir) => TradeOps.macd(trades(s, dir))),
     "a18_mode" -> ((s, dir) => TradeOps.modalPrice(trades(s, dir))),
-    "t_code_detect" -> ((s, dir) => TextOps.codeDetect(Tables.load(s, dir, "documents"))),
     "s12_gzip_roundtrip" -> ((s, dir) => TradeOps.gzipJsonRoundTrip(s, trades(s, dir))),
     "a19_robust" -> ((s, dir) => TradeOps.robustStats(trades(s, dir))),
     "a29_weighted_median" -> ((s, dir) => TradeOps.weightedMedian(trades(s, dir))),
@@ -287,7 +247,6 @@ object SparkEntry {
     "k12_cdc_apply" -> ((s, dir) => Incremental.cdcApply(trades(s, dir))),
     "d_containment" -> ((s, dir) => Dedup.containment(Tables.load(s, dir, "documents"))),
     "d_lsh_recall" -> ((s, dir) => Dedup.lshRecall(Tables.load(s, dir, "documents"))),
-    "t_feature_hash" -> ((s, dir) => TextOps.featureHash(Tables.load(s, dir, "documents"))),
     "w16_pivot_points" -> ((s, dir) => TradeOps.pivotPoints(trades(s, dir))),
     "w17_twap" -> ((s, dir) => TradeOps.twap(trades(s, dir))),
     "o9_group_split" -> ((s, dir) => TradeOps.groupSplit(trades(s, dir))),
@@ -314,8 +273,6 @@ object SparkEntry {
       Dedup.crossDedup(Tables.load(s, dir, "documents"))),
     "o10_purged_embargo" -> ((s, dir) =>
       TradeOps.purgedEmbargoSplits(trades(s, dir))),
-    "t_tv_drift" -> ((s, dir) =>
-      TextOps.tvDrift(Tables.load(s, dir, "documents"))),
     "k15_merge_on_read" -> ((s, dir) =>
       TradeOps.mergeOnRead(s, trades(s, dir))),
     "s17_zonemap_prune" -> ((s, dir) =>
@@ -335,8 +292,6 @@ object SparkEntry {
     "w_mfi" -> ((s, dir) => TradeOps.mfi(trades(s, dir))),
     "e_interarrival" -> ((s, dir) =>
       EventAnalytics.interarrival(Tables.events(s, dir))),
-    "t_readability" -> ((s, dir) =>
-      TextOps.readability(Tables.load(s, dir, "documents"))),
     "e_markov_stationary" -> ((s, dir) =>
       EventAnalytics.markovStationary(Tables.events(s, dir))),
     "e_simpson_diversity" -> ((s, dir) =>
@@ -347,8 +302,6 @@ object SparkEntry {
     "w_vol_regime_banded" -> ((s, dir) =>
       TradeOps.volRegimeBanded(trades(s, dir))),
     "w_donchian" -> ((s, dir) => TradeOps.donchian(trades(s, dir))),
-    "t_heaps_law" -> ((s, dir) =>
-      TextOps.heapsLaw(Tables.load(s, dir, "documents"))),
     "e_rate_change" -> ((s, dir) =>
       EventAnalytics.rateChange(Tables.events(s, dir))),
     "d_len_dup_bias" -> ((s, dir) =>
@@ -378,16 +331,12 @@ object SparkEntry {
     "w_adx" -> ((s, dir) => TradeOps.adx(trades(s, dir))),
     "a_acf_profile" -> ((s, dir) => TradeOps.acfProfile(trades(s, dir))),
     "w_sharpe" -> ((s, dir) => TradeOps.sharpe(trades(s, dir))),
-    "t_vocab_overlap" -> ((s, dir) =>
-      TextOps.vocabOverlap(Tables.load(s, dir, "documents"))),
     "a_adf_stat" -> ((s, dir) => TradeOps.adfStat(trades(s, dir))),
     "w_cci" -> ((s, dir) => TradeOps.cci(trades(s, dir))),
     "w_hurst_rs" -> ((s, dir) => TradeOps.hurstRs(trades(s, dir))),
     "w_max_drawdown" -> ((s, dir) => TradeOps.maxDrawdown(trades(s, dir))),
     "e_pareto_share" -> ((s, dir) =>
       EventAnalytics.paretoShare(Tables.events(s, dir))),
-    "t_hapax_profile" -> ((s, dir) =>
-      TextOps.hapaxProfile(Tables.load(s, dir, "documents"))),
     "e_new_returning" -> ((s, dir) =>
       EventAnalytics.newReturning(Tables.events(s, dir))),
     "e_lifespan_hist" -> ((s, dir) =>
@@ -506,11 +455,6 @@ object SparkEntry {
         |       CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS sum_qty, count(*) AS n_rows
         |FROM lineitem
         |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())""".stripMargin,
-
-    "t_normalize" -> TextOps.normalizeSql,
-    "t_stratified_sample" -> TextOps.stratifiedSampleSql(),
-    "t_pack_sequences" -> TextOps.packSequencesSql(),
-    "t_source_mix" -> TextOps.sourceMixSampleSql(),
 
     "a10_quantiles" ->
       s"""$T,
@@ -1216,27 +1160,6 @@ object SparkEntry {
         |FROM lineitem
         |GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
 
-    "t_token_stats" ->
-      """WITH w AS (SELECT doc_id, text, string_split(text, ' ') AS words FROM documents)
-        |SELECT doc_id,
-        |  len(words) AS n_tokens,
-        |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS n_subtokens,
-        |  len(list_distinct(words)) AS n_distinct,
-        |  (CAST(len(list_distinct(words)) AS DOUBLE) / CAST(len(words) AS DOUBLE)) AS ttr,
-        |  (CAST(length(text) - (len(words) - 1) AS DOUBLE) / CAST(len(words) AS DOUBLE)) AS avg_token_len
-        |FROM w""".stripMargin,
-
-    "t_lang_id" -> TextOps.langIdSql,
-    "t_quality_score" -> TextOps.qualitySql,
-
-    "t_fingerprint" -> TextOps.fingerprintSql,
-    "t_pii_redact" -> TextOps.piiRedactSql,
-    "t_vocab_topk" -> TextOps.vocabTopKSql(),
-    "t_freq_spectrum" -> TextOps.freqSpectrumSql,
-    "t_bigram_topk" -> TextOps.bigramTopKSql(),
-    "t_repetition" -> TextOps.repetitionSql,
-    "t_chunking" -> TextOps.chunkDocsSql(),
-
     "q4_returned_priority" ->
       """SELECT o_orderpriority, count(*) AS n_orders
         |FROM orders o
@@ -1252,7 +1175,6 @@ object SparkEntry {
         |  AND l_shipdate < TIMESTAMP '1996-01-01 00:00:00'
         |  AND l_discount BETWEEN 0.02 AND 0.09
         |  AND l_quantity < 24""".stripMargin,
-    "d_contamination" -> TextOps.contaminationSql(),
 
     "d_exact_dedup" ->
       """SELECT md5(text) AS fp, min(doc_id) AS canonical_doc, count(*) AS n_docs
@@ -1287,13 +1209,6 @@ object SparkEntry {
 
     "d_embedding_dup" -> Dedup.embeddingDupSql,
     "d_cos_threshold_curve" -> Dedup.cosThresholdCurveSql(),
-    "d_segment_dedup" -> TextOps.segmentDedupSql(),
-    "t_df_rarity" -> TextOps.dfRaritySql(),
-    "t_bpe_train" -> TextOps.bpeTrainSql(),
-    "t_bpe_encode" -> TextOps.bpeEncodeSql(),
-    "t_domain_quota" -> TextOps.domainQuotaSql(),
-    "d_cluster_best" -> Dedup.clusterBestSql,
-    "t_tfidf_topk" -> TextOps.tfidfTopKSql(),
     "mv_incremental" -> Incremental.incrementalAggSql,
     "e_funnel" -> EventAnalytics.funnelSql(),
     "e_retention" -> EventAnalytics.retentionSql,
@@ -1303,10 +1218,6 @@ object SparkEntry {
     "mv_minmax_retract" -> Incremental.retractableMinMaxSql,
     "mv_median_retract" -> Incremental.retractableMedianSql,
     "mv_topk_retract" -> Incremental.retractableTopKSql,
-    "t_importance_weights" -> TextOps.importanceWeightsSql(),
-    "t_ngram_novelty" -> TextOps.ngramNoveltySql(),
-    "t_langid_confusion" -> TextOps.langIdConfusionSql,
-    "t_bpe_fertility" -> TextOps.bpeFertilitySql(),
     "w7_gap_detect" ->
       s"""$T
          |${TradeOps.gapDetectSql()}""".stripMargin,
@@ -1346,7 +1257,6 @@ object SparkEntry {
         |        AS BIGINT) AS exact_both,
         |  1 AS within_env""".stripMargin,
     "a27_cms_topk" -> Relational.cmsTopKSql(),
-    "d_substring_dup" -> TextOps.substringDupSql(),
     "w_vwma" ->
       s"""$T
          |${TradeOps.vwmaSql()}""".stripMargin,
@@ -1359,11 +1269,9 @@ object SparkEntry {
          |${TradeOps.runsTestSql}""".stripMargin,
     "d_edit_distance" -> Dedup.editDistanceSql(),
     "d_prefix_dup" -> Dedup.prefixDupSql(),
-    "t_charclass_profile" -> TextOps.charClassProfileSql,
     "k16_partition_evolution" ->
       s"""$T
          |${TradeOps.partitionEvolutionSql}""".stripMargin,
-    "t_length_outliers" -> TextOps.lengthOutliersSql,
     "w_ichimoku" ->
       s"""$T
          |${TradeOps.ichimokuSql()}""".stripMargin,
@@ -1426,8 +1334,6 @@ object SparkEntry {
     "a13_vwap" ->
       s"""$T
          |${TradeOps.vwapSql}""".stripMargin,
-    "t_winnow" -> TextOps.winnowSql(),
-    "t_lm_coverage" -> TextOps.lmCoverageSql(),
     "e_cooccurrence" -> EventAnalytics.cooccurrenceSql,
     "w11_obv" ->
       s"""$T
@@ -1435,7 +1341,6 @@ object SparkEntry {
     "f12_winsorize" ->
       s"""$T
          |${TradeOps.winsorizeSql()}""".stripMargin,
-    "t_boilerplate" -> TextOps.boilerplateStripSql(),
     "w12_stochastic" ->
       s"""$T
          |${TradeOps.stochasticKSql()}""".stripMargin,
@@ -1492,7 +1397,6 @@ object SparkEntry {
     "a18_mode" ->
       s"""$T
          |${TradeOps.modalPriceSql}""".stripMargin,
-    "t_code_detect" -> TextOps.codeDetectSql,
     "w15_interval_merge" ->
       s"""$T
          |${TradeOps.mergeIntervalsSql()}""".stripMargin,
@@ -1525,7 +1429,6 @@ object SparkEntry {
     "k12_cdc_apply" -> s"$T,\n${Incremental.cdcApplySql}",
     "d_containment" -> Dedup.containmentSql(),
     "d_lsh_recall" -> Dedup.lshRecallSql(),
-    "t_feature_hash" -> TextOps.featureHashSql(),
     "w16_pivot_points" -> s"$T\n${TradeOps.pivotPointsSql}",
     "w17_twap" -> s"$T,\n${TradeOps.twapSql.stripPrefix("WITH ")}",
     "o9_group_split" -> s"$T\n${TradeOps.groupSplitSql()}",
@@ -1545,7 +1448,6 @@ object SparkEntry {
     "s16_table_fingerprint" -> s"$T,\n${TradeOps.tableFingerprintSql.stripPrefix("WITH ")}",
     "d_cross_dedup" -> Dedup.crossDedupSql(),
     "o10_purged_embargo" -> s"$T\n${TradeOps.purgedEmbargoSplitsSql()}",
-    "t_tv_drift" -> TextOps.tvDriftSql,
     "k15_merge_on_read" -> s"$T\n${TradeOps.mergeOnReadSql()}",
     "s17_zonemap_prune" -> s"$T\n${TradeOps.zonemapPruneSql()}",
     "s18_bloom_prune" -> s"$T\n${TradeOps.bloomPruneSql()}",
@@ -1558,7 +1460,6 @@ object SparkEntry {
     "a_moment_profile" -> s"$T\n${TradeOps.momentProfileSql}",
     "w_mfi" -> s"$T\n${TradeOps.mfiSql()}",
     "e_interarrival" -> EventAnalytics.interarrivalSql,
-    "t_readability" -> TextOps.readabilitySql,
     "e_markov_stationary" -> EventAnalytics.markovStationarySql(),
     "e_simpson_diversity" -> EventAnalytics.simpsonDiversitySql,
     "s20_partition_diff" -> s"$T\n${TradeOps.partitionDiffSql()}",
@@ -1567,7 +1468,6 @@ object SparkEntry {
     // doubles as its equivalence proof
     "w_vol_regime_banded" -> s"$T\n${TradeOps.volRegimeSql()}",
     "w_donchian" -> s"$T\n${TradeOps.donchianSql()}",
-    "t_heaps_law" -> TextOps.heapsLawSql(),
     "e_rate_change" -> EventAnalytics.rateChangeSql,
     "d_len_dup_bias" -> Dedup.lenDupBiasSql,
     "e_audience_overlap" -> EventAnalytics.audienceOverlapSql,
@@ -1592,13 +1492,11 @@ object SparkEntry {
     "w_adx" -> s"$T\n${TradeOps.adxSql()}",
     "a_acf_profile" -> s"$T,\n${TradeOps.acfProfileSql()}",
     "w_sharpe" -> s"$T\n${TradeOps.sharpeSql}",
-    "t_vocab_overlap" -> TextOps.vocabOverlapSql,
     "a_adf_stat" -> s"$T,\n${TradeOps.adfStatSql}",
     "w_cci" -> s"$T\n${TradeOps.cciSql()}",
     "w_hurst_rs" -> s"$T\n${TradeOps.hurstRsSql()}",
     "w_max_drawdown" -> s"$T\n${TradeOps.maxDrawdownSql}",
     "e_pareto_share" -> EventAnalytics.paretoShareSql,
-    "t_hapax_profile" -> TextOps.hapaxProfileSql,
     "e_new_returning" -> EventAnalytics.newReturningSql,
     "e_lifespan_hist" -> EventAnalytics.lifespanHistSql,
     "q30_supplier_hhi" -> Relational.supplierHhiSql,

@@ -481,8 +481,7 @@ object Dedup {
     * with a negative stop produces a DESCENDING range in Spark
     * (e.g. [0,-1]), `ws[-1]` is null, and concat_ws SKIPS nulls — so
     * a 1–2 word doc would emit a bogus short shingle where the DuckDB
-    * oracles' `generate_series(1, len-2)` is empty. Same guard shape
-    * as TextOps.repetitionStats. */
+    * oracles' `generate_series(1, len-2)` is empty. */
   private val shingleExpr: String =
     "CASE WHEN size(ws) < 3 THEN CAST(array() AS array<string>) ELSE " +
       "array_distinct(transform(sequence(0, size(ws) - 3), " +
@@ -767,26 +766,6 @@ object Dedup {
     val sizes = docLbl.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
     docLbl.join(sizes, "lbl")
       .select(col("doc_id"), col("lbl").as("canonical_doc"), col("cluster_size"))
-  }
-
-  /** Generic dedup resolution over a caller-supplied pair graph — the
-    * seam for driving connected-components resolution from any
-    * similarity signal (an [[ngramJaccard]] or [[simhashPairs]] output
-    * re-labeled to (doc_a, doc_b, est_jaccard), or externally computed
-    * pairs), where [[resolveDuplicates]] is MinHash-specific and
-    * contraction-optimized. `vertices` is the one-column doc-id universe
-    * to label; `pairs` must carry (doc_a, doc_b, est_jaccard) with both
-    * endpoints in that universe. */
-  def resolveFromPairs(vertices: DataFrame, pairs: DataFrame,
-      maxIter: Int = 20): DataFrame = {
-    val edges = pairs
-      .filter(col("est_jaccard") >= resolveThreshold)
-      .select(col("doc_a"), col("doc_b"))
-    val lbl = Graph.connectedComponents(vertices, edges, maxIter)
-    val sizes = lbl.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
-    lbl.join(sizes, "lbl")
-      .select(col("id").as("doc_id"), col("lbl").as("canonical_doc"),
-        col("cluster_size"))
   }
 
   /** Oracle for [[embeddingDup]]: the identical 16 hyperplane sign bits
@@ -1603,41 +1582,6 @@ object Dedup {
     s"""WITH ${resolveCtesFrom("documents")}
        |SELECT r.doc_id, r.canonical_doc, s.cluster_size
        |FROM resolved r JOIN sizes s USING (canonical_doc)""".stripMargin
-
-  /** Quality-aware canonical selection: within each near-dup cluster
-    * ([[resolveDuplicates]]), keep the HIGHEST-[[TextOps.qualityScore]]
-    * document rather than the lowest doc_id — what a curation pipeline
-    * actually wants from dedup resolution (drop the mirror, keep the
-    * clean original). Argmax is `max_by` over a (quality, -doc_id)
-    * struct: a total order, so ties are deterministic in both engines.
-    * One cluster-keyed aggregate on top of the resolution labels — the
-    * quality join is doc-keyed, never quadratic in cluster size. */
-  def clusterBest(docs: DataFrame): DataFrame =
-    resolveDuplicates(docs)
-      .join(TextOps.qualityScore(docs).select(col("doc_id"), col("quality")),
-        "doc_id")
-      .groupBy("canonical_doc", "cluster_size")
-      .agg(
-        expr("max_by(doc_id, struct(quality, -doc_id))").as("best_doc"),
-        max(col("quality")).as("best_quality"))
-      .select(col("canonical_doc"), col("cluster_size"),
-        col("best_doc"), col("best_quality"))
-
-  /** Oracle for [[clusterBest]]: the [[resolveSql]] closure plus the
-    * shared quality CTE, argmax via a windowed rank. */
-  val clusterBestSql: String =
-    s"""WITH ${resolveCtesFrom("documents")},
-       |${TextOps.qualityCte},
-       |b AS (
-       |  SELECT r.canonical_doc, r.doc_id, q.quality,
-       |         row_number() OVER (PARTITION BY r.canonical_doc
-       |                            ORDER BY q.quality DESC, r.doc_id) AS rn
-       |  FROM resolved r JOIN q USING (doc_id)
-       |)
-       |SELECT b.canonical_doc, s.cluster_size, b.doc_id AS best_doc,
-       |       b.quality AS best_quality
-       |FROM b JOIN sizes s USING (canonical_doc)
-       |WHERE rn = 1""".stripMargin
 
   /** N-gram CONTAINMENT near-dup pairs (extension) — the asymmetric
     * companion to [[ngramJaccard]]: `C(A→B) = |A∩B| / |A|` catches a

@@ -1199,8 +1199,8 @@ object Relational {
     * RFM segment.
     *
     * The naive form is three `ntile(4) OVER (ORDER BY …)` global
-    * windows — a single-task full sort each, the exact shape
-    * [[TextOps.vocabTopK]] refused. Here each quartile comes from
+    * windows — a single-task full sort each, so one task orders every
+    * customer. Here each quartile comes from
     * [[distributedRank]] + [[ntileOfRank]]: rank via coarse-bucket
     * prefix sums (recency buckets by month, frequency by its own small
     * value, monetary by $1k bands), tile by integer arithmetic — the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.ops.{Dedup, Graph, TextOps, TradeOps}
+import graft.ops.{Dedup, Graph, TradeOps}
 
 /** Empty-input and degenerate-shape behavior: every operator must
   * return an empty (or well-defined) result on an empty table, never
@@ -51,22 +51,9 @@ class EdgeCasesSpec extends SparkSuite {
   }
 
   test("document operators return empty results on an empty corpus") {
-    assert(TextOps.tokenStats(emptyDocs).count() === 0)
-    assert(TextOps.normalize(emptyDocs).count() === 0)
     assert(Dedup.exactDedup(emptyDocs).count() === 0)
     assert(Dedup.minhashPairs(emptyDocs).count() === 0)
     assert(Dedup.resolveDuplicates(emptyDocs).count() === 0)
-    assert(TextOps.repetitionStats(emptyDocs).count() === 0)
-    assert(TextOps.chunkDocs(emptyDocs).count() === 0)
-    assert(TextOps.contamination(emptyDocs).count() === 0)
-    assert(TextOps.segmentDedup(emptyDocs).count() === 0)
-    assert(TextOps.dfRarity(emptyDocs).count() === 0)
-    assert(TextOps.tfidfTopK(emptyDocs).count() === 0)
-    // exhausted corpus: BPE stops learning rules, never throws
-    assert(TextOps.bpeTrain(emptyDocs).count() === 0)
-    assert(TextOps.domainQuota(emptyDocs).count() === 0)
-    assert(Dedup.clusterBest(emptyDocs).count() === 0)
-    assert(TextOps.importanceWeights(emptyDocs).count() === 0)
   }
 
   test("incremental join view is empty when both join sides are empty") {
@@ -89,8 +76,7 @@ class EdgeCasesSpec extends SparkSuite {
       .incrementalJoinAgg(emptyOrders, emptyCustomer).count() === 0)
   }
 
-  test("encode/view ops empty-safe") {
-    assert(TextOps.bpeEncode(emptyDocs).count() === 0)
+  test("incremental aggregate view is empty-safe") {
     val emptyEvents = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(
@@ -207,7 +193,6 @@ class EdgeCasesSpec extends SparkSuite {
     assert(TradeOps.modalPrice(emptyTrades).count() === 0)
     assert(TradeOps.robustStats(emptyTrades).count() === 0)
     assert(TradeOps.gzipJsonRoundTrip(spark, emptyTrades).count() === 0)
-    assert(graft.ops.TextOps.codeDetect(emptyDocs).count() === 0)
   }
 
   test("keyset page and forward as-of survive empty sides") {
@@ -234,10 +219,7 @@ class EdgeCasesSpec extends SparkSuite {
   }
 
   test("new corpus/event operators survive empty inputs") {
-    import graft.ops.{Dedup, EventAnalytics, TextOps}
-    assert(TextOps.winnow(emptyDocs).count() === 0)
-    assert(TextOps.lmCoverage(emptyDocs).count() === 0)
-    assert(TextOps.boilerplateStrip(emptyDocs).count() === 0)
+    import graft.ops.EventAnalytics
     assert(Dedup.fuzzyPairs(emptyDocs).count() === 0)
     val emptyEvents = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -273,9 +255,7 @@ class EdgeCasesSpec extends SparkSuite {
     assert(TradeOps.schemaEvolutionRead(spark, emptyTrades).count() === 0)
   }
 
-  // the range-search operator went with the vector-search tier; the
-  // name is kept so the suite's test ids stay stable
-  test("batch-8: cdc apply, rfm quartiles, yoy, range search invariants") {
+  test("cdc apply, rfm quartiles and yoy revenue invariants") {
     import graft.ops.{Incremental, Relational}
     // CDC apply: empty feed → empty snapshot
     assert(Incremental.cdcApply(emptyTrades).count() === 0)
@@ -314,7 +294,7 @@ class EdgeCasesSpec extends SparkSuite {
     yoy.unpersist()
   }
 
-  test("batch-9: containment, lsh recall, feature hash") {
+  test("containment dominates jaccard; lsh recall rates stay in [0, 1]") {
     val docs = graft.Tables.load(spark, sf, "documents")
     // max-containment dominates jaccard, so every strong jaccard pair
     // must reappear in the containment report at the same threshold
@@ -332,19 +312,8 @@ class EdgeCasesSpec extends SparkSuite {
     assert(nHits <= math.min(nTrue, nCand))
     assert(rec.getDouble(3) >= 0 && rec.getDouble(3) <= 1)
     assert(rec.getDouble(4) >= 0 && rec.getDouble(4) <= 1)
-    // feature hash: per-doc tf mass equals the doc's token count and
-    // buckets stay in range
-    val fh = TextOps.featureHash(docs).cache()
-    assert(fh.filter(col("bucket") < 0 || col("bucket") >= 32).count() === 0)
-    val mass = fh.groupBy("doc_id").agg(sum("tf").as("mass"))
-    val toks = docs.select(col("doc_id"),
-      size(split(col("text"), " ")).cast("long").as("n_tok"))
-    assert(mass.join(toks, "doc_id")
-      .filter(col("mass") =!= col("n_tok")).count() === 0)
-    fh.unpersist()
     // empty-input coverage
     assert(Dedup.containment(emptyDocs).count() === 0)
-    assert(TextOps.featureHash(emptyDocs).count() === 0)
   }
 
   test("batch-10: pivots, twap, group split, benford") {
@@ -439,9 +408,7 @@ class EdgeCasesSpec extends SparkSuite {
       .count() === 0)
   }
 
-  // k-means went with the vector-search tier; the name is kept so the
-  // suite's test ids stay stable
-  test("batch-20: co-purchase lift, k-means purity bounds") {
+  test("co-purchase lift: ordered pairs, support floor, crafted lift exact") {
     import graft.ops.Relational
     val cp = Relational.copurchase(spark, sf, minSupport = 3L).cache()
     assert(cp.filter(col("part_a") >= col("part_b")).count() === 0)
@@ -532,10 +499,7 @@ class EdgeCasesSpec extends SparkSuite {
     assert(TradeOps.robustScale(emptyTrades).count() === 0)
   }
 
-  // RRF fusion went with the vector-search tier; the name is kept so the
-  // suite's test ids stay stable
-  test("batch-17: RRF bounds, embargo partition, TV drift range") {
-    val docs = graft.Tables.load(spark, sf, "documents")
+  test("purged embargo: every fold has train, embargo and test rows") {
     // purged embargo: roles partition each fold's span; the embargo band
     // really holds rows at this sf (the leak zone is non-empty), and
     // train/test never touch it
@@ -547,17 +511,9 @@ class EdgeCasesSpec extends SparkSuite {
     assert(wf.filter(col("train").isNull || col("embargo").isNull ||
       col("test").isNull).count() === 0)
     pe.unpersist()
-    // TV drift ∈ [0, 1); a single-source corpus drifts exactly 0
-    val tv = TextOps.tvDrift(docs)
-    assert(tv.filter(col("tv_drift") < 0 || col("tv_drift") >= 1).count() === 0)
-    val one = TextOps.tvDrift(docs.withColumn("source", lit("only")))
-    assert(one.count() === 1 &&
-      one.head.getAs[Double]("tv_drift") === 0.0)
   }
 
-  // MIPS ranking went with the vector-search tier; the name is kept so
-  // the suite's test ids stay stable
-  test("batch-16: cross-dedup vs full pair list, MIPS ranking") {
+  test("cross-dedup flags exactly the new docs with a witness in the full pair list") {
     val docs = graft.Tables.load(spark, sf, "documents")
     val cd = Dedup.crossDedup(docs).cache()
     // output covers exactly the new-batch slice, one row each

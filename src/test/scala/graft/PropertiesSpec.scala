@@ -14,8 +14,6 @@ import graft.ops.TradeOps
 case class PropTrade(event_id: Long, symbol: String, timestamp: Timestamp,
     price: Double, volume: Double)
 
-case class PropDoc(doc_id: Long, text: String)
-
 /** Property-based invariants (SURVEY.md §5.4) over randomized trade
   * batches: encode→decode identity, window multiplicity, cumulative-sum
   * monotonicity, min-max scale bounds. ScalaCheck drives the generators;
@@ -96,32 +94,6 @@ object PropertiesSpec extends Properties("graft") {
             vs.min < 1e-9 && vs.max > 1.0 - 1e-9
         }
       }
-    }
-
-  private val genDocs: Gen[List[PropDoc]] = for {
-    n <- Gen.chooseNum(0, 40)
-    lens <- Gen.listOfN(n, Gen.chooseNum(1, 30))
-  } yield List.tabulate(n)(i =>
-    PropDoc(i.toLong, List.fill(lens(i))("w").mkString(" ")))
-
-  // sequence packing: every doc lands in exactly one sequence, no
-  // sequence exceeds capacity, token mass is conserved (post-truncation),
-  // and per-shard sequence ids are contiguous from 0
-  property("packSequences conserves docs/tokens within capacity") =
-    Prop.forAll(genDocs) { docs =>
-      import spark.implicits._
-      val cap = 20
-      val packed = graft.ops.TextOps
-        .packSequences(docs.toDF(), capacity = cap, nShards = 4).collect()
-      val tokSum = docs
-        .map(d => math.min(d.text.split(" ").length, cap).toLong).sum
-      packed.map(_.getAs[Long]("n_docs")).sum == docs.length &&
-        packed.forall(_.getAs[Long]("tokens") <= cap) &&
-        packed.map(_.getAs[Long]("tokens")).sum == tokSum &&
-        packed.groupBy(_.getAs[Long]("shard")).forall { case (_, rows) =>
-          rows.map(_.getAs[Long]("seq_id")).sorted
-            .sameElements(0L until rows.length)
-        }
     }
 
   private val genEvents: Gen[List[(Long, Long, Long, String)]] = for {
