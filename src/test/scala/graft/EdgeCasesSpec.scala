@@ -76,7 +76,12 @@ class EdgeCasesSpec extends SparkSuite {
       .incrementalJoinAgg(emptyOrders, emptyCustomer).count() === 0)
   }
 
-  test("incremental aggregate view is empty-safe") {
+  test("encode/view ops empty-safe") {
+    // the producer's envelope encoder and its consumer decode on an
+    // empty tape: no envelopes, no trades back
+    val envelopes = graft.ingest.Decode.encodeEnvelopes(emptyTrades)
+    assert(envelopes.count() === 0)
+    assert(graft.ingest.Decode.decodeFlatten(envelopes).count() === 0)
     val emptyEvents = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(
@@ -255,7 +260,7 @@ class EdgeCasesSpec extends SparkSuite {
     assert(TradeOps.schemaEvolutionRead(spark, emptyTrades).count() === 0)
   }
 
-  test("cdc apply, rfm quartiles and yoy revenue invariants") {
+  test("batch-8: cdc apply, rfm quartiles, yoy, range search invariants") {
     import graft.ops.{Incremental, Relational}
     // CDC apply: empty feed → empty snapshot
     assert(Incremental.cdcApply(emptyTrades).count() === 0)
@@ -292,6 +297,21 @@ class EdgeCasesSpec extends SparkSuite {
     assert(yoy.filter(col("y") === firstYear && col("yoy_pct").isNotNull)
       .count() === 0)
     yoy.unpersist()
+    // range search: both bounds are inclusive, a microsecond outside
+    // either bound or another symbol is out, and an empty tape is empty
+    import spark.implicits._
+    val (lo, hi) = ("2024-01-05 00:00:00", "2024-01-06 00:00:00")
+    val tape = Seq(
+      (1L, "click", "2024-01-04 23:59:59.999999"), (2L, "click", lo),
+      (3L, "click", "2024-01-05 12:00:00"), (4L, "click", hi),
+      (5L, "click", "2024-01-06 00:00:00.000001"), (6L, "view", lo))
+      .toDF("event_id", "symbol", "ts")
+      .select(col("event_id"), col("symbol"),
+        col("ts").cast("timestamp").as("timestamp"), lit(10.0).as("price"))
+    val hits = TradeOps.servingRange(tape, "click", lo, hi)
+      .collect().map(_.getLong(0)).sorted
+    assert(hits.toSeq === Seq(2L, 3L, 4L))
+    assert(TradeOps.servingRange(emptyTrades, "click", lo, hi).count() === 0)
   }
 
   test("containment dominates jaccard; lsh recall rates stay in [0, 1]") {

@@ -102,9 +102,9 @@ class StreamingSpec extends SparkSuite {
       horizon = "10 seconds")
     val q = deduped.writeStream.outputMode("append")
       .format("memory").queryName("dedup_test").start()
-    def ev(offsetMs: Long, v: Double) =
-      TradeEvent("BTC", new java.sql.Timestamp(t0 + offsetMs), 1.0, v)
     try {
+      def ev(offsetMs: Long, v: Double) =
+        TradeEvent("BTC", new java.sql.Timestamp(t0 + offsetMs), 1.0, v)
       // intra- and cross-batch re-deliveries inside the horizon: one row
       input.addData(ev(0, 1.0), ev(0, 1.0), ev(5000, 2.0))
       q.processAllAvailable()
@@ -125,21 +125,6 @@ class StreamingSpec extends SparkSuite {
       q.processAllAvailable()
       assert(spark.table("dedup_test").count() === 2)
     } finally q.stop()
-    // composite key (symbol, ts) under the default 30 s horizon: copies
-    // of one trade collapse within and across batches, while another ts
-    // of the same symbol is a new key
-    val feed = MemoryStream[TradeEvent](spark)
-    val byTrade = StreamingJob.dedupWithinWatermark(feed.toDF(),
-        keyCols = Seq("symbol", "ts"), tsCol = "ts")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("dedup_composite").start()
-    try {
-      feed.addData(ev(0, 1.0), ev(0, 1.0), ev(0, 1.0), ev(5000, 2.0))
-      byTrade.processAllAvailable()
-      feed.addData(ev(0, 1.0))
-      byTrade.processAllAvailable()
-      assert(spark.table("dedup_composite").count() === 2)
-    } finally byTrade.stop()
   }
 
   test("stateful cumulative volume carries across micro-batches") {
@@ -187,6 +172,37 @@ class StreamingSpec extends SparkSuite {
         }
       } finally q.stop()
     }
+  }
+
+  test("streaming dedup within watermark drops repeats, state stays bounded") {
+    import spark.implicits._
+    val input = MemoryStream[TradeEvent](spark)
+    val q = StreamingJob.dedupWithinWatermark(input.toDF(),
+        keyCols = Seq("symbol", "ts"), tsCol = "ts")
+      .writeStream.outputMode("append")
+      .format("memory").queryName("dedup_wm").start()
+    try {
+      def ev(offsetMs: Long, v: Double) =
+        TradeEvent("BTC", new java.sql.Timestamp(t0 + offsetMs), 1.0, v)
+      // same (symbol, ts) three times in one batch + once more next batch
+      input.addData(ev(0, 1.0), ev(0, 1.0), ev(0, 1.0), ev(5000, 2.0))
+      q.processAllAvailable()
+      input.addData(ev(0, 1.0)) // duplicate within watermark: dropped
+      q.processAllAvailable()
+      assert(spark.table("dedup_wm").count() === 2) // (0) and (5000)
+      // 20 more distinct keys, 10 s apart, each delivered twice: every
+      // key comes out once, while the watermark (30 s horizon) evicts
+      // old keys, so the live state never holds more than the keys of
+      // the last ~70 s of event time
+      for (i <- 1 to 20) {
+        input.addData(ev(5000L + i * 10000L, 1.0), ev(5000L + i * 10000L, 1.0))
+        q.processAllAvailable()
+      }
+      assert(spark.table("dedup_wm").count() === 22)
+      val live = q.recentProgress.flatMap(_.stateOperators.map(_.numRowsTotal))
+      assert(live.nonEmpty)
+      assert(live.max <= 10, s"dedup state grew with the key count: ${live.toSeq}")
+    } finally q.stop()
   }
 
   test("streaming session windows merge per-user bursts, finalize on watermark") {
