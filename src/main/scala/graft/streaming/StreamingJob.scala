@@ -1,6 +1,8 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -17,7 +19,7 @@ import graft.sinks.Upsert
   * | q1 volume agg  | 1-min tumbling, 30s watermark, update → Cassandra | update → [[Upsert]] keyed table |
   * | q2 passthrough | raw rows, update (≡append) → Cassandra            | update → [[Upsert]] keyed table |
   * | q3 features    | 30s/10s sliding, 10s watermark, append → Kafka    | append → key/value JSON csv (kafka-shaped) |
-  * | q4 file sink   | features + date parts, partitioned CSV, 5min     | partitioned CSV, configurable trigger |
+  * | q4 file sink   | features + date parts, partitioned CSV, 5min     | partitioned CSV, 0s trigger like q1 |
   *
   * Kafka/Cassandra jars aren't in this offline image; the seams are the
   * standard `writeStream.format(...)` / `foreachBatch` boundaries, so
@@ -25,10 +27,25 @@ import graft.sinks.Upsert
   */
 object StreamingJob {
 
-  final case class Config(
-      outRoot: String,
-      checkpointRoot: String,
-      fileTrigger: Trigger = Trigger.ProcessingTime("0 seconds"))
+  final case class Config(outRoot: String, checkpointRoot: String)
+
+  /** Every trigger commits checkpoint files: an offsets and a commit log
+    * entry and a state delta per partition, each written to a temp file
+    * and renamed into place. Spark's default manager renames through
+    * `FileContext`, whose local file system forks a `readlink` per
+    * rename when Hadoop finds no native library; on a local root, commit
+    * through `FileSystem.rename` instead, a plain `rename(2)`. Both keep
+    * Hadoop's `.crc` sidecars and Spark's state checksums, and both
+    * refuse to overwrite unless the caller allows it. Where it is
+    * allowed (a re-run batch committing its state again), Hadoop's
+    * rename keeps the committed file, which holds the same state. Other
+    * roots keep Spark's default, which relies on `FileContext`'s atomic
+    * rename. */
+  private def useLocalCheckpointRenames(spark: SparkSession, cfg: Config): Unit =
+    if (new Path(cfg.checkpointRoot).getFileSystem(spark.sessionState.newHadoopConf())
+        .isInstanceOf[LocalFileSystem])
+      spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[FileSystemBasedCheckpointFileManager].getName)
 
   /** Pipeline observability via `Dataset.observe`: per-micro-batch
     * ingest metrics (row count, exact cent volume, max event time)
@@ -50,6 +67,7 @@ object StreamingJob {
 
   /** Start all four queries; caller awaits/stops them. */
   def run(spark: SparkSession, envelopes: DataFrame, cfg: Config): Seq[StreamingQuery] = {
+    useLocalCheckpointRenames(spark, cfg)
     // decode + derive, the shared upstream plan (`ProcessStockStream.py:100-109`)
     val flat = Decode.decodeFlatten(envelopes)
     // Both keyed stores get one bucket per shuffle partition: a merge
@@ -124,7 +142,8 @@ object StreamingJob {
       .queryName("btc_features").start()
 
     // query_04 (`ProcessStockStream.py:181-191`): features + date-part
-    // partition columns → partitioned CSV on a slow trigger.
+    // partition columns → partitioned CSV. The reference fires it every
+    // 5 minutes; here it runs on the same 0 s trigger as q1.
     val q4 = features
       .withColumn("year", year(col("timestamp")))
       .withColumn("month", month(col("timestamp")))
@@ -136,7 +155,7 @@ object StreamingJob {
       .partitionBy("year", "month", "day")
       .option("path", s"${cfg.outRoot}/features_store")
       .option("checkpointLocation", s"${cfg.checkpointRoot}/query_04")
-      .trigger(cfg.fileTrigger)
+      .trigger(Trigger.ProcessingTime("0 seconds"))
       .queryName("features_store").start()
 
     Seq(q1, q2, q3, q4)
@@ -176,7 +195,8 @@ object StreamingJob {
     * own ids out of the corpus side, so re-running a batch after ANY
     * crash point recomputes identical rows into idempotent merges. */
   def runIncrementalDedup(spark: SparkSession, docs: DataFrame,
-      cfg: Config): StreamingQuery =
+      cfg: Config): StreamingQuery = {
+    useLocalCheckpointRenames(spark, cfg)
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"${cfg.checkpointRoot}/query_08")
@@ -185,6 +205,7 @@ object StreamingJob {
         applyDedupBatch(df, id, s"${cfg.outRoot}/dedup")
       }
       .queryName("incremental_dedup").start()
+  }
 
   /** One micro-batch of incremental dedup: signatures once, screen
     * against the store, append flags, merge signatures. The signature
@@ -230,6 +251,7 @@ object StreamingJob {
   def runPredict(spark: SparkSession, bars: DataFrame, stats: DataFrame,
       cfg: Config, n: Int = graft.ops.Predict.lookbackN): StreamingQuery = {
     import spark.implicits._
+    useLocalCheckpointRenames(spark, cfg)
     val ds = bars.select(col("symbol"), col("timestamp").as("ts"),
         col("close"), col("high"), col("low"),
         col("total_usd_volume").as("usd"),

@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
+import graft.ingest.Decode
 import graft.sinks.Upsert
 import graft.streaming.StreamingJob
 
@@ -66,6 +69,95 @@ class RecoverySpec extends SparkSuite {
     val btcM0 = vol.filter(col("symbol") === "BTC" &&
       col("total_volume") === 3.0).count()
     assert(btcM0 === 1, "pre-restart window intact after recovery")
+  }
+
+  test("a kill between WAL and commit: the restart re-runs the batch, " +
+      "every sink stays exactly-once") {
+    val in = tmpDir("graft-wal-in")
+    val out = tmpDir("graft-wal-out")
+    val ckpt = tmpDir("graft-wal-ckpt")
+    def startAll() = StreamingJob.run(spark,
+      spark.readStream.text(in).select(col("value")),
+      StreamingJob.Config(out, ckpt))
+
+    writeBatch(in, "b1.json", Seq(
+      envelope("BTC", t0, 10.0, 1.0, 1.0),
+      envelope("BTC", t0 + 5000, 12.0, 2.0, 3.0),
+      envelope("ETH", t0 + 20000, 11.0, 4.0, 4.0),
+      envelope("ETH", t0 + 45000, 11.5, 1.0, 5.0)))
+    val first = startAll()
+    try {
+      first.foreach(_.processAllAvailable())
+      // a trade behind the newest event time moves no watermark, so the
+      // newest batch of every query is a data batch
+      writeBatch(in, "b1b.json", Seq(envelope("ETH", t0 + 44000, 11.2, 2.0, 7.0)))
+      first.foreach(_.processAllAvailable())
+    } finally first.foreach(_.stop())
+
+    // what a kill after the offsets WAL is written leaves: each query's
+    // newest batch is in its offsets log and missing from its commit log
+    val names = Seq("query_01", "query_02", "query_03", "query_04")
+    val lost = names.map { q =>
+      val commits = Paths.get(ckpt, q, "commits")
+      val n = Files.list(commits).iterator.asScala.map(_.getFileName.toString)
+        .filter(_.matches("\\d+")).map(_.toLong).max
+      assert(Files.exists(Paths.get(ckpt, q, "offsets", n.toString)), s"$q: batch $n has no WAL entry")
+      Files.delete(commits.resolve(n.toString))
+      Files.deleteIfExists(commits.resolve(s".$n.crc"))
+      n
+    }
+
+    // the re-run commits q1's state version again, onto the deltas the
+    // first run committed
+    def deltas() = Files.walk(Paths.get(ckpt, "query_01", "state")).iterator.asScala
+      .filter(_.getFileName.toString.endsWith(".delta")).toSet
+    val committed = deltas()
+
+    // more input while the job is down; the last trade pushes every
+    // watermark past the earlier windows
+    writeBatch(in, "b2.json", Seq(
+      envelope("BTC", t0 + 61000, 20.0, 6.0, 9.0),
+      envelope("ETH", t0 + 120000, 13.0, 8.0, 12.0),
+      envelope("BTC", t0 + 600000, 15.0, 1.0, 10.0)))
+    val second = startAll()
+    try second.foreach(_.processAllAvailable()) finally second.foreach(_.stop())
+    second.zip(names).zip(lost).foreach { case ((q, name), n) =>
+      assert(q.recentProgress.head.batchId === n, s"$name: the restart re-runs batch $n first")
+    }
+
+    assert(committed.nonEmpty && committed.subsetOf(deltas()), "a committed state delta went missing")
+
+    val trades = Decode.decodeFlatten(spark.read.text(in)).cache()
+    val price = Upsert.read(spark, s"$out/price_tracking").get
+    assert(price.count() === 8, "every trade exactly once in the price sink")
+    assert(price.select("symbol", "timestamp", "price").collect().toSet ===
+      trades.select("symbol", "timestamp", "price").collect().toSet)
+
+    val vol = Upsert.read(spark, s"$out/volume_tracking").get
+    assert(vol.groupBy("symbol", "timestamp").count()
+      .filter(col("count") > 1).count() === 0, "no duplicate upsert keys")
+    val minutes = trades.groupBy(window(col("timestamp"), "1 minute"), col("symbol"))
+      .agg(sum(col("volume")).as("total_volume"))
+      .select(col("symbol"), col("window.start").as("timestamp"), col("total_volume"))
+    assert(vol.select("symbol", "timestamp", "total_volume").collect().toSet ===
+      minutes.collect().toSet, "volume windows equal the batch recompute")
+
+    val features = spark.read.schema("key STRING, value STRING").csv(s"$out/btc_features")
+      .select(col("key"), from_json(col("value"),
+        lit("timestamp STRING, num_trades BIGINT, total_btc_volume DOUBLE")).as("v"))
+      .select(col("key"), col("v.timestamp").as("timestamp"),
+        col("v.num_trades").as("num_trades"), col("v.total_btc_volume").as("vol"))
+    assert(features.count() > 0, "the watermark closed no feature window")
+    assert(features.groupBy("key", "timestamp").count()
+      .filter(col("count") > 1).count() === 0, "each feature window emitted once")
+    val sliding = trades.groupBy(window(col("timestamp"), "30 seconds", "10 seconds"), col("symbol"))
+      .agg(count(lit(1)).as("num_trades"), sum(col("volume")).as("vol"))
+      .select(col("symbol").as("key"), col("window.start").cast("string").as("timestamp"),
+        col("num_trades"), col("vol"))
+      .collect().toSet
+    val emitted = features.collect().toSet
+    assert(emitted.subsetOf(sliding), s"windows off the recompute: ${emitted -- sliding}")
+    trades.unpersist()
   }
 
   test("DAG stores keep their bucket count across a restart at another " +

@@ -1,5 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -66,6 +74,76 @@ class StreamingSpec extends SparkSuite {
         .csv(s"$out/features_store")
       assert(stored.select("year").distinct().count() >= 1)
     } finally queries.foreach(_.stop())
+  }
+
+  /** What a checkpoint manager gets wrong about commits, empty when it
+    * gets nothing wrong: an atomic create that replaces an existing file
+    * although the caller forbade it, and checkpoint files committed
+    * without a checksum (a Hadoop `.crc` sidecar for every offsets and
+    * commits entry, a Spark checksum file for every state delta). */
+  private def commitFaults(mgr: CheckpointFileManager, ckpt: String): Seq[String] = {
+    val probe = new Path(ckpt, "probe")
+    def create(text: String, overwrite: Boolean): Unit = {
+      val o = mgr.createAtomic(probe, overwrite)
+      o.write(text.getBytes("UTF-8"))
+      o.close()
+    }
+    create("first", overwrite = false)
+    val refused = scala.util.Try(create("second", overwrite = false)).isFailure
+    val kept = Files.readString(Paths.get(probe.toUri.getPath)) == "first"
+    val files = Files.walk(Paths.get(ckpt)).iterator.asScala.filter(Files.isRegularFile(_)).toSeq
+    def named(re: String) = files.filter(_.getFileName.toString.matches(re))
+    val logs = named("""\d+""").filter(f => Set("offsets", "commits")(f.getParent.getFileName.toString))
+    val deltas = named("""\d+\.delta""")
+    assert(logs.nonEmpty && deltas.nonEmpty, s"no log entries or state deltas under $ckpt")
+    val bare = logs.filterNot(f => Files.exists(f.resolveSibling(s".${f.getFileName}.crc"))) ++
+      deltas.filterNot(f => Files.exists(f.resolveSibling(s"${f.getFileName}.crc")))
+    (if (refused && kept) Nil
+     else Seq(s"createAtomic without overwrite: threw $refused, kept the first content $kept")) ++
+      bare.map(f => s"no checksum for $f")
+  }
+
+  test("DAG checkpoints: a local root commits without overwriting, " +
+      "every log entry and state delta checksummed") {
+    import spark.implicits._
+    val input = MemoryStream[String](spark)
+    val out = tmpDir("graft-ckfm-out")
+    val ckpt = tmpDir("graft-ckfm-ckpt")
+    val queries = StreamingJob.run(spark, input.toDF().select(col("value")),
+      StreamingJob.Config(out, ckpt))
+    try {
+      input.addData(envelope("BTC", t0, 10.0, 1.0, 1.0),
+        envelope("ETH", t0 + 5000, 12.0, 2.0, 2.0))
+      queries.foreach(_.processAllAvailable())
+      input.addData(envelope("BTC", t0 + 70000, 11.0, 4.0, 5.0))
+      queries.foreach(_.processAllAvailable())
+    } finally queries.foreach(_.stop())
+    val mgr = CheckpointFileManager.create(new Path(ckpt), spark.sessionState.newHadoopConf())
+    assert(commitFaults(mgr, ckpt) === Nil)
+
+    // the check tells a sound manager from one that replaces files and
+    // drops checksums: a small stateful query committed by
+    // [[NioCheckpointFileManager]] fails the overwrite probe and the
+    // log sidecars
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val nioCkpt = tmpDir("graft-ckfm-nio")
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, classOf[NioCheckpointFileManager].getName)
+    try {
+      val events = MemoryStream[TradeEvent](spark)
+      val q = events.toDF().groupBy("symbol").count()
+        .writeStream.outputMode("update").format("noop")
+        .option("checkpointLocation", nioCkpt).start()
+      try {
+        events.addData(TradeEvent("BTC", new java.sql.Timestamp(t0), 10.0, 1.0))
+        q.processAllAvailable()
+      } finally q.stop()
+      val nio = CheckpointFileManager.create(new Path(nioCkpt), spark.sessionState.newHadoopConf())
+      assert(nio.isInstanceOf[NioCheckpointFileManager])
+      val faults = commitFaults(nio, nioCkpt)
+      assert(faults.exists(_.startsWith("createAtomic")), faults)
+      assert(faults.exists(_.contains("/offsets/")), faults)
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("late data beyond the watermark is dropped from append-mode aggs") {
@@ -731,5 +809,28 @@ class StreamingSpec extends SparkSuite {
       val after = streamedFlags().collect().map(_.toString).sorted.toSeq
       assert(after === before, "batch replay mutated the dedup flags")
     } finally q.stop()
+  }
+}
+
+/** A checkpoint manager that commits through `java.nio`: its atomic
+  * create moves over an existing file whatever the caller asked, and
+  * writes no Hadoop `.crc` sidecar. StreamingSpec runs a query on it to
+  * show that its checkpoint check fails on such a manager. */
+class NioCheckpointFileManager(path: Path, conf: Configuration)
+    extends FileSystemBasedCheckpointFileManager(path, conf) {
+  override def createAtomic(p: Path,
+      overwriteIfPossible: Boolean): CancellableFSDataOutputStream = {
+    val dst = Paths.get(p.toUri.getPath)
+    Files.createDirectories(dst.getParent)
+    val tmp = Files.createTempFile(dst.getParent, s".${dst.getFileName}", ".tmp")
+    new CancellableFSDataOutputStream(Files.newOutputStream(tmp)) {
+      private var open = true
+      override def cancel(): Unit = { open = false; underlyingStream.close(); Files.deleteIfExists(tmp) }
+      override def close(): Unit = if (open) {
+        open = false
+        super.close()
+        Files.move(tmp, dst, StandardCopyOption.REPLACE_EXISTING)
+      }
+    }
   }
 }
