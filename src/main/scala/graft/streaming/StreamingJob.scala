@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -38,14 +37,38 @@ object StreamingJob {
     * Hadoop's `.crc` sidecars and Spark's state checksums, and both
     * refuse to overwrite unless the caller allows it. Where it is
     * allowed (a re-run batch committing its state again), Hadoop's
-    * rename keeps the committed file, which holds the same state. Other
-    * roots keep Spark's default, which relies on `FileContext`'s atomic
+    * rename keeps the committed file, which holds the same state, and
+    * [[LocalCheckpointFileManager]] deletes the temp file. Other roots
+    * keep Spark's default, which relies on `FileContext`'s atomic
     * rename. */
   private def useLocalCheckpointRenames(spark: SparkSession, cfg: Config): Unit =
     if (new Path(cfg.checkpointRoot).getFileSystem(spark.sessionState.newHadoopConf())
         .isInstanceOf[LocalFileSystem])
       spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-        classOf[FileSystemBasedCheckpointFileManager].getName)
+        classOf[LocalCheckpointFileManager].getName)
+
+  /** Runs `start` with whole-stage codegen and the expression-codegen
+    * factory off, then gives the session back its own settings. Every
+    * trigger plans a fresh incremental job whose generated classes
+    * differ from the last batch's in literals (batch ids, watermark
+    * bounds, stage ids), so Spark's codegen cache keeps missing and each
+    * batch pays Janino compiles that cost more than its few thousand
+    * rows save. A query clones the session in `start()`, so its
+    * micro-batches, `foreachBatch` included, run interpreted, while the
+    * caller's session keeps codegen. `wholeStage` alone still compiles
+    * projections and joiners. The internal `factoryMode` also turns
+    * whole-stage codegen off in Spark 4.1; the public key keeps it off
+    * should a release drop that coupling. */
+  private def interpreted[T](spark: SparkSession)(start: => T): T = {
+    val off = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val before = spark.conf.getAll
+    off.foreach { case (k, v) => spark.conf.set(k, v) }
+    try start
+    finally off.foreach { case (k, _) =>
+      before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
 
   /** Pipeline observability via `Dataset.observe`: per-micro-batch
     * ingest metrics (row count, exact cent volume, max event time)
@@ -96,7 +119,7 @@ object StreamingJob {
         Upsert.merge(df, id, s"${cfg.outRoot}/volume_tracking",
           Seq("symbol", "timestamp"), nBuckets = buckets, bucketBy = Seq("symbol"))
       }
-      .queryName("volume_tracking").start()
+      .queryName("volume_tracking")
 
     // query_02 (`ProcessStockStream.py:132-138`): raw passthrough.
     val q2 = flat
@@ -108,7 +131,7 @@ object StreamingJob {
         Upsert.merge(df, id, s"${cfg.outRoot}/price_tracking",
           Seq("symbol", "timestamp"), nBuckets = buckets, bucketBy = Seq("symbol"))
       }
-      .queryName("price_tracking").start()
+      .queryName("price_tracking")
 
     // query_03 (`ProcessStockStream.py:143-179`): sliding OHLC features,
     // append mode ⇒ each window emitted exactly once, after the 10s
@@ -139,7 +162,7 @@ object StreamingJob {
       .format("csv")
       .option("path", s"${cfg.outRoot}/btc_features")
       .option("checkpointLocation", s"${cfg.checkpointRoot}/query_03")
-      .queryName("btc_features").start()
+      .queryName("btc_features")
 
     // query_04 (`ProcessStockStream.py:181-191`): features + date-part
     // partition columns → partitioned CSV. The reference fires it every
@@ -156,9 +179,9 @@ object StreamingJob {
       .option("path", s"${cfg.outRoot}/features_store")
       .option("checkpointLocation", s"${cfg.checkpointRoot}/query_04")
       .trigger(Trigger.ProcessingTime("0 seconds"))
-      .queryName("features_store").start()
+      .queryName("features_store")
 
-    Seq(q1, q2, q3, q4)
+    interpreted(spark)(Seq(q1, q2, q3, q4).map(_.start()))
   }
 
   /** T16 (extension) — streaming exact dedup: at-least-once transports
@@ -197,14 +220,15 @@ object StreamingJob {
   def runIncrementalDedup(spark: SparkSession, docs: DataFrame,
       cfg: Config): StreamingQuery = {
     useLocalCheckpointRenames(spark, cfg)
-    docs.writeStream
+    val query = docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"${cfg.checkpointRoot}/query_08")
       .trigger(Trigger.ProcessingTime("0 seconds"))
       .foreachBatch { (df: DataFrame, id: Long) =>
         applyDedupBatch(df, id, s"${cfg.outRoot}/dedup")
       }
-      .queryName("incremental_dedup").start()
+      .queryName("incremental_dedup")
+    interpreted(spark)(query.start())
   }
 
   /** One micro-batch of incremental dedup: signatures once, screen
@@ -258,7 +282,7 @@ object StreamingJob {
         col("total_btc_volume").as("vol"),
         col("num_trades").cast("double").as("nt"))
       .as[Stateful.BarEvent]
-    Stateful.barLookback(spark, ds, n).toDF()
+    val query = Stateful.barLookback(spark, ds, n).toDF()
       .join(broadcast(stats), "symbol")
       .withColumn("score", graft.ops.Predict.linearScorer(n))
       .select(col("symbol"),
@@ -273,6 +297,7 @@ object StreamingJob {
         Upsert.merge(df, id, s"${cfg.outRoot}/predictions",
           Seq("symbol", "timestamp"), bucketBy = Seq("symbol"))
       }
-      .queryName("predictions").start()
+      .queryName("predictions")
+    interpreted(spark)(query.start())
   }
 }

@@ -126,6 +126,9 @@ class RecoverySpec extends SparkSuite {
     }
 
     assert(committed.nonEmpty && committed.subsetOf(deltas()), "a committed state delta went missing")
+    val temps = Files.walk(Paths.get(ckpt)).iterator.asScala
+      .filter(_.getFileName.toString.matches(""".*\.tmp(\.crc)?""")).toSeq
+    assert(temps.isEmpty, s"${temps.size} temp files left: ${temps.mkString(", ")}")
 
     val trades = Decode.decodeFlatten(spark.read.text(in)).cache()
     val price = Upsert.read(spark, s"$out/price_tracking").get

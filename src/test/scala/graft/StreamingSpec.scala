@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -144,6 +145,41 @@ class StreamingSpec extends SparkSuite {
       assert(faults.exists(_.startsWith("createAtomic")), faults)
       assert(faults.exists(_.contains("/offsets/")), faults)
     } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("DAG micro-batches compile no generated classes in steady state; " +
+      "the caller's session keeps its codegen settings") {
+    import spark.implicits._
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val preset = spark.conf.getAll.get(keys.head)
+    spark.conf.set(keys.head, "true")
+    val settings = keys.map(spark.conf.getAll.get)
+    val input = MemoryStream[String](spark)
+    val out = tmpDir("graft-interp-out")
+    val ckpt = tmpDir("graft-interp-ckpt")
+    try {
+      val queries = StreamingJob.run(spark, input.toDF().select(col("value")),
+        StreamingJob.Config(out, ckpt))
+      assert(keys.map(spark.conf.getAll.get) === settings, "run changed the caller's codegen settings")
+      try {
+        // batch i carries 40 trades of 4 symbols over 20 s of event time,
+        // so every batch moves the watermarks and closes feature windows
+        def batch(i: Int): Unit = {
+          input.addData((0 until 40).map { j =>
+            envelope(s"S${j % 4}", t0 + i * 20000L + j * 500, 10.0 + j % 7, 1.0 + j % 3, i * 40.0 + j)
+          }: _*)
+          queries.foreach(_.processAllAvailable())
+        }
+        (0 until 2).foreach(batch)
+        val warm = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        (2 until 5).foreach(batch)
+        // Janino compiles, counted on cache misses only: 0 when the
+        // batches run interpreted, 369 under Spark's codegen defaults,
+        // where per-batch literals keep changing the generated classes
+        val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - warm
+        assert(compiled <= 20, s"$compiled classes compiled in three steady-state batches")
+      } finally queries.foreach(_.stop())
+    } finally preset.fold(spark.conf.unset(keys.head))(spark.conf.set(keys.head, _))
   }
 
   test("late data beyond the watermark is dropped from append-mode aggs") {
