@@ -47,27 +47,24 @@ object StreamingJob {
       spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
         classOf[LocalCheckpointFileManager].getName)
 
-  /** Runs `start` with whole-stage codegen and the expression-codegen
-    * factory off, then gives the session back its own settings. Every
-    * trigger plans a fresh incremental job whose generated classes
-    * differ from the last batch's in literals (batch ids, watermark
-    * bounds, stage ids), so Spark's codegen cache keeps missing and each
-    * batch pays Janino compiles that cost more than its few thousand
-    * rows save. A query clones the session in `start()`, so its
-    * micro-batches, `foreachBatch` included, run interpreted, while the
-    * caller's session keeps codegen. `wholeStage` alone still compiles
-    * projections and joiners. The internal `factoryMode` also turns
-    * whole-stage codegen off in Spark 4.1; the public key keeps it off
-    * should a release drop that coupling. */
+  /** Runs `start` with Spark's codegen factory off, then gives the
+    * session back its own setting. Every trigger plans a fresh
+    * incremental job whose generated classes differ from the last
+    * batch's in literals (batch ids, watermark bounds, stage ids), so
+    * Spark's codegen cache keeps missing and each batch pays Janino
+    * compiles that cost more than its few thousand rows save. A query
+    * clones the session in `start()`, so its micro-batches,
+    * `foreachBatch` included, run interpreted, while the caller's
+    * session keeps codegen. `NO_CODEGEN` also turns whole-stage codegen
+    * off; `wholeStage=false` alone still compiles projections and
+    * joiners. The setting is on the caller's session while `start` runs:
+    * call `run` only while no other thread uses that session. */
   private def interpreted[T](spark: SparkSession)(start: => T): T = {
-    val off = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    val before = spark.conf.getAll
-    off.foreach { case (k, v) => spark.conf.set(k, v) }
+    val key = "spark.sql.codegen.factoryMode"
+    val before = spark.conf.getAll.get(key)
+    spark.conf.set(key, "NO_CODEGEN")
     try start
-    finally off.foreach { case (k, _) =>
-      before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
-    }
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   /** Pipeline observability via `Dataset.observe`: per-micro-batch
@@ -88,7 +85,9 @@ object StreamingJob {
         .as("usd_vol_cents"),
       max(col("timestamp")).as("max_ts"))
 
-  /** Start all four queries; caller awaits/stops them. */
+  /** Start all four queries; caller awaits/stops them. Their
+    * micro-batches run interpreted (see `interpreted`), so no other
+    * thread may use `spark` while this runs. */
   def run(spark: SparkSession, envelopes: DataFrame, cfg: Config): Seq[StreamingQuery] = {
     useLocalCheckpointRenames(spark, cfg)
     // decode + derive, the shared upstream plan (`ProcessStockStream.py:100-109`)
@@ -220,15 +219,14 @@ object StreamingJob {
   def runIncrementalDedup(spark: SparkSession, docs: DataFrame,
       cfg: Config): StreamingQuery = {
     useLocalCheckpointRenames(spark, cfg)
-    val query = docs.writeStream
+    docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"${cfg.checkpointRoot}/query_08")
       .trigger(Trigger.ProcessingTime("0 seconds"))
       .foreachBatch { (df: DataFrame, id: Long) =>
         applyDedupBatch(df, id, s"${cfg.outRoot}/dedup")
       }
-      .queryName("incremental_dedup")
-    interpreted(spark)(query.start())
+      .queryName("incremental_dedup").start()
   }
 
   /** One micro-batch of incremental dedup: signatures once, screen
@@ -282,7 +280,7 @@ object StreamingJob {
         col("total_btc_volume").as("vol"),
         col("num_trades").cast("double").as("nt"))
       .as[Stateful.BarEvent]
-    val query = Stateful.barLookback(spark, ds, n).toDF()
+    Stateful.barLookback(spark, ds, n).toDF()
       .join(broadcast(stats), "symbol")
       .withColumn("score", graft.ops.Predict.linearScorer(n))
       .select(col("symbol"),
@@ -297,7 +295,6 @@ object StreamingJob {
         Upsert.merge(df, id, s"${cfg.outRoot}/predictions",
           Seq("symbol", "timestamp"), bucketBy = Seq("symbol"))
       }
-      .queryName("predictions")
-    interpreted(spark)(query.start())
+      .queryName("predictions").start()
   }
 }
