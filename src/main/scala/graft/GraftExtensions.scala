@@ -4,15 +4,15 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{AvroCodec, VectorOps}
+import graft.functions.AvroCodec
 
 /** Session-extension entry point: makes every graft custom expression a
   * first-class SQL function in any session built with
   * `spark.sql.extensions=graft.GraftExtensions` (or
   * `.withExtensions(new GraftExtensions)`) — no per-query registration
   * calls. This is the standard integration seam for a Spark-native
-  * library (SURVEY.md §4: custom surface stays minimal — four codegen'd
-  * expressions, no custom planner rules needed).
+  * library (SURVEY.md §4: custom surface stays minimal — the two Avro
+  * envelope expressions, no custom planner rules needed).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -20,15 +20,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo("graft", null, name, usage, "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      info("dot_product", "dot_product(a, b) - dot product of two array<double>"),
-      (exprs: Seq[Expression]) => functions.DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("lsh_bits"),
-      info("lsh_bits", "lsh_bits(v, nBits) - random-hyperplane LSH bucket id"),
-      (exprs: Seq[Expression]) => functions.HyperplaneLshBits(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int])))
     ext.injectFunction((
       FunctionIdentifier("avro_encode_envelope"),
       info("avro_encode_envelope",
@@ -46,7 +37,6 @@ object GraftExtensions {
   /** Keep the imperative registrars reachable from the extension object
     * for sessions that already exist (tests, the driver's session). */
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    VectorOps.register(spark)
     AvroCodec.register(spark)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Decode
-import graft.ops.{AsOfJoin, Dedup, EventAnalytics, Incremental, Predict, Relational, Resample, Scale, TradeOps}
+import graft.ops.{AsOfJoin, EventAnalytics, Incremental, Predict, Relational, Resample, Scale, TradeOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -144,20 +144,6 @@ object SparkEntry {
     "k10_compaction" -> ((s, dir) => TradeOps.compactRoundTrip(s, trades(s, dir))),
     "q4_returned_priority" -> ((s, dir) => Relational.returnedPriorityOrders(s, dir)),
     "q6_forecast_revenue" -> ((s, dir) => Relational.forecastRevenue(s, dir)),
-    "d_exact_dedup" -> ((s, dir) => Dedup.exactDedup(Tables.load(s, dir, "documents"))),
-    "d_minhash_sig" -> ((s, dir) => Dedup.minhashSignatures(Tables.load(s, dir, "documents"))),
-    "d_minhash_pairs" -> ((s, dir) => Dedup.minhashPairs(Tables.load(s, dir, "documents"))),
-    "d_threshold_curve" -> ((s, dir) => Dedup.thresholdCurve(Tables.load(s, dir, "documents"))),
-    "d_band_tuning" -> ((s, dir) => Dedup.bandTuning(Tables.load(s, dir, "documents"))),
-    "g_modularity" -> ((s, dir) => Dedup.modularity(
-      Tables.load(s, dir, "documents"), edgeBudget = 2000000L)),
-    "d_dup_by_source" -> ((s, dir) => Dedup.dupBySource(Tables.load(s, dir, "documents"))),
-    "d_simhash_sig" -> ((s, dir) => Dedup.simhashSignatures(Tables.load(s, dir, "documents"))),
-    "d_simhash_pairs" -> ((s, dir) => Dedup.simhashPairs(Tables.load(s, dir, "documents"))),
-    "d_ngram_jaccard" -> ((s, dir) => Dedup.ngramJaccard(Tables.load(s, dir, "documents"))),
-    "d_embedding_dup" -> ((s, dir) => Dedup.embeddingDup(s, dir)),
-    "d_cos_threshold_curve" -> ((s, dir) => Dedup.cosThresholdCurve(s, dir)),
-    "d_dedup_resolve" -> ((s, dir) => Dedup.resolveDuplicates(Tables.load(s, dir, "documents"))),
     "mv_incremental" -> ((s, dir) => Incremental.incrementalAgg(Tables.events(s, dir))),
     "e_funnel" -> ((s, dir) => EventAnalytics.funnel(Tables.events(s, dir))),
     "e_retention" -> ((s, dir) => EventAnalytics.retention(Tables.events(s, dir))),
@@ -179,14 +165,8 @@ object SparkEntry {
     "w_vwma" -> ((s, dir) => TradeOps.vwma(trades(s, dir))),
     "a_gini" -> ((s, dir) => TradeOps.giniActivity(trades(s, dir))),
     "a_runs_test" -> ((s, dir) => TradeOps.runsTest(trades(s, dir))),
-    "d_edit_distance" -> ((s, dir) =>
-      Dedup.editDistance(Tables.load(s, dir, "documents"))),
-    "d_prefix_dup" -> ((s, dir) =>
-      Dedup.prefixDup(Tables.load(s, dir, "documents"))),
     "k16_partition_evolution" -> ((s, dir) =>
       TradeOps.partitionEvolution(s, trades(s, dir))),
-    "d_minhash_est_error" -> ((s, dir) =>
-      Dedup.minhashEstError(Tables.load(s, dir, "documents"))),
     "w_ichimoku" -> ((s, dir) => TradeOps.ichimoku(trades(s, dir))),
     "w_aroon" -> ((s, dir) => TradeOps.aroon(trades(s, dir))),
     "e_burst_detect" -> ((s, dir) =>
@@ -206,7 +186,6 @@ object SparkEntry {
     "a14_atr" -> ((s, dir) => TradeOps.atr(trades(s, dir))),
     "a15_anomaly" -> ((s, dir) => TradeOps.anomalyFlags(trades(s, dir))),
     "skew_salted_join" -> ((s, dir) => Scale.saltedSkewJoin(trades(s, dir))),
-    "d_fuzzy_pairs" -> ((s, dir) => Dedup.fuzzyPairs(Tables.load(s, dir, "documents"))),
     "w13_cusum" -> ((s, dir) => TradeOps.cusum(trades(s, dir))),
     "a16_profile" -> ((s, dir) => TradeOps.columnProfile(Tables.load(s, dir, "lineitem"))),
     "a17_beta" -> ((s, dir) => TradeOps.marketBeta(trades(s, dir))),
@@ -245,8 +224,6 @@ object SparkEntry {
     "e_rfm" -> ((s, dir) => Relational.rfmSegments(s, dir)),
     "a21_yoy_revenue" -> ((s, dir) => Relational.yoyRevenue(s, dir)),
     "k12_cdc_apply" -> ((s, dir) => Incremental.cdcApply(trades(s, dir))),
-    "d_containment" -> ((s, dir) => Dedup.containment(Tables.load(s, dir, "documents"))),
-    "d_lsh_recall" -> ((s, dir) => Dedup.lshRecall(Tables.load(s, dir, "documents"))),
     "w16_pivot_points" -> ((s, dir) => TradeOps.pivotPoints(trades(s, dir))),
     "w17_twap" -> ((s, dir) => TradeOps.twap(trades(s, dir))),
     "o9_group_split" -> ((s, dir) => TradeOps.groupSplit(trades(s, dir))),
@@ -269,8 +246,6 @@ object SparkEntry {
     "a26_chisq" -> ((s, dir) => TradeOps.chisqHourly(trades(s, dir))),
     "s16_table_fingerprint" -> ((s, dir) =>
       TradeOps.tableFingerprint(trades(s, dir))),
-    "d_cross_dedup" -> ((s, dir) =>
-      Dedup.crossDedup(Tables.load(s, dir, "documents"))),
     "o10_purged_embargo" -> ((s, dir) =>
       TradeOps.purgedEmbargoSplits(trades(s, dir))),
     "k15_merge_on_read" -> ((s, dir) =>
@@ -304,16 +279,12 @@ object SparkEntry {
     "w_donchian" -> ((s, dir) => TradeOps.donchian(trades(s, dir))),
     "e_rate_change" -> ((s, dir) =>
       EventAnalytics.rateChange(Tables.events(s, dir))),
-    "d_len_dup_bias" -> ((s, dir) =>
-      Dedup.lenDupBias(Tables.load(s, dir, "documents"))),
     "e_audience_overlap" -> ((s, dir) =>
       EventAnalytics.audienceOverlap(Tables.events(s, dir))),
     "a_subsample_stability" -> ((s, dir) =>
       TradeOps.subsampleStability(trades(s, dir))),
     "q28_ship_latency" -> ((s, dir) => Relational.shipLatency(s, dir)),
     "q29_order_gap_hist" -> ((s, dir) => Relational.orderGapHist(s, dir)),
-    "d_cluster_size_hist" -> ((s, dir) =>
-      Dedup.clusterSizeHist(Tables.load(s, dir, "documents"))),
     "k17_rollback" -> ((s, dir) =>
       TradeOps.rollbackRoundTrip(s, trades(s, dir))),
     "w_vpin" -> ((s, dir) => TradeOps.vpin(trades(s, dir))),
@@ -349,8 +320,6 @@ object SparkEntry {
       EventAnalytics.rollingWau(Tables.events(s, dir))),
     "w_volume_profile" -> ((s, dir) =>
       TradeOps.volumeProfile(trades(s, dir))),
-    "d_bucket_skew" -> ((s, dir) =>
-      Dedup.bucketSkew(Tables.load(s, dir, "documents"))),
     "q26_revenue_deciles" -> ((s, dir) => Relational.revenueDeciles(s, dir)),
     "e_seasonal_profile" -> ((s, dir) =>
       EventAnalytics.seasonalProfile(Tables.events(s, dir))),
@@ -374,8 +343,6 @@ object SparkEntry {
     "k19_compact_generations" -> ((s, dir) =>
       TradeOps.compactGenerations(s, trades(s, dir))),
     "a_depth_ladder" -> ((s, dir) => TradeOps.depthLadder(trades(s, dir))),
-    "d_source_similarity" -> ((s, dir) =>
-      Dedup.sourceSimilarity(Tables.load(s, dir, "documents"))),
     "k20_prediction_accuracy" -> ((s, dir) =>
       Predict.predictionAccuracy(trades(s, dir))),
     "k21_audited_lifecycle" -> ((s, dir) =>
@@ -1176,19 +1143,6 @@ object SparkEntry {
         |  AND l_discount BETWEEN 0.02 AND 0.09
         |  AND l_quantity < 24""".stripMargin,
 
-    "d_exact_dedup" ->
-      """SELECT md5(text) AS fp, min(doc_id) AS canonical_doc, count(*) AS n_docs
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    "d_minhash_sig" -> Dedup.minhashSigSql,
-    "d_minhash_pairs" -> Dedup.minhashPairsSql,
-    "d_threshold_curve" -> Dedup.thresholdCurveSql(),
-    "d_band_tuning" -> Dedup.bandTuningSql(),
-    "g_modularity" -> Dedup.modularitySql(edgeBudget = 2000000L),
-    "d_dup_by_source" -> Dedup.dupBySourceSql,
-    "d_simhash_sig" -> Dedup.simhashSigSql,
-    "d_simhash_pairs" -> Dedup.simhashPairsSql,
-
     "a_cube_summary" ->
       """SELECT l_returnflag, l_linestatus,
         |       CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS sum_qty, count(*) AS n_rows
@@ -1207,8 +1161,6 @@ object SparkEntry {
          |  AND c.cts <= p."timestamp"
          |GROUP BY p.event_id, p.user_id, p."timestamp", p.price""".stripMargin,
 
-    "d_embedding_dup" -> Dedup.embeddingDupSql,
-    "d_cos_threshold_curve" -> Dedup.cosThresholdCurveSql(),
     "mv_incremental" -> Incremental.incrementalAggSql,
     "e_funnel" -> EventAnalytics.funnelSql(),
     "e_retention" -> EventAnalytics.retentionSql,
@@ -1225,7 +1177,6 @@ object SparkEntry {
       s"""$T
          |SELECT event_id, symbol, "timestamp", price, volume
          |FROM trades""".stripMargin,
-    "d_dedup_resolve" -> Dedup.resolveSql,
     "p2_dead_letter" ->
       s"""$T
          |SELECT event_id,
@@ -1263,12 +1214,9 @@ object SparkEntry {
     "a_gini" ->
       s"""$T
          |${TradeOps.giniActivitySql}""".stripMargin,
-    "d_minhash_est_error" -> Dedup.minhashEstErrorSql(),
     "a_runs_test" ->
       s"""$T
          |${TradeOps.runsTestSql}""".stripMargin,
-    "d_edit_distance" -> Dedup.editDistanceSql(),
-    "d_prefix_dup" -> Dedup.prefixDupSql(),
     "k16_partition_evolution" ->
       s"""$T
          |${TradeOps.partitionEvolutionSql}""".stripMargin,
@@ -1279,24 +1227,6 @@ object SparkEntry {
       s"""$T
          |${TradeOps.aroonSql()}""".stripMargin,
     "e_burst_detect" -> EventAnalytics.burstDetectSql,
-
-    "d_ngram_jaccard" ->
-      """WITH sh AS (
-        |  SELECT doc_id, lang, source,
-        |    list_distinct(list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-        |      i -> array_to_string(string_split(text, ' ')[i:i+2], ' '))) AS shingles
-        |  FROM documents
-        |), p AS (
-        |  SELECT s1.doc_id AS doc_a, s2.doc_id AS doc_b,
-        |         len(list_intersect(s1.shingles, s2.shingles)) AS n_inter,
-        |         len(s1.shingles) AS na, len(s2.shingles) AS nb
-        |  FROM sh s1 JOIN sh s2
-        |    ON s1.lang = s2.lang AND s1.source = s2.source AND s1.doc_id < s2.doc_id
-        |)
-        |SELECT doc_a, doc_b,
-        |       (CAST(n_inter AS DOUBLE) / CAST(na + nb - n_inter AS DOUBLE)) AS jaccard
-        |FROM p
-        |WHERE CAST(n_inter AS DOUBLE) / CAST(na + nb - n_inter AS DOUBLE) >= 0.1::DOUBLE""".stripMargin,
 
     "a_pivot_dow" -> {
       val cols = (1 to 7).map(d =>
@@ -1351,7 +1281,6 @@ object SparkEntry {
       s"""$T
          |${TradeOps.anomalyFlagsSql()}""".stripMargin,
     "skew_salted_join" -> s"$T,\n${Scale.saltedSkewJoinSql}",
-    "d_fuzzy_pairs" -> Dedup.fuzzyPairsSql(),
     "w13_cusum" ->
       s"""$T
          |${TradeOps.cusumSql()}""".stripMargin,
@@ -1427,8 +1356,6 @@ object SparkEntry {
     "e_rfm" -> Relational.rfmSegmentsSql,
     "a21_yoy_revenue" -> Relational.yoyRevenueSql,
     "k12_cdc_apply" -> s"$T,\n${Incremental.cdcApplySql}",
-    "d_containment" -> Dedup.containmentSql(),
-    "d_lsh_recall" -> Dedup.lshRecallSql(),
     "w16_pivot_points" -> s"$T\n${TradeOps.pivotPointsSql}",
     "w17_twap" -> s"$T,\n${TradeOps.twapSql.stripPrefix("WITH ")}",
     "o9_group_split" -> s"$T\n${TradeOps.groupSplitSql()}",
@@ -1446,7 +1373,6 @@ object SparkEntry {
     "f17_quantile_rank" -> s"$T,\n${TradeOps.quantileRankSql.stripPrefix("WITH ")}",
     "a26_chisq" -> s"$T,\n${TradeOps.chisqHourlySql.stripPrefix("WITH ")}",
     "s16_table_fingerprint" -> s"$T,\n${TradeOps.tableFingerprintSql.stripPrefix("WITH ")}",
-    "d_cross_dedup" -> Dedup.crossDedupSql(),
     "o10_purged_embargo" -> s"$T\n${TradeOps.purgedEmbargoSplitsSql()}",
     "k15_merge_on_read" -> s"$T\n${TradeOps.mergeOnReadSql()}",
     "s17_zonemap_prune" -> s"$T\n${TradeOps.zonemapPruneSql()}",
@@ -1469,12 +1395,10 @@ object SparkEntry {
     "w_vol_regime_banded" -> s"$T\n${TradeOps.volRegimeSql()}",
     "w_donchian" -> s"$T\n${TradeOps.donchianSql()}",
     "e_rate_change" -> EventAnalytics.rateChangeSql,
-    "d_len_dup_bias" -> Dedup.lenDupBiasSql,
     "e_audience_overlap" -> EventAnalytics.audienceOverlapSql,
     "a_subsample_stability" -> s"$T\n${TradeOps.subsampleStabilitySql()}",
     "q28_ship_latency" -> Relational.shipLatencySql,
     "q29_order_gap_hist" -> Relational.orderGapHistSql,
-    "d_cluster_size_hist" -> Dedup.clusterSizeHistSql,
     "k17_rollback" -> s"$T\n${TradeOps.rollbackRoundTripSql}",
     "w_vpin" -> s"$T\n${TradeOps.vpinSql()}",
     "e_bot_score" -> EventAnalytics.botScoreSql(),
@@ -1504,7 +1428,6 @@ object SparkEntry {
     "e_rate_anomaly" -> EventAnalytics.rateAnomalySql,
     "e_rolling_wau" -> EventAnalytics.rollingWauSql,
     "w_volume_profile" -> s"$T\n${TradeOps.volumeProfileSql}",
-    "d_bucket_skew" -> Dedup.bucketSkewSql,
     "q26_revenue_deciles" -> Relational.revenueDecilesSql,
     "e_seasonal_profile" -> EventAnalytics.seasonalProfileSql,
     "w_sortino" -> s"$T\n${TradeOps.sortinoSql}",
@@ -1522,7 +1445,6 @@ object SparkEntry {
     "w_narrow_range" -> s"$T\n${TradeOps.narrowRangeSql}",
     "k19_compact_generations" -> s"$T\n${TradeOps.compactGenerationsSql}",
     "a_depth_ladder" -> s"$T\n${TradeOps.depthLadderSql()}",
-    "d_source_similarity" -> Dedup.sourceSimilaritySql,
     "k20_prediction_accuracy" -> Predict.predictionAccuracySql(),
     "k21_audited_lifecycle" -> s"$T\n${graft.sinks.Wap.auditedLifecycleSql}",
     "k22_schema_evolution" -> s"$T\n${TradeOps.schemaEvolutionSql}",

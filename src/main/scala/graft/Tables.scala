@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -68,6 +69,30 @@ object Tables {
           else cores
         df.repartition(parts).write.mode("overwrite").parquet(s"$out/${f.getName}")
       }
+  }
+
+  /** Scratch directories handed out per application id. */
+  private val scratch =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.Set[String]]()
+
+  /** `java.io.tmpdir/graft_<name>_<applicationId>`: a per-session scratch
+    * path, so concurrent runs (bench and tests) never race on an
+    * overwrite of a shared directory. The first call in a session
+    * registers a listener that deletes every path handed out to it when
+    * its SparkContext stops, which Spark's shutdown hook also does; the
+    * names carry the application id, so a kept store would never be
+    * reused and every session would add a new set. */
+  private[graft] def scratchDir(spark: SparkSession, name: String): String = {
+    val sc = spark.sparkContext
+    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_${name}_${sc.applicationId}"
+    scratch.computeIfAbsent(sc.applicationId, app => {
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+          Option(scratch.remove(app)).foreach(_.forEach(deleteTree(_)))
+      })
+      java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    }).add(dir)
+    dir
   }
 
   /** Delete a file or directory tree; a missing path is a no-op. */

@@ -539,12 +539,12 @@ object EventAnalytics {
     * `x'_j = Σᵢ (xᵢ·p_ij) div 10⁶` — BIGINT products (≤ 10⁶·10⁶),
     * exact sums, identical floor rounding on both engines (float
     * matrix-vector products would be partition-order-sensitive).
-    * Fixed round count = determinism over convergence (the
-    * [[graft.ops.Graph]] labelprop call); with ppm resolution 8
-    * rounds is past the mixing time of any |types|-sized chain. The
-    * iteration state is |types| rows joined to a |types|² matrix —
-    * driver-free chained plans, broadcast-sized at any corpus
-    * scale. */
+    * Fixed round count = determinism over convergence: a stop on
+    * convergence would make the round count, and so the result, depend
+    * on rounding. With ppm resolution 8 rounds is past the mixing time
+    * of any |types|-sized chain. The iteration state is |types| rows
+    * joined to a |types|² matrix — driver-free chained plans,
+    * broadcast-sized at any corpus scale. */
   def markovStationary(events: DataFrame, rounds: Int = 8): DataFrame = {
     val pairs = transitionMatrix(events)
     val tot = pairs.groupBy("from_type").agg(sum(col("n")).as("tot"))

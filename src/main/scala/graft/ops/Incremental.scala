@@ -35,11 +35,12 @@ object Incremental {
     * `localCheckpoint`ed — the stored-state seam: the merge below reads
     * materialized state, not a re-derivation from raw events.
     *
-    * Release exemption (the Graph.connectedComponents discipline): these
-    * checkpoints are GROUP-cardinality-sized (event_type × day — hundreds
-    * of rows at any corpus scale, the whole point of partial-state MV
-    * maintenance), and every one of them backs the returned view, so
-    * none can be unpersisted before the caller consumes the result. */
+    * Release exemption: these checkpoints are never unpersisted. They
+    * are GROUP-cardinality-sized (event_type × day — hundreds of rows at
+    * any corpus scale, the whole point of partial-state MV maintenance),
+    * so pinning them costs little, and every one of them backs the
+    * returned view, so none can be unpersisted before the caller
+    * consumes the result. */
   private[ops] def partialStates(events: DataFrame): DataFrame =
     // r17 (guide §1.2 / §2.4): all nBatches partials in ONE scan — the
     // batch id is just another grouping key of the same aggregate, so

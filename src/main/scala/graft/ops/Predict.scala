@@ -266,7 +266,7 @@ object Predict {
     * input), like [[TradeOps.keyedPointRead]]. */
   def predictWriteback(spark: SparkSession, trades: DataFrame,
       dirTag: String): DataFrame = {
-    val root = TradeOps.scratchDir(spark,
+    val root = graft.Tables.scratchDir(spark,
       "predict_store_" + dirTag.replaceAll("[^A-Za-z0-9]", "_"))
     if (graft.sinks.Upsert.currentVersion(root).isEmpty)
       graft.sinks.Upsert.merge(predictNext(trades), 0L, root,

@@ -123,7 +123,7 @@ object Scale {
       uLo: Int = 20, uHi: Int = 60,
       tLo: String = "2024-01-05 00:00:00",
       tHi: String = "2024-01-15 00:00:00"): DataFrame = {
-    val out = TradeOps.scratchDir(spark, "zorder")
+    val out = graft.Tables.scratchDir(spark, "zorder")
     val n = spark.sessionState.conf.numShufflePartitions
     val keyed = trades.select(col("event_id"), col("user_id"),
         col("timestamp"), col("price"))
@@ -172,8 +172,8 @@ object Scale {
     * Cassandra `PRIMARY KEY (symbol, timestamp)` layout (SURVEY.md §4
     * "sink-side index").
     *
-    * Writes external bucketed tables under java.io.tmpdir; idempotent
-    * per (session, sfDir) via overwrite. */
+    * Writes external bucketed tables to a scratch dir; idempotent per
+    * (session, sfDir) via overwrite. */
   def bucketedOrderRevenue(spark: SparkSession, dir: String,
       buckets: Int = 8): DataFrame = {
     // Tag is per (session, sfDir): the applicationId keeps concurrent
@@ -182,7 +182,8 @@ object Scale {
     // dir.hashCode collides across dirs and can be negative).
     val tag = (spark.sparkContext.applicationId + "_" + dir)
       .replaceAll("[^A-Za-z0-9]", "_")
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_buckets_$tag"
+    val root = graft.Tables.scratchDir(spark,
+      "buckets_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
     def persistBucketed(df: DataFrame, table: String, key: String): Unit = {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       // pre-partition on the bucket key: each write task then holds

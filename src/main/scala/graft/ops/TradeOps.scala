@@ -517,33 +517,28 @@ object TradeOps {
       timestamp_seconds(unix_timestamp(col("timestamp"))).as("ts_second_floor"),
       (col("timestamp") + expr("INTERVAL 10 SECONDS")).as("ts_next_interval"))
 
+  /** [[graft.Tables.scratchDir]] guaranteed EMPTY: ops whose contract
+    * is "start from a fresh store" (rollback/expire round-trips) must
+    * not inherit a prior invocation's version chain — `graft.Bench`
+    * runs every op several times per application (warmup + reps), and a
+    * reused store makes rep 2+ measure different work and emit different
+    * probe counts than rep 1 (ADVICE r15). Build-once ops (keyedPointRead,
+    * ttStore) keep the plain scratch dir + manifest guard. */
+  private[graft] def freshScratchDir(spark: SparkSession, name: String): String = {
+    val d = graft.Tables.scratchDir(spark, name)
+    graft.Tables.deleteTree(d)
+    d
+  }
+
   /** K4 + storage partition pruning (reference `ProcessStockStream
     * .py:181-191` + SURVEY.md §4): write the trades partitioned by
     * (year, month) — the file-sink layout — then read back ONE month;
     * the scan must prune to that partition's directories
     * (`PartitionFilters` in the plan, asserted in OpsInvariantsSpec).
     * Returns the month's rows for oracle comparison. */
-  /** Per-session-unique scratch path: concurrent runs (bench + tests)
-    * must not race on mode("overwrite") of a shared directory. */
-  private[graft] def scratchDir(spark: SparkSession, name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_${name}_${spark.sparkContext.applicationId}"
-
-  /** [[scratchDir]] guaranteed EMPTY: ops whose contract is "start from
-    * a fresh store" (rollback/expire round-trips) must not inherit a
-    * prior invocation's version chain — the Bench driver runs every op
-    * several times per application (warmup + reps), and a reused store
-    * makes rep 2+ measure different work and emit different probe
-    * counts than rep 1 (ADVICE r15). Build-once ops (keyedPointRead,
-    * ttStore) keep the plain scratchDir + manifest guard. */
-  private[graft] def freshScratchDir(spark: SparkSession, name: String): String = {
-    val d = scratchDir(spark, name)
-    graft.Tables.deleteTree(d)
-    d
-  }
-
   def partitionedRoundTrip(spark: SparkSession, trades: DataFrame,
       yr: Int = 2024, mo: Int = 1): DataFrame = {
-    val out = scratchDir(spark, "part_roundtrip")
+    val out = graft.Tables.scratchDir(spark, "part_roundtrip")
     trades
       .withColumn("year", year(col("timestamp")))
       .withColumn("month", month(col("timestamp")))
@@ -569,7 +564,7 @@ object TradeOps {
     * ([[dynamicPartitionOverwrite]]'s file-explosion discipline). */
   def partitionEvolution(spark: SparkSession, trades: DataFrame,
       cutDay: String = "2024-01-16"): DataFrame = {
-    val out = scratchDir(spark, "part_evolution")
+    val out = graft.Tables.scratchDir(spark, "part_evolution")
     val base = trades
       .withColumn("day", to_date(col("timestamp")))
       .withColumn("hr", hour(col("timestamp")))
@@ -663,7 +658,7 @@ object TradeOps {
     * session-wide — a library must not mutate caller session state. */
   def dynamicPartitionOverwrite(spark: SparkSession, trades: DataFrame,
       reviseDay: String = "2024-01-15"): DataFrame = {
-    val out = scratchDir(spark, "dyn_overwrite")
+    val out = graft.Tables.scratchDir(spark, "dyn_overwrite")
     val base = trades
       .withColumn("day", to_date(col("timestamp")))
       .select("event_id", "symbol", "timestamp", "price", "day")
@@ -1535,7 +1530,7 @@ object TradeOps {
     * and the serving read returns exactly the source rows. */
   def keyedPointRead(spark: SparkSession, trades: DataFrame, dirTag: String,
       symbol: String, lo: String, hi: String): DataFrame = {
-    val root = scratchDir(spark,
+    val root = graft.Tables.scratchDir(spark,
       "upsert_store_" + dirTag.replaceAll("[^A-Za-z0-9]", "_"))
     if (graft.sinks.Upsert.currentVersion(root).isEmpty)
       graft.sinks.Upsert.merge(
@@ -1560,10 +1555,10 @@ object TradeOps {
   def compactRoundTrip(spark: SparkSession, trades: DataFrame,
       targetFiles: Int = 4): DataFrame = {
     val cols = Seq("event_id", "symbol", "timestamp", "price", "volume")
-    val frag = scratchDir(spark, "frag_store")
+    val frag = graft.Tables.scratchDir(spark, "frag_store")
     trades.select(cols.map(col): _*)
       .repartition(32).write.mode("overwrite").parquet(frag)
-    val out = scratchDir(spark, "compacted_store")
+    val out = graft.Tables.scratchDir(spark, "compacted_store")
     spark.read.parquet(frag)
       .coalesce(targetFiles)
       .write.mode("overwrite").parquet(out)
@@ -1607,7 +1602,7 @@ object TradeOps {
     * root, guarded by the manifest, so one session builds it once). */
   private def ttStore(spark: SparkSession, trades: DataFrame,
       dirTag: String): String = {
-    val root = scratchDir(spark,
+    val root = graft.Tables.scratchDir(spark,
       "tt_store_" + dirTag.replaceAll("[^A-Za-z0-9]", "_"))
     val keyed = trades
       .withColumn("hr", date_trunc("hour", col("timestamp")))
@@ -1659,7 +1654,7 @@ object TradeOps {
     * timestampFormat on both sides (JSON default also truncates). */
   def jsonRoundTrip(spark: SparkSession, trades: DataFrame): DataFrame = {
     val fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
-    val out = scratchDir(spark, "json_roundtrip")
+    val out = graft.Tables.scratchDir(spark, "json_roundtrip")
     val cols = Seq("event_id", "symbol", "timestamp", "price", "volume")
     trades.select(cols.map(col): _*)
       .write.mode("overwrite")
@@ -1681,7 +1676,7 @@ object TradeOps {
     * the schema-on-read contract survive compression. */
   def gzipJsonRoundTrip(spark: SparkSession, trades: DataFrame): DataFrame = {
     val fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
-    val out = scratchDir(spark, "gzip_json_roundtrip")
+    val out = graft.Tables.scratchDir(spark, "gzip_json_roundtrip")
     val cols = Seq("event_id", "symbol", "timestamp", "price", "volume")
     trades.select(cols.map(col): _*)
       .write.mode("overwrite")
@@ -1706,7 +1701,7 @@ object TradeOps {
     * checks the round-tripped rows against the source relation, so a
     * writer/reader asymmetry in any column breaks the hash. */
   def orcRoundTrip(spark: SparkSession, trades: DataFrame): DataFrame = {
-    val out = scratchDir(spark, "orc_roundtrip")
+    val out = graft.Tables.scratchDir(spark, "orc_roundtrip")
     val cols = Seq("event_id", "symbol", "timestamp", "price", "volume")
     trades.select(cols.map(col): _*).write.mode("overwrite").orc(out)
     spark.read.orc(out)
@@ -1714,7 +1709,7 @@ object TradeOps {
 
   def csvRoundTrip(spark: SparkSession, trades: DataFrame): DataFrame = {
     val fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
-    val out = scratchDir(spark, "csv_roundtrip")
+    val out = graft.Tables.scratchDir(spark, "csv_roundtrip")
     val cols = Seq("event_id", "symbol", "timestamp", "price", "volume")
     trades.select(cols.map(col): _*)
       .write.mode("overwrite")
@@ -3165,8 +3160,8 @@ object TradeOps {
     * window over the union. */
   def mergeOnRead(spark: SparkSession, trades: DataFrame,
       reviseDay: String = "2024-01-15"): DataFrame = {
-    val base = scratchDir(spark, "mor_base")
-    val delta = scratchDir(spark, "mor_delta")
+    val base = graft.Tables.scratchDir(spark, "mor_base")
+    val delta = graft.Tables.scratchDir(spark, "mor_delta")
     trades.select(col("event_id"), col("symbol"), col("timestamp"),
         col("price")).withColumn("_v", lit(0L))
       .write.mode("overwrite").parquet(base)
@@ -3205,7 +3200,7 @@ object TradeOps {
     * range and prune nothing. */
   def zonemapPrune(spark: SparkSession, trades: DataFrame,
       lo: Double = 50.0, hi: Double = 100.0): DataFrame = {
-    val out = scratchDir(spark, "zonemap")
+    val out = graft.Tables.scratchDir(spark, "zonemap")
     trades.select(col("symbol"), col("price"), col("volume"))
       .repartitionByRange(16, col("price"))
       .write.mode("overwrite").parquet(out)
@@ -3272,7 +3267,7 @@ object TradeOps {
   private[graft] def bloomSurvivingFiles(spark: SparkSession,
       trades: DataFrame, probeIds: Seq[Long]): (String, Seq[String]) = {
     import spark.implicits._
-    val out = scratchDir(spark, "bloomprune")
+    val out = graft.Tables.scratchDir(spark, "bloomprune")
     trades.select(col("event_id"), col("symbol"), col("price"))
       .repartition(16, col("event_id"))
       .write.mode("overwrite").parquet(out)
@@ -3607,7 +3602,7 @@ object TradeOps {
     * the cutover predicate. */
   def schemaEvolutionRead(spark: SparkSession, trades: DataFrame,
       cutover: String = "2024-01-15 00:00:00"): DataFrame = {
-    val out = scratchDir(spark, "schema_evo")
+    val out = graft.Tables.scratchDir(spark, "schema_evo")
     val cut = to_timestamp(lit(cutover))
     trades.filter(col("timestamp") < cut)
       .select("event_id", "symbol", "timestamp", "price")

@@ -99,8 +99,7 @@ object Wap {
     * read back through the pointer — the result proves the pointer
     * still serves the audited version. */
   def roundTrip(spark: SparkSession, trades: DataFrame): DataFrame = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_wap_" +
-      spark.sparkContext.applicationId
+    val root = graft.Tables.scratchDir(spark, "wap")
     val r1 = publish(spark, trades, root)
     require(r1.published, s"valid batch failed audit: ${r1.reason}")
     val corrupt = trades.withColumn("event_id",

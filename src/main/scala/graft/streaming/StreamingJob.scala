@@ -184,12 +184,12 @@ object StreamingJob {
   }
 
   /** T16 (extension) — streaming exact dedup: at-least-once transports
-    * re-deliver, and the batch-tier [[graft.ops.Dedup.exactDedup]] has
-    * to have a streaming twin or re-deliveries poison every downstream
-    * agg. `dropDuplicatesWithinWatermark` keeps ONE state-store entry
-    * per key seen within the watermark horizon and evicts it once the
-    * watermark passes — state is bounded by horizon × arrival rate,
-    * where a plain `dropDuplicates` on a stream accretes keys forever.
+    * re-deliver, and a re-delivered row counted twice poisons every
+    * downstream agg. `dropDuplicatesWithinWatermark` keeps ONE
+    * state-store entry per key seen within the watermark horizon and
+    * evicts it once the watermark passes — state is bounded by
+    * horizon × arrival rate, where a plain `dropDuplicates` on a stream
+    * accretes keys forever.
     * Re-deliveries farther apart than the horizon pass through: that is
     * the contract's honest limit, and the horizon is chosen to cover
     * the transport's redelivery window, not the data's lifetime. */
@@ -198,57 +198,6 @@ object StreamingJob {
       horizon: String = "30 seconds"): DataFrame =
     events.withWatermark(tsCol, horizon)
       .dropDuplicatesWithinWatermark(keyCols)
-
-  /** query_08 (extension) — INCREMENTAL CROSS-CORPUS DEDUP as a stream:
-    * the "continuously ingest a training corpus" loop an LLM data
-    * pipeline actually runs, the streaming twin of the delta-shaped
-    * batch operator [[graft.ops.Dedup.crossDedup]]. Each micro-batch of
-    * document rows (doc_id, text, …) is screened against the corpus
-    * ingested SO FAR plus the batch's own earlier arrivals
-    * ([[graft.ops.Dedup.screenBatch]]), its dup flags appended to a
-    * keyed store, and its signatures merged into the corpus signature
-    * store — so the expensive signature computation runs exactly once
-    * per document, ever, and per-batch cost scales with the batch, not
-    * the corpus. Cross-batch "earlier" is store arrival order,
-    * within-batch order is `doc_id` — for an in-order feed the
-    * accumulated flags equal the batch [[graft.ops.Dedup.crossDedup]]
-    * over the same documents (spec'd in StreamingSpec). Replay-safe with
-    * no marker: [[graft.ops.Dedup.screenBatch]] anti-joins the batch's
-    * own ids out of the corpus side, so re-running a batch after ANY
-    * crash point recomputes identical rows into idempotent merges. */
-  def runIncrementalDedup(spark: SparkSession, docs: DataFrame,
-      cfg: Config): StreamingQuery = {
-    useLocalCheckpointRenames(spark, cfg)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"${cfg.checkpointRoot}/query_08")
-      .trigger(Trigger.ProcessingTime("0 seconds"))
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        applyDedupBatch(df, id, s"${cfg.outRoot}/dedup")
-      }
-      .queryName("incremental_dedup").start()
-  }
-
-  /** One micro-batch of incremental dedup: signatures once, screen
-    * against the store, append flags, merge signatures. The signature
-    * table is persisted for the batch's duration — it is read twice
-    * (screen + store merge) and each read would otherwise recompute the
-    * word explosion. */
-  def applyDedupBatch(batch: DataFrame, batchId: Long, root: String,
-      threshold: Double = graft.ops.Dedup.resolveThreshold): Unit = {
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val sig = graft.ops.Dedup.signaturesOf(batch).persist()
-    try {
-      val corpus = Upsert.read(spark, s"$root/signatures")
-      val flags = graft.ops.Dedup.screenBatch(sig, corpus, threshold)
-      Upsert.merge(flags, batchId, s"$root/flags", Seq("doc_id"))
-      // signatures merge LAST: a crash before this point replays into
-      // an unchanged corpus store (same flags); after it, screenBatch's
-      // anti-join hides the batch from itself (same flags again)
-      Upsert.merge(sig, batchId, s"$root/signatures", Seq("doc_id"))
-    } finally sig.unpersist()
-  }
 
   /** query_05 — the prediction vertical as a streaming consumer of the
     * FEATURES stream, composing T14 → §2.9 scoring → K7 writeback

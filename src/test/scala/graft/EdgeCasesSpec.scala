@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.ops.{Dedup, Graph, TradeOps}
+import graft.ops.TradeOps
 
 /** Empty-input and degenerate-shape behavior: every operator must
   * return an empty (or well-defined) result on an empty table, never
@@ -19,13 +19,6 @@ class EdgeCasesSpec extends SparkSuite {
       StructField("user_id", LongType),
       StructField("timestamp", TimestampType), StructField("price", DoubleType),
       StructField("volume", DoubleType), StructField("usd_volume", DoubleType))))
-
-  private lazy val emptyDocs: DataFrame = spark.createDataFrame(
-    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-    StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType))))
 
   test("format round-trips survive an empty table") {
     assert(TradeOps.orcRoundTrip(spark, emptyTrades).count() === 0)
@@ -48,12 +41,6 @@ class EdgeCasesSpec extends SparkSuite {
     assert(TradeOps.fullOuterDaily(emptyTrades).count() === 0)
     assert(TradeOps.unpivotTotals(emptyTrades).count() === 0)
     assert(TradeOps.pivotDayOfWeek(emptyTrades).count() === 0)
-  }
-
-  test("document operators return empty results on an empty corpus") {
-    assert(Dedup.exactDedup(emptyDocs).count() === 0)
-    assert(Dedup.minhashPairs(emptyDocs).count() === 0)
-    assert(Dedup.resolveDuplicates(emptyDocs).count() === 0)
   }
 
   test("incremental join view is empty when both join sides are empty") {
@@ -89,28 +76,6 @@ class EdgeCasesSpec extends SparkSuite {
         StructField("user_id", LongType), StructField("event_type", StringType),
         StructField("value", DoubleType), StructField("props", StringType))))
     assert(graft.ops.Incremental.incrementalAgg(emptyEvents).count() === 0)
-  }
-
-  test("connectedComponents on empty vertex and edge sets") {
-    import spark.implicits._
-    val noVerts = Seq.empty[Int].toDF("v")
-    val noEdges = Seq.empty[(Int, Int)].toDF("a", "b")
-    assert(Graph.connectedComponents(noVerts, noEdges).count() === 0)
-    // vertices without edges: every vertex is its own component
-    val verts = (0 until 5).toDF("v")
-    val got = Graph.connectedComponents(verts, noEdges)
-      .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
-    assert(got === (0 until 5).map(v => v -> v).toMap)
-  }
-
-  test("single-document corpus: dedup resolution is the identity") {
-    import spark.implicits._
-    val one = Seq((1L, "hello world foo bar baz", "en", "web", 23L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val r = Dedup.resolveDuplicates(one).collect()
-    assert(r.length === 1)
-    assert(r.head.getAs[Long]("canonical_doc") === 1L)
-    assert(r.head.getAs[Long]("cluster_size") === 1L)
   }
 
   test("upsert: empty batches are no-ops, never a zero-bucket manifest") {
@@ -225,7 +190,6 @@ class EdgeCasesSpec extends SparkSuite {
 
   test("new corpus/event operators survive empty inputs") {
     import graft.ops.EventAnalytics
-    assert(Dedup.fuzzyPairs(emptyDocs).count() === 0)
     val emptyEvents = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("event_id", LongType),
@@ -312,28 +276,6 @@ class EdgeCasesSpec extends SparkSuite {
       .collect().map(_.getLong(0)).sorted
     assert(hits.toSeq === Seq(2L, 3L, 4L))
     assert(TradeOps.servingRange(emptyTrades, "click", lo, hi).count() === 0)
-  }
-
-  test("containment dominates jaccard; lsh recall rates stay in [0, 1]") {
-    val docs = graft.Tables.load(spark, sf, "documents")
-    // max-containment dominates jaccard, so every strong jaccard pair
-    // must reappear in the containment report at the same threshold
-    val jac = Dedup.ngramJaccard(docs).filter(col("jaccard") >= 0.3)
-      .select("doc_a", "doc_b")
-    val cont = Dedup.containment(docs).cache()
-    assert(jac.join(cont, Seq("doc_a", "doc_b"), "left_anti").count() === 0)
-    assert(cont.filter(col("containment_ab") > 1.0 ||
-      col("containment_ba") > 1.0).count() === 0)
-    cont.unpersist()
-    // lsh recall report: hit count bounded by both sides, rates in [0,1]
-    val rec = Dedup.lshRecall(docs).head()
-    val (nTrue, nCand, nHits) =
-      (rec.getLong(0), rec.getLong(1), rec.getLong(2))
-    assert(nHits <= math.min(nTrue, nCand))
-    assert(rec.getDouble(3) >= 0 && rec.getDouble(3) <= 1)
-    assert(rec.getDouble(4) >= 0 && rec.getDouble(4) <= 1)
-    // empty-input coverage
-    assert(Dedup.containment(emptyDocs).count() === 0)
   }
 
   test("batch-10: pivots, twap, group split, benford") {
@@ -533,30 +475,6 @@ class EdgeCasesSpec extends SparkSuite {
     pe.unpersist()
   }
 
-  test("cross-dedup flags exactly the new docs with a witness in the full pair list") {
-    val docs = graft.Tables.load(spark, sf, "documents")
-    val cd = Dedup.crossDedup(docs).cache()
-    // output covers exactly the new-batch slice, one row each
-    assert(cd.filter(col("doc_id") % 10 =!= 0).count() === 0)
-    assert(cd.count() ===
-      docs.filter(col("doc_id") % 10 === 0).count())
-    assert(cd.filter(
-      (col("is_dup") === 1) =!= (col("n_matches") > 0)).count() === 0)
-    // every flagged new doc has a witness in the FULL pair list whose
-    // other side is corpus or an earlier new doc (and vice versa)
-    val pairs = Dedup.minhashPairs(docs)
-      .filter(col("est_jaccard") >= Dedup.resolveThreshold)
-    val witnesses = pairs.select(col("doc_a").as("n"), col("doc_b").as("o"))
-      .union(pairs.select(col("doc_b"), col("doc_a")))
-      .filter(col("n") % 10 === 0 &&
-        (col("o") % 10 =!= 0 || col("o") < col("n")))
-      .select(col("n").as("doc_id")).distinct()
-    val flagged = cd.filter(col("is_dup") === 1).select("doc_id")
-    assert(flagged.exceptAll(witnesses).count() === 0)
-    assert(witnesses.exceptAll(flagged).count() === 0)
-    cd.unpersist()
-  }
-
   test("batch-15: quantile rank ≡ percent_rank, chi2 zero-drift, fingerprint") {
     val trades = graft.Tables.trades(spark, sf)
     // the bucket-decomposed rank reproduces Spark's own percent_rank
@@ -654,40 +572,6 @@ class EdgeCasesSpec extends SparkSuite {
     assert(flat.getLong(1) == 2L)
     assert(flat.getDouble(2) == 0.0, "constant prices: zero covariance")
     assert(flat.isNullAt(3), "zero covariance: spread undefined")
-  }
-
-  test("short-doc shingle guard: docs under 3 words emit ZERO shingles " +
-      "across the whole word-3-gram tier (ADVICE r16 — descending " +
-      "sequence() + concat_ws null-skip would fabricate a bogus shingle)") {
-    import spark.implicits._
-    // two docs sharing only the pathological short text: without the
-    // guard, both emit the 1-word "shingle" `hi` and pair up at
-    // jaccard 1.0; with it they have empty shingle sets and no pairs
-    val docs = Seq(
-      (1L, "hi", "en", "feedA", 2L),
-      (2L, "hi", "en", "feedA", 2L),
-      (3L, "one two", "en", "feedA", 7L),
-      (4L, "alpha beta gamma alpha beta gamma", "en", "feedA", 33L),
-      (5L, "alpha beta gamma alpha beta gamma", "en", "feedA", 33L),
-      (6L, "alpha beta gamma alpha beta gamma", "en", "feedB", 33L),
-      (7L, "yo", "en", "feedB", 2L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val jac = graft.ops.Dedup.ngramJaccard(docs, 0.1).collect()
-    assert(jac.map(r => (r.getLong(0), r.getLong(1))).toSet ===
-      Set((4L, 5L)), "only the real same-source 3+-word twins may pair " +
-        "(unguarded, docs 1/2 pair at jaccard 1.0 via the bogus 'hi')")
-    val cont = graft.ops.Dedup.containment(docs, 0.1).collect()
-    assert(cont.map(r => (r.getLong(0), r.getLong(1))).toSet ===
-      Set((4L, 5L)))
-    // source grain: the repeated text has 3 distinct shingles; short
-    // docs must add nothing. Unguarded, "hi"/"yo"/"one two" each emit
-    // a bogus shingle AND a shared "" — inflating sizes to 6/5 and
-    // the intersection to 4.
-    val sim = graft.ops.Dedup.sourceSimilarity(docs).collect()
-    assert(sim.length === 1)
-    assert(sim.head.getLong(2) === 3L && sim.head.getLong(3) === 3L &&
-      sim.head.getLong(4) === 3L,
-      "short docs contribute no shingles to the source sets")
   }
 
   test("supplier hhi degenerate shape: a single-supplier nation is " +

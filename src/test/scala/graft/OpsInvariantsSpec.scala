@@ -48,63 +48,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(filled.filter(col("price_filled").isNull).count() === 0)
   }
 
-  /** The embeddings corpus on the driver: vec_id → (vector, hyperplane-LSH
-    * bits of the width `Dedup.embeddingDup` blocks on). */
-  private def embeddingsWithBits(): Map[Long, (Array[Double], Int)] = {
-    graft.functions.VectorOps.register(spark)
-    val bits = graft.ops.Dedup.embDupBands * graft.ops.Dedup.embDupBandBits
-    Tables.load(spark, sf, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("bkt", expr(s"lsh_bits(v, $bits)"))
-      .collect()
-      .map(r => r.getLong(0) -> (r.getSeq[Double](1).toArray, r.getInt(2)))
-      .toMap
-  }
-
-  private def exactCos(a: Array[Double], b: Array[Double]): Double = {
-    val dot = a.indices.map(i => a(i) * b(i)).sum
-    dot / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
-  }
-
-  test("LSH ANN results are a subset of candidates with sane cosine values") {
-    val emb = embeddingsWithBits()
-    val w = graft.ops.Dedup.embDupBandBits
-    val mask = (1 << w) - 1
-    val pairs = graft.ops.Dedup.embeddingDup(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(pairs.nonEmpty, "no near-duplicate pairs at the default cutoff")
-    assert(pairs.map(p => (p._1, p._2)).distinct.length === pairs.length,
-      "each pair is emitted once")
-    pairs.foreach { case (a, b, c) =>
-      assert(a < b, s"($a,$b) not canonically ordered")
-      val (va, ba) = emb(a)
-      val (vb, bb) = emb(b)
-      // a candidate shares at least one band's bit-slice
-      assert((0 until graft.ops.Dedup.embDupBands).exists(band =>
-        ((ba >> (band * w)) & mask) == ((bb >> (band * w)) & mask)),
-        s"($a,$b) shares no LSH band")
-      assert(c <= 1.000001 && c >= 0.4, s"($a,$b) cos $c")
-      assert(math.abs(c - exactCos(va, vb)) <= 1e-9, s"($a,$b) cos $c")
-    }
-  }
-
-  test("exact top-1 neighbor cosine >= LSH top-1 cosine per query") {
-    val emb = embeddingsWithBits().toSeq.map { case (id, (v, _)) => id -> v }
-    val exactTop1 = emb.map { case (q, vq) =>
-      q -> emb.collect { case (o, vo) if o != q => exactCos(vq, vo) }.max
-    }.toMap
-    // every LSH candidate pair, whatever its cosine
-    val lshTop1 = graft.ops.Dedup.embeddingDup(spark, sf, threshold = -2.0)
-      .collect()
-      .flatMap(r => Seq(r.getLong(0) -> r.getDouble(2),
-        r.getLong(1) -> r.getDouble(2)))
-      .groupBy(_._1).map { case (q, cs) => q -> cs.map(_._2).max }
-    assert(lshTop1.nonEmpty)
-    lshTop1.foreach { case (q, c) =>
-      assert(c <= exactTop1(q) + 1e-9, s"query $q: LSH $c > exact ${exactTop1(q)}")
-    }
-  }
-
   test("partitioned round-trip prunes to the selected partition dirs") {
     val df = TradeOps.partitionedRoundTrip(spark, trades)
     val plan = df.queryExecution.executedPlan.toString
@@ -232,56 +175,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(diff === 0)
   }
 
-  test("dedup resolution: partition into components, canonical = component min") {
-    val docs = Tables.load(spark, sf, "documents").cache()
-    val resolved = graft.ops.Dedup.resolveDuplicates(docs).cache()
-    // every doc appears exactly once, with canonical <= its own id
-    assert(resolved.count() === docs.count())
-    assert(resolved.select("doc_id").distinct().count() === docs.count())
-    assert(resolved.filter(col("canonical_doc") > col("doc_id")).count() === 0)
-    // both endpoints of every edge resolve to the same canonical
-    val edges = graft.ops.Dedup.minhashPairs(docs)
-      .filter(col("est_jaccard") >= graft.ops.Dedup.resolveThreshold)
-    val lbl = resolved.select(col("doc_id"), col("canonical_doc"))
-    val split = edges
-      .join(lbl.withColumnRenamed("doc_id", "doc_a")
-        .withColumnRenamed("canonical_doc", "ca"), "doc_a")
-      .join(lbl.withColumnRenamed("doc_id", "doc_b")
-        .withColumnRenamed("canonical_doc", "cb"), "doc_b")
-      .filter(col("ca") =!= col("cb")).count()
-    assert(split === 0, "edge endpoints must share a component")
-    // cluster_size is consistent with the resolved labels
-    val sizeBad = resolved.groupBy("canonical_doc")
-      .agg(count(lit(1)).as("n"), first(col("cluster_size")).as("sz"))
-      .filter(col("n") =!= col("sz")).count()
-    assert(sizeBad === 0)
-  }
-
-  test("connected components: driver finish == pure distributed loop") {
-    import spark.implicits._
-    val docs = Tables.load(spark, sf, "documents")
-    val edges = graft.ops.Dedup.minhashPairs(docs)
-      .filter(col("est_jaccard") >= graft.ops.Dedup.resolveThreshold)
-      .select(col("doc_a"), col("doc_b"))
-    val verts = docs.select("doc_id")
-    val local = graft.ops.Graph.connectedComponents(verts, edges)
-      .withColumnRenamed("lbl", "l1")
-    // the test graph is far under the default bound, so the default call
-    // must have taken the driver finish…
-    assert(graft.ops.Graph.lastCallUsedDriverFinish.get() === true)
-    val dist = graft.ops.Graph
-      .connectedComponents(verts, edges, localFinishEdges = 0L)
-      .withColumnRenamed("lbl", "l2")
-      .withColumnRenamed("id", "id2")
-    // …and localFinishEdges=0 must have run the pure distributed loop —
-    // label equality alone can't prove which path produced the answer
-    assert(graft.ops.Graph.lastCallUsedDriverFinish.get() === false)
-    val diff = local.join(dist, col("id") === col("id2"))
-      .filter(col("l1") =!= col("l2")).count()
-    assert(diff === 0)
-    assert(local.count() === verts.count())
-  }
-
   test("TPC-H q2/q16/q20 plans: dimension sides broadcast, no cartesian product") {
     for (df <- Seq(graft.ops.Relational.minCostSupplier(spark, sf),
         graft.ops.Relational.supplierCountByPart(spark, sf),
@@ -297,42 +190,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(p11.contains("BroadcastNestedLoopJoin") ||
       p11.contains("BroadcastHashJoin"), p11.take(2000))
     assert(!p11.contains("CartesianProduct"), p11.take(2000))
-  }
-
-  test("connectedComponents matches union-find on seeded random graphs") {
-    import spark.implicits._
-    // reference union-find; root kept as the min id at every union, so
-    // find(v) IS the component minimum
-    def unionFind(n: Int, es: Seq[(Int, Int)]): Map[Int, Int] = {
-      val parent = Array.tabulate(n)(identity)
-      def find(x0: Int): Int = {
-        var x = x0
-        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-        x
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      (0 until n).map(v => v -> find(v)).toMap
-    }
-    val rnd = new scala.util.Random(7)
-    // shapes that stress distinct paths: empty, chains (deep forests →
-    // many pointer jumps), random sparse/dense, self-loops, duplicates
-    val cases: Seq[(Int, Seq[(Int, Int)])] =
-      Seq((1, Nil), (5, Nil), (6, Seq((5, 4), (4, 3), (3, 2), (2, 1), (1, 0))),
-        (8, Seq((0, 1), (1, 0), (2, 2), (3, 4), (4, 3)))) ++
-      (1 to 16).map { _ =>
-        val n = 2 + rnd.nextInt(50)
-        val m = rnd.nextInt(2 * n)
-        (n, Seq.fill(m)((rnd.nextInt(n), rnd.nextInt(n))))
-      }
-    cases.foreach { case (n, es) =>
-      val got = graft.ops.Graph.connectedComponents(
-        (0 until n).toDF("v"), es.toDF("a", "b"))
-        .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
-      assert(got === unionFind(n, es), s"n=$n edges=$es")
-    }
   }
 
   test("ewma: constant series is identity; value bounded by window extremes") {
@@ -500,12 +357,17 @@ class OpsInvariantsSpec extends SparkSuite {
   }
 
   test("graft functions are SQL-callable after registration") {
+    // earlier specs may have registered them on the shared session
+    Seq("avro_encode_envelope", "avro_decode_envelope").foreach(f =>
+      spark.sessionState.functionRegistry.dropFunction(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(f)))
     GraftExtensions.registerAll(spark)
     val r = spark.sql(
-      "SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d, " +
-        "lsh_bits(array(1.0D, -2.0D, 0.5D), 8) AS b").head
-    assert(r.getDouble(0) === 11.0)
-    assert(r.getInt(1) >= 0 && r.getInt(1) < 256)
+      """SELECT avro_decode_envelope(avro_encode_envelope(env)) = env AS eq
+        |FROM (SELECT named_struct('data', array(named_struct(
+        |  'c', array('cond1'), 'p', 1.5D, 's', 'BTC', 't', 1700000000000L,
+        |  'v', 2.0D, 'cv', 2.0D)), 'type', 'trade') AS env)""".stripMargin).head
+    assert(r.getBoolean(0), "decode(encode(env)) == env")
   }
 
   test("avro codec round-trips the c union field (null, [null, str] cases)") {
@@ -672,24 +534,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(flagged.select("event_id").except(floatFlags).count() === 0)
     assert(floatFlags.except(flagged.select("event_id")).count() === 0)
     flagged.unpersist()
-  }
-
-  test("fuzzy pairs: ordered, within threshold, identical prefixes at 0") {
-    val docs = Tables.load(spark, sf, "documents")
-    val fp = graft.ops.Dedup.fuzzyPairs(docs).cache()
-    assert(fp.filter(col("doc_a") >= col("doc_b")).count() === 0)
-    assert(fp.filter(col("edit_dist") > 12 || col("edit_dist") < 0)
-      .count() === 0)
-    import spark.implicits._
-    val twins = Seq(
-      (1L, "exactly the same forty characters here ok padding", "en", "s", 320L),
-      (2L, "exactly the same forty characters here ok differs", "en", "s", 321L),
-      (3L, "completely different text that shares nothing at all", "en", "s", 322L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tp = graft.ops.Dedup.fuzzyPairs(twins)
-    val m = tp.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    assert(m((1L, 2L)) === 0) // identical 40-char prefixes
-    fp.unpersist()
   }
 
   test("cusum: non-negative sides, zero at start, exact on a crafted drift") {
@@ -1178,55 +1022,6 @@ class OpsInvariantsSpec extends SparkSuite {
     }
   }
 
-  test("modularity is in the Newman bound and dup-by-source conserves edges") {
-    val docs = Tables.load(spark, sf, "documents")
-    val q = graft.ops.Dedup.modularity(docs).head
-    // Newman: -1/2 <= Q < 1 always
-    assert(q.getLong(1) === 1L) // edgeBudget=0 -> exact full graph
-    assert(q.getDouble(2) >= -0.5 - 1e-9 && q.getDouble(2) <= 1.0)
-    // budget-derived deterministic edge sample: strictly fewer edges,
-    // sample_mod > 1, and the sampled Q stays inside the Newman bound
-    val qs = graft.ops.Dedup
-      .modularity(docs, edgeBudget = q.getLong(0) / 3 + 1).head
-    assert(qs.getLong(1) > 1L && qs.getLong(0) < q.getLong(0))
-    assert(qs.getDouble(2) >= -0.5 - 1e-9 && qs.getDouble(2) <= 1.0)
-    val bySrc = graft.ops.Dedup.dupBySource(docs)
-    val pairTotal = bySrc.agg(sum(col("n_dup_pairs"))).head.getLong(0)
-    assert(pairTotal === q.getLong(0)) // every dup edge lands in one cell
-    // pairs are emitted with the canonical source order
-    assert(bySrc.filter(col("source_a") > col("source_b")).count() === 0)
-  }
-
-  test("band tuning: nested halving chain is monotone, captured bounded") {
-    val rows = graft.ops.Dedup
-      .bandTuning(Tables.load(spark, sf, "documents"))
-      .collect().sortBy(_.getInt(0)) // by bands: 1,2,4,8,16
-    assert(rows.length === 5)
-    val cand = rows.map(_.getLong(2))
-    val capt = rows.map(_.getLong(3))
-    val truth = rows.map(_.getLong(4)).distinct
-    assert(truth.length === 1) // same truth set for every config
-    // each (2b, r/2) banding is a superset of (b, r) by construction
-    assert(cand.zip(cand.tail).forall { case (a, b) => b >= a })
-    assert(capt.zip(capt.tail).forall { case (a, b) => b >= a })
-    rows.foreach { r =>
-      assert(r.getLong(3) <= r.getLong(2) && r.getLong(3) <= r.getLong(4))
-    }
-    // (16,1) = any-slot-match is the superset: it captures everything
-    assert(capt.last === truth.head)
-  }
-
-  test("dedup threshold curve is monotone non-increasing") {
-    val rows = graft.ops.Dedup
-      .thresholdCurve(Tables.load(spark, sf, "documents"))
-      .collect().sortBy(_.getDouble(0))
-    assert(rows.length === 5)
-    val pairs = rows.map(_.getLong(1))
-    val docs = rows.map(_.getLong(2))
-    assert(pairs.zip(pairs.tail).forall { case (a, b) => b <= a })
-    assert(docs.zip(docs.tail).forall { case (a, b) => b <= a })
-  }
-
   test("bloom pruning skips most files and never loses a present key") {
     val probes = Seq(3L, 555L, 4444L, 7777777L)
     val (_, survivors) =
@@ -1272,22 +1067,6 @@ class OpsInvariantsSpec extends SparkSuite {
       plain.filter(col("click_price").isNotNull).count())
   }
 
-  test("cos threshold curve: monotone non-increasing, consistent with embeddingDup") {
-    val rows = graft.ops.Dedup.cosThresholdCurve(spark, sf)
-      .collect().sortBy(_.getDouble(0))
-    assert(rows.length === 5)
-    val pairs = rows.map(_.getLong(1))
-    val vecs = rows.map(_.getLong(2))
-    // raising the cutoff can only lose pairs and vectors
-    assert(pairs.zip(pairs.tail).forall { case (a, b) => b <= a })
-    assert(vecs.zip(vecs.tail).forall { case (a, b) => b <= a })
-    // each row's vec count is bounded by 2x its pair count
-    rows.foreach(r => assert(r.getLong(2) <= 2 * r.getLong(1)))
-    // the 0.4 row agrees with the registry's embeddingDup pair count
-    val atDefault = rows.find(_.getDouble(0) == 0.4).get.getLong(1)
-    assert(atDefault === graft.ops.Dedup.embeddingDup(spark, sf).count())
-  }
-
   test("ichimoku: emits exactly count-103 rows/symbol, lines inside price range") {
     val rows = TradeOps.ichimoku(trades)
     val perSym = trades.groupBy("symbol").count().collect()
@@ -1309,20 +1088,6 @@ class OpsInvariantsSpec extends SparkSuite {
           s"ichimoku line $i=$v outside [$lo,$hi]")
       }
     }
-  }
-
-  test("edit distance: bounded by prefix, identical pair scores zero, " +
-    "ppm consistent") {
-    val docs = Tables.load(spark, sf, "documents")
-    val rows = graft.ops.Dedup.editDistance(docs).collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      assert(r.getLong(3) >= 0L && r.getLong(3) <= 128L)
-      assert(r.getDouble(2) <= 1.0 && r.getDouble(2) >= 0.0)
-    }
-    // est 1.0 pairs share the full signature; their prefixes are NOT
-    // guaranteed identical, but a zero distance must imply ppm zero
-    rows.filter(_.getLong(3) == 0L).foreach(r => assert(r.getLong(4) === 0L))
   }
 
   test("runs test: runs bounded by ticks, expectation formula exact") {
@@ -1361,19 +1126,6 @@ class OpsInvariantsSpec extends SparkSuite {
     assert(TradeOps.giniActivity(flat).head.getDouble(2) === 0.0)
   }
 
-  test("minhash est error: histogram covers the sample, bands valid, " +
-    "mass concentrated at low error") {
-    val docs = Tables.load(spark, sf, "documents")
-    val rows = graft.ops.Dedup.minhashEstError(docs).collect()
-    assert(rows.nonEmpty)
-    rows.foreach(r => assert(r.getLong(0) >= 0L && r.getLong(0) <= 10L))
-    val total = rows.map(_.getLong(1)).sum
-    // a 16-slot signature on near-dup candidates should put most mass
-    // within 200k ppm of truth; a broken estimator flattens this
-    val low = rows.filter(_.getLong(0) <= 2L).map(_.getLong(1)).sum
-    assert(low * 2 >= total, s"error mass not concentrated: $low/$total")
-  }
-
   test("vwma: bounded by window price extremes, full-window emission") {
     val a = TradeOps.vwma(trades)
     assert(a.count() > 0)
@@ -1405,22 +1157,6 @@ class OpsInvariantsSpec extends SparkSuite {
       assert(r.getLong(3) === r.getLong(2) * 1000000L / r.getLong(1))
       assert(r.getLong(3) <= 1000000L)
     }
-  }
-
-  test("prefix dup: covers corpus, global dups = docs - distinct prefixes, " +
-    "ppm consistent") {
-    val docs = Tables.load(spark, sf, "documents")
-    val rows = graft.ops.Dedup.prefixDup(docs).collect()
-    assert(rows.map(_.getLong(1)).sum === docs.count())
-    rows.foreach { r =>
-      assert(r.getLong(2) >= 0L && r.getLong(2) <= r.getLong(1))
-      assert(r.getLong(3) === r.getLong(2) * 1000000L / r.getLong(1))
-    }
-    // window-min marks exactly one keeper per prefix class, so the
-    // global dup count is forced to n - |distinct prefixes|
-    val distinctPfx = docs
-      .select(substring(col("text"), 1, 64)).distinct().count()
-    assert(rows.map(_.getLong(2)).sum === docs.count() - distinctPfx)
   }
 
   test("var/es: ES <= VaR (tail mean below its boundary), k = ceil(5% n)") {
@@ -1563,23 +1299,6 @@ class OpsInvariantsSpec extends SparkSuite {
     }
   }
 
-  test("bucket skew: per-band doc totals cover the corpus x1 each band") {
-    val docs = Tables.load(spark, sf, "documents")
-    val rows = graft.ops.Dedup.bucketSkew(docs).collect()
-    assert(rows.nonEmpty)
-    val n = docs.count()
-    rows.groupBy(_.getLong(0)).foreach { case (band, rs) =>
-      assert(rs.map(_.getLong(3)).sum === n,
-        s"band $band bucket occupancies must partition the corpus")
-      rs.foreach { r =>
-        // max occupancy in a decade bucket has exactly decade+1 digits
-        assert(r.getLong(4).toString.length - 1 === r.getLong(1))
-        assert(r.getLong(2) >= 1L && r.getLong(4) >= 1L)
-      }
-    }
-    assert(rows.map(_.getLong(0)).distinct.sorted.toSeq === Seq(0L, 1L, 2L, 3L))
-  }
-
   test("revenue deciles: partition customers evenly, shares sum to ~1e6, " +
     "deciles ordered by revenue") {
     val rows = graft.ops.Relational.revenueDeciles(spark, sf)
@@ -1686,21 +1405,6 @@ class OpsInvariantsSpec extends SparkSuite {
     }
   }
 
-  test("fuzzy pairs: non-ASCII folds to '?' before the DP (charset " +
-    "contract enforced — multibyte runes cannot skew distances)") {
-    import spark.implicits._
-    // identical except markers: after the ASCII fold both markers
-    // become '?', so the distance must be 0, not a multibyte artifact
-    val docs = Seq(
-      (0L, "alpha▲ beta", "en", "s", 11L),
-      (1L, "alpha▼ beta", "en", "s", 11L),
-      (2L, "alpha gamma oh", "en", "s", 14L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val d = graft.ops.Dedup.fuzzyPairs(docs, prefixLen = 40, maxDist = 12)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    assert(d((0L, 1L)) === 0, "folded markers are identical")
-  }
-
   test("rollback: forward metadata commit, audit version serveable, " +
     "retention enforced after the next merge's GC") {
     import spark.implicits._
@@ -1727,16 +1431,6 @@ class OpsInvariantsSpec extends SparkSuite {
       "beyond retention returns None")
     intercept[IllegalArgumentException] {
       Upsert.rollback(root, 0L) // GC'd target must fail loudly
-    }
-  }
-
-  test("cluster size hist: docs conserved, max cluster in decade") {
-    val docs = Tables.load(spark, sf, "documents")
-    val rows = graft.ops.Dedup.clusterSizeHist(docs).collect()
-    assert(rows.map(_.getLong(2)).sum === docs.count())
-    rows.foreach { r =>
-      assert(r.getLong(1) <= r.getLong(2))
-      assert(r.getLong(3).toString.length - 1L === r.getLong(0))
     }
   }
 
@@ -1850,17 +1544,6 @@ class OpsInvariantsSpec extends SparkSuite {
         "a tick breaks at most one side")
       assert(r.getLong(4) >= r.getLong(5) && r.getLong(5) >= 0L,
         "channel widths ordered, non-negative")
-    }
-  }
-
-  test("len dup bias: partitions the corpus, ppm within [0, 1e6]") {
-    val docs = Tables.load(spark, sf, "documents")
-    val rows = graft.ops.Dedup.lenDupBias(docs).collect()
-    assert(rows.map(_.getLong(1)).sum === docs.count(),
-      "length decades partition the corpus")
-    rows.foreach { r =>
-      assert(r.getLong(2) <= r.getLong(1))
-      assert(r.getLong(3) >= 0L && r.getLong(3) <= 1000000L)
     }
   }
 
@@ -3006,22 +2689,6 @@ class OpsInvariantsSpec extends SparkSuite {
     ladder.unpersist()
   }
 
-  test("source similarity: jaccard in (0,1]; pairs canonical and " +
-      "bounded by C(|sources|, 2); sizes consistent") {
-    val docs = Tables.load(spark, sf, "documents")
-    val sim = graft.ops.Dedup.sourceSimilarity(docs).cache()
-    val nSrc = docs.select("source").distinct().count()
-    assert(sim.count() > 0 && sim.count() <= nSrc * (nSrc - 1) / 2)
-    assert(sim.filter(col("jaccard") <= 0.0 || col("jaccard") > 1.0)
-      .count() === 0)
-    assert(sim.filter(col("src_a") >= col("src_b")).count() === 0,
-      "pairs are canonical (src_a < src_b), no mirror rows")
-    assert(sim.filter(col("n_inter") > col("sz_a") ||
-      col("n_inter") > col("sz_b")).count() === 0,
-      "intersection can never exceed either set size")
-    sim.unpersist()
-  }
-
   test("churn rate: exact recompute from distinct user-weeks; " +
       "final week excluded; rates bounded; non-empty") {
     import spark.implicits._
@@ -3222,8 +2889,7 @@ class OpsInvariantsSpec extends SparkSuite {
 
   test("audited merge: duplicate-key and NULL-key batches rejected without a version bump; replayed id skipped") {
     import graft.sinks.{Upsert, Wap}
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_k21_spec_" +
-      spark.sparkContext.applicationId
+    val root = s"${tmpDir("graft_k21_spec")}/audited"
     val store = s"$root/store"
     val keyed = trades
       .groupBy(col("symbol"), date_trunc("day", col("timestamp")).as("day"))
@@ -3260,8 +2926,7 @@ class OpsInvariantsSpec extends SparkSuite {
 
   test("schema evolution: add/omit columns, time-travel narrow schema, compact homogenizes, readKey serves unified") {
     import graft.sinks.Upsert
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_k22_spec_" +
-      spark.sparkContext.applicationId
+    val root = s"${tmpDir("graft_k22_spec")}/store"
     import spark.implicits._
     val b0 = Seq(("a", 1L, 10.0), ("b", 2L, 20.0), ("c", 3L, 30.0))
       .toDF("sym", "k", "x")
@@ -3346,5 +3011,26 @@ class OpsInvariantsSpec extends SparkSuite {
       math.pow((p._2 - slope * p._1) -
         (sy / n - slope * sx / n), 2)).sum / n
     assert(varAdj <= varY + 1e-12)
+  }
+
+  test("pair-grain cache: a repeated Relational query pins no second " +
+      "copy; another reduction of the same scan gets its own entry") {
+    // a fresh copy of the tables: the cache keys on the input plan, and
+    // earlier specs may already have pinned the shared sf dir's entries
+    val dir = tmpDir("pair_grain")
+    new java.io.File(sf).listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => java.nio.file.Files.copy(f.toPath,
+        java.nio.file.Paths.get(dir, f.getName)))
+    // ids, not a count: other specs' pins may be collected meanwhile
+    def pinned() = spark.sparkContext.getPersistentRDDs.keySet
+    def run(q: String): Int = {
+      val before = pinned()
+      SparkEntry.queries(q)(spark, dir).collect()
+      (pinned() -- before).size
+    }
+    assert(run("q21_sole_returning_supplier") === 1)
+    assert(run("q21_sole_returning_supplier") === 0, "a second pin for q21")
+    assert(run("q25_copurchase") === 1, "q25 shares q21's entry")
+    assert(run("q25_copurchase") === 0, "a second pin for q25")
   }
 }

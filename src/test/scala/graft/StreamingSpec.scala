@@ -805,47 +805,6 @@ class StreamingSpec extends SparkSuite {
       q.stop(); spark.streams.removeListener(listener)
     }
   }
-
-  test("query_08 incremental dedup: streamed screening equals batch crossDedup, replay-idempotent") {
-    import spark.implicits._
-    // the corpus arrives as a stream: the already-ingested docs
-    // (doc_id % 10 != 0) first — the stored-corpus seed — then the
-    // "new crawl" slice (doc_id % 10 == 0) in doc_id order over TWO
-    // micro-batches, so the accumulated flags must equal the batch
-    // operator's one-shot screen of the same slice
-    val docs = Tables.load(spark, sf, "documents")
-      .select("doc_id", "text")
-    val rows = docs.as[(Long, String)].collect().sortBy(_._1)
-    val (newDocs, corpusDocs) = rows.partition(_._1 % 10 == 0)
-    val chunks = Seq(corpusDocs.toSeq) ++
-      newDocs.grouped((newDocs.length + 1) / 2).map(_.toSeq)
-    val input = MemoryStream[(Long, String)](spark)
-    val out = tmpDir("graft-dedup-out")
-    val ckpt = tmpDir("graft-dedup-ckpt")
-    val q = StreamingJob.runIncrementalDedup(spark,
-      input.toDF().toDF("doc_id", "text"), StreamingJob.Config(out, ckpt))
-    val flagsRoot = s"$out/dedup/flags"
-    try {
-      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-      def streamedFlags() = Upsert.read(spark, flagsRoot).get
-        .filter(col("doc_id") % 10 === 0)
-        .select("doc_id", "n_matches", "is_dup")
-      val expected = graft.ops.Dedup.crossDedup(docs)
-      assert(streamedFlags().count() === expected.count())
-      assert(streamedFlags().exceptAll(expected).isEmpty &&
-        expected.exceptAll(streamedFlags()).isEmpty,
-        "streamed dedup flags differ from batch crossDedup")
-      // replay idempotence across the WHOLE crash window: by the time a
-      // foreachBatch replay runs, the store may already hold the batch's
-      // signatures — screenBatch's anti-join must hide the batch from
-      // itself, so re-applying the last batch changes nothing
-      val before = streamedFlags().collect().map(_.toString).sorted.toSeq
-      StreamingJob.applyDedupBatch(chunks.last.toDF("doc_id", "text"),
-        batchId = (chunks.length - 1).toLong, s"$out/dedup")
-      val after = streamedFlags().collect().map(_.toString).sorted.toSeq
-      assert(after === before, "batch replay mutated the dedup flags")
-    } finally q.stop()
-  }
 }
 
 /** A checkpoint manager that commits through `java.nio`: its atomic
